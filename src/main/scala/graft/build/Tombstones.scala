@@ -1,7 +1,7 @@
 package graft.build
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Delete support for an index directory: a `tombstones` parquet table of
   * dead doc_ids — the liveDocs-bitset analog
@@ -21,11 +21,11 @@ object Tombstones {
     docIds.toDF("doc_id").write.mode("append").parquet(path(indexDir))
   }
 
-  def read(spark: SparkSession, indexDir: String): Option[DataFrame] = {
+  /** The tombstone table's path, when the index has one. */
+  def dir(spark: SparkSession, indexDir: String): Option[String] = {
     val p = new Path(path(indexDir))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(path(indexDir)).select("doc_id").distinct())
-    else None
+    if (fs.exists(p)) Some(path(indexDir)) else None
   }
 
   private def path(indexDir: String): String = s"$indexDir/tombstones"

@@ -221,26 +221,33 @@ object Media {
     // fourcc + LE size + payload (word-aligned); LIST chunks nest after a
     // 4-byte list type. avih payload: dwMicroSecPerFrame@0, dwTotalFrames@16,
     // dwWidth@32, dwHeight@36 (all LE).
+    // Untrusted bytes: sizes stay unsigned Longs, every step moves strictly
+    // forward (past the 8-byte chunk header at least), and LIST nesting is
+    // bounded, so no input can loop or overflow the stack.
     var out: Option[(Int, Int, Long)] = None
-    def walk(from: Int, to: Int): Unit = {
-      var off = from
+    def walk(from: Int, to: Int, depth: Int): Unit = {
+      var off = from.toLong
       while (off + 8 <= to && out.isEmpty) {
-        val id = fourcc(b, off)
-        val sz = le32(b, off + 4).toInt
-        val p = off + 8
-        val e = math.min(p.toLong + sz, to.toLong).toInt
-        if (id == "LIST" && e - p >= 4) walk(p + 4, e)
+        val id = fourcc(b, off.toInt)
+        val sz = le32(b, off.toInt + 4)
+        val p = off.toInt + 8
+        val e = math.min(p + sz, to.toLong).toInt
+        if (id == "LIST" && e - p >= 4) { if (depth < 16) walk(p + 4, e, depth + 1) }
         else if (id == "avih" && e - p >= 40) {
           val usPerFrame = le32(b, p)
           val frames = le32(b, p + 16)
           val w = le32(b, p + 32).toInt
           val h = le32(b, p + 36).toInt
-          out = Some((w, h, math.round(usPerFrame * frames / 1000.0)))
+          // both fields are 32-bit, so their product can overflow a Long
+          val durMs =
+            if (usPerFrame > 0 && frames > Long.MaxValue / usPerFrame) -1L
+            else math.round(usPerFrame * frames / 1000.0)
+          out = Some((w, h, durMs))
         }
         off = p + sz + (sz & 1) // chunks are word-aligned
       }
     }
-    walk(12, b.length)
+    walk(12, b.length, 0)
     out
   }
 

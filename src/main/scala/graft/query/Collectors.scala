@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -55,28 +56,38 @@ object Collectors {
     * checks a clock every few collected docs and throws; the distributed
     * equivalent is group cancellation — running tasks get a thread
     * interrupt, queued stages never launch, and the caller gets a typed
-    * timeout instead of a hung query. A genuine failure inside the budget
-    * still surfaces as its own exception.
+    * timeout instead of a hung query. Only that cancellation becomes a
+    * Left: any other failure surfaces as its own exception, even after the
+    * budget expired. The caller's job group is restored afterwards.
     */
   def collectTimeLimited(df: DataFrame, budgetMs: Long)
       : Either[TimeExceeded, Array[Row]] = {
     val sc = df.sparkSession.sparkContext
     val group = s"graft-tlc-${java.util.UUID.randomUUID()}"
+    val saved = JobGroupProps.map(p => p -> sc.getLocalProperty(p))
     val timer = new java.util.Timer("graft-tlc", true)
-    @volatile var fired = false
     sc.setJobGroup(group, s"time-limited collect ($budgetMs ms)",
       interruptOnCancel = true)
     timer.schedule(new java.util.TimerTask {
-      override def run(): Unit = { fired = true; sc.cancelJobGroup(group) }
+      override def run(): Unit = sc.cancelJobGroup(group)
     }, budgetMs)
     try Right(df.collect())
     catch {
-      case scala.util.control.NonFatal(_) if fired => Left(TimeExceeded(budgetMs))
+      case e: Exception if causes(e).exists(c => c.isInstanceOf[SparkException] &&
+        String.valueOf(c.getMessage).contains(s"cancelled job group $group")) =>
+        Left(TimeExceeded(budgetMs))
     } finally {
       timer.cancel()
-      sc.clearJobGroup()
+      saved.foreach { case (p, v) => sc.setLocalProperty(p, v) } // null unsets
     }
   }
+
+  // the local properties SparkContext.setJobGroup sets
+  private val JobGroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
 
   /** CachingCollector analog: persist the scorer stream so later collectors
     * REPLAY it (InMemoryRelation scan) instead of re-scoring the index —

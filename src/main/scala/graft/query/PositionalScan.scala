@@ -5,10 +5,10 @@ import graft.score.Bm25
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Doc-range co-partitioned positional scoring — the shared kernel behind
-  * exact/sloppy [[Query.Phrase]] and [[Query.MultiPhrase]] on both the batch
-  * ([[Searcher]]) and segmented ([[graft.streaming.SegmentedSearcher]])
-  * read paths.
+/** Doc-range co-partitioned positional scoring — the kernel behind
+  * exact/sloppy [[Query.Phrase]] and [[Query.MultiPhrase]] in [[Searcher]],
+  * over batch indexes and streaming stores alike (an [[IndexView]] feeds it
+  * one relation of blocks whose doc ids are unique across segments).
   *
   * The postings table is term-partitioned, so aligning positions across the
   * phrase's terms needs a shuffle keyed by doc. Shuffling DECODED rows (one
@@ -34,9 +34,8 @@ import org.apache.spark.sql.functions.col
 object PositionalScan {
 
   /** A packed positions block tagged with its shuffle bucket and the
-    * query-local compact term index `ti` (term_ids are index-local — and
-    * segment-local on the streaming path — so the tag is resolved BEFORE the
-    * shuffle union). `rank` is 0 for the rarest slot's terms and 1
+    * query-local compact term index `ti` (term_ids are index-local, so the
+    * tag is resolved BEFORE the shuffle). `rank` is 0 for the rarest slot's terms and 1
     * otherwise: partitions sort on (bucket, rank), so the reduce-side pass
     * streams the lead slot FIRST and every other term attaches only to docs
     * the lead slot established — the per-doc state is sized by the rarest

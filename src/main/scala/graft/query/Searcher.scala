@@ -6,9 +6,9 @@ import graft.score.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Top-k BM25 search over a built index directory — the read path
-  * (IndexSearcher.Search semantics, SURVEY.md §3.1) as one declarative
-  * DataFrame plan per query:
+/** Top-k BM25 search over a built index directory or a streaming store
+  * (read through an [[IndexView]]) — the read path (IndexSearcher.Search
+  * semantics, SURVEY.md §3.1) as one declarative DataFrame plan per query:
   *
   *   postings pruned by term_id (Parquet row-group min/max act as the term
   *   index) -> decode + score (shared float32 Bm25 kernel) -> boolean combine
@@ -36,41 +36,16 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     extends Serializable {
   import spark.implicits._
 
-  val stats: CollectionStats =
-    spark.read.parquet(s"$indexDir/stats").as[CollectionStats].head()
-
-  // One relation (and one file listing) reused across queries — at cluster
-  // scale re-listing the postings table per query is a driver hotspot.
-  private lazy val postings: DataFrame = spark.read.parquet(s"$indexDir/postings")
-
-  /** Dead docs, applied liveDocs-style as a pre-top-k anti-join; stats stay
-    * unpurged until compaction (reference behavior, see
-    * [[graft.build.Tombstones]]).
-    */
-  private lazy val tombstones: Option[DataFrame] =
-    graft.build.Tombstones.read(spark, indexDir)
-  private[query] def hasTombstones: Boolean = tombstones.isDefined
-  private def live(df: DataFrame): DataFrame =
-    tombstones.map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
-  // The term dictionary is metadata-sized (the reference holds its FST in
-  // RAM, BlockTreeTermsWriter.cs:57); cache it once per searcher so repeated
-  // queries skip the parquet footer round-trips.
-  private lazy val termdictDf: DataFrame = {
-    val df = spark.read.parquet(s"$indexDir/termdict")
-    df.cache()
-    df
-  }
+  /** A batch index directory or a streaming store, see [[IndexView]]. */
+  private[query] val view: IndexView = IndexView.open(spark, indexDir)
+  val stats: CollectionStats = view.stats
 
   /** Driver-side term lookup — the TermContext resolution analog
     * (/root/reference/src/Lucene.Net/Search/TermQuery.cs:101-123): one tiny
-    * pushdown-pruned scan for just the query's terms.
+    * pushdown-pruned job for just the query's terms. On a streaming store
+    * `term_id` is the view's scan key, see [[IndexView.lookup]].
     */
-  def lookup(terms: Seq[String]): Map[String, TermDictRow] =
-    if (terms.isEmpty) Map.empty
-    else termdictDf
-      .filter(col("term").isin(terms.distinct: _*))
-      .as[TermDictRow].collect()
-      .map(t => t.term -> t).toMap
+  def lookup(terms: Seq[String]): Map[String, TermDictRow] = view.lookup(terms).rows
 
   /** Expand a term-dictionary predicate to concrete terms (MultiTermQuery
     * rewrite). `pred` is a Column over the `term` column. Returns up to
@@ -79,23 +54,23 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     * filter rewrite instead of expanding it.
     */
   def expand(pred: org.apache.spark.sql.Column, maxTerms: Int = Query.MaxClauseCount): Seq[String] =
-    termdictDf.filter(pred).select("term").as[String]
+    view.terms.filter(pred).select("term").as[String]
       .orderBy("term").limit(maxTerms + 1).collect().toSeq
 
-  /** Distributed fuzzy top-N over the cached dictionary (length-window
+  /** Distributed fuzzy top-N over the cached dictionaries (length-window
     * pre-filter, TakeOrdered by similarity — the collect is bounded by
     * maxExpansions, never by the candidate count).
     */
-  def fuzzyTop(f: Query.Fuzzy): Seq[(String, Int)] = Rewrite.fuzzyTopIn(termdictDf, f)
+  def fuzzyTop(f: Query.Fuzzy): Seq[(String, Int)] = Rewrite.fuzzyTopIn(view.terms, f)
 
   def search(q: Query, k: Int): DataFrame =
-    live(scoreAll(q)).orderBy(desc("score"), asc("doc_id")).limit(k)
+    view.live(scoreAll(q)).orderBy(desc("score"), asc("doc_id")).limit(k)
 
   /** Every matching (doc_id, score) row, liveDocs applied — the scorer
     * stream collectors consume: [[Collectors.searchWithTotals]] observes it
     * in one pass, a caching collector persists it for replay.
     */
-  def scoredDocs(q: Query): DataFrame = live(scoreAll(q))
+  def scoredDocs(q: Query): DataFrame = view.live(scoreAll(q))
 
   /** True when the query cannot lower to one flat weighted-term clause list
     * (BooleanQuery-in-BooleanQuery / phrase clauses).
@@ -125,8 +100,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     case Query.MatchAll(boost) =>
       // MatchAllDocsQuery: every doc (the norms sidecar holds one row per
       // doc); liveDocs apply at the top like every other path
-      spark.read.parquet(s"$indexDir/norms")
-        .select(col("doc_id"), lit(boost).cast("float").as("score"))
+      view.docIds.select(col("doc_id"), lit(boost).cast("float").as("score"))
     case dm: Query.DisMax => disMaxScoreAll(dm)
     case pt: Query.PayloadTerm => payloadScoreAll(pt)
     case pn: Query.PayloadNear => payloadNearScoreAll(pn)
@@ -152,29 +126,18 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   }
 
   /** Docset of a multi-term leaf without expansion — the CONSTANT_SCORE
-    * filter execution (/root/reference/src/Lucene.Net/Search/
-    * ConstantScoreAutoRewrite.cs:263 builds the same docset as a bitset).
-    * Term ids are dense by ascending term, so prefix/range matches form a
-    * CONTIGUOUS id interval: the scan prunes by `term_id BETWEEN lo AND hi`
-    * (Parquet row-group min/max) and only non-contiguous shapes
-    * (wildcard/regexp) refine with a term_id semi-join. No term list ever
-    * reaches the driver — safe at any dictionary size.
+    * filter execution over [[IndexView.blocksWhere]] (the reference builds
+    * the same docset as a bitset).
     */
-  private def multiTermDocs(mt: Query): DataFrame = {
-    val (p, _) = Rewrite.pred(mt)
-    val matched = termdictDf.filter(p).select("term_id")
-    val (lo, hi) = matched.agg(min("term_id"), max("term_id"))
-      .as[(Option[Long], Option[Long])].head()
-    if (lo.isEmpty) return emptyResult.select("doc_id")
-    var blocks = postings.filter(col("term_id").between(lo.get, hi.get))
-    if (!Rewrite.isContiguous(mt))
-      blocks = blocks.join(matched, Seq("term_id"), "left_semi")
-    blocks.select(ScoreBlock.cols.map(col): _*)
-      .as[ScoreBlock]
-      .flatMap(b => PostingCodec.decode(b)._1.iterator)
-      .toDF("doc_id")
-      .distinct()
-  }
+  private def multiTermDocs(mt: Query): DataFrame =
+    view.blocksWhere(Rewrite.pred(mt)._1, Rewrite.isContiguous(mt), ScoreBlock.cols) match {
+      case None => emptyResult.select("doc_id")
+      case Some(blocks) =>
+        blocks.as[ScoreBlock]
+          .flatMap(b => PostingCodec.decode(b)._1.iterator)
+          .toDF("doc_id")
+          .distinct()
+    }
 
   /** Nested boolean combine: every clause (group, phrase, or leaf) scores
     * ALL its docs, the union folds per doc in CLAUSE order (the nested
@@ -291,7 +254,8 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     // first-clause boost wins for a duplicated positive term
     val boosts: Map[String, Float] =
       clauses.filter(_._2 != Query.MustNot).groupBy(_._1).map { case (t, cs) => t -> cs.head._3 }
-    val dict = lookup(must ++ should ++ mustNot)
+    val ts = view.lookup(must ++ should ++ mustNot)
+    val dict = ts.rows
     // A MUST term absent from the index -> no results (conjunction semantics).
     if (must.exists(t => !dict.contains(t)) || (must ++ should).forall(t => !dict.contains(t)))
       return emptyResult
@@ -318,7 +282,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
         // (mm counts SHOULD clauses only, BooleanWeight semantics), so it
         // takes the combine path below, whose shouldSeen filter drops all.
         val bw = spark.sparkContext.broadcast(weights)
-        scoredHits(weights.keySet.toSeq, bw).map(h => (h._1, h._3))
+        scoredHits(ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
       } else {
         // compact ti ascending term_id == the canonical clause-sum order
         val allTids: Seq[Long] = (weights.keySet ++ notIds).toSeq.sorted
@@ -338,15 +302,10 @@ final class Searcher(val spark: SparkSession, indexDir: String,
         val width = PositionalScan.bucketWidth(spark, stats.max_doc)
 
         import graft.codec.ScoreSpanBlock
-        var blocks = postings
-          .filter(col("term_id").isin(allTids: _*))
-          .select(ScoreSpanBlock.cols.map(col): _*)
-          .as[ScoreSpanBlock]
+        var blocks = view.blocks(ts, allTids, ScoreSpanBlock.cols).as[ScoreSpanBlock]
         leadTid.filter(t => dfOf(t) <= Searcher.phraseLeadMaxDf && allTids.size > 1)
           .foreach { t =>
-            val ranges = postings.filter(col("term_id") === t)
-              .select("first_doc", "last_doc").as[(Long, Long)].collect()
-            val bIv = spark.sparkContext.broadcast(PositionalScan.Intervals.merge(ranges))
+            val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(t)))
             blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
           }
 
@@ -373,12 +332,10 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   /** Decode + score the postings blocks of the given terms.
     * Emits (doc_id, term_id, score); excluded (mustNot) terms score 0.
     */
-  private def scoredHits(termIds: Seq[Long],
+  private def scoredHits(ts: IndexView.Terms, termIds: Seq[Long],
                          bw: org.apache.spark.broadcast.Broadcast[Map[Long, graft.score.Similarity.TermScorer]])
       : org.apache.spark.sql.Dataset[(Long, Long, Float)] = {
-    postings
-      .filter(col("term_id").isin(termIds: _*)) // pushed to Parquet row groups
-      .select(ScoreBlock.cols.map(col): _*)     // prunes the positions column
+    view.blocks(ts, termIds, ScoreBlock.cols) // the projection prunes the positions column
       .as[ScoreBlock]
       .flatMap { b =>
         val (docs, tfs, norms) = PostingCodec.decode(b)
@@ -409,7 +366,8 @@ final class Searcher(val spark: SparkSession, indexDir: String,
                                  boost: Float): DataFrame = {
     import graft.codec.PosSpanBlock
     require(slots.size >= 2, "phrase needs at least two positions")
-    val dict = lookup(slots.flatten.distinct)
+    val ts = view.lookup(slots.flatten.distinct)
+    val dict = ts.rows
     // alternatives absent from the dictionary drop out; an empty slot
     // matches nothing (MultiPhraseQuery semantics)
     val slotTids: Array[Array[Long]] =
@@ -428,10 +386,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     val slotIdx: Array[Array[Int]] = slotTids.map(_.map(tiOf))
     val width = PositionalScan.bucketWidth(spark, stats.max_doc)
 
-    var blocks = postings
-      .filter(col("term_id").isin(ids: _*))
-      .select(PosSpanBlock.cols.map(col): _*)
-      .as[PosSpanBlock]
+    var blocks = view.blocks(ts, ids, PosSpanBlock.cols).as[PosSpanBlock]
 
     // lead slot = rarest (fewest total postings); its terms stream first on
     // the reduce side (rank 0), and when it is selective enough its block
@@ -441,12 +396,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     val leadTis: Set[Int] = slotIdx(slotDf.indexOf(minDf)).toSet
     if (minDf <= Searcher.phraseLeadMaxDf && slotDf.exists(_ > minDf)) {
       val leadTids = slotTids(slotDf.indexOf(minDf)).toSeq
-      val ranges = postings
-        .filter(col("term_id").isin(leadTids: _*))
-        .select("first_doc", "last_doc")
-        .as[(Long, Long)].collect()
-      val iv = PositionalScan.Intervals.merge(ranges)
-      val bIv = spark.sparkContext.broadcast(iv)
+      val bIv = spark.sparkContext.broadcast(view.docRanges(ts, leadTids))
       blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
     }
 
@@ -471,16 +421,14 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     */
   private def payloadScoreAll(pt: Query.PayloadTerm): DataFrame = {
     import graft.codec.PayBlock
-    val dict = lookup(Seq(pt.term))
-    if (!dict.contains(pt.term)) return emptyResult
-    val d = dict(pt.term)
+    val ts = view.lookup(Seq(pt.term))
+    if (!ts.rows.contains(pt.term)) return emptyResult
+    val d = ts.rows(pt.term)
     val w = Bm25.termWeight(d.term_id, d.df, stats.max_doc, stats.sum_ttf, pt.boost)
     val bw = spark.sparkContext.broadcast(w)
     val func = pt.func
     val includeSpan = pt.includeSpanScore
-    postings
-      .filter(col("term_id") === d.term_id)
-      .select(PayBlock.cols.map(col): _*)
+    view.blocks(ts, Seq(d.term_id), PayBlock.cols)
       .as[PayBlock]
       .flatMap { b =>
         require(b.cnt == 0 || b.pay_bytes.nonEmpty,
@@ -552,7 +500,8 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   private def payloadNearScoreAll(pn: Query.PayloadNear): DataFrame = {
     import graft.codec.PosPayBlock
     require(pn.terms.size >= 2, "PayloadNear needs >= 2 clause terms")
-    val dict = lookup(pn.terms.distinct)
+    val ts = view.lookup(pn.terms.distinct)
+    val dict = ts.rows
     // a clause term absent from the corpus can never match
     if (pn.terms.exists(t => !dict.contains(t))) return emptyResult
     var idfSum = 0.0f
@@ -567,9 +516,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     val func = pn.func
     val slop = pn.slop
     val inOrder = pn.inOrder
-    postings
-      .filter(col("term_id").isin(tidSet.toSeq: _*))
-      .select(PosPayBlock.cols.map(col): _*)
+    view.blocks(ts, tidSet.toSeq, PosPayBlock.cols)
       .as[PosPayBlock]
       .flatMap { b =>
         require(b.cnt == 0 || b.pay_bytes.nonEmpty,

@@ -136,20 +136,19 @@ object Spans {
   }
 
   /** Distributed evaluation: (doc_id, start, end) rows for every matching
-    * span — the positions read path shared with phrase queries.
+    * live span — the positions read path shared with phrase queries, over a
+    * batch index or a streaming store ([[IndexView]]).
     */
   def spans(spark: SparkSession, indexDir: String, q: SpanQuery): DataFrame = {
     import spark.implicits._
-    val searcher = new Searcher(spark, indexDir)
-    val dict = searcher.lookup(q.terms.toSeq)
-    if (dict.isEmpty)
+    val view = IndexView.open(spark, indexDir)
+    val ts = view.lookup(q.terms.toSeq)
+    if (ts.rows.isEmpty)
       return spark.emptyDataset[(Long, Int, Int)].toDF("doc_id", "start", "end")
-    val names: Map[Long, String] = dict.map { case (t, d) => d.term_id -> t }
+    val names: Map[Long, String] = ts.rows.map { case (t, d) => d.term_id -> t }
     val bn = spark.sparkContext.broadcast(names)
     val bq = spark.sparkContext.broadcast(q)
-    spark.read.parquet(s"$indexDir/postings")
-      .filter(col("term_id").isin(names.keySet.toSeq: _*))
-      .select(PosBlock.cols.map(col): _*)
+    val hits = view.blocks(ts, names.keySet.toSeq, PosBlock.cols)
       .as[PosBlock]
       .flatMap { b =>
         val (docs, _, _, poss) = PostingCodec.decodePos(b)
@@ -177,6 +176,6 @@ object Spans {
         }.flatten
       }
       .toDF("doc_id", "start", "end")
-      .orderBy("doc_id", "start", "end")
+    view.live(hits).orderBy("doc_id", "start", "end")
   }
 }

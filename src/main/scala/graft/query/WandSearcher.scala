@@ -6,7 +6,7 @@ import graft.score.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
-import WandSearcher.ubD
+import WandSearcher.{scorer, ubD, ubFn}
 
 /** Block-max pruned top-k search — the north rule's "block-max WAND scoring"
   * realized for a term-range-partitioned columnar postings layout.
@@ -21,7 +21,7 @@ import WandSearcher.ubD
   * block — a driver OOM at exactly the scale WAND exists for):
   *
   *  - per-term GLOBAL maxima come from the term dictionary (`max_tf`/`max_nb`
-  *    columns laid down at build time), so `rest(i) = Σ_{j≠i} gmax_j` is
+  *    columns laid down at build time, the max over a store's segments), so `rest(i) = Σ_{j≠i} gmax_j` is
   *    driver-side arithmetic over the query's own terms — no metadata job.
   *  - each scan partition keeps a k-heap of exact single-clause float scores
   *    PER TERM; the k-th best score of one term is a sound lower bound θ on
@@ -56,16 +56,14 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
   import spark.implicits._
 
   private val base = new Searcher(spark, indexDir)
-  // one relation, one file listing, reused across queries (same reasoning as
-  // Searcher.postings — per-query re-listing is a driver hotspot at scale)
-  private lazy val postings: DataFrame = spark.read.parquet(s"$indexDir/postings")
+  private val view = base.view
 
   /** Blocks skipped/scanned by the last search (for tests/metrics). */
   @transient var lastSkipped: Option[LongAccumulator] = None
   @transient var lastScanned: Option[LongAccumulator] = None
 
   def search(q: Query, k: Int): DataFrame = q match {
-    case _ if base.hasTombstones =>
+    case _ if view.hasTombstones =>
       // buried docs would poison the threshold heaps (a dead doc's clause
       // score is no lower bound on the k-th LIVE total), so pruning is
       // disabled until compaction purges them — the same class of
@@ -122,17 +120,12 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     * bound carries the OTHER terms' global maxima as rest, which any sound
     * single-clause theta (seeded or grown) can never exceed, so cross-term
     * blocks are unskippable at block granularity regardless of theta. The
-    * mechanism stays available (set graft.wand.seedMinBlocks) for layouts
-    * whose streams are NOT impact-ordered — e.g. doc-ordered segment files —
-    * where per-cut self-seeding does not happen; WandSpec forces it on to
-    * pin rank/score identity either way.
-    *
-    * Tests opt in PER INSTANCE via the constructor parameter (the sys prop
-    * is only the process-wide default) so suites running in parallel never
-    * arm each other's searchers.
+    * mechanism stays available (the `seedMinBlocksOpt` constructor
+    * parameter) for layouts whose streams are NOT impact-ordered — e.g.
+    * doc-ordered segment files — where per-cut self-seeding does not happen;
+    * WandSpec forces it on to pin rank/score identity either way.
     */
-  private val seedMinBlocks: Long = seedMinBlocksOpt.getOrElse(
-    sys.props.get("graft.wand.seedMinBlocks").map(_.toLong).getOrElse(Long.MaxValue))
+  private val seedMinBlocks: Long = seedMinBlocksOpt.getOrElse(Long.MaxValue)
 
   /** Minimum estimated scan size (posting blocks over the query's terms)
     * before the dictionary θ-seed job runs to arm the REDUCE-side term-level
@@ -144,8 +137,7 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     * makes the essential/non-essential split live from the first block.
     * The seed job itself reads only (k/128+1) blocks of one term.
     */
-  private val maxScoreMinBlocks: Long = maxScoreMinBlocksOpt.getOrElse(
-    sys.props.get("graft.wand.maxScoreMinBlocks").map(_.toLong).getOrElse(64L))
+  private val maxScoreMinBlocks: Long = maxScoreMinBlocksOpt.getOrElse(64L)
 
   private def estBlocks(dict: Iterable[TermDictRow]): Long =
     dict.iterator.map(d =>
@@ -162,14 +154,13 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     * cross-partition gap is exactly where sub-global thetas under-skip).
     * Returns -inf when the seed blocks hold fewer than k postings.
     */
-  private def seedTheta(seedTid: Long, w: Bm25.TermWeight, k: Int): Double = {
+  private def seedTheta(ts: IndexView.Terms, seedTid: Long, w: Bm25.TermWeight,
+                        k: Int): Double = {
     val ubCol = col("max_tf").cast("double") /
       (col("max_tf").cast("double") +
         element_at(typedLit(w.cache.toSeq), col("max_nb") + 1).cast("double"))
     val nBlocks = math.max(1, (k + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize + 1)
-    val rows = postings
-      .filter(col("term_id") === seedTid)
-      .select(ScoreBlock.cols.map(col): _*)
+    val rows = view.blocks(ts, Seq(seedTid), ScoreBlock.cols)
       .orderBy(ubCol.desc, col("first_doc").asc)
       .limit(nBlocks)
       .as[ScoreBlock].collect()
@@ -203,7 +194,8 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     * SHOULD-term postings never grow theta (a should doc needn't match m).
     */
   private def searchMustShould(mustTerm: String, shoulds: Seq[String], k: Int): DataFrame = {
-    val dict: Map[String, TermDictRow] = base.lookup(mustTerm +: shoulds)
+    val ts = view.lookup(mustTerm +: shoulds)
+    val dict: Map[String, TermDictRow] = ts.rows
     if (!dict.contains(mustTerm)) // absent MUST -> conjunction matches nothing
       return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
     val st = base.stats
@@ -237,15 +229,13 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     // doc-exact leapfrog + verified-total bounds instead.
     val theta0: Double =
       if (estBlocks(dict.values) < seedMinBlocks) Double.NegativeInfinity
-      else seedTheta(mustId, weights(mustId), k)
+      else seedTheta(ts, mustId, weights(mustId), k)
 
     import graft.codec.ScoreSpanBlock
     val tiOf: Map[Long, Int] = ids.zipWithIndex.toMap // ids sorted asc
     val bTi = spark.sparkContext.broadcast(tiOf)
     val width = PositionalScan.bucketWidth(spark, st.max_doc)
-    val tagged = postings
-      .filter(col("term_id").isin(ids: _*))
-      .select(ScoreSpanBlock.cols.map(col): _*)
+    val tagged = view.blocks(ts, ids, ScoreSpanBlock.cols)
       .as[ScoreSpanBlock]
       .mapPartitions { blocks =>
         val w = bw.value
@@ -292,19 +282,8 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
           }
         }
       }
-    val scorers: Array[graft.score.Similarity.TermScorer] =
-      ids.map { tid =>
-        val tw = weights(tid)
-        val f: graft.score.Similarity.TermScorer =
-          (tf: Float, nb: Byte) => Bm25.score(tw.weightValue, tf, tw.cache, nb)
-        f
-      }.toArray
-    val ubFns: Array[(Int, Int) => Double] =
-      ids.map { tid =>
-        val tw = weights(tid)
-        val f: (Int, Int) => Double = (maxTf, maxNb) => ubD(tw, maxTf, maxNb)
-        f
-      }.toArray
+    val scorers = ids.map(tid => scorer(weights(tid))).toArray
+    val ubFns = ids.map(tid => ubFn(weights(tid))).toArray
     // reduce side: doc-exact SHOULD leapfrog (a should block with no
     // established MUST candidate in range never decodes) + block bounds
     // against max(theta0, verified flushed totals)
@@ -336,7 +315,8 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     val should = shouldAll.filterNot(must.contains)
     val mm = math.max(0, mm0 - shouldAll.count(must.contains))
     val mustNot = not0.distinct
-    val dict: Map[String, TermDictRow] = base.lookup(must ++ should ++ mustNot)
+    val ts = view.lookup(must ++ should ++ mustNot)
+    val dict: Map[String, TermDictRow] = ts.rows
     if (must.exists(t => !dict.contains(t)) ||
       (must ++ should).forall(t => !dict.contains(t)))
       return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
@@ -352,25 +332,12 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     val notIds = notTerms.map(dict(_).term_id).toSet
     val allTids: Seq[Long] = (weights.keySet ++ notIds).toSeq.sorted
     val tiOf: Map[Long, Int] = allTids.zipWithIndex.toMap
-    val scorers: Array[graft.score.Similarity.TermScorer] =
-      allTids.map { tid =>
-        weights.get(tid).map { tw =>
-          val f: graft.score.Similarity.TermScorer =
-            (tf: Float, nb: Byte) => Bm25.score(tw.weightValue, tf, tw.cache, nb)
-          f
-        }.orNull
-      }.toArray
+    val scorers = allTids.map(tid => weights.get(tid).map(scorer).orNull).toArray
     val isMust: Array[Boolean] = allTids.map(mustIds.contains).toArray
     val isNot: Array[Boolean] = allTids.map(notIds.contains).toArray
     // bound algebra: per-clause double ub from block-max metadata; NOT
     // clauses never score so they contribute nothing to the bound or rests
-    val ubFns: Array[(Int, Int) => Double] =
-      allTids.map { tid =>
-        weights.get(tid).map { tw =>
-          val f: (Int, Int) => Double = (maxTf, maxNb) => ubD(tw, maxTf, maxNb)
-          f
-        }.orNull
-      }.toArray
+    val ubFns = allTids.map(tid => weights.get(tid).map(ubFn).orNull).toArray
     val dictByTid: Map[Long, TermDictRow] = dict.values.map(d => d.term_id -> d).toMap
     val gmaxD: Map[Long, Double] = allTids.map { tid =>
       tid -> weights.get(tid).map { tw =>
@@ -388,28 +355,17 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     val leadTid: Option[Long] =
       if (mustIds.nonEmpty) Some(mustIds.minBy(dfOf)) else None
     val leadTi = leadTid.map(tiOf).getOrElse(-1)
-    // Sub-bucketing knob: the default bucket width (maxDoc / shuffle
-    // partitions) gives each reduce partition exactly ONE bucket, so the
-    // verified-total theta can only gate the bucket-level checks across
-    // partitions-worth of buckets when this is raised. Measured at 4M turns,
-    // sub=8 replicated block shipping ~2.8x (blocks spanning several
-    // sub-buckets ship once per bucket) for a negligible extra skip count —
-    // the block-granular leapfrog below is WIDTH-INDEPENDENT and provides
-    // the real conjunction pruning — so the default stays 1 (exhaustive
-    // geometry, zero extra shuffle).
-    val sub = sys.props.get("graft.wand.subBuckets").map(_.toInt).getOrElse(1)
-    val width = math.max(1L, PositionalScan.bucketWidth(spark, st.max_doc) / sub)
+    // the exhaustive geometry: one bucket per reduce partition (finer
+    // buckets replicate blocks that span several of them, and the
+    // block-granular leapfrog that does the real conjunction pruning is
+    // width-independent)
+    val width = PositionalScan.bucketWidth(spark, st.max_doc)
 
     import graft.codec.ScoreSpanBlock
-    var blocks = postings
-      .filter(col("term_id").isin(allTids: _*))
-      .select(ScoreSpanBlock.cols.map(col): _*)
-      .as[ScoreSpanBlock]
+    var blocks = view.blocks(ts, allTids, ScoreSpanBlock.cols).as[ScoreSpanBlock]
     leadTid.filter(t => dfOf(t) <= Searcher.phraseLeadMaxDf && allTids.size > 1)
       .foreach { t =>
-        val ranges = postings.filter(col("term_id") === t)
-          .select("first_doc", "last_doc").as[(Long, Long)].collect()
-        val bIv = spark.sparkContext.broadcast(PositionalScan.Intervals.merge(ranges))
+        val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(t)))
         blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
       }
 
@@ -441,7 +397,8 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
 
   private def searchShould(terms: Seq[(String, Float)], k: Int): DataFrame = {
     val boosts: Map[String, Float] = terms.groupBy(_._1).map { case (t, cs) => t -> cs.head._2 }
-    val dict: Map[String, TermDictRow] = base.lookup(terms.map(_._1).distinct)
+    val ts = view.lookup(terms.map(_._1).distinct)
+    val dict: Map[String, TermDictRow] = ts.rows
     if (dict.isEmpty) return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
     val st = base.stats
     val weights: Map[Long, Bm25.TermWeight] = dict.values.map { d =>
@@ -484,15 +441,13 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
       if (estBlocks(dict.values) >= seedMinBlocks ||
         (freezePossible && estBlocks(dict.values) >= maxScoreMinBlocks)) {
         val tid = ids.maxBy(gmaxD)
-        seedTheta(tid, weights(tid), k)
+        seedTheta(ts, tid, weights(tid), k)
       } else Double.NegativeInfinity
 
     val combined =
       if (singleTerm) {
         // single term: score during the scan, no combine, no shuffle
-        val hits = postings
-          .filter(col("term_id").isin(ids: _*))
-          .select(ScoreBlock.cols.map(col): _*)
+        val hits = view.blocks(ts, ids, ScoreBlock.cols)
           .as[ScoreBlock]
           .mapPartitions { blocks =>
             val w = bw.value
@@ -567,16 +522,10 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
             val essTids = rankedTids.take(splitRank)
             val dfByTid: Map[Long, Long] = dict.values.map(d => d.term_id -> d.df).toMap
             if (essTids.map(dfByTid).sum > Searcher.phraseLeadMaxDf) None
-            else {
-              val ranges = postings.filter(col("term_id").isin(essTids: _*))
-                .select("first_doc", "last_doc").as[(Long, Long)].collect()
-              Some(spark.sparkContext.broadcast(PositionalScan.Intervals.merge(ranges)))
-            }
+            else Some(spark.sparkContext.broadcast(view.docRanges(ts, essTids)))
           }
         val splitRankEff = if (essIv.isDefined) splitRank else Int.MaxValue
-        val tagged = postings
-          .filter(col("term_id").isin(ids: _*))
-          .select(ScoreSpanBlock.cols.map(col): _*)
+        val tagged = view.blocks(ts, ids, ScoreSpanBlock.cols)
           .as[ScoreSpanBlock]
           .mapPartitions { blocks =>
             val w = bw.value
@@ -627,19 +576,8 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
               }
             }
           }
-        val scorers: Array[graft.score.Similarity.TermScorer] =
-          ids.map { tid =>
-            val tw = weights(tid)
-            val f: graft.score.Similarity.TermScorer =
-              (tf: Float, nb: Byte) => Bm25.score(tw.weightValue, tf, tw.cache, nb)
-            f
-          }.toArray
-        val ubFns: Array[(Int, Int) => Double] =
-          ids.map { tid =>
-            val tw = weights(tid)
-            val f: (Int, Int) => Double = (maxTf, maxNb) => ubD(tw, maxTf, maxNb)
-            f
-          }.toArray
+        val scorers = ids.map(tid => scorer(weights(tid))).toArray
+        val ubFns = ids.map(tid => ubFn(weights(tid))).toArray
         BlockCombine.combineShouldPruned(spark, tagged, scorers,
           suffix = suffix, ubFns = ubFns, rests = ids.map(restD).toArray,
           slack = slack, k = k, width = width, theta0 = theta0,
@@ -667,4 +605,10 @@ object WandSearcher {
     if (c.isInfinity) 0.0
     else w.weightValue.toDouble * maxTf / (maxTf + c)
   }
+
+  /** A term's float32 scorer and its block bound — companion-side, like ubD. */
+  private def scorer(w: Bm25.TermWeight): graft.score.Similarity.TermScorer =
+    (tf: Float, nb: Byte) => Bm25.score(w.weightValue, tf, w.cache, nb)
+  private def ubFn(w: Bm25.TermWeight): (Int, Int) => Double =
+    (maxTf, maxNb) => ubD(w, maxTf, maxNb)
 }

@@ -1,259 +1,15 @@
 package graft.streaming
 
-import graft.model.{CollectionStats, TermDictRow}
-import graft.query.Query
-import graft.score.Bm25
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.query.{Query, Searcher}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Top-k search over a segmented (streaming) index snapshot — the MultiReader
-  * / TopDocs.Merge analog (/root/reference/src/Lucene.Net/Search/TopDocs.cs:301):
-  * per-segment postings scans score with GLOBAL collection statistics (df,
-  * maxDoc, sumTtf summed across base + segments, exactly how IndexSearcher
-  * resolves TermContext across leaves,
-  * /root/reference/src/Lucene.Net/Search/TermQuery.cs:50-83), then one global
-  * top-k. Doc ids are globally unique, so (score desc, doc_id asc) subsumes
-  * the cross-shard tie-break.
+/** Top-k search over a streaming store's latest snapshot. The batch
+  * [[Searcher]] reads a store directly (its [[graft.query.IndexView]] opens
+  * the snapshot's base + segments + tombstones), so this class only names
+  * the streaming use; every query shape and similarity works on it.
   */
 final class SegmentedSearcher(spark: SparkSession, indexDir: String) extends Serializable {
-  import spark.implicits._
+  private val searcher = new Searcher(spark, indexDir)
 
-  private val snap = new SnapshotLog(indexDir, spark).latest()
-    .getOrElse(throw new IllegalStateException(s"no committed snapshot in $indexDir"))
-  private val parts: Seq[String] = snap.base.toSeq ++ snap.segments
-
-  /** Global stats: element-wise sums of the per-segment stats tables. */
-  val stats: CollectionStats = {
-    val per = parts.map(d => spark.read.parquet(s"$d/stats").as[CollectionStats].head())
-    CollectionStats(per.map(_.max_doc).sum, per.map(_.doc_count).sum,
-      per.map(_.sum_ttf).sum, per.map(_.sum_df).sum)
-  }
-
-  /** term -> (global df, per-segment term_ids). */
-  private def lookup(terms: Seq[String]): Map[String, (Long, Seq[(String, Long)])] = {
-    if (terms.isEmpty) return Map.empty
-    parts.flatMap { d =>
-      spark.read.parquet(s"$d/termdict")
-        .filter(col("term").isin(terms.distinct: _*))
-        .as[TermDictRow].collect()
-        .map(r => (r.term, d, r.term_id, r.df))
-    }
-      .groupBy(_._1)
-      .map { case (t, rows) =>
-        t -> (rows.map(_._4).sum, rows.map(r => (r._2, r._3)))
-      }
-  }
-
-  /** Term-dictionary predicate expansion across base + segments — the same
-    * rewrite contract as the batch Searcher (ordered by term, clause-count
-    * guarded), over the UNION of the per-segment dictionaries.
-    */
-  private def expand(pred: org.apache.spark.sql.Column, maxTerms: Int): Seq[String] =
-    parts.map(d =>
-        spark.read.parquet(s"$d/termdict").filter(pred).select("term").as[String])
-      .reduce(_ union _)
-      .distinct().orderBy("term").limit(maxTerms + 1).collect().toSeq
-
-  /** Distributed fuzzy top-N over the UNION dictionary (same ranking as the
-    * batch searcher).
-    */
-  private def fuzzyTop(f: Query.Fuzzy): Seq[(String, Int)] =
-    graft.query.Rewrite.fuzzyTopIn(
-      parts.map(d => spark.read.parquet(s"$d/termdict").select("term"))
-        .reduce(_ union _).distinct(), f)
-
-  private def isFlatLeaf(q: Query): Boolean = q match {
-    case _: Query.Term | _: Query.Prefix | _: Query.Wildcard | _: Query.Regexp |
-         _: Query.TermRange | _: Query.Fuzzy => true
-    case _ => false
-  }
-
-  def search(q: Query, k: Int): DataFrame = {
-    // Term/clause boosts thread into the weights exactly as Searcher does
-    // (segmented/batch parity must hold for boosted queries too).
-    val (must, should0, mustNot0, mm, boosts) = q match {
-      case Query.Term(t, bst) =>
-        (Nil, Seq(t), Nil, 0, Map(t -> bst))
-      case bb: Query.Bool =>
-        (bb.must, bb.should, bb.mustNot, bb.minShouldMatch, Map.empty[String, Float])
-      case Query.BoolQ(cs, mm0, gb) if gb == 1.0f && cs.forall(_._2.isInstanceOf[Query.Term]) =>
-        val ts = cs.map { case (o, t) => (o, t.asInstanceOf[Query.Term]) }
-        (ts.collect { case (Query.Must, t) => t.term },
-          ts.collect { case (Query.Should, t) => t.term },
-          ts.collect { case (Query.MustNot, t) => t.term }, mm0,
-          ts.filter(_._1 != Query.MustNot)
-            .groupBy(_._2.term).map { case (t, xs) => t -> xs.head._2.boost })
-      case Query.BoolQ(cs, mm0, gb) if gb == 1.0f && cs.forall(c => isFlatLeaf(c._2)) =>
-        // multi-term leaves rewrite against the union dictionary, then the
-        // BoolQ-of-terms path scores them (same expansions as batch). The
-        // harden pre-pass handles MUST-side expansions and over-cap
-        // constant-score shapes; the snapshot reader executes only the flat
-        // outcomes (nested/constant-score need compact() first — documented).
-        graft.query.Rewrite.harden(expand, fuzzyTop, cs) match {
-          case None =>
-            return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
-          case Some(hs) =>
-            require(hs.forall(c => isFlatLeaf(c._2)),
-              "segmented snapshot: MUST-side or over-cap multi-term expansion " +
-                "needs a compacted base (compact() first)")
-            val rewritten = graft.query.Rewrite.clauses(expand, fuzzyTop, hs)
-              .map { case (t, occ, b) => (occ, Query.Term(t, b): Query) }
-            return search(Query.BoolQ(rewritten, mm0), k)
-        }
-      case p: Query.Phrase =>
-        return searchPositional(p.terms.map(Seq(_)), p.slop, p.boost, k)
-      case mp: Query.MultiPhrase =>
-        return searchPositional(mp.slots, mp.slop, mp.boost, k)
-      case leaf if isFlatLeaf(leaf) =>
-        return search(Query.BoolQ(Seq((Query.Should, leaf))), k)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"segmented snapshot supports flat booleans, multi-term rewrites " +
-            s"and phrases (compact() first for: $other)")
-    }
-    val mustD = must.distinct
-    val should = should0.distinct.filterNot(mustD.contains)
-    val mustNot = mustNot0.distinct
-    val dict = lookup(mustD ++ should ++ mustNot)
-    if (mustD.exists(!dict.contains(_)) || (mustD ++ should).forall(!dict.contains(_)))
-      return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
-    val posTerms = (mustD ++ should).filter(dict.contains).sorted
-    val notTerms = mustNot.filter(dict.contains)
-    // clause index by sorted term order = the canonical float32 sum order
-    val clauseIdx: Map[String, Int] = posTerms.zipWithIndex.toMap
-    val weights: Map[String, Bm25.TermWeight] = posTerms.map { t =>
-      t -> Bm25.termWeight(clauseIdx(t).toLong, dict(t)._1, stats.max_doc,
-        stats.sum_ttf, boosts.getOrElse(t, 1.0f))
-    }.toMap
-    val mustSet = mustD.toSet
-
-    // clause list in canonical order: posTerms (sorted) then MUST_NOT
-    // presence-only clauses — compact ti for the packed combine
-    val allClauses: Seq[String] = posTerms ++ notTerms.filterNot(posTerms.contains)
-    val tiOfTerm: Map[String, Int] = allClauses.zipWithIndex.toMap
-    val scorers: Array[graft.score.Similarity.TermScorer] =
-      allClauses.map { t =>
-        weights.get(t) match {
-          case Some(w) =>
-            val f: graft.score.Similarity.TermScorer =
-              (tf: Float, nb: Byte) => Bm25.score(w.weightValue, tf, w.cache, nb)
-            f
-          case None => null
-        }
-      }.toArray
-    val isMust: Array[Boolean] = allClauses.map(mustSet.contains).toArray
-    val isNot: Array[Boolean] = allClauses.map(notTerms.contains).toArray
-    val nMust = mustSet.count(dict.contains)
-    // lead-with-rarest MUST clause (global df), as on the batch path
-    val leadTi: Int =
-      if (nMust > 0) tiOfTerm(mustD.filter(dict.contains).minBy(t => dict(t)._1))
-      else -1
-    val width = graft.query.PositionalScan.bucketWidth(spark, stats.max_doc)
-
-    import graft.codec.ScoreSpanBlock
-    val perSegment: Seq[Dataset[graft.query.BlockCombine.Tagged]] = parts.map { d =>
-      // this segment's term_id -> (ti, isNot)
-      val tidMap: Map[Long, Int] = (posTerms ++ notTerms).flatMap { t =>
-        dict(t)._2.collect { case (`d`, tid) => tid -> tiOfTerm(t) }
-      }.toMap
-      if (tidMap.isEmpty) spark.emptyDataset[graft.query.BlockCombine.Tagged]
-      else {
-        val bm = spark.sparkContext.broadcast(tidMap)
-        val bNot = spark.sparkContext.broadcast(isNot)
-        spark.read.parquet(s"$d/postings")
-          .filter(col("term_id").isin(tidMap.keySet.toSeq: _*))
-          .select(ScoreSpanBlock.cols.map(col): _*)
-          .as[ScoreSpanBlock]
-          .flatMap { b =>
-            val ti = bm.value(b.term_id)
-            val rank =
-              if (bNot.value(ti)) 1
-              else if (leadTi < 0) 0
-              else if (ti == leadTi) 0 else 1
-            graft.query.PositionalScan.buckets(b.first_doc, b.last_doc, width).map(bk =>
-              graft.query.BlockCombine.Tagged(bk, rank, ti, b.first_doc, b.cnt,
-                b.doc_bytes, b.tf_bytes, b.norm_bytes))
-          }
-      }
-    }
-    val combined = graft.query.BlockCombine.combine(spark,
-      perSegment.reduce(_ union _), scorers, isMust, isNot, nMust, mm, width)
-
-    // liveDocs application: buried docs drop out before the top-k
-    val liveOnly =
-      if (snap.tombs.isEmpty) combined.toDF("doc_id", "score")
-      else {
-        val dead = snap.tombs.map(t => spark.read.parquet(t)).reduce(_ unionByName _)
-          .select("doc_id").distinct()
-        combined.toDF("doc_id", "score").join(dead, Seq("doc_id"), "left_anti")
-      }
-    liveOnly
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
-  /** Phrase / MultiPhrase over a segmented snapshot: per-segment positional
-    * block scans (each doc's postings live in exactly one segment) scored
-    * with GLOBAL statistics — the same cross-leaf weight resolution as the
-    * term path — through the shared doc-range-bucketed kernel
-    * ([[graft.query.PositionalScan]]; doc ids are globally unique and
-    * dense across base + segments, so one bucketing covers the union).
-    * Slot alternatives order ascending by term — the same order as the
-    * batch searcher's ascending term_id (term ids are assigned in term
-    * order), so the summed-idf weight is float-identical.
-    */
-  private def searchPositional(slots: Seq[Seq[String]], slop: Int, boost: Float,
-                               k: Int): DataFrame = {
-    import graft.codec.PosSpanBlock
-    import graft.query.PositionalScan
-    require(slots.size >= 2, "phrase needs at least two positions")
-    val dict = lookup(slots.flatten.distinct)
-    val slotTerms: Array[Array[String]] =
-      slots.map(_.filter(dict.contains).distinct.sorted.toArray).toArray
-    if (slotTerms.exists(_.isEmpty))
-      return spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")
-    var idfSum = 0.0f
-    slotTerms.foreach(_.foreach(t => idfSum += Bm25.idf(dict(t)._1, stats.max_doc)))
-    val weightValue = Bm25.weightValue(idfSum, boost)
-    val cache = Bm25.buildCache(Bm25.avgFieldLength(stats.sum_ttf, stats.max_doc))
-    val allTerms: Seq[String] = slotTerms.flatten.distinct.sorted
-    val clauseIdx: Map[String, Int] = allTerms.zipWithIndex.toMap
-    val slotIdx: Array[Array[Int]] = slotTerms.map(_.map(clauseIdx))
-    val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-    // lead slot = fewest total postings (global df sum across alternatives)
-    val slotDf: Array[Long] = slotTerms.map(_.map(t => dict(t)._1).sum)
-    val leadTis: Set[Int] = slotIdx(slotDf.indexOf(slotDf.min)).toSet
-
-    val perSegment: Seq[Dataset[PositionalScan.Tagged]] = parts.map { d =>
-      val tidMap: Map[Long, Int] = allTerms.flatMap { t =>
-        dict(t)._2.collect { case (`d`, tid) => tid -> clauseIdx(t) }
-      }.toMap
-      if (tidMap.isEmpty) spark.emptyDataset[PositionalScan.Tagged]
-      else {
-        val bm = spark.sparkContext.broadcast(tidMap)
-        val bLead = spark.sparkContext.broadcast(leadTis)
-        spark.read.parquet(s"$d/postings")
-          .filter(col("term_id").isin(tidMap.keySet.toSeq: _*))
-          .select(PosSpanBlock.cols.map(col): _*)
-          .as[PosSpanBlock]
-          .flatMap { b =>
-            val ti = bm.value(b.term_id)
-            val rank = if (bLead.value(ti)) 0 else 1
-            PositionalScan.buckets(b.first_doc, b.last_doc, width).map(bk =>
-              PositionalScan.Tagged(bk, rank, ti, b.first_doc, b.cnt,
-                b.doc_bytes, b.tf_bytes, b.norm_bytes, b.pos_bytes))
-          }
-      }
-    }
-    val scored = PositionalScan.score(spark, perSegment.reduce(_ union _),
-      allTerms.size, slotIdx, width, slop, weightValue, cache)
-    val liveOnly =
-      if (snap.tombs.isEmpty) scored.toDF("doc_id", "score")
-      else {
-        val dead = snap.tombs.map(t => spark.read.parquet(t)).reduce(_ unionByName _)
-          .select("doc_id").distinct()
-        scored.toDF("doc_id", "score").join(dead, Seq("doc_id"), "left_anti")
-      }
-    liveOnly.orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
+  def search(q: Query, k: Int): DataFrame = searcher.search(q, k)
 }

@@ -54,7 +54,7 @@ final class SnapshotLog(indexDir: String, spark: SparkSession) {
     val dst = new Path(dir, f"snap-$id%012d.json")
     if (!fs.rename(tmp, dst))
       throw new IllegalStateException(s"snapshot commit race on $dst")
-    Snapshot(id, maxDoc, base, segments)
+    Snapshot(id, maxDoc, base, segments, tombs)
   }
 
   private def read(p: Path): String = {

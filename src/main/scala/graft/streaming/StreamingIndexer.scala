@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.build.{IndexBuilder, StableIds}
-import graft.codec.PostingBlock
+import graft.codec.{PostingCodec, ScoreBlock}
+import graft.query.IndexView
 import graft.model.Turn
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,34 +75,35 @@ object StreamingIndexer {
     * /root/reference/src/Lucene.Net/Index/IndexWriter.cs:1751).
     */
   def updateDocuments(batch: Dataset[Turn], indexDir: String, term: String): Unit = {
-    import batch.sparkSession.implicits._
     val spark = batch.sparkSession
     if (batch.isEmpty) { deleteByTerm(spark, indexDir, term); return }
     val log = new SnapshotLog(indexDir, spark)
     val snap = log.latest().getOrElse {
       appendSegment(batch, indexDir); return
     }
-    val parts = snap.base.toSeq ++ snap.segments
-    val dead: Seq[org.apache.spark.sql.DataFrame] = parts.flatMap { d =>
-      val tid = spark.read.parquet(s"$d/termdict")
-        .filter(col("term") === term).select("term_id").as[Long].collect()
-      if (tid.isEmpty) None
-      else Some(spark.read.parquet(s"$d/postings")
-        .filter(col("term_id") === tid.head)
-        .select(graft.codec.ScoreBlock.cols.map(col): _*)
-        .as[graft.codec.ScoreBlock]
-        .flatMap(b => graft.codec.PostingCodec.decode(b)._1.iterator)
-        .toDF("doc_id"))
-    }
-    val tombs =
-      if (dead.isEmpty) snap.tombs
-      else {
-        val tombDir = s"$indexDir/tomb-${snap.id + 1}"
-        dead.reduce(_ unionByName _).write.mode("overwrite").parquet(tombDir)
-        snap.tombs :+ tombDir
-      }
+    val tombs = snap.tombs ++ tombstoneTerm(spark, indexDir, snap, term)
     val (segDir, maxDoc) = buildSegment(batch, indexDir, Some(snap))
     log.commit(maxDoc, snap.base, snap.segments :+ segDir, tombs)
+  }
+
+  /** Write the docs of `snap` holding `term` — resolved across base +
+    * segments through one [[IndexView]] — as the next snapshot's tombstone
+    * table, fully distributed (dead docs stream straight into the table).
+    * Returns its path; None when no doc holds the term.
+    */
+  private def tombstoneTerm(spark: SparkSession, indexDir: String,
+                            snap: SnapshotLog#Snapshot, term: String): Option[String] = {
+    import spark.implicits._
+    val view = IndexView.of(spark, snap)
+    val ts = view.lookup(Seq(term))
+    ts.rows.get(term).map { d =>
+      val tombDir = s"$indexDir/tomb-${snap.id + 1}"
+      view.blocks(ts, Seq(d.term_id), ScoreBlock.cols).as[ScoreBlock]
+        .flatMap(b => PostingCodec.decode(b)._1.iterator)
+        .toDF("doc_id")
+        .write.mode("overwrite").parquet(tombDir)
+      tombDir
+    }
   }
 
   /** Buffer deletions: dead doc_ids become a tombstone table referenced by
@@ -126,26 +128,11 @@ object StreamingIndexer {
     * term's postings across base + segments, tombstone every matching doc.
     */
   def deleteByTerm(spark: SparkSession, indexDir: String, term: String): Unit = {
-    import spark.implicits._
     val log = new SnapshotLog(indexDir, spark)
     val snap = log.latest().getOrElse(return)
-    val parts = snap.base.toSeq ++ snap.segments
-    // fully distributed: dead docs stream straight into the tombstone table
-    val dead: Seq[DataFrame] = parts.flatMap { d =>
-      val tid = spark.read.parquet(s"$d/termdict")
-        .filter(col("term") === term).select("term_id").as[Long].collect()
-      if (tid.isEmpty) None
-      else Some(spark.read.parquet(s"$d/postings")
-        .filter(col("term_id") === tid.head)
-        .select(graft.codec.ScoreBlock.cols.map(col): _*)
-        .as[graft.codec.ScoreBlock]
-        .flatMap(b => graft.codec.PostingCodec.decode(b)._1.iterator)
-        .toDF("doc_id"))
+    tombstoneTerm(spark, indexDir, snap, term).foreach { tombDir =>
+      log.commit(snap.maxDoc, snap.base, snap.segments, snap.tombs :+ tombDir)
     }
-    if (dead.isEmpty) return
-    val tombDir = s"$indexDir/tomb-${snap.id + 1}"
-    dead.reduce(_ unionByName _).write.mode("overwrite").parquet(tombDir)
-    log.commit(snap.maxDoc, snap.base, snap.segments, snap.tombs :+ tombDir)
   }
 
   /** One exploded posting in flight through the bulk purge shuffle. `pos`
@@ -313,6 +300,7 @@ object StreamingIndexer {
     tombDf.foreach(_.unpersist(blocking = false))
     IndexBuilder.buildFromRuns(newBase, IndexBuilder.Options())
     log.commit(snap.maxDoc, Some(newBase), Nil)
+    IndexView.release(spark, parts)
   }
 
   /** Wire a streaming Dataset[Turn] into segment appends. Watermark bounds

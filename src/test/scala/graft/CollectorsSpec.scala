@@ -91,6 +91,34 @@ class CollectorsSpec extends AnyFunSuite {
     assert(spark.range(3).count() == 3L)
   }
 
+  test("collectTimeLimited: a failure after the budget expired is not a timeout") {
+    import spark.implicits._
+    // the projection over a local relation is evaluated in the calling
+    // thread while the plan is optimized: the budget expires mid-sleep, then
+    // the UDF fails on its own — that failure must surface as itself
+    val failLate = org.apache.spark.sql.functions.udf { (x: Int) =>
+      Thread.sleep(1000L)
+      if (x >= 0) throw new IllegalStateException("genuine failure")
+      x
+    }
+    val df = Seq(1).toDF("x").select(failLate($"x").as("y"))
+    val e = intercept[Exception](Collectors.collectTimeLimited(df, budgetMs = 100L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("genuine failure")), e)
+  }
+
+  test("collectTimeLimited: restores the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller's jobs")
+    try {
+      assert(Collectors.collectTimeLimited(spark.range(3).toDF(), budgetMs = 60000L).isRight)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "caller's jobs")
+    } finally sc.clearJobGroup()
+    assert(Collectors.collectTimeLimited(spark.range(3).toDF(), budgetMs = 60000L).isRight)
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
   test("cacheScored: replay serves later collectors from memory") {
     val q = Query.Bool(should = Seq("spark", "index"))
     val cached = Collectors.cacheScored(searcher.scoredDocs(q))

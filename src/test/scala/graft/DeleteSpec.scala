@@ -53,12 +53,35 @@ class DeleteSpec extends AnyFunSuite {
     val dead = snap1.tombs.map(t => spark.read.parquet(t)).reduce(_ unionByName _)
       .select("doc_id").as[Long].collect().toSet
     assert(dead.nonEmpty)
+    // commit returns exactly the snapshot a reader then sees, tombstones too
+    val log = new SnapshotLog(dir, spark)
+    assert(log.commit(snap1.maxDoc, snap1.base, snap1.segments, snap1.tombs) == log.latest().get)
 
     // read-your-deletes before compaction
     val seg = new SegmentedSearcher(spark, dir)
     val hits = seg.search(Query.Term("time"), 1000).collect().map(_.getLong(0)).toSet
     assert(hits.intersect(dead).isEmpty)
     assert(seg.search(Query.Term("person"), 1000).count() == 0)
+
+    // the store answers every query shape exactly like a batch build of the
+    // same corpus carrying the same tombstones (WAND falls back: pruning
+    // stays off while tombstones exist)
+    val batchDir = Files.createTempDirectory("graft_del_stream_batch").toString
+    IndexBuilder.buildFromTurns(spark.createDataset(all), batchDir)
+    Tombstones.append(spark, batchDir, dead.toSeq)
+    val batch = new Searcher(spark, batchDir)
+    val wand = new WandSearcher(spark, dir)
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+      df.collect().map(r => (r.getLong(0), java.lang.Float.floatToRawIntBits(r.getFloat(1)))).toSeq
+    for (q <- Seq(Query.Term("time"), Query.Bool(should = Seq("time", "year")),
+      Query.Phrase(Seq("time", "year"), slop = 2), Query.parse("(time OR year) AND way"),
+      Query.parse("+ti* year"), Query.ConstantScore(Query.Term("year"), 2.0f),
+      Query.DisMax(Seq(Query.Term("time"), Query.Term("year")), 0.5f), Query.MatchAll())) {
+      val want = bits(batch.search(q, 20))
+      assert(want.nonEmpty, s"no hits for $q")
+      assert(bits(seg.search(q, 20)) == want, s"segmented diverged on $q")
+      assert(bits(wand.search(q, 20)) == want, s"segmented WAND diverged on $q")
+    }
 
     // compaction purges: snapshot drops tombs, postings/norms shrink
     StreamingIndexer.compact(spark, dir)

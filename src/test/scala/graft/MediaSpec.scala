@@ -148,6 +148,43 @@ class MediaSpec extends AnyFunSuite {
     assert(meta(1).kind == "avi" && meta(1).width == 320 && meta(1).height == 240)
   }
 
+  test("corrupt AVI headers: huge chunk sizes, deep LIST nesting, overflowing duration") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    def le(i: Long): Array[Byte] = ByteBuffer.allocate(4)
+      .order(ByteOrder.LITTLE_ENDIAN).putInt(i.toInt).array()
+    def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
+    def riff(body: Array[Byte]): Array[Byte] =
+      ascii("RIFF") ++ le(4L + body.length) ++ ascii("AVI ") ++ body
+    def avih(usPerFrame: Long, frames: Long): Array[Byte] =
+      ascii("avih") ++ le(56) ++ (le(usPerFrame) ++ new Array[Byte](12) ++ le(frames) ++
+        new Array[Byte](12) ++ le(320) ++ le(240) ++ new Array[Byte](16))
+    // every result within a deadline: the walk must terminate, never spin
+    def within[A](body: => A): A = {
+      val f = scala.concurrent.Future(body)(scala.concurrent.ExecutionContext.global)
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(10, "s"))
+    }
+    // chunk sizes at and past 0x80000000 used to turn negative and stall
+    for (sz <- Seq(0x80000000L, 0xFFFFFFF8L, 0xFFFFFFF9L, 0xFFFFFFFFL)) {
+      val avi = riff(ascii("JUNK") ++ le(sz) ++ new Array[Byte](8))
+      assert(Media.sniffVideo(avi).contains("avi"))
+      assert(within(Media.videoMeta(avi)).isEmpty, f"size 0x$sz%x")
+    }
+    // a huge chunk before a valid avih skips to the end instead of looping
+    assert(within(Media.videoMeta(riff(ascii("JUNK") ++ le(0xFFFFFFF8L) ++ avih(33333, 300)))).isEmpty)
+    // LIST nesting deeper than any real file stops early, no stack overflow
+    val levels = 100000
+    val leaf = avih(33333, 300)
+    val deep = (0 until levels).iterator.flatMap { i =>
+      ascii("LIST") ++ le(4L + (levels - i - 1) * 12L + leaf.length) ++ ascii("hdrl")
+    }.toArray ++ leaf
+    assert(within(Media.videoMeta(riff(deep))).isEmpty)
+    // a product of two 32-bit fields past Long range has no duration
+    assert(within(Media.videoMeta(riff(avih(0xFFFFFFFFL, 0xFFFFFFFFL)))).get ==
+      Media.VideoMeta("avi", 320, 240, -1L))
+    assert(within(Media.videoMeta(riff(avih(33333, 300)))).get ==
+      Media.VideoMeta("avi", 320, 240, 10000L))
+  }
+
   test("sampleFrames: offsets, bounds, count cap") {
     val bytes = Array.tabulate(100)(_.toByte)
     val frames = Media.sampleFrames(bytes, frameSize = 8, stride = 32, n = 5)

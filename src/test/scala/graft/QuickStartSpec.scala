@@ -93,6 +93,21 @@ class QuickStartSpec extends AnyFunSuite {
     val seg = new SegmentedSearcher(spark, idxDir)
     assert(seg.search(Query.Phrase(Seq("time", "person")), 10).count() >= 0)
     assert(seg.search(Query.Term("time"), 10).count() > 0)
+    // a store takes every query shape, bit-identical to a batch build of the
+    // same turns (one micro-batch: the same doc ids)
+    val batchDir = Files.createTempDirectory("graft_qs_sbatch").toString
+    IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 30), batchDir)
+    val batch = new Searcher(spark, batchDir)
+    val store = new Searcher(spark, idxDir)
+    val wand = new WandSearcher(spark, idxDir)
+    for (q <- Seq(Query.parse("(time OR year) AND person"), Query.Term("time"),
+      Query.ConstantScore(Query.Term("time"), 1.5f), Query.MatchAll())) {
+      val want = batch.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(want.nonEmpty)
+      for (got <- Seq(seg.search(q, 10), store.search(q, 10), wand.search(q, 10)))
+        assert(got.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq == want,
+          s"store diverged on $q")
+    }
     StreamingIndexer.deleteByTerm(spark, idxDir, "time")
     assert(new SegmentedSearcher(spark, idxDir).search(Query.Term("time"), 10).count() == 0)
     val replacement = Seq(graft.model.Turn("cX", 0, "user",

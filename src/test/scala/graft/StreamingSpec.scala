@@ -2,11 +2,15 @@ package graft
 
 import graft.build.IndexBuilder
 import graft.fixtures.Transcripts
-import graft.query.{Query, Searcher}
+import graft.query.{Query, Searcher, WandSearcher}
 import graft.streaming.{SegmentedSearcher, SnapshotLog, StreamingIndexer}
 import graft.verify.IndexVerifier
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Streaming segment ingest: appended segments must be searchable with
   * GLOBAL statistics identical to a batch build of the same corpus (when
@@ -52,24 +56,96 @@ class StreamingSpec extends AnyFunSuite {
     Query.parse("time~1"),
     Query.parse("[w001230 TO w001240] person"),
     // multi-phrase over segments (slot alternatives)
-    Query.MultiPhrase(Seq(Seq("time", "year"), Seq("person"))))
+    Query.MultiPhrase(Seq(Seq("time", "year"), Seq("person"))),
+    // many common terms per doc: float bits depend on the clause-sum order
+    Query.Bool(should = Seq("way", "time", "year", "person", "day", "life", "world"))) ++
+    storeOnlyBefore
+
+  // nested, MUST-side multi-term and filter-style shapes: a segmented store
+  // could not run them before it shared the batch reader
+  private def storeOnlyBefore = Seq(
+    Query.parse("(time OR year) AND person"),
+    Query.parse("+w00123* time"),
+    Query.ConstantScore(Query.Term("time"), 1.5f),
+    Query.DisMax(Seq(Query.Term("time"), Query.parse("person year")), tieBreaker = 0.1f),
+    Query.MatchAll())
+
+  /** (doc id, float bits) rows: float equality down to the bit. */
+  private def hits(df: DataFrame): Seq[(Long, Int)] =
+    df.collect().map(r => (r.getLong(0), java.lang.Float.floatToRawIntBits(r.getFloat(1)))).toSeq
 
   test("three appended segments search identically to the batch build") {
     val seg = new SegmentedSearcher(spark, dirs._1)
+    val wand = new WandSearcher(spark, dirs._1) // pruned: the store holds no tombstones
     val batch = new Searcher(spark, dirs._2)
     // same corpus, same doc ids -> identical stats -> identical float32 scores
     queries.foreach { q =>
-      val a = seg.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      val b = batch.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(a == b, s"segmented diverged on $q\n seg: $a\n batch: $b")
+      val b = hits(batch.search(q, 10))
+      assert(b.nonEmpty || !storeOnlyBefore.contains(q), s"no hits for $q")
+      for ((reader, got) <- Seq("segmented" -> seg.search(q, 10), "segmented WAND" -> wand.search(q, 10))) {
+        val a = hits(got)
+        assert(a == b, s"$reader diverged on $q\n store: $a\n batch: $b")
+      }
     }
+  }
+
+  /** Spark jobs `body` runs, counted by a listener on a private job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-end"
+    val started = new AtomicInteger()
+    val markerSeen = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      // a listener sees events in posting order: once the marker job shows,
+      // every job of `body` has been counted
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, TimeUnit.SECONDS))
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("a term lookup on the 3-segment store runs one job, as on the batch index") {
+    val terms = Seq("time", "person", "w001234", "zzznope")
+    val seg = new Searcher(spark, dirs._1)
+    val batch = new Searcher(spark, dirs._2)
+    var a, b = Map.empty[String, graft.model.TermDictRow]
+    assert(jobsOf { a = seg.lookup(terms) } == 1)
+    assert(jobsOf { b = batch.lookup(terms) } == 1)
+    // global statistics: summed df/ttf, max of the block-max metadata
+    assert(a.keySet == Set("time", "person", "w001234"))
+    assert(a.map { case (t, d) => t -> (d.df, d.ttf, d.max_tf, d.max_nb) } ==
+      b.map { case (t, d) => t -> (d.df, d.ttf, d.max_tf, d.max_nb) })
+    // reopening reuses each segment's cached dictionary: nothing new stays
+    // cached per open
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach(_ => new Searcher(spark, dirs._1).lookup(terms))
+    assert(spark.sparkContext.getPersistentRDDs.size == cached)
   }
 
   test("compaction produces a valid base index with identical results") {
     val before = new SegmentedSearcher(spark, dirs._1)
       .search(Query.Bool(should = Seq("time", "person")), 10)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    val cached = spark.sparkContext.getPersistentRDDs.size
     StreamingIndexer.compact(spark, dirs._1)
+    // the three retired segments' cached dictionaries are released
+    assert(spark.sparkContext.getPersistentRDDs.size == cached - 3)
     val snap = new SnapshotLog(dirs._1, spark).latest().get
     assert(snap.segments.isEmpty && snap.base.isDefined)
     assert(IndexVerifier.verify(spark, snap.base.get).isEmpty)
