@@ -11,7 +11,8 @@ object SparkEntry {
     * 2-term disjunction top-10 (driver smoke-checks rows > 0).
     */
   def entry(spark: SparkSession): DataFrame =
-    Gate.topkSum(spark, "/root/testdata/sf0.001", Seq("spark", "window"), 10)
+    Gate.engineTopk(spark, "/root/testdata/sf0.001",
+      graft.query.Query.Bool(should = Seq("spark", "window")), 10)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Gate.queries

@@ -3,7 +3,9 @@ package graft.gate
 import graft.analysis.Analyzer
 import graft.build.{IndexBuilder, TermVectors}
 import graft.codec.{PosBlock, PostingCodec, ScoreBlock}
-import graft.model.{CollectionStats, TermDictRow}
+import graft.model.TermDictRow
+import graft.query.{Query, Searcher, WandSearcher}
+import graft.score.Bm25
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,13 +19,12 @@ import org.apache.spark.sql.functions._
   * — space-separated lowercase ASCII words — the chain reduces to
   * split-minus-stopwords, which is what makes a SQL oracle possible).
   *
-  * Score parity contract: scores are computed in double precision from the
-  * integer index data (tf, unsigned norm byte, df, maxDoc, sumTtf) with the
-  * SAME operation order as the oracle SQL, then quantized to
-  * `floor(score * 10000 + 0.5)` as BIGINT, so no raw float ever reaches the
-  * driver's hash compare. (The float32 Lucene-exact kernel in [[graft.score.Bm25]]
-  * is exercised by the ScalaTest oracle suite instead, where we control both
-  * sides bit-exactly.)
+  * Every gate that ranks or reports BM25 scores runs the shipped float32
+  * engine ([[Searcher]], or [[WandSearcher]] where named), ranks by the
+  * float32 score then doc_id, and quantizes to `floor(score * 10000 + 0.5)`
+  * as BIGINT, so no raw float reaches the oracle's hash compare. The oracle
+  * mirrors the [[graft.score.Bm25]] kernel op-for-op in DuckDB REAL
+  * arithmetic and ranks by the same score.
   */
 object Gate {
 
@@ -221,73 +222,47 @@ object Gate {
       dir
     })
 
-  // ---------- double-precision parity scoring (mirrors GateOracle SQL) ------
-
-  /** NORM_TABLE value for an unsigned norm byte, in double:
-    * f = (1 + ((nb+384) % 4)/4) * 2^((nb+384)/4 - 127); nv = 1/(f*f).
-    */
-  def normValue(nb: Int): Double = {
-    val v = nb + 384
-    val f = (1.0 + (v % 4) * 0.25) * math.pow(2.0, (v / 4 - 127).toDouble)
-    1.0 / (f * f)
-  }
-
-  /** idf2 = ln(1 + (n - df + 0.5)/(df + 0.5)) * 2.2 — the per-term weight. */
-  def idf2(df: Long, n: Long): Double =
-    math.log(1.0 + (n - df + 0.5) / (df + 0.5)) * 2.2
-
-  /** score = idf2 * tf / (tf + 1.2*(0.25 + 0.75*nv/avgdl)) — op order matches
-    * the oracle SQL token-for-token.
-    */
-  def hitScore(tf: Int, nb: Int, idf2v: Double, avgdl: Double): Double =
-    idf2v * tf / (tf + 1.2 * (0.25 + 0.75 * normValue(nb) / avgdl))
+  // ---------- the engine under the gates ----------------------------------
 
   /** Quantized score column: floor(score*10000 + 0.5) as BIGINT. */
   def q(c: Column): Column = floor(c * lit(10000) + lit(0.5)).cast("long")
 
-  private def stats(spark: SparkSession, idx: String): CollectionStats = {
-    import spark.implicits._
-    spark.read.parquet(s"$idx/stats").as[CollectionStats].head()
-  }
-
   private def termdict(spark: SparkSession, idx: String): DataFrame =
     spark.read.parquet(s"$idx/termdict")
 
-  /** Per-(doc, term) double scores for the given concrete terms, decoded from
-    * the postings table (Parquet row-group pruning on term_id does the term
-    * seek). Returns (doc_id LONG, term STRING, s DOUBLE).
-    */
-  def hits(spark: SparkSession, sfDir: String, terms: Seq[String]): DataFrame =
-    hitsIn(spark, indexDir(spark, sfDir), terms)
+  /** The shipped engine over the gate index. */
+  private def searcher(spark: SparkSession, sfDir: String): Searcher =
+    new Searcher(spark, indexDir(spark, sfDir))
 
-  /** Like [[hits]] but against an explicit index directory (used by the
-    * English-analyzed variant).
+  /** (doc_id, score_q): the engine's float32 score, quantized. */
+  private def scoreQ(scored: DataFrame): DataFrame =
+    scored.select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
+
+  /** The top `k` of a scored (doc_id, score) frame by the float32 score,
+    * then doc_id — the engine's collector order, which the oracles rank by.
     */
-  def hitsIn(spark: SparkSession, idx: String, terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val st = stats(spark, idx)
-    val n = st.max_doc
-    val avgdl = st.sum_ttf.toDouble / n
-    val dict = termdict(spark, idx)
-      .filter(col("term").isin(terms.distinct: _*))
-      .as[TermDictRow].collect()
-    if (dict.isEmpty) return emptyHits(spark)
-    val weights: Map[Long, (String, Double)] =
-      dict.map(d => d.term_id -> (d.term, idf2(d.df, n))).toMap
-    val bw = spark.sparkContext.broadcast(weights)
-    spark.read.parquet(s"$idx/postings")
-      .filter(col("term_id").isin(weights.keySet.toSeq: _*))
-      .select(ScoreBlock.cols.map(col): _*) // prunes the positions column
-      .as[ScoreBlock]
-      .flatMap { b =>
-        val (docs, tfs, nbs) = PostingCodec.decode(b)
-        val (term, w) = bw.value(b.term_id)
-        docs.indices.iterator.map { i =>
-          (docs(i), term, hitScore(tfs(i), nbs(i) & 0xff, w, avgdl))
-        }
-      }
-      .toDF("doc_id", "term", "s")
-  }
+  private def rankQ(scored: DataFrame, k: Int): DataFrame =
+    scoreQ(scored.orderBy(desc("score"), asc("doc_id")).limit(k))
+
+  /** Run the float32 ENGINE ([[Searcher]]) end-to-end and project the
+    * quantized score — the oracle ranks by the bit-identical REAL score.
+    */
+  def engineTopk(spark: SparkSession, sfDir: String, qry: Query, k: Int): DataFrame =
+    engineTopkIn(spark, indexDir(spark, sfDir), qry, k)
+
+  /** [[engineTopk]] over an explicit index directory (the analyzer and
+    * payload variants).
+    */
+  private def engineTopkIn(spark: SparkSession, idx: String, qry: Query, k: Int): DataFrame =
+    scoreQ(new Searcher(spark, idx).search(qry, k))
+
+  /** The docs matching one term, from the engine's scorer stream. */
+  private def docsOf(spark: SparkSession, sfDir: String, term: String): DataFrame =
+    searcher(spark, sfDir).scoredDocs(Query.Term(term)).select("doc_id")
+
+  private val nestedQuery = Query.parse("(spark OR window) AND merge")
+  private val dismaxQuery =
+    Query.DisMax(Seq(Query.Term("spark"), Query.Term("window")), tieBreaker = 0.1f)
 
   /** Per-(doc, term) positions decoded from the postings positions column
     * (DOCS_AND_FREQS_AND_POSITIONS read path). Returns
@@ -316,30 +291,6 @@ object Gate {
       }
       .toDF("doc_id", "term", "nb", "pos")
   }
-
-  private def emptyHits(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(Long, String, Double)].toDF("doc_id", "term", "s")
-  }
-
-  /** Expand a term-dictionary predicate to concrete terms (MultiTermQuery
-    * rewrite: prefix/wildcard/fuzzy/range).
-    */
-  def expand(spark: SparkSession, sfDir: String, pred: Column): Seq[String] = {
-    import spark.implicits._
-    val idx = indexDir(spark, sfDir)
-    termdict(spark, idx).filter(pred).select("term").as[String].collect().toSeq.sorted
-  }
-
-  /** Sum-of-clauses top-k: the TermQuery / BooleanQuery-SHOULD read path. */
-  def topkSum(spark: SparkSession, sfDir: String, terms: Seq[String], k: Int): DataFrame =
-    rank(hits(spark, sfDir, terms)
-      .groupBy("doc_id").agg(sum("s").as("sd")), k)
-
-  private def rank(perDoc: DataFrame, k: Int): DataFrame =
-    perDoc.select(col("doc_id"), q(col("sd")).as("score_q"))
-      .orderBy(desc("score_q"), asc("doc_id"))
-      .limit(k)
 
   def docsTable(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
@@ -514,20 +465,19 @@ object Gate {
         .toDF("doc_id", "tf")
         .orderBy("doc_id")
     }),
-    // --- FLOAT32 ENGINE gates: run query.Searcher / WandSearcher end-to-end
-    // (decode, float32 kernel, packed-block combine, top-k) against a
-    // bit-exact REAL-arithmetic DuckDB oracle — the shipping engine itself
-    // under the driver's hard correctness signal.
-    "ft_engine_term" -> ((s, d) =>
-      engineTopk(s, d, graft.query.Query.Term("vector"), 10)),
+    // --- ranked gates: every one below runs query.Searcher (or
+    // WandSearcher where named) end-to-end — decode, float32 kernel,
+    // packed-block combine, top-k — against a bit-exact REAL-arithmetic
+    // DuckDB oracle. The ft_engine_* gates cover the engine paths (WAND,
+    // payloads, collectors); the ft_q_* gates the query shapes.
+    "ft_engine_term" -> ((s, d) => engineTopk(s, d, Query.Term("vector"), 10)),
     "ft_multi_collector" -> ((s, d) => {
       // MultiCollector(TopScoreDoc, TotalHitCount) analog: ONE pass — a
       // CollectMetrics (observe) node under the top-k counts every scored
       // row and tracks max score while the partial top-k consumes the same
       // stream; the TopDocs-style sidecar is projected onto each hit row.
-      val searcher = new graft.query.Searcher(s, indexDir(s, d))
       val (top, totals) = graft.query.Collectors.searchWithTotals(
-        searcher, graft.query.Query.Term("vector"), 10)
+        searcher(s, d), Query.Term("vector"), 10)
       val maxQ = totals.maxScore
         .map(m => math.floor(m.toDouble * 10000 + 0.5).toLong).getOrElse(0L)
       import s.implicits._
@@ -536,123 +486,69 @@ object Gate {
           lit(totals.totalHits).as("total_hits"), lit(maxQ).as("max_q"))
     }),
     "ft_engine_or" -> ((s, d) =>
-      engineTopk(s, d,
-        graft.query.Query.Bool(should = Seq("spark", "window", "merge")), 10)),
-    "ft_engine_wand" -> ((s, d) => {
-      val idx = indexDir(s, d)
-      new graft.query.WandSearcher(s, idx)
-        .search(graft.query.Query.Bool(should = Seq("spark", "window", "merge")), 10)
-        .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-    }),
-    "ft_engine_conj" -> ((s, d) => {
+      engineTopk(s, d, Query.Bool(should = Seq("spark", "window", "merge")), 10)),
+    "ft_engine_wand" -> ((s, d) =>
+      scoreQ(new WandSearcher(s, indexDir(s, d))
+        .search(Query.Bool(should = Seq("spark", "window", "merge")), 10))),
+    "ft_engine_conj" -> ((s, d) =>
       // the pruned multi-MUST path (BlockCombine.combinePruned: leapfrog +
       // verified-total bound skips) under the hard correctness signal
-      val idx = indexDir(s, d)
-      new graft.query.WandSearcher(s, idx)
-        .search(graft.query.Query.Bool(
-          must = Seq("spark", "merge"), should = Seq("window")), 10)
-        .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-    }),
-    "ft_engine_nested" -> ((s, d) =>
-      engineTopk(s, d, graft.query.Query.parse("(spark OR window) AND merge"), 10)),
-    "ft_engine_dismax" -> ((s, d) =>
-      engineTopk(s, d, graft.query.Query.DisMax(
-        Seq(graft.query.Query.Term("spark"), graft.query.Query.Term("window")),
-        tieBreaker = 0.1f), 10)),
-    "ft_engine_phrase" -> ((s, d) =>
-      engineTopk(s, d, graft.query.Query.Phrase(Seq("fast", "table")), 10)),
-    "ft_engine_payload" -> ((s, d) => {
-      // PayloadTermQuery, Avg fold, spanScore * payloadScore — the payload
-      // index stores a float payload at EVERY position (see indexDirPayload)
-      val idx = indexDirPayload(s, d)
-      new graft.query.Searcher(s, idx)
-        .search(graft.query.Query.PayloadTerm("vector"), 10)
-        .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-    }),
-    "ft_engine_payload_near" -> ((s, d) => {
-      // PayloadNearQuery, ordered, slop 0 — on this corpus (every position
-      // payload-carrying, <= 2 adjacent merge->hash pairs per doc) the
-      // shrink-to-shortest walk provably equals the adjacency-pair set, so
-      // an exact SQL oracle exists; the walk's divergent cases (shrink
-      // consumption, stale payloads, frontier repeats) are certified by
-      // PayloadNearSpec instead
-      val idx = indexDirPayload(s, d)
-      new graft.query.Searcher(s, idx)
-        .search(graft.query.Query.PayloadNear(Seq("merge", "hash"), 0,
-          inOrder = true), 10)
-        .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-    }),
-    "ft_engine_payload_min" -> ((s, d) => {
-      // Min fold, payloadScore only (includeSpanScore = false) — ties on the
-      // 8 distinct payload values resolve by doc_id ascending
-      val idx = indexDirPayload(s, d)
-      new graft.query.Searcher(s, idx)
-        .search(graft.query.Query.PayloadTerm("vector",
-          graft.query.Query.PayloadFunc.Min, includeSpanScore = false), 10)
-        .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-    }),
-    // --- search: term / boolean algebra / dismax / phrase ------------------
-    "ft_q_term" -> ((s, d) => topkSum(s, d, Seq("vector"), 10)),
-    "ft_q_term_stemmed" -> ((s, d) => {
+      scoreQ(new WandSearcher(s, indexDir(s, d))
+        .search(Query.Bool(must = Seq("spark", "merge"), should = Seq("window")), 10))),
+    "ft_engine_nested" -> ((s, d) => engineTopk(s, d, nestedQuery, 10)),
+    "ft_engine_dismax" -> ((s, d) => engineTopk(s, d, dismaxQuery, 10)),
+    "ft_engine_phrase" -> ((s, d) => engineTopk(s, d, Query.Phrase(Seq("fast", "table")), 10)),
+    "ft_engine_payload" -> ((s, d) =>
+      engineTopkIn(s, indexDirPayload(s, d), Query.PayloadTerm("vector"), 10)),
+    // PayloadNearQuery, ordered, slop 0 — on this corpus (every position
+    // payload-carrying, <= 2 adjacent merge->hash pairs per doc) the
+    // shrink-to-shortest walk provably equals the adjacency-pair set, so
+    // an exact SQL oracle exists; the walk's divergent cases (shrink
+    // consumption, stale payloads, frontier repeats) are certified by
+    // PayloadNearSpec instead
+    "ft_engine_payload_near" -> ((s, d) =>
+      engineTopkIn(s, indexDirPayload(s, d),
+        Query.PayloadNear(Seq("merge", "hash"), 0, inOrder = true), 10)),
+    // Min fold, payloadScore only (includeSpanScore = false) — ties on the
+    // 8 distinct payload values resolve by doc_id ascending
+    "ft_engine_payload_min" -> ((s, d) =>
+      engineTopkIn(s, indexDirPayload(s, d), Query.PayloadTerm("vector",
+        Query.PayloadFunc.Min, includeSpanScore = false), 10)),
+    // --- search: term / boolean algebra / dismax / phrase (engine) ---------
+    "ft_q_term" -> ((s, d) => engineTopk(s, d, Query.Term("vector"), 10)),
+    "ft_q_term_stemmed" -> ((s, d) =>
       // EnglishAnalyzer index variant: the query analyzes through the same
       // chain ('merge' -> 'merg') and must hit the stemmed posting list. On
       // this closed corpus every stem group is a single surface form (checked
       // in PorterSpec), so the unstemmed SQL oracle is exactly equivalent;
       // the stemmer's own semantics carry golden-vector coverage in
       // PorterSpec.
-      val idx = indexDirEnglish(s, d)
-      val stemmed = graft.analysis.EnglishAnalyzer.terms("merge").head
-      rank(hitsIn(s, idx, Seq(stemmed))
-        .groupBy("doc_id").agg(sum("s").as("sd")), 10)
-    }),
-    "ft_q_term_rare" -> ((s, d) => topkSum(s, d, Seq("dup"), 10)),
-    "ft_q_or" -> ((s, d) => topkSum(s, d, Seq("spark", "window"), 10)),
-    "ft_q_and" -> ((s, d) =>
-      rank(hits(s, d, Seq("hash", "merge"))
-        .groupBy("doc_id").agg(sum("s").as("sd"), count(lit(1)).as("nt"))
-        .filter(col("nt") === 2), 10)),
-    "ft_q_not" -> ((s, d) => {
-      val pos = hits(s, d, Seq("table"))
-      val neg = hits(s, d, Seq("slow")).select("doc_id").distinct()
-      rank(pos.join(neg, Seq("doc_id"), "left_anti")
-        .groupBy("doc_id").agg(sum("s").as("sd")), 10)
-    }),
-    "ft_q_mm" -> ((s, d) =>
-      rank(hits(s, d, Seq("spark", "stream", "sort"))
-        .groupBy("doc_id").agg(sum("s").as("sd"), count(lit(1)).as("nt"))
-        .filter(col("nt") >= 2), 10)),
-    "ft_q_dismax" -> ((s, d) =>
-      rank(hits(s, d, Seq("spark", "window"))
-        .groupBy("doc_id")
-        .agg((max("s") + lit(0.1) * (sum("s") - max("s"))).as("sd")), 10)),
+      engineTopkIn(s, indexDirEnglish(s, d),
+        Query.Term(graft.analysis.EnglishAnalyzer.terms("merge").head), 10)),
+    "ft_q_term_rare" -> ((s, d) => engineTopk(s, d, Query.Term("dup"), 10)),
+    "ft_q_or" -> ((s, d) => engineTopk(s, d, Query.Bool(should = Seq("spark", "window")), 10)),
+    "ft_q_and" -> ((s, d) => engineTopk(s, d, Query.Bool(must = Seq("hash", "merge")), 10)),
+    "ft_q_not" -> ((s, d) =>
+      engineTopk(s, d, Query.Bool(must = Seq("table"), mustNot = Seq("slow")), 10)),
+    "ft_q_mm" -> ((s, d) => engineTopk(s, d,
+      Query.Bool(should = Seq("spark", "stream", "sort"), minShouldMatch = 2), 10)),
+    "ft_q_dismax" -> ((s, d) => engineTopk(s, d, dismaxQuery, 10)),
     "ft_q_constant_score" -> ((s, d) =>
       // ConstantScoreQuery: every match scores exactly the boost (2.5 ->
       // quantized 25000); ties resolve by doc_id asc
-      hits(s, d, Seq("vector")).select("doc_id").distinct()
-        .select(col("doc_id"), lit(25000L).as("score_q"))
-        .orderBy(desc("score_q"), asc("doc_id"))
-        .limit(10)),
-    "ft_q_nested" -> ((s, d) => {
-      // nested boolean group: (spark OR window) AND merge — group score sum
-      // + conjunct score, on the quantized double parity path
-      val grp = hits(s, d, Seq("spark", "window"))
-        .groupBy("doc_id").agg(sum("s").as("gs"))
-      val m = hits(s, d, Seq("merge"))
-        .groupBy("doc_id").agg(sum("s").as("ms"))
-      rank(grp.join(m, "doc_id")
-        .select(col("doc_id"), (col("gs") + col("ms")).as("sd")), 10)
-    }),
-    "ft_q_phrase" -> ((s, d) => phraseQuery(s, d, "fast", "table", 10)),
-    "ft_q_phrase_sloppy" -> ((s, d) => sloppyPhraseQuery(s, d, "fast", "merge", 2, 10)),
+      engineTopk(s, d, Query.ConstantScore(Query.Term("vector"), 2.5f), 10)),
+    "ft_q_nested" -> ((s, d) => engineTopk(s, d, nestedQuery, 10)),
+    "ft_q_phrase" -> ((s, d) => engineTopk(s, d, Query.Phrase(Seq("fast", "table")), 10)),
+    "ft_q_phrase_sloppy" -> ((s, d) =>
+      engineTopk(s, d, Query.Phrase(Seq("fast", "merge"), slop = 2), 10)),
     "ft_q_multi_phrase" -> ((s, d) =>
-      multiPhraseQuery(s, d, Seq("fast", "slow"), "table", 10)),
+      engineTopk(s, d, Query.MultiPhrase(Seq(Seq("fast", "slow"), Seq("table"))), 10)),
     "ft_drill_down" -> ((s, d) =>
       // DrillDownQuery: base query + conjunctive facet filters
       // (/root/reference/src/Lucene.Net.Facet/DrillDownQuery.cs:67)
-      rank(hits(s, d, Seq("data"))
+      rankQ(searcher(s, d).scoredDocs(Query.Term("data"))
         .join(docsTable(s, d).filter(col("lang") === "en" && col("source") === "src3")
-          .select("doc_id"), "doc_id")
-        .groupBy("doc_id").agg(sum("s").as("sd")), 10)),
+          .select("doc_id"), "doc_id"), 10)),
     "ft_span_near" -> ((s, d) => spanNearQuery(s, d, "scan", "group", 3)),
     "ft_span_unordered" -> ((s, d) =>
       spanUnorderedQuery(s, d, Seq("vector", "merge", "scan"), 6)),
@@ -674,9 +570,8 @@ object Gate {
           col("end").cast("long").as("end_pos"))
         .orderBy("doc_id", "start_pos", "end_pos")
     }),
-    // --- MultiTermQuery rewrites: prefix / wildcard / fuzzy / range --------
-    "ft_q_prefix" -> ((s, d) =>
-      topkSum(s, d, expand(s, d, col("term").like("s%")), 10)),
+    // --- MultiTermQuery rewrites, the engine's own leaves -----------------
+    "ft_q_prefix" -> ((s, d) => engineTopk(s, d, Query.Prefix("s"), 10)),
     "ft_q_prefix_wide" -> ((s, d) => {
       // CONSTANT_SCORE_AUTO rewrite past the clause cap: the prefix is
       // NEVER expanded — the ENGINE (query.Searcher) executes it as a
@@ -684,63 +579,58 @@ object Gate {
       // boost (MultiTermQuery.cs:65-121, ConstantScoreAutoRewrite.cs:263).
       // The corpus has 6 's%' terms; cap 4 forces the switch — the same
       // code path a >1024-term expansion takes at scale.
-      val idx = indexDir(s, d)
       val key = "graft.rewrite.maxExpansions"
       val prev = sys.props.get(key)
       sys.props(key) = "4"
-      try {
-        new graft.query.Searcher(s, idx)
-          .search(graft.query.Query.Prefix("s", 2.5f), 10)
-          .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-      } finally {
+      try engineTopk(s, d, Query.Prefix("s", 2.5f), 10)
+      finally {
         prev match { case Some(v) => sys.props(key) = v; case None => sys.props -= key }
       }
     }),
-    "ft_q_must_prefix" -> ((s, d) => {
+    "ft_q_must_prefix" -> ((s, d) =>
       // multi-term expansion under MUST = a nested SHOULD group inside the
-      // conjunction (BooleanQuery rewrite; engine path spec-verified in
-      // IndexEndToEndSpec) — parity scoring: group sum over matched s%
-      // terms gates the doc, optional 'merge' adds when present
-      val sTerms = expand(s, d, col("term").like("s%"))
-      val grp = hits(s, d, sTerms).groupBy("doc_id").agg(sum("s").as("gs"))
-      val m = hits(s, d, Seq("merge")).groupBy("doc_id").agg(sum("s").as("ms"))
-      rank(grp.join(m, Seq("doc_id"), "left")
-        .select(col("doc_id"), (col("gs") + coalesce(col("ms"), lit(0.0))).as("sd")), 10)
-    }),
-    "ft_q_wildcard" -> ((s, d) =>
-      topkSum(s, d, expand(s, d, col("term").like("w_ndow")), 10)),
-    "ft_q_fuzzy" -> ((s, d) =>
-      topkSum(s, d, expand(s, d, levenshtein(col("term"), lit("soft")) <= 1), 10)),
-    "ft_q_fuzzy2" -> ((s, d) => fuzzy2Query(s, d, "soft", 10)),
-    "ft_q_parser" -> ((s, d) => parsedQuery(s, d, "+table -slow fast^2", 10)),
-    "ft_q_range" -> ((s, d) =>
-      hits(s, d, expand(s, d, col("term").between("batch", "data")))
+      // conjunction (BooleanQuery rewrite): the s% group gates the doc,
+      // optional 'merge' adds when present
+      engineTopk(s, d, Query.BoolQ(Seq(
+        (Query.Must, Query.Prefix("s")), (Query.Should, Query.Term("merge")))), 10)),
+    "ft_q_wildcard" -> ((s, d) => engineTopk(s, d, Query.Wildcard("w?ndow"), 10)),
+    "ft_q_fuzzy" -> ((s, d) => engineTopk(s, d, Query.Fuzzy("soft", 1), 10)),
+    // FuzzyQuery at reference strength: distance <= 2, the top 50 terms by
+    // similarity (TopTermsRewrite), each boosted by its similarity
+    "ft_q_fuzzy2" -> ((s, d) => engineTopk(s, d, Query.Fuzzy("soft", 2), 10)),
+    // driven end-to-end through the classic query parser
+    "ft_q_parser" -> ((s, d) => engineTopk(s, d, Query.parse("+table -slow fast^2"), 10)),
+    "ft_q_range" -> ((s, d) => {
+      // per doc, how many range-expanded terms it holds
+      val srch = searcher(s, d)
+      srch.expand(col("term").between("batch", "data"))
+        .map(t => srch.scoredDocs(Query.Term(t)).select("doc_id"))
+        .reduce(_ union _)
         .groupBy("doc_id").agg(count(lit(1)).cast("long").as("nterms"))
-        .orderBy("doc_id")),
-    "ft_q_absent" -> ((s, d) => topkSum(s, d, Seq("zzz"), 10)),
-    "ft_q_paging" -> ((s, d) => pagingQuery(s, d, "vector", 10)),
-    "ft_delete" -> ((s, d) => {
+        .orderBy("doc_id")
+    }),
+    "ft_q_absent" -> ((s, d) => engineTopk(s, d, Query.Term("zzz"), 10)),
+    "ft_q_paging" -> ((s, d) => pagingQuery(s, d, Query.Term("vector"), 10)),
+    "ft_delete" -> ((s, d) =>
       // liveDocs-style delete application (BufferedUpdates/LiveDocsFormat,
       // engine path: graft.build.Tombstones + Searcher anti-join; tested
       // bit-exactly in DeleteSpec): every doc_id divisible by 7 is buried,
       // then a term query must not surface any of them.
-      val dead = docsTable(s, d).select("doc_id").filter(col("doc_id") % 7 === 0)
-      rank(hits(s, d, Seq("table"))
-        .join(dead, Seq("doc_id"), "left_anti")
-        .groupBy("doc_id").agg(sum("s").as("sd")), 10)
-    }),
+      rankQ(searcher(s, d).scoredDocs(Query.Term("table"))
+        .join(docsTable(s, d).filter(col("doc_id") % 7 === 0).select("doc_id"),
+          Seq("doc_id"), "left_anti"), 10)),
     "ft_count_all" -> ((s, d) => {
       val idx = indexDir(s, d)
       s.read.parquet(s"$idx/norms").agg(count(lit(1)).as("cnt"))
     }),
-    // --- facets / grouping / joins over hits -------------------------------
+    // --- facets / grouping / joins over the engine's scorer stream --------
     "ft_facet_lang" -> ((s, d) =>
-      hits(s, d, Seq("spark")).select("doc_id")
+      docsOf(s, d, "spark")
         .join(docsTable(s, d), "doc_id")
         .groupBy("lang").agg(count(lit(1)).as("cnt"))
         .orderBy("lang")),
     "ft_facet_range" -> ((s, d) =>
-      hits(s, d, Seq("merge")).select("doc_id")
+      docsOf(s, d, "merge")
         .join(docsTable(s, d), "doc_id")
         .select(when(col("n_chars") < 200, "0-200")
           .when(col("n_chars") < 300, "200-300")
@@ -750,14 +640,13 @@ object Gate {
     "ft_group_top" -> ((s, d) => {
       // GroupingSearch top-k-per-group, k = 3 (two-pass grouping collector,
       // /root/reference/src/Lucene.Net.Grouping/GroupingSearch.cs:112-174)
-      val base = hits(s, d, Seq("data"))
-        .groupBy("doc_id").agg(sum("s").as("sd"))
-        .select(col("doc_id"), q(col("sd")).as("score_q"))
+      val base = searcher(s, d).scoredDocs(Query.Term("data"))
         .join(docsTable(s, d).select("doc_id", "source"), "doc_id")
-      val w = Window.partitionBy("source").orderBy(desc("score_q"), asc("doc_id"))
+      val w = Window.partitionBy("source").orderBy(desc("score"), asc("doc_id"))
       base.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
-        .select(col("source"), col("rn").cast("long").as("rn"), col("doc_id"), col("score_q"))
+        .select(col("source"), col("rn").cast("long").as("rn"), col("doc_id"),
+          q(col("score").cast("double")).as("score_q"))
         .orderBy("source", "rn")
     }),
     "ft_group_distinct" -> ((s, d) =>
@@ -766,7 +655,7 @@ object Gate {
       // (source), the DISTINCT values of a second field (lang) over a query's
       // hits. One hash-partitioned groupBy; collect_set state is bounded by
       // the value-field cardinality, never the hit count — safe at any scale.
-      hits(s, d, Seq("data")).select("doc_id").distinct()
+      docsOf(s, d, "data")
         .join(docsTable(s, d).select("doc_id", "source", "lang"), "doc_id")
         .groupBy("source")
         .agg(count(lit(1)).as("cnt"),
@@ -778,7 +667,7 @@ object Gate {
       // Lucene.Net.Grouping/AbstractGroupFacetCollector.cs:30): facet counts
       // de-duplicated per GROUP — for each facet value (lang), how many
       // distinct groups (source) and how many hit docs carry it.
-      hits(s, d, Seq("data")).select("doc_id").distinct()
+      docsOf(s, d, "data")
         .join(docsTable(s, d).select("doc_id", "source", "lang"), "doc_id")
         .groupBy("lang")
         .agg(countDistinct(col("source")).as("n_groups"),
@@ -791,24 +680,23 @@ object Gate {
       // One hash shuffle on the group key feeds both the within-group
       // row_number and the group-max ranking; the 5-group winner set joins
       // back broadcast-sized.
-      val base = hits(s, d, Seq("data"))
-        .groupBy("doc_id").agg(sum("s").as("sd"))
-        .select(col("doc_id"), q(col("sd")).as("score_q"))
+      val base = searcher(s, d).scoredDocs(Query.Term("data"))
         .join(docsTable(s, d).select("doc_id", "source"), "doc_id")
-      val wDoc = Window.partitionBy("source").orderBy(desc("score_q"), asc("doc_id"))
+      val wDoc = Window.partitionBy("source").orderBy(desc("score"), asc("doc_id"))
       val ranked = base.withColumn("rn", row_number().over(wDoc)).filter(col("rn") <= 2)
-      val groups = ranked.groupBy("source").agg(max("score_q").as("gmax"))
-        .orderBy(desc("gmax"), asc("source")).limit(5)
+      val groups = ranked.groupBy("source").agg(max("score").as("gs"))
+        .orderBy(desc("gs"), asc("source")).limit(5)
       ranked.join(broadcast(groups), "source")
-        .select(col("source"), col("gmax"), col("rn").cast("long").as("rn"),
-          col("doc_id"), col("score_q"))
+        .select(col("source"), q(col("gs").cast("double")).as("gmax"),
+          col("rn").cast("long").as("rn"), col("doc_id"),
+          q(col("score").cast("double")).as("score_q"))
         .orderBy(desc("gmax"), col("source"), col("rn"))
     }),
     "ft_sort_field" -> ((s, d) =>
       // TopFieldCollector: top-k by a stored field, not by score
       // (/root/reference/src/Lucene.Net/Search/TopFieldCollector.cs:37;
       // SortField semantics SortField.cs:516-604)
-      hits(s, d, Seq("stream")).select("doc_id").distinct()
+      docsOf(s, d, "stream")
         .join(docsTable(s, d).select("doc_id", "n_chars"), "doc_id")
         .orderBy(desc("n_chars"), asc("doc_id"))
         .limit(10)),
@@ -816,7 +704,7 @@ object Gate {
     "ft_facet_sum" -> ((s, d) =>
       // TaxonomyFacetSumValueSource: facet aggregation by expression
       // (/root/reference/src/Lucene.Net.Facet/Taxonomy/TaxonomyFacetSumValueSource.cs)
-      hits(s, d, Seq("spark")).select("doc_id").distinct()
+      docsOf(s, d, "spark")
         .join(docsTable(s, d), "doc_id")
         .groupBy("lang").agg(sum("n_chars").as("sum_chars"), count(lit(1)).as("cnt"))
         .orderBy("lang")),
@@ -828,7 +716,7 @@ object Gate {
       // ROLLUP of their children (rn=0 rows); child rows carry the
       // top-children-per-parent ordinal (count desc, ord asc — the
       // GetTopChildren contract), kept to 3 per parent.
-      val base = hits(s, d, Seq("index")).select("doc_id").distinct()
+      val base = docsOf(s, d, "index")
         .join(docsTable(s, d).select("doc_id", "lang", "source"), "doc_id")
       val children = base.groupBy("lang", "source").agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy("lang").orderBy(desc("cnt"), asc("source"))
@@ -870,45 +758,31 @@ object Gate {
     "ft_explain" -> ((s, d) => {
       // IndexSearcher.Explain (reference
       // /root/reference/src/Lucene.Net/Search/IndexSearcher.cs Explain +
-      // BM25Similarity.ExplainScore): the per-clause score BREAKDOWN for
-      // the top-1 doc of a 2-term disjunction, decomposed exactly as the
-      // reference renders it — idf(docFreq, maxDocs) and
-      // tfNorm = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) with
-      // idf * tfNorm = the clause score.
+      // BM25Similarity.ExplainScore): the engine's float32 per-clause score
+      // BREAKDOWN for the top-1 doc of a 2-term disjunction, decomposed as
+      // the reference renders it — idf(docFreq, maxDocs) and
+      // tfNorm = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) — next to the
+      // kernel's clause score and the engine's total.
       import s.implicits._
       val qTerms = Seq("table", "value")
-      val idx = indexDir(s, d)
-      val st = stats(s, idx)
-      val n = st.max_doc
-      val avgdl = st.sum_ttf.toDouble / n
-      val dict = termdict(s, idx)
-        .filter(col("term").isin(qTerms: _*))
-        .as[graft.model.TermDictRow].collect()
-      val info: Map[Long, (String, Long)] = dict.map(d0 => d0.term_id -> (d0.term, d0.df)).toMap
-      val bi = s.sparkContext.broadcast(info)
-      val parts = s.read.parquet(s"$idx/postings")
-        .filter(col("term_id").isin(info.keySet.toSeq: _*))
-        .select(ScoreBlock.cols.map(col): _*)
-        .as[ScoreBlock]
-        .flatMap { b =>
-          val (docs, tfs, nbs) = PostingCodec.decode(b)
-          val (term, df) = bi.value(b.term_id)
-          val idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-          docs.indices.iterator.map { i =>
-            val nb = nbs(i) & 0xff
-            val tfNorm = 2.2 * tfs(i) / (tfs(i) + 1.2 * (0.25 + 0.75 * normValue(nb) / avgdl))
-            (docs(i), term, tfs(i).toLong, df, nb.toLong,
-              idf, tfNorm, hitScore(tfs(i), nb, idf2(df, n), avgdl))
-          }
+      val srch = searcher(s, d)
+      val st = srch.stats
+      val dfs = srch.lookup(qTerms).map { case (t, r) => t -> r.df }
+      val cache = Bm25.buildCache(Bm25.avgFieldLength(st.sum_ttf, st.max_doc))
+      val top1 = srch.search(Query.Bool(should = qTerms), 1)
+      posHits(s, d, qTerms).join(top1, "doc_id")
+        .select(col("doc_id"), col("term"), size(col("pos")), col("nb"), col("score"))
+        .as[(Long, String, Int, Int, Float)]
+        .map { case (doc, term, tf, nb, total) =>
+          val idf = Bm25.idf(dfs(term), st.max_doc)
+          val tfNorm = tf * (Bm25.K1 + 1) / (tf + cache(nb))
+          (doc, term, tf.toLong, dfs(term), nb.toLong, idf.toDouble, tfNorm.toDouble,
+            Bm25.score(Bm25.weightValue(idf), tf, cache, nb.toByte).toDouble, total.toDouble)
         }
-        .toDF("doc_id", "term", "tf", "df", "nb", "idf", "tfnorm", "sc")
-      val top1 = parts.groupBy("doc_id").agg(sum("sc").as("sd"))
-        .select(col("doc_id"), q(col("sd")).as("total_q"))
-        .orderBy(desc("total_q"), asc("doc_id")).limit(1)
-      parts.join(top1, "doc_id")
+        .toDF("doc_id", "term", "tf", "df", "nb", "idf", "tfnorm", "sc", "total")
         .select(col("doc_id"), col("term"), col("tf"), col("df"), col("nb"),
           q(col("idf")).as("idf_q"), q(col("tfnorm")).as("tfnorm_q"),
-          q(col("sc")).as("clause_q"), col("total_q"))
+          q(col("sc")).as("clause_q"), q(col("total")).as("total_q"))
         .orderBy("term")
     }),
     "ft_suggest_jaro" -> ((s, d) => {
@@ -948,9 +822,8 @@ object Gate {
       // to-side (every doc of that source). Per-doc scores are quantized
       // BEFORE aggregation so min/max/sum are integer ops (order-free);
       // avg is one double divide of exact integers — deterministic.
-      val from = hits(s, d, Seq("dup"))
-        .groupBy("doc_id").agg(sum("s").as("sd"))
-        .select(col("doc_id"), q(col("sd")).as("sq"))
+      val from = searcher(s, d).scoredDocs(Query.Term("dup"))
+        .select(col("doc_id"), q(col("score").cast("double")).as("sq"))
         .join(docsTable(s, d).select("doc_id", "source"), "doc_id")
       val agg = from.groupBy("source")
         .agg(min("sq").as("min_q"), max("sq").as("max_q"),
@@ -973,10 +846,9 @@ object Gate {
         .limit(10)
     }),
     "ft_highlight_multi" -> ((s, d) => highlightMulti(s, d, "vector", 3, 3)),
-    "ft_q_regexp" -> ((s, d) =>
-      topkSum(s, d, expand(s, d, col("term").rlike("^w.ndow$")), 10)),
+    "ft_q_regexp" -> ((s, d) => engineTopk(s, d, Query.Regexp("^w.ndow$"), 10)),
     "ft_join" -> ((s, d) => {
-      val srcs = hits(s, d, Seq("dup")).select("doc_id")
+      val srcs = docsOf(s, d, "dup")
         .join(docsTable(s, d).select("doc_id", "source"), "doc_id")
         .select("source").distinct()
       docsTable(s, d).join(srcs, Seq("source"), "left_semi")
@@ -984,44 +856,41 @@ object Gate {
         .orderBy("source")
     }),
     "ft_block_join" -> ((s, d) =>
-      hits(s, d, Seq("vector"))
-        .groupBy("doc_id").agg(sum("s").as("sd"))
-        .select(col("doc_id"), q(col("sd")).as("score_q"))
+      searcher(s, d).scoredDocs(Query.Term("vector"))
         .join(docsTable(s, d).select("doc_id", "source"), "doc_id")
         .groupBy("source")
-        .agg(max("score_q").as("max_q"), count(lit(1)).as("hits"))
-        .orderBy(desc("max_q"), asc("source"))
-        .limit(5)),
+        .agg(max("score").as("ms"), count(lit(1)).as("hits"))
+        .orderBy(desc("ms"), asc("source"))
+        .limit(5)
+        .select(col("source"), q(col("ms").cast("double")).as("max_q"), col("hits"))),
     // --- second-stage / derived query operators ----------------------------
     "ft_more_like_this" -> ((s, d) => moreLikeThis(s, d, 0L, 5, 10)),
     "ft_rescore" -> ((s, d) => {
       // QueryRescorer analog: BM25 top-20 first pass, re-ranked by the
       // combined (first-pass score + n_chars) second-stage key.
-      val first = topkSum(s, d, Seq("query"), 20)
+      val first = engineTopk(s, d, Query.Term("query"), 20)
       first.join(docsTable(s, d).select("doc_id", "n_chars"), "doc_id")
         .select(col("doc_id"), (col("score_q") + col("n_chars")).cast("long").as("rescore"))
         .orderBy(desc("rescore"), asc("doc_id"))
         .limit(10)
     }),
     "ft_common_terms" -> ((s, d) => {
-      // CommonTermsQuery analog: low-df terms gate the match (>=1 required),
-      // high-df terms (df > 0.79*N) only contribute score.
-      import s.implicits._
-      val idx = indexDir(s, d)
-      val n = stats(s, idx).max_doc
-      val qTerms = Seq("dup", "batch", "key")
-      val dfs = termdict(s, idx).filter(col("term").isin(qTerms: _*))
-        .select("term", "df").as[(String, Long)].collect().toMap
-      val low = qTerms.filter(t => dfs.get(t).exists(_ <= 0.79 * n))
-      val h = hits(s, d, qTerms)
-      val lowDocs = h.filter(col("term").isin(low: _*)).select("doc_id").distinct()
-      rank(h.join(lowDocs, "doc_id").groupBy("doc_id").agg(sum("s").as("sd")), 10)
+      // CommonTermsQuery analog: low-df terms form a MUST group (>=1
+      // required), high-df terms (df > 0.79*N) an optional SHOULD group
+      // that only contributes score.
+      val srch = searcher(s, d)
+      val dict = srch.lookup(Seq("dup", "batch", "key"))
+      val (low, high) = dict.values.toSeq.partition(_.df <= 0.79 * srch.stats.max_doc)
+      def group(ts: Seq[TermDictRow]) = Query.BoolQ(ts.map(t => (Query.Should, Query.Term(t.term))))
+      val clauses: Seq[(Query.Occur, Query)] = (Query.Must, group(low)) +:
+        (if (high.isEmpty) Nil else Seq((Query.Should, group(high))))
+      scoreQ(srch.search(Query.BoolQ(clauses), 10))
     }),
     "ft_highlight" -> ((s, d) => {
       // PostingsHighlighter analog: first occurrence position of the term in
       // each top doc + a 4-token snippet window from the stored text.
       import s.implicits._
-      val top = topkSum(s, d, Seq("vector"), 5).select("doc_id")
+      val top = engineTopk(s, d, Query.Term("vector"), 5).select("doc_id")
       top.join(docsTable(s, d).select("doc_id", "text"), "doc_id")
         .as[(Long, String)]
         .map { case (id, text) =>
@@ -1077,7 +946,7 @@ object Gate {
       // ICUPostingsHighlighter-era offsets use, FieldType.StoreTermVectorOffsets):
       // top-5 docs for 'vector'; the snippet is sliced from the stored text
       // by the vector's first-occurrence character span — no re-analysis.
-      val top = topkSum(s, d, Seq("vector"), 5).select("doc_id")
+      val top = engineTopk(s, d, Query.Term("vector"), 5).select("doc_id")
       val tv = s.read.parquet(termVectorsDir(s, d))
         .filter(col("term") === lit("vector"))
         .select(col("doc_id"), col("starts").getItem(0).cast("long").as("start_off"),
@@ -1261,7 +1130,6 @@ object Gate {
       // a standing query pool broadcasts; each doc is analyzed once into a
       // single-doc in-RAM index and matched in place — one narrow pass,
       // no shuffle, no join. Output = (doc_id, query_id) match pairs.
-      import graft.query.Query
       val pool: Seq[(String, Query)] = Seq(
         "and_vector_search" -> Query.Bool(must = Seq("vector", "search")),
         "phrase_fast_table" -> Query.Phrase(Seq("fast", "table")),
@@ -1275,57 +1143,29 @@ object Gate {
     })
   )
 
-  /** Run the float32 ENGINE ([[graft.query.Searcher]]) end-to-end and project
-    * the quantized score — the oracle ranks by the bit-identical REAL score.
-    */
-  def engineTopk(spark: SparkSession, sfDir: String, qry: graft.query.Query,
-                 k: Int): DataFrame = {
-    val idx = indexDir(spark, sfDir)
-    new graft.query.Searcher(spark, idx).search(qry, k)
-      .select(col("doc_id"), q(col("score").cast("double")).as("score_q"))
-  }
-
   // ------------------------- multi-step queries ----------------------------
 
-  /** MoreLikeThis: the seed doc's terms ranked by tf*idf interest (top
-    * `nTerms`, ties by term), run as a SHOULD disjunction excluding the seed
-    * (/root/reference/src/Lucene.Net.Queries/Mlt/MoreLikeThis.cs semantics,
-    * simplified to the same idf form as the rest of the gate).
+  /** MoreLikeThis: the seed doc's terms ranked by float32 tf * idf
+    * interest (top `nTerms`, ties by term), run through the engine as a
+    * SHOULD disjunction excluding the seed
+    * (reference Lucene.Net.Queries/Mlt/MoreLikeThis.cs semantics, with
+    * the engine's BM25 idf).
     */
   def moreLikeThis(spark: SparkSession, sfDir: String, seedDoc: Long,
                    nTerms: Int, k: Int): DataFrame = {
     import spark.implicits._
-    val idx = indexDir(spark, sfDir)
-    val st = stats(spark, idx)
-    val n = st.max_doc
+    val srch = searcher(spark, sfDir)
     val text = docsTable(spark, sfDir).filter(col("doc_id") === seedDoc)
       .select("text").as[String].head()
     val tf = Analyzer.termFreqs(text)._1
-    val dfMap = termdict(spark, idx)
-      .filter(col("term").isin(tf.keys.toSeq: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dict = srch.lookup(tf.keys.toSeq)
     val interesting = tf.toSeq
-      .filter { case (t, _) => dfMap.contains(t) }
-      .map { case (t, f) =>
-        (t, f * math.log(1.0 + (n - dfMap(t) + 0.5) / (dfMap(t) + 0.5)))
-      }
+      .filter { case (t, _) => dict.contains(t) }
+      .map { case (t, f) => (t, f * Bm25.idf(dict(t).df, srch.stats.max_doc)) }
       .sortBy { case (t, i) => (-i, t) }
       .take(nTerms).map(_._1)
-    rank(hits(spark, sfDir, interesting)
-      .filter(col("doc_id") =!= seedDoc)
-      .groupBy("doc_id").agg(sum("s").as("sd")), k)
-  }
-
-  /** Summed-idf phrase weight * 2.2 — same shape as the oracle SQL. */
-  private def phraseWeight(spark: SparkSession, idx: String, n: Long,
-                           t1: String, t2: String): Option[Double] = {
-    import spark.implicits._
-    val dict = termdict(spark, idx)
-      .filter(col("term").isin(t1, t2)).as[TermDictRow].collect()
-      .map(r => r.term -> r.df).toMap
-    if (!dict.contains(t1) || !dict.contains(t2)) None
-    else Some((math.log(1.0 + (n - dict(t1) + 0.5) / (dict(t1) + 0.5)) +
-      math.log(1.0 + (n - dict(t2) + 0.5) / (dict(t2) + 0.5))) * 2.2)
+    rankQ(srch.scoredDocs(Query.Bool(should = interesting))
+      .filter(col("doc_id") =!= seedDoc), k)
   }
 
   /** Two-term positions join from the index — (doc_id, nb, pos1, pos2). */
@@ -1335,103 +1175,6 @@ object Gate {
     val a = ph.filter(col("term") === t1).select(col("doc_id"), col("nb"), col("pos").as("pos1"))
     val b = ph.filter(col("term") === t2).select(col("doc_id"), col("pos").as("pos2"))
     a.join(b, "doc_id").as[(Long, Int, Seq[Int], Seq[Int])]
-  }
-
-  /** Exact PhraseQuery (slop 0) scored from the postings POSITIONS index —
-    * no stored-text re-derivation (ExactPhraseScorer semantics,
-    * /root/reference/src/Lucene.Net/Search/ExactPhraseScorer.cs:237-349):
-    * pf = alignments with pos2 = pos1 + 1, BM25 with summed idf, freq = pf.
-    */
-  def phraseQuery(spark: SparkSession, sfDir: String, t1: String, t2: String,
-                  k: Int): DataFrame = {
-    import spark.implicits._
-    val idx = indexDir(spark, sfDir)
-    val st = stats(spark, idx)
-    val n = st.max_doc
-    val avgdl = st.sum_ttf.toDouble / n
-    val isum2 = phraseWeight(spark, idx, n, t1, t2).getOrElse(
-      return spark.emptyDataset[(Long, Long)].toDF("doc_id", "score_q"))
-    val scored = posPairs(spark, sfDir, t1, t2)
-      .map { case (docId, nb, pos1, pos2) =>
-        val set2 = pos2.toSet
-        val pf = pos1.count(p => set2.contains(p + 1))
-        (docId, if (pf > 0) hitScore(pf, nb, isum2, avgdl) else Double.NaN)
-      }
-      .filter(!_._2.isNaN)
-      .toDF("doc_id", "sd")
-    rank(scored, k)
-  }
-
-  /** Sloppy PhraseQuery (slop=2) from the positions index — the
-    * SQL-EXPRESSIBLE parity variant: each t1 occurrence contributes
-    * SloppyFreq = 1/(d+1) for its nearest in-slop t2 partner,
-    * d = |pos2 - pos1 - 1| (weighting per
-    * /root/reference/src/Lucene.Net/Search/Similarities/BM25Similarity.cs:74-77).
-    * The ENGINE's float path runs the reference's full window walk instead
-    * ([[graft.query.SloppyPhrase]], spec-verified against the oracle); this
-    * gate op keeps a formula DuckDB can mirror token-for-token.
-    */
-  def sloppyPhraseQuery(spark: SparkSession, sfDir: String, t1: String, t2: String,
-                        slop: Int, k: Int): DataFrame = {
-    import spark.implicits._
-    val idx = indexDir(spark, sfDir)
-    val st = stats(spark, idx)
-    val n = st.max_doc
-    val avgdl = st.sum_ttf.toDouble / n
-    val isum2 = phraseWeight(spark, idx, n, t1, t2).getOrElse(
-      return spark.emptyDataset[(Long, Long)].toDF("doc_id", "score_q"))
-    val scored = posPairs(spark, sfDir, t1, t2)
-      .map { case (docId, nb, pos1, pos2) =>
-        var pf = 0.0
-        pos1.foreach { p1 =>
-          var best = Int.MaxValue
-          pos2.foreach { p2 =>
-            val d = math.abs(p2 - p1 - 1)
-            if (d < best) best = d
-          }
-          if (best <= slop) pf += 1.0 / (best + 1)
-        }
-        (docId, if (pf > 0) isum2 * pf / (pf + 1.2 * (0.25 + 0.75 * normValue(nb) / avgdl))
-                else Double.NaN)
-      }
-      .filter(!_._2.isNaN)
-      .toDF("doc_id", "sd")
-    rank(scored, k)
-  }
-
-  /** MultiPhraseQuery (slot of alternatives followed by a fixed term) from
-    * the positions index
-    * (/root/reference/src/Lucene.Net/Search/MultiPhraseQuery.cs): pf counts
-    * alignments where ANY alternative sits at p and `t2` at p+1; weight =
-    * summed idf over all participating terms.
-    */
-  def multiPhraseQuery(spark: SparkSession, sfDir: String, alts: Seq[String],
-                       t2: String, k: Int): DataFrame = {
-    import spark.implicits._
-    val idx = indexDir(spark, sfDir)
-    val st = stats(spark, idx)
-    val n = st.max_doc
-    val avgdl = st.sum_ttf.toDouble / n
-    val dict = termdict(spark, idx)
-      .filter(col("term").isin((alts :+ t2).distinct: _*)).as[TermDictRow].collect()
-      .map(r => r.term -> r.df).toMap
-    val presentAlts = alts.filter(dict.contains)
-    if (presentAlts.isEmpty || !dict.contains(t2))
-      return spark.emptyDataset[(Long, Long)].toDF("doc_id", "score_q")
-    val isum2 = (presentAlts :+ t2)
-      .map(t => math.log(1.0 + (n - dict(t) + 0.5) / (dict(t) + 0.5))).sum * 2.2
-    val ph = posHits(spark, sfDir, presentAlts :+ t2)
-    val slot0 = ph.filter(col("term").isin(presentAlts: _*))
-      .select(col("doc_id"), col("nb"), explode(col("pos")).as("p"))
-    val slot1 = ph.filter(col("term") === t2)
-      .select(col("doc_id"), explode(col("pos")).as("p2"))
-    val pf = slot0.join(slot1,
-        slot0("doc_id") === slot1("doc_id") && col("p2") === col("p") + 1)
-      .groupBy(slot0("doc_id")).agg(count(lit(1)).as("pf"), min("nb").as("nb"))
-    val scored = pf.as[(Long, Long, Int)]
-      .map { case (docId, pfv, nb) => (docId, hitScore(pfv.toInt, nb, isum2, avgdl)) }
-      .toDF("doc_id", "sd")
-    rank(scored, k)
   }
 
   /** Ordered SpanNearQuery analog from the positions index: matches = ordered
@@ -1480,74 +1223,20 @@ object Gate {
       .orderBy("doc_id", "start", "end")
   }
 
-  /** FuzzyQuery at reference strength: distance <= 2 expansion ranked by
-    * similarity 1 - d/min(|candidate|,|query|) (the reference's accept-path
-    * formula, FuzzyTermsEnum.cs:419), capped at the top 50 by
-    * (sim desc, term asc) — the TopTermsRewrite boost heap
-    * (/root/reference/src/Lucene.Net/Search/TopTermsRewrite.cs) — each
-    * expanded term's score scaled by its similarity.
+  /** SearchAfter paging: page 2 (ranks k+1..2k) of an engine query — the
+    * collector keeps `(score, doc_id)` of the page-1 tail and ranks only
+    * the docs after it.
     */
-  def fuzzy2Query(spark: SparkSession, sfDir: String, qterm: String, k: Int): DataFrame = {
-    import spark.implicits._
-    // distributed top-50 ranking (length-window + TakeOrdered — the collect
-    // is bounded by maxExpansions, same path as the engine's Rewrite)
-    val cands = graft.query.Rewrite.fuzzyTopIn(
-        termdict(spark, indexDir(spark, sfDir)),
-        graft.query.Query.Fuzzy(qterm, 2, maxExpansions = 50))
-      .map { case (t, d) => (t, 1.0 - d / math.min(t.length, qterm.length).toDouble) }
-    if (cands.isEmpty) return emptyHits(spark).select(col("doc_id"), col("s").cast("long").as("score_q"))
-    val boostDf = cands.toDF("term", "sim")
-    rank(hits(spark, sfDir, cands.map(_._1))
-      .join(broadcast(boostDf), "term")
-      .groupBy("doc_id").agg(sum(col("s") * col("sim")).as("sd")), k)
-  }
-
-  /** A gate query driven end-to-end through the classic query parser
-    * ([[graft.query.Query.parse]]): the parsed Term-only boolean is executed
-    * on the double-parity path (must conjunction, mustNot anti-join,
-    * per-clause boost as a score multiplier).
-    */
-  def parsedQuery(spark: SparkSession, sfDir: String, qstr: String, k: Int): DataFrame = {
-    import graft.query.Query
-    val clauses: Seq[(Query.Occur, Query)] = Query.parse(qstr) match {
-      case b: Query.BoolQ  => b.clauses
-      case t: Query.Term   => Seq((Query.Should, t))
-      case other           => throw new IllegalArgumentException(s"not a term boolean: $other")
-    }
-    val terms = clauses.map { case (occ, q) => (occ, q.asInstanceOf[Query.Term]) }
-    val must = terms.collect { case (Query.Must, t) => t.term }
-    val pos = terms.collect { case (o, t) if o != Query.MustNot => t }
-    val neg = terms.collect { case (Query.MustNot, t) => t.term }
-    val boosted = pos.foldRight(lit(null).cast("double")) { case (t, acc) =>
-      when(col("term") === t.term, col("s") * t.boost.toDouble).otherwise(acc)
-    }
-    var h = hits(spark, sfDir, pos.map(_.term))
-      .withColumn("s", boosted)
-    must.foreach { m =>
-      h = h.join(h.filter(col("term") === m).select("doc_id").distinct(), "doc_id")
-    }
-    if (neg.nonEmpty)
-      h = h.join(hits(spark, sfDir, neg).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    rank(h.groupBy("doc_id").agg(sum("s").as("sd")), k)
-  }
-
-  /** SearchAfter paging: page 2 (ranks 11-20) of a term query — the collector
-    * keeps `(score, doc_id)` of the page-1 tail and filters past it.
-    */
-  def pagingQuery(spark: SparkSession, sfDir: String, term: String, k: Int): DataFrame = {
-    val base = hits(spark, sfDir, Seq(term))
-      .groupBy("doc_id").agg(sum("s").as("sd"))
-      .select(col("doc_id"), q(col("sd")).as("score_q"))
-    val page1 = base.orderBy(desc("score_q"), asc("doc_id")).limit(k).collect()
-    if (page1.length < k) return base.filter(lit(false)).select("doc_id", "score_q")
-    val last = page1.last
-    val (ls, ld) = (last.getLong(1), last.getLong(0))
-    base.filter(col("score_q") < ls ||
-        (col("score_q") === ls && col("doc_id") > ld))
-      .orderBy(desc("score_q"), asc("doc_id"))
-      .limit(k)
-      .select("doc_id", "score_q")
+  def pagingQuery(spark: SparkSession, sfDir: String, qry: Query, k: Int): DataFrame = {
+    val srch = searcher(spark, sfDir)
+    val page1 = srch.search(qry, k).collect()
+    val after =
+      if (page1.length < k) lit(false)
+      else {
+        val (ld, ls) = (page1.last.getLong(0), page1.last.getFloat(1))
+        col("score") < ls || (col("score") === ls && col("doc_id") > ld)
+      }
+    rankQ(srch.scoredDocs(qry).filter(after), k)
   }
 
   /** DrillSideways (/root/reference/src/Lucene.Net.Facet/DrillSideways.cs:50):
@@ -1556,7 +1245,7 @@ object Gate {
     * dropped (one pass per dim minus its predicate).
     */
   def drillSideways(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = hits(spark, sfDir, Seq("data")).select("doc_id").distinct()
+    val base = docsOf(spark, sfDir, "data")
       .join(docsTable(spark, sfDir), "doc_id")
     val langSideways = base.filter(col("source") === "src3")
       .groupBy("lang").agg(count(lit(1)).as("cnt"))
@@ -1590,7 +1279,7 @@ object Gate {
   def highlightMulti(spark: SparkSession, sfDir: String, term: String,
                      kDocs: Int, nPass: Int): DataFrame = {
     import spark.implicits._
-    val top = topkSum(spark, sfDir, Seq(term), kDocs).select("doc_id")
+    val top = engineTopk(spark, sfDir, Query.Term(term), kDocs).select("doc_id")
     val w = Window.partitionBy("doc_id").orderBy("pos")
     posHits(spark, sfDir, Seq(term))
       .join(top, "doc_id")
@@ -1672,7 +1361,7 @@ object Gate {
     */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = shingles(spark, sfDir)
-    val marked = hits(spark, sfDir, Seq("dup")).select(col("doc_id").as("d1")).distinct()
+    val marked = docsOf(spark, sfDir, "dup").select(col("doc_id").as("d1"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = marked
       .join(sh.select(col("doc_id").as("d1"), col("s")), "d1")
@@ -1736,7 +1425,7 @@ object Gate {
       col("sig_lo").bitwiseAND(lit(0xFFFFL)))
     val banded = sigs.select(col("doc_id"), col("sig_hi"), col("sig_lo"),
       posexplode(array(bandCols: _*)).as(Seq("band", "bv")))
-    val marked = hits(spark, sfDir, Seq("dup")).select(col("doc_id").as("d1")).distinct()
+    val marked = docsOf(spark, sfDir, "dup").select(col("doc_id").as("d1"))
     val markedBands = marked.join(
       banded.select(col("doc_id").as("d1"), col("sig_hi").as("h1"),
         col("sig_lo").as("l1"), col("band"), col("bv")), "d1")

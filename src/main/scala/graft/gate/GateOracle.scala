@@ -2,9 +2,8 @@ package graft.gate
 
 import graft.analysis.Analyzer
 
-/** DuckDB oracle SQL for every [[Gate]] query — token-for-token the same
-  * arithmetic as the engine's double-precision parity path, over the same raw
-  * parquet tables, so the driver's row/schema/hash compare is exact.
+/** DuckDB oracle SQL for every [[Gate]] query, over the same raw parquet
+  * tables, so the row/schema/hash compare is exact.
   *
   * Shared prelude:
   *  - `tok`  : the analysis chain (split + length<=255 + 33 stopwords — on
@@ -12,9 +11,11 @@ import graft.analysis.Analyzer
   *  - `nbt`  : SmallFloat315 norm-byte encode, emulated arithmetically from
   *             the float32 value of 1/sqrt(len) (2 explicit mantissa bits kept
   *             by `bits >> 21`, exponent rebased by 384).
-  *  - `nrm`  : norm-byte decode to the NORM_TABLE value.
-  *  - `sc`   : per-(doc, term) BM25 score in double, identical op order to
-  *             [[Gate.hitScore]].
+  *  - `tfs`/`dfs`: per-(term, doc) tf and per-term df/ttf.
+  *
+  * Every ranked or scored gate runs the float32 engine, so its oracle is
+  * built on [[fprelude]]: the [[graft.score.Bm25]] kernel in REAL
+  * arithmetic, ranked by the REAL score then doc_id through [[ranked]].
   */
 object GateOracle {
 
@@ -24,8 +25,6 @@ object GateOracle {
   /** floor(x*10000 + 0.5) as BIGINT — the shared score quantizer. */
   private def qz(expr: String): String =
     s"CAST(floor(($expr) * 10000 + 0.5) AS BIGINT)"
-
-  private val avgdl = "(CAST(st.sttf AS DOUBLE) / st.n)"
 
   private val prelude: String =
     s"""WITH splits AS (
@@ -46,22 +45,12 @@ object GateOracle {
        |           + floor(y / power(2.0, floor(log2(y))) * 4) - 4 - 384 AS BIGINT)
        |    END AS nb
        |  FROM (SELECT doc_id, len, CAST(CAST(1.0 / sqrt(len) AS REAL) AS DOUBLE) AS y FROM lens)
-       |), nrm AS (
-       |  SELECT doc_id, len, nb, 1.0 / (f * f) AS nv
-       |  FROM (SELECT doc_id, len, nb,
-       |          (1.0 + ((nb + 384) % 4) * 0.25) * power(2.0, ((nb + 384) // 4) - 127) AS f
-       |        FROM nbt)
        |), st AS (
        |  SELECT (SELECT count(*) FROM documents) AS n, (SELECT count(*) FROM tok) AS sttf
        |), tfs AS (
        |  SELECT term, doc_id, count(*) AS tf FROM tok GROUP BY term, doc_id
        |), dfs AS (
        |  SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS ttf FROM tfs GROUP BY term
-       |), sc AS (
-       |  SELECT t.doc_id, t.term,
-       |    ln(1.0 + (st.n - d.df + 0.5) / (d.df + 0.5)) * 2.2 * t.tf
-       |      / (t.tf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl)) AS s
-       |  FROM tfs t JOIN dfs d USING (term) JOIN nrm r USING (doc_id) CROSS JOIN st
        |)""".stripMargin
 
   // ---------- float32 ENGINE-kernel emulation ------------------------------
@@ -86,11 +75,15 @@ object GateOracle {
   private val k1f = "CAST(1.2000000476837158e0 AS REAL)"  // 1.2f
   private val fz = "CAST(0.0e0 AS REAL)"                  // x + 0.0f == x
 
-  /** Per-(doc, term) FLOAT32 BM25 scores `fsc.s` — the engine kernel
-    * ([[graft.score.Bm25]]) mirrored op-for-op in REAL arithmetic:
-    * idf = (float) ln(...), weightValue = idf * (k1+1), avgdl =
-    * (float)(sttf/n), cache = k1*((1-b) + b*NORM_TABLE[nb]/avgdl),
-    * s = wv*tf/(tf + cache). Boost-1 queries only (idf*1.0f == idf).
+  /** [[graft.score.Bm25.score]]: wv * tf / (tf + cache[nb]), with the
+    * doc's cache value `r.c` from `fnorm`.
+    */
+  private def bm25(wv: String, tf: String): String = s"($wv * $tf) / ($tf + r.c)"
+
+  /** The engine kernel ([[graft.score.Bm25]]) mirrored op-for-op in REAL
+    * arithmetic: `fidf.idf` = (float) ln(...), `fnorm.c` = the per-doc
+    * cache k1*((1-b) + b*NORM_TABLE[nb]/avgdl) with avgdl = (float)(sttf/n),
+    * and `fsc.s` = the per-(doc, term) score with weightValue = idf*(k1+1).
     */
   private val fprelude: String =
     s"""$prelude, ntab(nb, nt) AS (VALUES $ntabValues
@@ -99,13 +92,13 @@ object GateOracle {
        |), fidf AS (
        |  SELECT d.term, CAST(ln(1.0 + (fs2.n - d.df + 0.5) / (d.df + 0.5)) AS REAL) AS idf
        |  FROM dfs d CROSS JOIN fstats fs2
+       |), fnorm AS (
+       |  SELECT b.doc_id,
+       |    $k1f * (CAST(0.25e0 AS REAL) + (CAST(0.75e0 AS REAL) * ntab.nt) / fs.avgdl) AS c
+       |  FROM nbt b JOIN ntab ON ntab.nb = b.nb CROSS JOIN fstats fs
        |), fsc AS (
-       |  SELECT t.doc_id, t.term,
-       |    (i.idf * $k1p1) * CAST(t.tf AS REAL)
-       |      / (CAST(t.tf AS REAL)
-       |         + $k1f * (CAST(0.25e0 AS REAL) + (CAST(0.75e0 AS REAL) * ntab.nt) / fs.avgdl)) AS s
-       |  FROM tfs t JOIN fidf i USING (term) JOIN nbt b USING (doc_id)
-       |  JOIN ntab ON ntab.nb = b.nb CROSS JOIN fstats fs
+       |  SELECT t.doc_id, t.term, ${bm25(s"(i.idf * $k1p1)", "CAST(t.tf AS REAL)")} AS s
+       |  FROM tfs t JOIN fidf i USING (term) JOIN fnorm r USING (doc_id)
        |)""".stripMargin
 
   /** Payload-index prelude: WhitespaceAnalyzer tokenization (every token of
@@ -143,11 +136,45 @@ object GateOracle {
        |  FROM (SELECT count(*) AS df FROM pagg) d CROSS JOIN pstats fs
        |)""".stripMargin
 
-  private def topk(where: String, k: Int = 10, having: String = ""): String =
-    s"""$prelude
-       |SELECT doc_id, ${qz("sum(s)")} AS score_q
-       |FROM sc WHERE $where GROUP BY doc_id $having
-       |ORDER BY score_q DESC, doc_id LIMIT $k""".stripMargin
+  /** `bsc`: `fsc` with a per-term boost from the query `w` (term, b REAL) —
+    * [[graft.score.Bm25.weightValue]]'s (idf * boost) * (k1 + 1).
+    */
+  private def boosted(w: String): String =
+    s""", w(term, b) AS (
+       |  $w
+       |), bsc AS (
+       |  SELECT t.doc_id, t.term, ${bm25(s"((i.idf * w.b) * $k1p1)", "CAST(t.tf AS REAL)")} AS s
+       |  FROM tfs t JOIN fidf i USING (term) JOIN w USING (term) JOIN fnorm r USING (doc_id)
+       |)""".stripMargin
+
+  /** The engine's flat-boolean clause sum: `s` folded per group in
+    * ascending term order (term ids ascend with the term). DuckDB's sum()
+    * over REAL returns DOUBLE; list_reduce stays REAL and folds in order.
+    */
+  private def fold(s: String = "s"): String =
+    s"list_reduce(list($s ORDER BY term), (a, b) -> a + b)"
+
+  /** Per doc, the folded clause scores of the `from` rows matching `where`. */
+  private def flat(where: String, having: String = "", from: String = "fsc"): String =
+    s"SELECT doc_id, ${fold()} AS s FROM $from WHERE $where GROUP BY doc_id $having"
+
+  /** A ranked float32 result: `hits` yields one (doc_id, s REAL) row per
+    * matching doc; the top `k` by the REAL score, then doc_id (the engine's
+    * collector order), with the quantized score. `ctes` follow the prelude.
+    */
+  private def ranked(hits: String, k: Int = 10, ctes: String = ""): String =
+    s"""$fprelude$ctes
+       |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM ($hits)
+       |ORDER BY s DESC, doc_id LIMIT $k""".stripMargin
+
+  /** Phrase score: `ph` (doc_id, pf REAL) scored with weightValue = the
+    * idf of `terms` summed in slot order, times k1+1.
+    */
+  private def phrase(ph: String, terms: String*): String = {
+    val idfSum = terms.map(t => s"(SELECT idf FROM fidf WHERE term = '$t')").mkString(" + ")
+    ranked(s"SELECT doc_id, ${bm25(s"(($idfSum) * $k1p1)", "ph.pf")} AS s " +
+      "FROM ph JOIN fnorm r USING (doc_id)", ctes = s", ph AS ($ph)")
+  }
 
   private def inList(terms: String*): String =
     terms.map(t => s"'$t'").mkString("term IN (", ", ", ")")
@@ -202,6 +229,32 @@ object GateOracle {
       |  FROM pos
       |""".stripMargin
 
+  /** Oracles shared by gates that run the same engine query. */
+  private val termVector = ranked(flat("term = 'vector'"))
+  private val orMergeSparkWindow = ranked(flat(inList("merge", "spark", "window")))
+  // (spark OR window) AND merge: the group's fold, then the conjunct
+  private val nested = ranked(
+    s"""SELECT g.doc_id, g.s + m.s AS s
+       |FROM (${flat(inList("spark", "window"))}) g
+       |JOIN (SELECT doc_id, s FROM fsc WHERE term = 'merge') m USING (doc_id)""".stripMargin)
+  // DisjunctionMaxScorer: max + (sum - max) * 0.1f, the sum in clause order
+  private val dismax = ranked(
+    s"""SELECT doc_id, max(s) + (${fold()} - max(s)) * CAST(1.00000001490116119e-01 AS REAL) AS s
+       |FROM fsc WHERE ${inList("spark", "window")} GROUP BY doc_id""".stripMargin)
+  private val phraseFastTable = phrase(
+    """SELECT a.doc_id, CAST(count(*) AS REAL) AS pf
+      |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
+      |  WHERE a.t = 'fast' AND b.t = 'table' GROUP BY a.doc_id""".stripMargin, "fast", "table")
+
+  /** FuzzyQuery 'soft' within `edits`: the top 50 terms by similarity
+    * 1 - d/min(|t|, |q|), then term, each boosted by that similarity in
+    * float32 ([[graft.query.Rewrite.fuzzyExpansion]]).
+    */
+  private def fuzzy(edits: Int): String = ranked(flat("true", from = "bsc"), ctes = boosted(
+    s"""SELECT term, CAST(1.0e0 AS REAL) - CAST(d AS REAL) / CAST(least(length(term), 4) AS REAL)
+       |  FROM (SELECT term, levenshtein(term, 'soft') AS d FROM dfs) WHERE d <= $edits
+       |  ORDER BY 1.0 - d / CAST(least(length(term), 4) AS DOUBLE) DESC, term LIMIT 50""".stripMargin))
+
   val sql: Map[String, String] = Map(
     "ft_termdict" ->
       s"$prelude SELECT term, df, ttf FROM dfs ORDER BY term",
@@ -216,89 +269,58 @@ object GateOracle {
       s"""$prelude
          |SELECT doc_id, CAST(tf AS BIGINT) AS tf FROM tfs
          |WHERE term = 'query' ORDER BY doc_id""".stripMargin,
-    "ft_q_term" -> topk("term = 'vector'"),
-    "ft_q_term_stemmed" -> topk("term = 'merge'"),
-    "ft_q_term_rare" -> topk("term = 'dup'"),
-    "ft_q_or" -> topk(inList("spark", "window")),
-    "ft_q_and" -> topk(inList("hash", "merge"), having = "HAVING count(*) = 2"),
-    "ft_q_not" ->
-      s"""$prelude
-         |SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |FROM sc WHERE term = 'table'
-         |  AND doc_id NOT IN (SELECT doc_id FROM sc WHERE term = 'slow')
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_mm" ->
-      topk(inList("spark", "stream", "sort"), having = "HAVING count(*) >= 2"),
-    "ft_q_dismax" ->
-      s"""$prelude
-         |SELECT doc_id, ${qz("max(s) + 0.1 * (sum(s) - max(s))")} AS score_q
-         |FROM sc WHERE ${inList("spark", "window")}
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_constant_score" ->
-      s"""$prelude
-         |SELECT doc_id, CAST(25000 AS BIGINT) AS score_q
-         |FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_nested" ->
-      s"""$prelude, grp AS (
-         |  SELECT doc_id, sum(s) AS gs FROM sc
-         |  WHERE term IN ('spark', 'window') GROUP BY doc_id
-         |), m AS (
-         |  SELECT doc_id, sum(s) AS ms FROM sc WHERE term = 'merge' GROUP BY doc_id
-         |)
-         |SELECT doc_id, ${qz("gs + ms")} AS score_q
-         |FROM grp JOIN m USING (doc_id)
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_phrase" ->
-      s"""$prelude, ph AS (
-         |  SELECT a.doc_id, count(*) AS pf
-         |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-         |  WHERE a.t = 'fast' AND b.t = 'table' GROUP BY a.doc_id
-         |), isum AS (
-         |  SELECT (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'fast')
-         |       + (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'table') AS v
-         |)
-         |SELECT ph.doc_id,
-         |  ${qz(s"isum.v * 2.2 * ph.pf / (ph.pf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl))")} AS score_q
-         |FROM ph JOIN nrm r USING (doc_id) CROSS JOIN isum CROSS JOIN st
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_phrase_sloppy" ->
-      s"""$prelude, nearest AS (
-         |  SELECT a.doc_id, a.p, min(abs(b.p - a.p - 1)) AS d
-         |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND abs(b.p - a.p - 1) <= 2
-         |  WHERE a.t = 'fast' AND b.t = 'merge'
-         |  GROUP BY a.doc_id, a.p
-         |), ph AS (
-         |  SELECT doc_id, sum(1.0 / (d + 1)) AS pf FROM nearest GROUP BY doc_id
-         |), isum AS (
-         |  SELECT (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'fast')
-         |       + (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'merge') AS v
-         |)
-         |SELECT ph.doc_id,
-         |  ${qz(s"isum.v * 2.2 * ph.pf / (ph.pf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl))")} AS score_q
-         |FROM ph JOIN nrm r USING (doc_id) CROSS JOIN isum CROSS JOIN st
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_multi_phrase" ->
-      s"""$prelude, m AS (
-         |  SELECT a.doc_id, count(*) AS pf
-         |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-         |  WHERE a.t IN ('fast', 'slow') AND b.t = 'table'
-         |  GROUP BY a.doc_id
-         |), isum AS (
-         |  SELECT (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'fast')
-         |       + (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'slow')
-         |       + (SELECT ln(1.0 + (st.n - df + 0.5) / (df + 0.5)) FROM dfs, st WHERE term = 'table') AS v
-         |)
-         |SELECT m.doc_id,
-         |  ${qz(s"isum.v * 2.2 * m.pf / (m.pf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl))")} AS score_q
-         |FROM m JOIN nrm r USING (doc_id) CROSS JOIN isum CROSS JOIN st
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_drill_down" ->
-      s"""$prelude
-         |SELECT sc.doc_id, ${qz("sum(sc.s)")} AS score_q
-         |FROM sc JOIN documents d ON d.doc_id = sc.doc_id
-         |WHERE sc.term = 'data' AND d.lang = 'en' AND d.source = 'src3'
-         |GROUP BY sc.doc_id ORDER BY score_q DESC, sc.doc_id LIMIT 10""".stripMargin,
+    "ft_q_term" -> termVector,
+    // EnglishAnalyzer index: every stem group on this corpus is a single
+    // surface form (PorterSpec), so the unstemmed tables carry its stats
+    "ft_q_term_stemmed" -> ranked(flat("term = 'merge'")),
+    "ft_q_term_rare" -> ranked(flat("term = 'dup'")),
+    "ft_q_or" -> ranked(flat(inList("spark", "window"))),
+    "ft_q_and" -> ranked(flat(inList("hash", "merge"), "HAVING count(*) = 2")),
+    "ft_q_not" -> ranked(flat(
+      "term = 'table' AND doc_id NOT IN (SELECT doc_id FROM tfs WHERE term = 'slow')")),
+    "ft_q_mm" -> ranked(flat(inList("spark", "stream", "sort"), "HAVING count(*) >= 2")),
+    "ft_q_dismax" -> dismax,
+    "ft_q_constant_score" -> ranked(
+      "SELECT doc_id, CAST(2.5e0 AS REAL) AS s FROM tfs WHERE term = 'vector'"),
+    "ft_q_nested" -> nested,
+    "ft_q_phrase" -> phraseFastTable,
+    // SloppyPhrase's two-slot window walk, one recursive step per cursor
+    // advance: the runner (the cursor at the smaller adjusted position)
+    // advances while it stays <= the other cursor; when it passes it, the
+    // window closed at the previous step (matchLength ml) scores
+    // 1/(1 + ml) if ml <= slop, and the cursors swap roles. The runner
+    // running out scores the last window. pf accumulates in REAL in
+    // discovery order, like the engine's freq.
+    "ft_q_phrase_sloppy" -> phrase(
+      """WITH RECURSIVE sl AS (
+        |  SELECT doc_id, a.xa, b.xb
+        |  FROM (SELECT doc_id, list(p ORDER BY p) AS xa FROM pos WHERE t = 'fast' GROUP BY doc_id) a
+        |  JOIN (SELECT doc_id, list(p - 1 ORDER BY p) AS xb FROM pos WHERE t = 'merge' GROUP BY doc_id) b
+        |  USING (doc_id)
+        |), walk(doc_id, ra, i, j, ml, pf, fin) AS (
+        |  SELECT doc_id, xa[1] <= xb[1], 1, 1, abs(xa[1] - xb[1]), CAST(0.0e0 AS REAL), false FROM sl
+        |  UNION ALL
+        |  SELECT doc_id,
+        |    CASE WHEN nx > y THEN NOT ra ELSE ra END,
+        |    CASE WHEN nx > y THEN j ELSE i + 1 END,
+        |    CASE WHEN nx > y THEN i + 1 ELSE j END,
+        |    CASE WHEN nx > y THEN nx - y ELSE y - nx END,
+        |    CASE WHEN (nx IS NULL OR nx > y) AND ml <= 2
+        |      THEN pf + CAST(1.0e0 AS REAL) / CAST(1 + ml AS REAL) ELSE pf END,
+        |    nx IS NULL
+        |  FROM (SELECT w.*, (CASE WHEN w.ra THEN s.xa ELSE s.xb END)[w.i + 1] AS nx,
+        |               (CASE WHEN w.ra THEN s.xb ELSE s.xa END)[w.j] AS y
+        |        FROM walk w JOIN sl s USING (doc_id) WHERE NOT w.fin)
+        |)
+        |SELECT doc_id, pf FROM walk WHERE fin AND pf > 0""".stripMargin, "fast", "merge"),
+    // MultiPhrase: weight = idf summed in slot order, ascending term within a slot
+    "ft_q_multi_phrase" -> phrase(
+      """SELECT a.doc_id, CAST(count(*) AS REAL) AS pf
+        |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
+        |  WHERE a.t IN ('fast', 'slow') AND b.t = 'table' GROUP BY a.doc_id""".stripMargin,
+      "fast", "slow", "table"),
+    "ft_drill_down" -> ranked(flat("term = 'data' AND doc_id IN " +
+      "(SELECT doc_id FROM documents WHERE lang = 'en' AND source = 'src3')")),
     "ft_span_near" ->
       s"""$prelude
          |SELECT a.doc_id, count(*) AS matches
@@ -330,14 +352,7 @@ object GateOracle {
          |FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p - a.p BETWEEN 1 AND 2
          |WHERE a.t IN ('fast', 'slow') AND b.t = 'table'
          |ORDER BY a.doc_id, start_pos, end_pos""".stripMargin,
-    // --- FLOAT32 ENGINE gates: the Spark side runs query.Searcher /
-    // WandSearcher end-to-end; these oracles rank by the bit-identical
-    // float32 score (REAL emulation), so top-k membership, order and the
-    // quantized projection all match exactly.
-    "ft_engine_term" ->
-      s"""$fprelude
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q
-         |FROM fsc WHERE term = 'vector' ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
+    "ft_engine_term" -> termVector,
     "ft_percolate" ->
       s"""$prelude, m1 AS (
          |  SELECT doc_id FROM tok WHERE term = 'vector'
@@ -370,102 +385,13 @@ object GateOracle {
          |  t.total_hits, t.max_q
          |FROM hits h CROSS JOIN tot t
          |ORDER BY h.s DESC, h.doc_id LIMIT 10""".stripMargin,
-    "ft_engine_or" ->
-      s"""$fprelude, piv AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN term = 'merge' THEN s END) AS s1,
-         |    max(CASE WHEN term = 'spark' THEN s END) AS s2,
-         |    max(CASE WHEN term = 'window' THEN s END) AS s3
-         |  FROM fsc WHERE term IN ('merge', 'spark', 'window') GROUP BY doc_id
-         |), tot AS (
-         |  -- float32 clause sum ascending term_id (merge < spark < window);
-         |  -- x + 0.0f == x, so zero-coalesce equals skipping absent clauses
-         |  SELECT doc_id, ((coalesce(s1, $fz) + coalesce(s2, $fz)) + coalesce(s3, $fz)) AS s
-         |  FROM piv
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_engine_wand" ->
-      s"""$fprelude, piv AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN term = 'merge' THEN s END) AS s1,
-         |    max(CASE WHEN term = 'spark' THEN s END) AS s2,
-         |    max(CASE WHEN term = 'window' THEN s END) AS s3
-         |  FROM fsc WHERE term IN ('merge', 'spark', 'window') GROUP BY doc_id
-         |), tot AS (
-         |  SELECT doc_id, ((coalesce(s1, $fz) + coalesce(s2, $fz)) + coalesce(s3, $fz)) AS s
-         |  FROM piv
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_engine_conj" ->
-      s"""$fprelude, piv AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN term = 'merge' THEN s END) AS sm,
-         |    max(CASE WHEN term = 'spark' THEN s END) AS ss,
-         |    max(CASE WHEN term = 'window' THEN s END) AS sw
-         |  FROM fsc WHERE term IN ('merge', 'spark', 'window') GROUP BY doc_id
-         |), tot AS (
-         |  -- +spark +merge window: both MUSTs required, float32 clause sum
-         |  -- ascending term_id (merge < spark < window)
-         |  SELECT doc_id, ((sm + ss) + coalesce(sw, $fz)) AS s
-         |  FROM piv WHERE sm IS NOT NULL AND ss IS NOT NULL
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_engine_nested" ->
-      s"""$fprelude, piv AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN term = 'spark' THEN s END) AS ss,
-         |    max(CASE WHEN term = 'window' THEN s END) AS sw,
-         |    max(CASE WHEN term = 'merge' THEN s END) AS sm
-         |  FROM fsc WHERE term IN ('spark', 'window', 'merge') GROUP BY doc_id
-         |), tot AS (
-         |  -- (spark OR window) AND merge: group sum (ascending term_id)
-         |  -- then clause-order outer fold, both MUST clauses required
-         |  SELECT doc_id, ((coalesce(ss, $fz) + coalesce(sw, $fz)) + sm) AS s
-         |  FROM piv WHERE sm IS NOT NULL AND (ss IS NOT NULL OR sw IS NOT NULL)
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_engine_dismax" ->
-      s"""$fprelude, piv AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN term = 'spark' THEN s END) AS ss,
-         |    max(CASE WHEN term = 'window' THEN s END) AS sw
-         |  FROM fsc WHERE term IN ('spark', 'window') GROUP BY doc_id
-         |), tot AS (
-         |  -- DisjunctionMaxScorer: max + (sum - max) * tieBreaker, float32;
-         |  -- tb literal = 0.1f exactly
-         |  SELECT doc_id,
-         |    greatest(coalesce(ss, CAST('-infinity' AS REAL)),
-         |             coalesce(sw, CAST('-infinity' AS REAL)))
-         |    + (((coalesce(ss, $fz) + coalesce(sw, $fz))
-         |        - greatest(coalesce(ss, CAST('-infinity' AS REAL)),
-         |                   coalesce(sw, CAST('-infinity' AS REAL))))
-         |       * CAST(1.00000001490116119e-01 AS REAL)) AS s
-         |  FROM piv
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_engine_phrase" ->
-      s"""$fprelude, ph AS (
-         |  SELECT a.doc_id, count(*) AS pf
-         |  FROM pos a JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-         |  WHERE a.t = 'fast' AND b.t = 'table' GROUP BY a.doc_id
-         |), wvp AS (
-         |  SELECT (((SELECT idf FROM fidf WHERE term = 'fast')
-         |          + (SELECT idf FROM fidf WHERE term = 'table')) * $k1p1) AS wv
-         |), tot AS (
-         |  SELECT ph.doc_id,
-         |    (wvp.wv * CAST(ph.pf AS REAL))
-         |      / (CAST(ph.pf AS REAL)
-         |         + $k1f * (CAST(0.25e0 AS REAL) + (CAST(0.75e0 AS REAL) * ntab.nt) / fs.avgdl)) AS s
-         |  FROM ph JOIN nbt b USING (doc_id) JOIN ntab ON ntab.nb = b.nb
-         |  CROSS JOIN wvp CROSS JOIN fstats fs
-         |)
-         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
-         |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
+    "ft_engine_or" -> orMergeSparkWindow,
+    "ft_engine_wand" -> orMergeSparkWindow,
+    "ft_engine_conj" -> ranked(flat(inList("merge", "spark", "window"),
+      "HAVING count(*) FILTER (WHERE term IN ('merge', 'spark')) = 2")),
+    "ft_engine_nested" -> nested,
+    "ft_engine_dismax" -> dismax,
+    "ft_engine_phrase" -> phraseFastTable,
     // PayloadTermQuery gates run on the WhitespaceAnalyzer payload index
     // (Gate.indexDirPayload): token = "<term>|<w>", w = ((doc_id + p) % 8 + 1)/2
     // at 1-based position p. All w are multiples of 0.5, so every float32
@@ -521,62 +447,39 @@ object GateOracle {
          |)
          |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM tot
          |ORDER BY s DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_prefix" -> topk("term LIKE 's%'"),
+    "ft_q_prefix" -> ranked(flat("term LIKE 's%'")),
     "ft_q_prefix_wide" ->
       s"""$prelude
          |SELECT doc_id, CAST(25000 AS BIGINT) AS score_q
          |FROM tfs WHERE term LIKE 's%'
          |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_must_prefix" ->
-      s"""$prelude, grp AS (
-         |  SELECT doc_id, sum(s) AS gs FROM sc WHERE term LIKE 's%' GROUP BY doc_id
-         |), m AS (
-         |  SELECT doc_id, sum(s) AS ms FROM sc WHERE term = 'merge' GROUP BY doc_id
-         |)
-         |SELECT grp.doc_id, ${qz("gs + coalesce(ms, 0.0)")} AS score_q
-         |FROM grp LEFT JOIN m USING (doc_id)
-         |ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_wildcard" -> topk("term LIKE 'w_ndow'"),
-    "ft_q_fuzzy" -> topk("levenshtein(term, 'soft') <= 1"),
-    "ft_q_fuzzy2" ->
-      s"""$prelude, fz AS (
-         |  SELECT term,
-         |    1.0 - levenshtein(term, 'soft') / CAST(least(length(term), 4) AS DOUBLE) AS sim
-         |  FROM dfs WHERE levenshtein(term, 'soft') <= 2
-         |  ORDER BY sim DESC, term LIMIT 50
-         |)
-         |SELECT doc_id, ${qz("sum(sc.s * fz.sim)")} AS score_q
-         |FROM sc JOIN fz USING (term)
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_q_parser" ->
-      s"""$prelude
-         |SELECT doc_id,
-         |  ${qz("sum(CASE WHEN term = 'fast' THEN s * CAST(2.0 AS REAL) ELSE s END)")} AS score_q
-         |FROM sc WHERE term IN ('table', 'fast')
-         |  AND doc_id IN (SELECT doc_id FROM sc WHERE term = 'table')
-         |  AND doc_id NOT IN (SELECT doc_id FROM sc WHERE term = 'slow')
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
+    // +s* merge: the in-cap prefix under MUST nests as a SHOULD group;
+    // clause order: the group's fold, then the optional 'merge'
+    "ft_q_must_prefix" -> ranked(
+      s"""SELECT g.doc_id, g.s + coalesce(m.s, $fz) AS s
+         |FROM (${flat("term LIKE 's%'")}) g
+         |LEFT JOIN (SELECT doc_id, s FROM fsc WHERE term = 'merge') m USING (doc_id)""".stripMargin),
+    "ft_q_wildcard" -> ranked(flat("term LIKE 'w_ndow'")),
+    "ft_q_fuzzy" -> fuzzy(1),
+    "ft_q_fuzzy2" -> fuzzy(2),
+    // +table -slow fast^2
+    "ft_q_parser" -> ranked(
+      flat("term IN ('fast', 'table') AND doc_id IN (SELECT doc_id FROM tfs WHERE term = 'table')" +
+        " AND doc_id NOT IN (SELECT doc_id FROM tfs WHERE term = 'slow')", from = "bsc"),
+      ctes = boosted("VALUES ('fast', CAST(2.0e0 AS REAL)), ('table', CAST(1.0e0 AS REAL))")),
     "ft_q_range" ->
       s"""$prelude
          |SELECT doc_id, count(*) AS nterms FROM tfs
          |WHERE term BETWEEN 'batch' AND 'data'
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "ft_q_absent" -> topk("term = 'zzz'"),
+    "ft_q_absent" -> ranked(flat("term = 'zzz'")),
     "ft_q_paging" ->
-      s"""$prelude, base AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |)
-         |SELECT doc_id, score_q FROM (
-         |  SELECT doc_id, score_q,
-         |         row_number() OVER (ORDER BY score_q DESC, doc_id) AS rn
-         |  FROM base
-         |) WHERE rn > 10 AND rn <= 20 ORDER BY score_q DESC, doc_id""".stripMargin,
-    "ft_delete" ->
-      s"""$prelude
-         |SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |FROM sc WHERE term = 'table' AND doc_id % 7 <> 0
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
+      s"""$fprelude
+         |SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM (
+         |  SELECT doc_id, s, row_number() OVER (ORDER BY s DESC, doc_id) AS rn
+         |  FROM fsc WHERE term = 'vector'
+         |) WHERE rn > 10 AND rn <= 20""".stripMargin,
+    "ft_delete" -> ranked(flat("term = 'table' AND doc_id % 7 <> 0")),
     "ft_count_all" -> "SELECT count(*) AS cnt FROM documents",
     "ft_facet_lang" ->
       s"""$prelude
@@ -591,15 +494,12 @@ object GateOracle {
          |FROM tfs t JOIN documents d USING (doc_id)
          |WHERE t.term = 'merge' GROUP BY bucket ORDER BY bucket""".stripMargin,
     "ft_group_top" ->
-      s"""$prelude, base AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'data' GROUP BY doc_id
-         |)
-         |SELECT source, CAST(rn AS BIGINT) AS rn, doc_id, score_q FROM (
-         |  SELECT d.source, b.doc_id, b.score_q,
-         |         row_number() OVER (PARTITION BY d.source
-         |                            ORDER BY b.score_q DESC, b.doc_id) AS rn
-         |  FROM base b JOIN documents d USING (doc_id)
+      s"""$fprelude
+         |SELECT source, CAST(rn AS BIGINT) AS rn, doc_id,
+         |  ${qz("CAST(s AS DOUBLE)")} AS score_q FROM (
+         |  SELECT d.source, f.doc_id, f.s,
+         |         row_number() OVER (PARTITION BY d.source ORDER BY f.s DESC, f.doc_id) AS rn
+         |  FROM fsc f JOIN documents d USING (doc_id) WHERE f.term = 'data'
          |) WHERE rn <= 3 ORDER BY source, rn""".stripMargin,
     "ft_group_distinct" ->
       s"""$prelude, base AS (SELECT DISTINCT doc_id FROM tfs WHERE term = 'data')
@@ -615,21 +515,17 @@ object GateOracle {
          |FROM documents d JOIN base USING (doc_id)
          |GROUP BY d.lang ORDER BY lang""".stripMargin,
     "ft_group_block" ->
-      s"""$prelude, base AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'data' GROUP BY doc_id
-         |), ranked AS (
-         |  SELECT d.source, b.doc_id, b.score_q,
-         |         row_number() OVER (PARTITION BY d.source
-         |                            ORDER BY b.score_q DESC, b.doc_id) AS rn
-         |  FROM base b JOIN documents d USING (doc_id)
+      s"""$fprelude, ranked AS (
+         |  SELECT d.source, f.doc_id, f.s,
+         |         row_number() OVER (PARTITION BY d.source ORDER BY f.s DESC, f.doc_id) AS rn
+         |  FROM fsc f JOIN documents d USING (doc_id) WHERE f.term = 'data'
          |), topdocs AS (SELECT * FROM ranked WHERE rn <= 2),
-         |g AS (SELECT source, max(score_q) AS gmax FROM topdocs
-         |      GROUP BY source ORDER BY gmax DESC, source LIMIT 5)
-         |SELECT t.source AS source, g.gmax AS gmax, CAST(t.rn AS BIGINT) AS rn,
-         |       t.doc_id, t.score_q
+         |g AS (SELECT source, max(s) AS gs FROM topdocs
+         |      GROUP BY source ORDER BY gs DESC, source LIMIT 5)
+         |SELECT t.source AS source, ${qz("CAST(g.gs AS DOUBLE)")} AS gmax,
+         |       CAST(t.rn AS BIGINT) AS rn, t.doc_id, ${qz("CAST(t.s AS DOUBLE)")} AS score_q
          |FROM topdocs t JOIN g USING (source)
-         |ORDER BY g.gmax DESC, t.source, t.rn""".stripMargin,
+         |ORDER BY g.gs DESC, t.source, t.rn""".stripMargin,
     "ft_sort_field" ->
       s"""$prelude
          |SELECT d.doc_id, d.n_chars FROM documents d
@@ -698,22 +594,20 @@ object GateOracle {
          |SELECT w2 AS next, count(*) AS cnt FROM big WHERE w1 = 'time'
          |GROUP BY w2 ORDER BY cnt DESC, next LIMIT 8""".stripMargin,
     "ft_explain" ->
-      s"""$prelude, parts AS (
-         |  SELECT t.doc_id, t.term, t.tf, d.df, r.nb,
-         |         ln(1.0 + (st.n - d.df + 0.5) / (d.df + 0.5)) AS idf,
-         |         2.2 * t.tf / (t.tf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl)) AS tfnorm,
-         |         ln(1.0 + (st.n - d.df + 0.5) / (d.df + 0.5)) * 2.2 * t.tf
-         |           / (t.tf + 1.2 * (0.25 + 0.75 * r.nv / $avgdl)) AS sc0
-         |  FROM tfs t JOIN dfs d USING (term) JOIN nrm r USING (doc_id) CROSS JOIN st
+      s"""$fprelude, parts AS (
+         |  SELECT t.doc_id, t.term, t.tf, d.df, b.nb, i.idf,
+         |    (CAST(t.tf AS REAL) * $k1p1) / (CAST(t.tf AS REAL) + r.c) AS tfnorm, f.s AS sc0
+         |  FROM tfs t JOIN dfs d USING (term) JOIN fidf i USING (term)
+         |  JOIN nbt b USING (doc_id) JOIN fnorm r USING (doc_id) JOIN fsc f USING (doc_id, term)
          |  WHERE t.term IN ('table', 'value')
          |), top1 AS (
-         |  SELECT doc_id, ${qz("sum(sc0)")} AS total_q FROM parts GROUP BY doc_id
-         |  ORDER BY total_q DESC, doc_id LIMIT 1
+         |  SELECT doc_id, ${fold("sc0")} AS tot FROM parts GROUP BY doc_id
+         |  ORDER BY tot DESC, doc_id LIMIT 1
          |)
          |SELECT p.doc_id, p.term, CAST(p.tf AS BIGINT) AS tf, p.df,
          |       CAST(p.nb AS BIGINT) AS nb,
-         |       ${qz("p.idf")} AS idf_q, ${qz("p.tfnorm")} AS tfnorm_q,
-         |       ${qz("p.sc0")} AS clause_q, t.total_q
+         |       ${qz("CAST(p.idf AS DOUBLE)")} AS idf_q, ${qz("CAST(p.tfnorm AS DOUBLE)")} AS tfnorm_q,
+         |       ${qz("CAST(p.sc0 AS DOUBLE)")} AS clause_q, ${qz("CAST(t.tot AS DOUBLE)")} AS total_q
          |FROM parts p JOIN top1 t USING (doc_id)
          |ORDER BY term""".stripMargin,
     "ft_suggest_jaro" ->
@@ -727,10 +621,8 @@ object GateOracle {
          |WHERE levenshtein(substring(term, 1, 3), 'pro') <= 1
          |ORDER BY weight DESC, term LIMIT 8""".stripMargin,
     "ft_highlight_multi" ->
-      s"""$prelude, top AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |  ORDER BY score_q DESC, doc_id LIMIT 3
+      s"""$fprelude, top AS (
+         |  SELECT doc_id FROM fsc WHERE term = 'vector' ORDER BY s DESC, doc_id LIMIT 3
          |), occ AS (
          |  SELECT p.doc_id, p.p AS pos,
          |         row_number() OVER (PARTITION BY p.doc_id ORDER BY p.p) AS rn
@@ -740,7 +632,7 @@ object GateOracle {
          |       array_to_string(l[o.pos:o.pos + 2], ' ') AS snippet
          |FROM occ o JOIN splits USING (doc_id)
          |WHERE o.rn <= 3 ORDER BY doc_id, pos""".stripMargin,
-    "ft_q_regexp" -> topk("regexp_matches(term, '^w.ndow$')"),
+    "ft_q_regexp" -> ranked(flat("regexp_matches(term, '^w.ndow$')")),
     "ft_join" ->
       s"""$prelude
          |SELECT d2.source AS source, count(*) AS cnt
@@ -750,9 +642,8 @@ object GateOracle {
          |  WHERE t.term = 'dup')
          |GROUP BY d2.source ORDER BY source""".stripMargin,
     "ft_join_score" ->
-      s"""$prelude, fromside AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS sq
-         |  FROM sc WHERE term = 'dup' GROUP BY doc_id
+      s"""$fprelude, fromside AS (
+         |  SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS sq FROM fsc WHERE term = 'dup'
          |), f AS (
          |  SELECT d.source, fs.sq FROM fromside fs JOIN documents d USING (doc_id)
          |), agg AS (
@@ -768,48 +659,38 @@ object GateOracle {
          |  USING (source)
          |ORDER BY source""".stripMargin,
     "ft_block_join" ->
-      s"""$prelude, base AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |)
-         |SELECT d.source AS source, max(b.score_q) AS max_q, count(*) AS hits
-         |FROM base b JOIN documents d USING (doc_id)
-         |GROUP BY d.source ORDER BY max_q DESC, source LIMIT 5""".stripMargin,
-    "ft_more_like_this" ->
-      s"""$prelude, mlt AS (
-         |  SELECT t.term FROM tfs t JOIN dfs d USING (term) CROSS JOIN st
-         |  WHERE t.doc_id = 0
-         |  ORDER BY t.tf * ln(1.0 + (st.n - d.df + 0.5) / (d.df + 0.5)) DESC, t.term
-         |  LIMIT 5
-         |)
-         |SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |FROM sc WHERE term IN (SELECT term FROM mlt) AND doc_id <> 0
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
+      s"""$fprelude
+         |SELECT d.source AS source, ${qz("CAST(max(f.s) AS DOUBLE)")} AS max_q, count(*) AS hits
+         |FROM fsc f JOIN documents d USING (doc_id) WHERE f.term = 'vector'
+         |GROUP BY d.source ORDER BY max(f.s) DESC, source LIMIT 5""".stripMargin,
+    // MoreLikeThis of doc 0: its top 5 terms by float32 tf * idf, then term
+    "ft_more_like_this" -> ranked(flat("term IN (SELECT term FROM mlt) AND doc_id <> 0"),
+      ctes = """, mlt AS (
+               |  SELECT t.term FROM tfs t JOIN fidf i USING (term) WHERE t.doc_id = 0
+               |  ORDER BY CAST(t.tf AS REAL) * i.idf DESC, t.term LIMIT 5
+               |)""".stripMargin),
     "ft_rescore" ->
-      s"""$prelude, first AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'query' GROUP BY doc_id
-         |  ORDER BY score_q DESC, doc_id LIMIT 20
+      s"""$fprelude, first AS (
+         |  SELECT doc_id, ${qz("CAST(s AS DOUBLE)")} AS score_q FROM fsc WHERE term = 'query'
+         |  ORDER BY s DESC, doc_id LIMIT 20
          |)
          |SELECT f.doc_id, CAST(f.score_q + d.n_chars AS BIGINT) AS rescore
          |FROM first f JOIN documents d USING (doc_id)
          |ORDER BY rescore DESC, doc_id LIMIT 10""".stripMargin,
-    "ft_common_terms" ->
-      s"""$prelude, low AS (
-         |  SELECT term FROM dfs CROSS JOIN st WHERE term IN ('dup', 'batch', 'key')
-         |    AND df <= 0.79 * st.n
-         |), lowdocs AS (
-         |  SELECT DISTINCT doc_id FROM sc WHERE term IN (SELECT term FROM low)
-         |)
-         |SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |FROM sc JOIN lowdocs USING (doc_id)
-         |WHERE term IN ('dup', 'batch', 'key')
-         |GROUP BY doc_id ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin,
+    // CommonTermsQuery: a MUST group of the low-df terms (df <= 0.79 N),
+    // then an optional SHOULD group of the high-df ones, each folded by term
+    "ft_common_terms" -> ranked(
+      s"""SELECT l.doc_id, l.s + coalesce(h.s, $fz) AS s
+         |FROM g l LEFT JOIN g h ON h.doc_id = l.doc_id AND NOT h.low
+         |WHERE l.low""".stripMargin,
+      ctes = s""", g AS (
+         |  SELECT f.doc_id, d.df <= 0.79 * st.n AS low, ${fold("f.s")} AS s
+         |  FROM fsc f JOIN dfs d USING (term) CROSS JOIN st
+         |  WHERE term IN ('dup', 'batch', 'key') GROUP BY f.doc_id, low
+         |)""".stripMargin),
     "ft_highlight" ->
-      s"""$prelude, top AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |  ORDER BY score_q DESC, doc_id LIMIT 5
+      s"""$fprelude, top AS (
+         |  SELECT doc_id FROM fsc WHERE term = 'vector' ORDER BY s DESC, doc_id LIMIT 5
          |), firstpos AS (
          |  SELECT p.doc_id, min(p.p) AS pos FROM pos p JOIN top USING (doc_id)
          |  WHERE p.t = 'vector' GROUP BY p.doc_id
@@ -839,10 +720,8 @@ object GateOracle {
          |GROUP BY doc_id, t
          |ORDER BY doc_id, term""".stripMargin,
     "ft_highlight_offsets" ->
-      s"""$prelude, tpos AS ($tposSql), top AS (
-         |  SELECT doc_id, ${qz("sum(s)")} AS score_q
-         |  FROM sc WHERE term = 'vector' GROUP BY doc_id
-         |  ORDER BY score_q DESC, doc_id LIMIT 5
+      s"""$fprelude, tpos AS ($tposSql), top AS (
+         |  SELECT doc_id FROM fsc WHERE term = 'vector' ORDER BY s DESC, doc_id LIMIT 5
          |), first AS (
          |  SELECT doc_id, min(p) AS p FROM tpos
          |  WHERE t = 'vector' GROUP BY doc_id
