@@ -491,7 +491,7 @@ object Gate {
       scoreQ(new WandSearcher(s, indexDir(s, d))
         .search(Query.Bool(should = Seq("spark", "window", "merge")), 10))),
     "ft_engine_conj" -> ((s, d) =>
-      // the pruned multi-MUST path (BlockCombine.combinePruned: leapfrog +
+      // the pruned multi-MUST path (BlockCombine's pruned combine: leapfrog +
       // verified-total bound skips) under the hard correctness signal
       scoreQ(new WandSearcher(s, indexDir(s, d))
         .search(Query.Bool(must = Seq("spark", "merge"), should = Seq("window")), 10))),

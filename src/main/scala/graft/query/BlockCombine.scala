@@ -1,19 +1,23 @@
 package graft.query
 
-import graft.codec.PostingCodec
+import graft.codec.{PostingCodec, ScoreSpanBlock}
+import graft.model.TermDictRow
 import graft.score.Similarity
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.LongAccumulator
 
 /** Doc-range co-partitioned boolean combine — the multi-term scoring shuffle
-  * behind the exhaustive, block-max and segmented term searchers.
+  * behind the exhaustive and block-max term searchers, as ONE kernel.
   *
   * The sorted-row fold this replaces shuffled one decoded row per posting
   * (doc_id, term_id, score). Here each packed scoring block ships whole,
   * keyed by the doc-range bucket(s) it overlaps (the [[PositionalScan]]
   * layout applied to the scoring projection: ~128x fewer shuffle rows,
   * FOR-packed bytes on the wire), and is decoded + scored reduce-side,
-  * doc-at-a-time per bucket.
+  * doc-at-a-time per bucket, streaming: shuffle-read, decode and accumulate
+  * overlap block-at-a-time (a buffered-bucket variant measured ~30% slower
+  * by serializing read and decode).
   *
   * Float32 canonical order is preserved structurally: each doc accumulates
   * its clause scores in a per-doc slot array indexed by the compact term
@@ -23,11 +27,50 @@ import org.apache.spark.sql.functions.col
   * oracle (DisjunctionSumScorer doc-at-a-time analog,
   * /root/reference/src/Lucene.Net/Search/DisjunctionSumScorer.cs:56,72).
   *
-  * When the query has MUST terms, the rarest one streams first (rank 0 via
-  * the (bucket, rank, ti) partition sort) and every other term only attaches
-  * to docs it established — ConjunctionScorer's lead-with-rarest order
-  * (/root/reference/src/Lucene.Net/Search/ConjunctionScorer.cs:118): per-doc
-  * state is sized by the rarest MUST df, not the union of all clause dfs.
+  * ESTABLISHMENT. Blocks arrive per bucket sorted by (rank, ti), and only
+  * establishing blocks create per-doc accumulators; every later block only
+  * attaches to docs already established. Without a MaxScore `suffix`, rank 0
+  * establishes: the rarest MUST term when the query has one —
+  * ConjunctionScorer's lead-with-rarest order
+  * (Lucene.Net/Search/ConjunctionScorer.cs:118), so
+  * per-doc state is sized by the rarest MUST df, not the union of all
+  * clause dfs — else every positive term (NOT blocks sit at rank 1 and only
+  * ever EXCLUDE established docs). With a `suffix` (pure disjunctions, rank
+  * = gmax-desc position, strongest term first) blocks establish until
+  * `suffix(rank) * slack < theta`: a doc not yet seen can then only hold the
+  * remaining weaker terms, so its float32 total is <= suffix(rank) · slack <
+  * theta <= the global k-th best verified total and it can never enter the
+  * top k — the term-level essential/non-essential split (Turtle & Flood,
+  * "Query evaluation: strategies and optimizations", IP&M 1995) at block
+  * granularity. Either way establishment stops once per bucket and never
+  * resumes, so the candidate set then FREEZES (one sorted snapshot), and a
+  * later block whose doc range holds NO candidate (binary search) cannot
+  * touch any accumulator: its decode is skipped — the DOC-EXACT leapfrog
+  * (ConjunctionScorer.DoNext at candidate granularity), exact work
+  * elimination, not a threshold decision, with no driver collect, so it
+  * holds at any lead df. Every block holding a candidate decodes, so every
+  * surviving doc's score is bit-identical to a full decode.
+  *
+  * PRUNING (optional, [[Prune]]). Each partition keeps the k-th best of its
+  * flushed totals ([[KthBest]]: docs that passed the MUST/mm/NOT filters —
+  * order-statistics dominance keeps theta sound even when some flushed
+  * scores are understated by prior skips), starting at `theta0` (a sound
+  * lower bound on the global k-th best total, or -inf). A non-NOT block is
+  * skipped undecoded when `(ub(block) + rest(ti)) * slack < theta` — STRICT
+  * (a block whose bound equals theta can still hold docs scoring exactly
+  * theta that the exhaustive tie-break keeps). `ub` is the clause's double
+  * upper bound from the block's (max_tf, max_nb); `rest` sums the other
+  * clauses' global maxima; `slack` inflates past float32 fold rounding (the
+  * scan-side algebra, see [[WandSearcher]]). A doc that loses a block this
+  * way has true total < theta <= the partition's k-th best verified total
+  * <= the global k-th best, so its (understated or filtered) emission cannot
+  * affect membership or tie-break of the final top k, while every true top-k
+  * doc's blocks all survive and its score stays bit-exact. A bound-skipped
+  * establishing block's docs are never established, so the frozen
+  * candidates exclude them consistently everywhere. NOT blocks are never
+  * bound-skipped (they exclude; dropping one could un-exclude an emitted
+  * doc) — only leapfrogged, which is sound because a range without
+  * candidates holds no accumulator to exclude.
   *
   * Memory: a bucket spans maxDoc/shuffle-partitions doc ids, so per-task
   * state is bounded by bucket width (and by the lead df under a MUST);
@@ -37,23 +80,128 @@ import org.apache.spark.sql.functions.col
   */
 object BlockCombine {
 
-  /** A packed scoring block tagged with shuffle bucket, lead rank, and the
-    * query-local compact term index (ascending ti == the canonical clause
-    * order; resolved before the shuffle union, so segment-local term_ids
-    * are fine).
+  /** A packed scoring block tagged with shuffle bucket, establishment rank
+    * and the query-local compact term index (ascending ti == the canonical
+    * clause order; resolved before the shuffle union, so segment-local
+    * term_ids are fine), plus its doc-range end and block-max metadata
+    * (max_tf, max_nb) so the reduce side can bound and leapfrog it without
+    * decoding.
     */
-  final case class Tagged(bucket: Long, rank: Int, ti: Int, first_doc: Long,
-                          cnt: Int, doc_bytes: Array[Byte],
-                          tf_bytes: Array[Byte], norm_bytes: Array[Byte])
+  final case class Block(bucket: Long, rank: Int, ti: Int, first_doc: Long,
+                         last_doc: Long, cnt: Int, doc_bytes: Array[Byte],
+                         tf_bytes: Array[Byte], norm_bytes: Array[Byte],
+                         max_tf: Int, max_nb: Int)
 
-  /** [[Tagged]] plus the block's doc-range end and block-max metadata
-    * (max_tf, max_nb) so the reduce side can bound a bucket's best possible
-    * total — and leapfrog non-lead blocks — without decoding.
+  /** One copy of a scanned block per bucket it overlaps. */
+  def tag(b: ScoreSpanBlock, rank: Int, ti: Int, width: Long): Iterator[Block] =
+    PositionalScan.buckets(b.first_doc, b.last_doc, width).map(bk =>
+      Block(bk, rank, ti, b.first_doc, b.last_doc, b.cnt, b.doc_bytes,
+        b.tf_bytes, b.norm_bytes, b.max_tf, b.max_nb))
+
+  /** Reduce-side pruning: `ubFns(ti)` maps a block's (max_tf, max_nb) to a
+    * double upper bound on that clause's float32 score (null for NOT
+    * clauses), `rests(ti)` is the other clauses' summed global maxima,
+    * `suffix(r)` (MaxScore, pure disjunctions) the summed global maxima of
+    * ranks >= r. Skipped/scanned count bucket copies.
     */
-  final case class TaggedM(bucket: Long, rank: Int, ti: Int, first_doc: Long,
-                           last_doc: Long, cnt: Int, doc_bytes: Array[Byte],
-                           tf_bytes: Array[Byte], norm_bytes: Array[Byte],
-                           max_tf: Int, max_nb: Int)
+  final case class Prune(ubFns: Array[(Int, Int) => Double], rests: Array[Double],
+                         slack: Double, k: Int,
+                         skipped: LongAccumulator, scanned: LongAccumulator,
+                         theta0: Double = Double.NegativeInfinity,
+                         suffix: Option[Array[Double]] = None)
+
+  /** The k-th best float32 score offered so far, as a double threshold that
+    * only grows from `theta0` — the per-partition top-k floor
+    * (Cache-Efficient Top-k Aggregation over High Cardinality Large
+    * Datasets, VLDB 2023). Any k distinct docs' scores that lower-bound
+    * their final totals make it a sound lower bound on the k-th best total.
+    */
+  final class KthBest(k: Int, theta0: Double = Double.NegativeInfinity) {
+    private val heap = new java.util.PriorityQueue[java.lang.Float](k + 1)
+    private var t = theta0
+    def theta: Double = t
+    def offer(s: Float): Unit = if (k > 0) {
+      if (heap.size < k) heap.offer(s)
+      else if (s > heap.peek()) { heap.poll(); heap.offer(s) }
+      if (heap.size == k) {
+        val c = heap.peek().toDouble
+        if (c > t) t = c
+      }
+    }
+  }
+
+  /** A flat boolean clause list planned for the combine — the one setup the
+    * exhaustive and pruned searchers share, so both agree on which docs can
+    * match: distinct MUST/SHOULD/NOT, present terms only, ids ascending
+    * (`tids(ti)`), and the rarest MUST as the establishing lead.
+    */
+  final class Clauses private (val ts: IndexView.Terms, val should: Seq[String],
+                               val mm: Int, val pos: Seq[TermDictRow],
+                               val tids: Array[Long], val isMust: Array[Boolean],
+                               val isNot: Array[Boolean], lead: Option[TermDictRow]) {
+    val nMust: Int = isMust.count(identity)
+
+    /** Rank by ti: MUST_NOT terms never establish docs; with a MUST lead,
+      * only it does.
+      */
+    val ranks: Array[Int] = tids.indices.map(ti =>
+      if (isNot(ti)) 1 else lead.fold(0)(l => if (tids(ti) == l.term_id) 0 else 1)).toArray
+
+    /** The clause blocks tagged for [[combine]]. When the lead is selective
+      * (df <= [[Searcher.phraseLeadMaxDf]]), its block ranges prune every
+      * other term's blocks before the shuffle.
+      */
+    def blocks(spark: SparkSession, view: IndexView, width: Long): Dataset[Block] = {
+      import spark.implicits._
+      var scan = view.blocks(ts, tids.toSeq, ScoreSpanBlock.cols).as[ScoreSpanBlock]
+      lead.filter(l => l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
+        val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(l.term_id)))
+        scan = scan.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
+      }
+      val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
+      val rk = ranks
+      scan.flatMap { b =>
+        val ti = tiOf(b.term_id)
+        tag(b, rk(ti), ti, width)
+      }
+    }
+  }
+
+  object Clauses {
+    /** None when the query provably matches nothing: a MUST term absent from
+      * the index (conjunction semantics) or no positive term present.
+      */
+    def plan(view: IndexView, must0: Seq[String], should0: Seq[String],
+             not0: Seq[String], mm0: Int): Option[Clauses] = {
+      val must = must0.distinct
+      val shouldAll = should0.distinct
+      val should = shouldAll.filterNot(must.contains)
+      // A term that is both MUST and SHOULD is deduped to one MUST clause, but
+      // its SHOULD clause is satisfied on EVERY doc passing the conjunction
+      // (the doc provably contains the term) — credit those toward
+      // minShouldMatch so Bool(must=[a], should=[a], mm=1) keeps the
+      // reference's duplicate-clause semantics. (Scores stay deduped: one
+      // contribution per distinct term — documented divergence from
+      // double-counting duplicate clauses.)
+      val mm = math.max(0, mm0 - shouldAll.count(must.contains))
+      val mustNot = not0.distinct
+      val ts = view.lookup(must ++ should ++ mustNot)
+      val dict = ts.rows
+      if (must.exists(t => !dict.contains(t)) || (must ++ should).forall(t => !dict.contains(t)))
+        None
+      else {
+        val pos = (must ++ should).flatMap(dict.get)
+        val mustIds = must.map(dict(_).term_id).toSet
+        val notIds = mustNot.flatMap(dict.get).map(_.term_id).toSet
+        // compact ti ascending term_id == the canonical clause-sum order
+        val tids = (pos.map(_.term_id).toSet ++ notIds).toArray.sorted
+        val byId = dict.values.map(d => d.term_id -> d).toMap
+        val lead = mustIds.minByOption(byId(_).df).map(byId)
+        Some(new Clauses(ts, should, mm, pos, tids, tids.map(mustIds.contains),
+          tids.map(notIds.contains), lead))
+      }
+    }
+  }
 
   private final class DocAcc(nTis: Int) {
     val s = new Array[Float](nTis)
@@ -64,381 +212,23 @@ object BlockCombine {
   /** Combine tagged blocks into per-doc boolean-filtered scores.
     * `scorers(ti)` scores that clause's postings (null => MUST_NOT:
     * presence-only); `isMust(ti)`/`isNot(ti)` classify; `nMust` counts
-    * distinct MUST clauses; `mm` is minimum-should-match.
+    * distinct MUST clauses; `mm` is minimum-should-match. With `prune`, the
+    * bound skips and the MaxScore establishment rule of the object doc
+    * apply, and every bucket copy counts as skipped or scanned.
     */
-  def combine(spark: SparkSession, blocks: Dataset[Tagged],
+  def combine(spark: SparkSession, blocks: Dataset[Block],
               scorers: Array[Similarity.TermScorer], isMust: Array[Boolean],
-              isNot: Array[Boolean], nMust: Int, mm: Int,
-              width: Long): Dataset[(Long, Float)] = {
+              isNot: Array[Boolean], nMust: Int, mm: Int, width: Long,
+              prune: Option[Prune] = None): Dataset[(Long, Float)] = {
     import spark.implicits._
     val nTis = scorers.length
-    val bScorers = spark.sparkContext.broadcast(scorers)
-    val bMust = spark.sparkContext.broadcast(isMust)
-    val bNot = spark.sparkContext.broadcast(isNot)
+    val pr = prune.orNull
     blocks
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "rank", "ti")
       .mapPartitions { it =>
-        val sc = bScorers.value
-        val must = bMust.value
-        val not = bNot.value
-        val perDoc = new scala.collection.mutable.LongMap[DocAcc]()
-        var curBucket = Long.MinValue
-
-        def flush(): Iterator[(Long, Float)] = {
-          if (perDoc.isEmpty) Iterator.empty
-          else {
-            val snap = perDoc.toArray
-            perDoc.clear()
-            snap.iterator.flatMap { case (doc, acc) =>
-              var mustSeen = 0
-              var shouldSeen = 0
-              var score = 0.0f
-              var i = 0
-              while (i < nTis) {
-                val v = acc.s(i)
-                if (!v.isNaN) {
-                  if (must(i)) mustSeen += 1 else shouldSeen += 1
-                  score += v
-                }
-                i += 1
-              }
-              if (!acc.excluded && mustSeen == nMust && shouldSeen >= mm &&
-                (mustSeen + shouldSeen) > 0) Iterator.single((doc, score))
-              else Iterator.empty
-            }
-          }
-        }
-
-        def addBlock(b: Tagged): Unit = {
-          val lo = b.bucket * width
-          val hi = lo + width
-          val lead = b.rank == 0
-          val ti = b.ti
-          val scorer = sc(ti)
-          val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
-            b.doc_bytes, b.tf_bytes)
-          var i = 0
-          while (i < b.cnt) {
-            val d = docs(i)
-            if (d >= lo && d < hi) {
-              var acc = perDoc.getOrNull(d)
-              if (acc == null && lead) {
-                acc = new DocAcc(nTis)
-                perDoc.update(d, acc)
-              }
-              if (acc != null) {
-                if (not(ti)) acc.excluded = true
-                else acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
-              }
-            }
-            i += 1
-          }
-        }
-
-        new scala.collection.AbstractIterator[(Long, Float)] {
-          private var pendingFlush: Iterator[(Long, Float)] = Iterator.empty
-          private var done = false
-          private def advance(): Unit = {
-            while (!pendingFlush.hasNext && !done) {
-              if (it.hasNext) {
-                val b = it.next()
-                if (b.bucket != curBucket) {
-                  pendingFlush = flush()
-                  curBucket = b.bucket
-                }
-                addBlock(b)
-              } else {
-                pendingFlush = flush()
-                done = true
-              }
-            }
-          }
-          advance()
-          override def hasNext: Boolean = pendingFlush.hasNext
-          override def next(): (Long, Float) = {
-            val h = pendingFlush.next()
-            advance()
-            h
-          }
-        }
-      }
-  }
-
-  /** Streaming block-pruned combine for the general boolean shapes —
-    * multi-MUST, residual minShouldMatch, NOT — where the scan-side
-    * clause-score heaps are unsound (the k-th best single-clause score over
-    * one term's postings is no lower bound on the k-th best total over the
-    * smaller filtered result set).
-    *
-    * Identical streaming pipeline to [[combine]] (shuffle-read, decode and
-    * accumulate overlap block-at-a-time; the buffered-bucket variant
-    * measured ~30% slower by serializing read and decode), plus three
-    * per-block prunes decided BEFORE decoding:
-    *
-    *  1. DOC-EXACT conjunction LEAPFROG (ConjunctionScorer.DoNext sharpened
-    *     to candidate granularity, /root/reference/src/Lucene.Net/Search/
-    *     ConjunctionScorer.cs:118): per-doc accumulators are created only
-    *     while decoding rank-0 (lead/establisher) blocks — which the
-    *     (bucket, rank, ti) sort delivers FIRST within each bucket — so
-    *     once the first non-lead block arrives the candidate set is FROZEN
-    *     and snapshots into one sorted array; a later block whose doc range
-    *     contains NO candidate (binary search) cannot touch any accumulator
-    *     and its decode is skipped — exact work elimination, not a
-    *     threshold decision, strictly stronger than the round-4
-    *     lead-block-RANGE test (a range can overlap while holding no actual
-    *     candidate). No driver collect, so it holds at ANY lead df (the
-    *     10^9-df conjunction at corpus scale). Applies equally at nMust==0
-    *     (pure SHOULD + NOT): positive terms establish at rank 0, NOT
-    *     blocks at rank 1 only ever EXCLUDE established docs, so a NOT
-    *     block with no candidate in range is dead weight.
-    *  2. MaxScore block bound vs verified totals: each partition keeps a
-    *     k-heap of exact flushed scores (docs that passed the MUST/mm/NOT
-    *     filters — order-statistics dominance keeps theta sound even when
-    *     some flushed scores are understated by prior skips), and a
-    *     non-NOT block is skipped when the heap is full and
-    *     `(ub(block) + rest(ti)) * slack < theta` (STRICT; `rest` is the
-    *     driver-side sum of the other clauses' global maxima, `slack`
-    *     inflates past float32 fold rounding — same algebra as the
-    *     scan-side skip, WandSearcher doc). A doc that loses a block this
-    *     way has true total < theta <= the partition's k-th best verified
-    *     total <= the global k-th best, so its (understated or filtered)
-    *     emission cannot affect membership or tie-break of the final top k,
-    *     while every true top-k doc's blocks all survive and its score
-    *     stays bit-exact. NOT blocks are never bound-skipped (they exclude;
-    *     dropping one could un-exclude an emitted doc) — only leapfrogged,
-    *     which is sound because an un-overlapped range holds no
-    *     accumulators to exclude.
-    *  3. A bound-skipped LEAD block's docs are never established, so the
-    *     frozen candidate array excludes them automatically — docs it would
-    *     have established are dropped consistently everywhere.
-    *
-    * `ubFns(ti)` maps a block's (max_tf, max_nb) to a double upper bound on
-    * that clause's float32 score (null for pure-NOT clauses); `rests(ti)`
-    * is the precomputed rest-sum. `theta0` seeds the verified-total
-    * threshold before the first flush (sound when it lower-bounds the
-    * global k-th best total — e.g. WandSearcher.seedTheta's k-th best exact
-    * single-clause score over k distinct docs); NegativeInfinity disarms it.
-    */
-  def combinePruned(spark: SparkSession, blocks: Dataset[TaggedM],
-                    scorers: Array[Similarity.TermScorer], isMust: Array[Boolean],
-                    isNot: Array[Boolean], nMust: Int, mm: Int, width: Long,
-                    ubFns: Array[(Int, Int) => Double], rests: Array[Double],
-                    slack: Double, k: Int,
-                    skipped: org.apache.spark.util.LongAccumulator,
-                    scanned: org.apache.spark.util.LongAccumulator,
-                    theta0: Double = Double.NegativeInfinity): Dataset[(Long, Float)] = {
-    import spark.implicits._
-    val nTis = scorers.length
-    val bScorers = spark.sparkContext.broadcast(scorers)
-    val bMust = spark.sparkContext.broadcast(isMust)
-    val bNot = spark.sparkContext.broadcast(isNot)
-    val bUb = spark.sparkContext.broadcast(ubFns)
-    val bRests = spark.sparkContext.broadcast(rests)
-    val kk = k
-    blocks
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "rank", "ti")
-      .mapPartitions { it =>
-        val sc = bScorers.value
-        val must = bMust.value
-        val not = bNot.value
-        val ub = bUb.value
-        val rest = bRests.value
-        val heap = new java.util.PriorityQueue[java.lang.Float](kk + 1)
-        var theta = theta0
-        val perDoc = new scala.collection.mutable.LongMap[DocAcc]()
-        var curBucket = Long.MinValue
-        // candidate docs of the CURRENT bucket, frozen (sorted snapshot of
-        // the established doc ids) at the first non-lead block — the
-        // (bucket, rank, ti) sort guarantees every establisher ran first
-        var cand: Array[Long] = null
-
-        def anyCandidateIn(first: Long, last: Long): Boolean = {
-          if (cand == null) {
-            cand = perDoc.keysIterator.toArray
-            java.util.Arrays.sort(cand)
-          }
-          var loI = 0
-          var hiI = cand.length
-          while (loI < hiI) {
-            val mid = (loI + hiI) >>> 1
-            if (cand(mid) < first) loI = mid + 1 else hiI = mid
-          }
-          loI < cand.length && cand(loI) <= last
-        }
-
-        def flush(): Iterator[(Long, Float)] = {
-          cand = null
-          if (perDoc.isEmpty) Iterator.empty
-          else {
-            val snap = perDoc.toArray
-            perDoc.clear()
-            val out = snap.iterator.flatMap { case (doc, acc) =>
-              var mustSeen = 0
-              var shouldSeen = 0
-              var score = 0.0f
-              var i = 0
-              while (i < nTis) {
-                val v = acc.s(i)
-                if (!v.isNaN) {
-                  if (must(i)) mustSeen += 1 else shouldSeen += 1
-                  score += v
-                }
-                i += 1
-              }
-              if (!acc.excluded && mustSeen == nMust && shouldSeen >= mm &&
-                (mustSeen + shouldSeen) > 0) Iterator.single((doc, score))
-              else Iterator.empty
-            }.toArray
-            var i = 0
-            while (i < out.length) {
-              val s = out(i)._2
-              if (heap.size < kk) heap.offer(s)
-              else if (s > heap.peek()) { heap.poll(); heap.offer(s) }
-              if (heap.size == kk) {
-                val cand = heap.peek().toDouble
-                if (cand > theta) theta = cand
-              }
-              i += 1
-            }
-            out.iterator
-          }
-        }
-
-        def addBlock(b: TaggedM): Unit = {
-          val lead = b.rank == 0
-          val ti = b.ti
-          val isNotTi = not(ti)
-          // bound skip (never for NOT blocks)
-          if (!isNotTi && heap.size == kk) {
-            val f = ub(ti)
-            if (f != null &&
-              (f(b.max_tf, b.max_nb) + rest(ti)) * slack < theta) {
-              skipped.add(1)
-              return
-            }
-          }
-          val lo = b.bucket * width
-          val hi = lo + width
-          if (!lead && !anyCandidateIn(math.max(b.first_doc, lo),
-            math.min(b.last_doc, hi - 1))) {
-            skipped.add(1)
-            return
-          }
-          scanned.add(1)
-          val scorer = sc(ti)
-          val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
-            b.doc_bytes, b.tf_bytes)
-          var i = 0
-          while (i < b.cnt) {
-            val d = docs(i)
-            if (d >= lo && d < hi) {
-              var acc = perDoc.getOrNull(d)
-              if (acc == null && lead) {
-                acc = new DocAcc(nTis)
-                perDoc.update(d, acc)
-              }
-              if (acc != null) {
-                if (isNotTi) acc.excluded = true
-                else acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
-              }
-            }
-            i += 1
-          }
-        }
-
-        new scala.collection.AbstractIterator[(Long, Float)] {
-          private var pendingFlush: Iterator[(Long, Float)] = Iterator.empty
-          private var done = false
-          private def advance(): Unit = {
-            while (!pendingFlush.hasNext && !done) {
-              if (it.hasNext) {
-                val b = it.next()
-                if (b.bucket != curBucket) {
-                  pendingFlush = flush()
-                  curBucket = b.bucket
-                }
-                addBlock(b)
-              } else {
-                pendingFlush = flush()
-                done = true
-              }
-            }
-          }
-          advance()
-          override def hasNext: Boolean = pendingFlush.hasNext
-          override def next(): (Long, Float) = {
-            val h = pendingFlush.next()
-            advance()
-            h
-          }
-        }
-      }
-  }
-
-  /** MaxScore-pruned combine for pure disjunctions — the term-level
-    * essential/non-essential split (Turtle & Flood, "Query evaluation:
-    * strategies and optimizations", IP&M 1995; the role skip lists play in
-    * the reference's Advance path, /root/reference/src/Lucene.Net/Codecs/
-    * Lucene41/Lucene41SkipWriter.cs:68-69) at block granularity, reduce-side.
-    *
-    * Why this breaks the block-bound plateau: a disjunction block's bound
-    * `ub_i(b) + Σ_{j≠i} gmax_j` carries every OTHER term's global max as
-    * rest, so a weak term's blocks are unskippable by bounds alone whenever
-    * one strong term exists (WandSearcher round-4 θ-seed negative result).
-    * The term-level split attacks the same blocks from the other side:
-    * blocks arrive per bucket sorted STRONGEST TERM FIRST (rank = gmax-desc
-    * position), and once the remaining terms' gmax sum cannot reach θ —
-    * `suffix(rank) * slack < θ` — establishment stops: a doc not yet seen
-    * can only be contained in the remaining weaker terms, so its float32
-    * total is ≤ suffix(rank) · slack < θ ≤ the global k-th best verified
-    * total, and it can never enter the top k. The candidate set freezes,
-    * and every later (non-essential) block whose doc range holds NO frozen
-    * candidate skips its decode entirely — the classic "scan the dense
-    * lists only where a rare-term candidate exists" MaxScore win, which is
-    * exactly the unskippable-cross-term-block population. Established docs
-    * keep EXACT scores: any block containing a candidate decodes (the
-    * binary search finds it), so emissions are bit-identical to the
-    * exhaustive combine for every surviving doc.
-    *
-    * θ starts at `theta0` (WandSearcher's dictionary seed — k distinct docs
-    * of one term each with total ≥ their clause score) and grows from
-    * flushed verified totals. With the default one-bucket-per-partition
-    * geometry the seed is what arms the split from block one; without it
-    * (theta0 = -inf) the path degrades gracefully to the exhaustive decode
-    * order with bound checks only.
-    *
-    * `suffix(r)` = Σ over terms with rank ≥ r of gmax (double); `rests`/
-    * `ubFns` indexed by ti as in [[combinePruned]]. Emission semantics are
-    * the pure-disjunction subset of [[combine]]: every established doc with
-    * ≥1 clause emits, slots fold ascending ti (canonical float order).
-    */
-  def combineShouldPruned(spark: SparkSession, blocks: Dataset[TaggedM],
-                          scorers: Array[Similarity.TermScorer],
-                          suffix: Array[Double],
-                          ubFns: Array[(Int, Int) => Double],
-                          rests: Array[Double],
-                          slack: Double, k: Int, width: Long, theta0: Double,
-                          skipped: org.apache.spark.util.LongAccumulator,
-                          scanned: org.apache.spark.util.LongAccumulator): Dataset[(Long, Float)] = {
-    import spark.implicits._
-    val nTis = scorers.length
-    val bScorers = spark.sparkContext.broadcast(scorers)
-    val bUb = spark.sparkContext.broadcast(ubFns)
-    val bRests = spark.sparkContext.broadcast(rests)
-    val bSuffix = spark.sparkContext.broadcast(suffix)
-    val kk = k
-    blocks
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "rank", "ti")
-      .mapPartitions { it =>
-        val sc = bScorers.value
-        val ub = bUb.value
-        val rest = bRests.value
-        val suf = bSuffix.value
-        val heap = new java.util.PriorityQueue[java.lang.Float](kk + 1)
-        var theta = theta0
+        val best = if (pr == null) null else new KthBest(pr.k, pr.theta0)
+        val suffix = if (pr == null) null else pr.suffix.orNull
         val perDoc = new scala.collection.mutable.LongMap[DocAcc]()
         var curBucket = Long.MinValue
         var establishing = true      // flips once per bucket, never back
@@ -461,54 +251,49 @@ object BlockCombine {
         def flush(): Iterator[(Long, Float)] = {
           cand = null
           establishing = true
-          if (perDoc.isEmpty) Iterator.empty
-          else {
-            val snap = perDoc.toArray
-            perDoc.clear()
-            val out = new Array[(Long, Float)](snap.length)
-            var o = 0
-            while (o < snap.length) {
-              val (doc, acc) = snap(o)
-              var score = 0.0f
-              var i = 0
-              while (i < nTis) {
-                val v = acc.s(i)
-                if (!v.isNaN) score += v
-                i += 1
+          val out = perDoc.iterator.flatMap { case (doc, acc) =>
+            var mustSeen = 0
+            var shouldSeen = 0
+            var score = 0.0f
+            var i = 0
+            while (i < nTis) {
+              val v = acc.s(i)
+              if (!v.isNaN) {
+                if (isMust(i)) mustSeen += 1 else shouldSeen += 1
+                score += v
               }
-              out(o) = (doc, score)
-              if (heap.size < kk) heap.offer(score)
-              else if (score > heap.peek()) { heap.poll(); heap.offer(score) }
-              if (heap.size == kk) {
-                val c = heap.peek().toDouble
-                if (c > theta) theta = c
-              }
-              o += 1
+              i += 1
             }
-            out.iterator
-          }
+            if (!acc.excluded && mustSeen == nMust && shouldSeen >= mm &&
+              (mustSeen + shouldSeen) > 0) Iterator.single((doc, score))
+            else Iterator.empty
+          }.toArray
+          perDoc.clear()
+          if (best != null) out.foreach(h => best.offer(h._2))
+          out.iterator
         }
 
-        def addBlock(b: TaggedM): Unit = {
+        def addBlock(b: Block): Unit = {
           val ti = b.ti
-          // 1. block-bound skip (same algebra as the scan side, against the
-          //    possibly-larger reduce-side theta)
-          if ((ub(ti)(b.max_tf, b.max_nb) + rest(ti)) * slack < theta) {
-            skipped.add(1)
-            return
+          if (pr != null && !isNot(ti)) {
+            val ub = pr.ubFns(ti)
+            if (ub != null && (ub(b.max_tf, b.max_nb) + pr.rests(ti)) * pr.slack < best.theta) {
+              pr.skipped.add(1)
+              return
+            }
           }
-          // 2. term-level MaxScore: stop establishing once the remaining
-          //    (weaker) terms cannot reach theta on their own
-          if (establishing && suf(b.rank) * slack < theta) establishing = false
+          if (establishing &&
+            (if (suffix == null) b.rank > 0 else suffix(b.rank) * pr.slack < best.theta))
+            establishing = false
           val lo = b.bucket * width
           val hi = lo + width
           if (!establishing && !anyCandidateIn(math.max(b.first_doc, lo),
             math.min(b.last_doc, hi - 1))) {
-            skipped.add(1)
+            if (pr != null) pr.skipped.add(1)
             return
           }
-          scanned.add(1)
-          val scorer = sc(ti)
+          if (pr != null) pr.scanned.add(1)
+          val scorer = scorers(ti)
           val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
             b.doc_bytes, b.tf_bytes)
           var i = 0
@@ -520,8 +305,10 @@ object BlockCombine {
                 acc = new DocAcc(nTis)
                 perDoc.update(d, acc)
               }
-              if (acc != null)
-                acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
+              if (acc != null) {
+                if (isNot(ti)) acc.excluded = true
+                else acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
+              }
             }
             i += 1
           }

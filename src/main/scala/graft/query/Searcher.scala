@@ -5,6 +5,7 @@ import graft.model.{CollectionStats, TermDictRow}
 import graft.score.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Searcher.payloadDocScore
 
 /** Top-k BM25 search over a built index directory or a streaming store
   * (read through an [[IndexView]]) — the read path (IndexSearcher.Search
@@ -29,6 +30,33 @@ object Searcher {
     */
   private[query] def phraseLeadMaxDf: Long =
     sys.props.get("graft.phrase.leadMaxDf").map(_.toLong).getOrElse(65536L)
+
+  /** A doc's PayloadFunction score from its stored payloads (bytes, offset,
+    * length) in position order: each factor is the 4-byte (PayloadHelper)
+    * big-endian float, 1f for any other length, folded Avg/Min/Max in
+    * float32; 1f when the doc has no stored payload.
+    */
+  private def payloadDocScore(func: Query.PayloadFunc,
+                              payloads: Iterator[(Array[Byte], Int, Int)]): Float = {
+    var score = 0.0f
+    var seen = 0
+    payloads.foreach { case (p, off, len) =>
+      val factor =
+        if (len == 4)
+          java.lang.Float.intBitsToFloat(((p(off) & 0xff) << 24) | ((p(off + 1) & 0xff) << 16) |
+            ((p(off + 2) & 0xff) << 8) | (p(off + 3) & 0xff))
+        else 1.0f
+      score = func match {
+        case Query.PayloadFunc.Avg => score + factor
+        case Query.PayloadFunc.Min => if (seen == 0) factor else math.min(score, factor)
+        case Query.PayloadFunc.Max => if (seen == 0) factor else math.max(score, factor)
+      }
+      seen += 1
+    }
+    if (seen == 0) 1.0f
+    else if (func == Query.PayloadFunc.Avg) score / seen
+    else score
+  }
 }
 
 final class Searcher(val spark: SparkSession, indexDir: String,
@@ -233,100 +261,43 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   private[graft] def rewriteClauses(clauses: Seq[(Query.Occur, Query)]): Seq[(String, Query.Occur, Float)] =
     Rewrite.clauses(expand, fuzzyTop, clauses)
 
-  /** Per-doc scored hits for the positive clauses + the boolean combine.
+  /** Per-doc scored hits for the positive clauses + the boolean combine
+    * over the shared clause plan ([[BlockCombine.Clauses]]).
     * Returns ALL matching (doc_id: Long, score: Float) rows.
     */
   private def clausesScoreAll(clauses: Seq[(String, Query.Occur, Float)],
                               mm0: Int): DataFrame = {
     require(clauses.size <= Query.MaxClauseCount, "too many clauses")
-    val must = clauses.collect { case (t, Query.Must, _) => t }.distinct
-    val shouldAll = clauses.collect { case (t, Query.Should, _) => t }.distinct
-    val should = shouldAll.filterNot(must.contains)
-    // A term that is both MUST and SHOULD is deduped to one MUST clause, but
-    // its SHOULD clause is satisfied on EVERY doc passing the conjunction
-    // (the doc provably contains the term) — credit those toward
-    // minShouldMatch so Bool(must=[a], should=[a], mm=1) keeps the
-    // reference's duplicate-clause semantics. (Scores stay deduped: one
-    // contribution per distinct term — documented divergence from
-    // double-counting duplicate clauses.)
-    val mm = math.max(0, mm0 - shouldAll.count(must.contains))
-    val mustNot = clauses.collect { case (t, Query.MustNot, _) => t }.distinct
-    // first-clause boost wins for a duplicated positive term
-    val boosts: Map[String, Float] =
-      clauses.filter(_._2 != Query.MustNot).groupBy(_._1).map { case (t, cs) => t -> cs.head._3 }
-    val ts = view.lookup(must ++ should ++ mustNot)
-    val dict = ts.rows
-    // A MUST term absent from the index -> no results (conjunction semantics).
-    if (must.exists(t => !dict.contains(t)) || (must ++ should).forall(t => !dict.contains(t)))
-      return emptyResult
-
-    val posTerms = (must ++ should).filter(dict.contains)
-    val notTerms = mustNot.filter(dict.contains)
-    // Similarity seam: ComputeWeight once per term (stats binding), score
-    // closure per posting. The default Bm25Similarity delegates to the same
-    // bit-exact kernel as before.
-    val weights: Map[Long, graft.score.Similarity.TermScorer] = posTerms.map { t =>
-      val d = dict(t)
-      d.term_id -> similarity.termScorer(d.df, d.ttf, stats, boosts(t))
-    }.toMap
-    val mustIds = must.flatMap(dict.get).map(_.term_id).toSet
-    val notIds = notTerms.map(dict(_).term_id).toSet
-
-    val combined =
-      if (posTerms.size == 1 && notIds.isEmpty &&
-        (mm == 0 || (mm == 1 && should.exists(dict.contains)))) {
-        // single positive term with a trivially-satisfied minShouldMatch:
-        // no combine, no shuffle. The mm check must see DICTIONARY-PRESENT
-        // should terms: a MUST-only query with mm >= 1 — including one whose
-        // should terms are all absent from the corpus — matches NOTHING
-        // (mm counts SHOULD clauses only, BooleanWeight semantics), so it
-        // takes the combine path below, whose shouldSeen filter drops all.
-        val bw = spark.sparkContext.broadcast(weights)
-        scoredHits(ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
-      } else {
-        // compact ti ascending term_id == the canonical clause-sum order
-        val allTids: Seq[Long] = (weights.keySet ++ notIds).toSeq.sorted
-        val tiOf: Map[Long, Int] = allTids.zipWithIndex.toMap
-        val scorers: Array[graft.score.Similarity.TermScorer] =
-          allTids.map(tid => weights.getOrElse(tid, null)).toArray
-        val isMust: Array[Boolean] = allTids.map(mustIds.contains).toArray
-        val isNot: Array[Boolean] = allTids.map(notIds.contains).toArray
-        // lead-with-rarest MUST term (ConjunctionScorer order): per-doc
-        // state sized by the rarest conjunct, and when selective its block
-        // ranges prune every other term's blocks pre-shuffle
-        val dfOf: Map[Long, Long] =
-          dict.values.map(d => d.term_id -> d.df).toMap
-        val leadTid: Option[Long] =
-          if (mustIds.nonEmpty) Some(mustIds.minBy(dfOf)) else None
-        val leadTi = leadTid.map(tiOf).getOrElse(-1)
-        val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-
-        import graft.codec.ScoreSpanBlock
-        var blocks = view.blocks(ts, allTids, ScoreSpanBlock.cols).as[ScoreSpanBlock]
-        leadTid.filter(t => dfOf(t) <= Searcher.phraseLeadMaxDf && allTids.size > 1)
-          .foreach { t =>
-            val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(t)))
-            blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
-          }
-
-        val bTi = spark.sparkContext.broadcast(tiOf)
-        val bNotSet = spark.sparkContext.broadcast(notIds)
-        val tagged = blocks.flatMap { b =>
-          val ti = bTi.value(b.term_id)
-          // MUST_NOT terms never establish docs; with a MUST lead, only it does
-          val rank =
-            if (bNotSet.value(b.term_id)) 1
-            else if (leadTi < 0) 0
-            else if (ti == leadTi) 0 else 1
-          PositionalScan.buckets(b.first_doc, b.last_doc, width).map(bk =>
-            BlockCombine.Tagged(bk, rank, ti, b.first_doc, b.cnt,
-              b.doc_bytes, b.tf_bytes, b.norm_bytes))
+    def terms(o: Query.Occur): Seq[String] = clauses.collect { case (t, `o`, _) => t }
+    BlockCombine.Clauses.plan(view, terms(Query.Must), terms(Query.Should),
+      terms(Query.MustNot), mm0).fold(emptyResult) { p =>
+      // first-clause boost wins for a duplicated positive term
+      val boosts: Map[String, Float] = clauses.filter(_._2 != Query.MustNot)
+        .groupBy(_._1).map { case (t, cs) => t -> cs.head._3 }
+      // Similarity seam: ComputeWeight once per term (stats binding), score
+      // closure per posting. The default Bm25Similarity delegates to the same
+      // bit-exact kernel as before.
+      val weights: Map[Long, graft.score.Similarity.TermScorer] = p.pos.map { d =>
+        d.term_id -> similarity.termScorer(d.df, d.ttf, stats, boosts(d.term))
+      }.toMap
+      val combined =
+        if (p.pos.size == 1 && !p.isNot.contains(true) &&
+          (p.mm == 0 || (p.mm == 1 && p.should.exists(p.ts.rows.contains)))) {
+          // single positive term with a trivially-satisfied minShouldMatch:
+          // no combine, no shuffle. The mm check must see DICTIONARY-PRESENT
+          // should terms: a MUST-only query with mm >= 1 — including one whose
+          // should terms are all absent from the corpus — matches NOTHING
+          // (mm counts SHOULD clauses only, BooleanWeight semantics), so it
+          // takes the combine path below, whose shouldSeen filter drops all.
+          val bw = spark.sparkContext.broadcast(weights)
+          scoredHits(p.ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
+        } else {
+          val width = PositionalScan.bucketWidth(spark, stats.max_doc)
+          BlockCombine.combine(spark, p.blocks(spark, view, width),
+            p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width)
         }
-        BlockCombine.combine(spark, tagged, scorers, isMust, isNot,
-          nMust = mustIds.size, mm = mm, width = width)
-      }
-
-    combined.toDF("doc_id", "score")
+      combined.toDF("doc_id", "score")
+    }
   }
 
   /** Decode + score the postings blocks of the given terms.
@@ -445,42 +416,15 @@ final class Searcher(val spark: SparkSession, indexDir: String,
           var freq = 0.0f
           var j = 0
           while (j < tf) { freq += 0.5f; j += 1 }
-          var payloadScore = 0.0f
-          var seen = 0
-          j = 0
-          while (j < tf) {
+          // Positions WITHOUT a stored payload contribute nothing at all —
+          // IsPayloadAvailable gates ProcessPayload and the else branch is
+          // empty (PayloadTermQuery.cs:117-143).
+          val docScore = payloadDocScore(func, Iterator.range(0, tf).flatMap { _ =>
             val len = r.readVarLong().toInt
-            if (len > 0) {
-              // a STORED payload at this position: factor = decoded float
-              // for the 4-byte (PayloadHelper) encoding, 1f otherwise.
-              // Positions WITHOUT a stored payload contribute nothing at
-              // all — IsPayloadAvailable gates ProcessPayload and the else
-              // branch is empty (PayloadTermQuery.cs:117-143).
-              val factor =
-                if (len == 4) {
-                  val bits = ((b.pay_bytes(r.pos) & 0xff) << 24) |
-                    ((b.pay_bytes(r.pos + 1) & 0xff) << 16) |
-                    ((b.pay_bytes(r.pos + 2) & 0xff) << 8) |
-                    (b.pay_bytes(r.pos + 3) & 0xff)
-                  java.lang.Float.intBitsToFloat(bits)
-                } else 1.0f
-              payloadScore = func match {
-                case Query.PayloadFunc.Avg => payloadScore + factor
-                case Query.PayloadFunc.Min =>
-                  if (seen == 0) factor else math.min(payloadScore, factor)
-                case Query.PayloadFunc.Max =>
-                  if (seen == 0) factor else math.max(payloadScore, factor)
-              }
-              seen += 1
-            }
+            val off = r.pos
             r.pos += len
-            j += 1
-          }
-          val docScore = func match {
-            case Query.PayloadFunc.Avg =>
-              if (seen > 0) payloadScore / seen else 1.0f
-            case _ => if (seen > 0) payloadScore else 1.0f
-          }
+            if (len > 0) Some((b.pay_bytes, off, len)) else None
+          })
           val out =
             if (includeSpan)
               Bm25.score(tw.weightValue, freq, tw.cache, b.norm_bytes(i)) * docScore
@@ -562,35 +506,11 @@ final class Searcher(val spark: SparkSession, indexDir: String,
                   if (inOrder) PayloadSpans.ordered(cursors, slop)
                   else PayloadSpans.unordered(cursors, slop)
                 var freq = 0.0f
-                var payloadScore = 0.0f
-                var seen = 0
-                matches.foreach { m =>
-                  freq += 1.0f / (m.end - m.start + 1)
-                  m.payloads.foreach { p =>
-                    val factor =
-                      if (p.length == 4) {
-                        val bits = ((p(0) & 0xff) << 24) | ((p(1) & 0xff) << 16) |
-                          ((p(2) & 0xff) << 8) | (p(3) & 0xff)
-                        java.lang.Float.intBitsToFloat(bits)
-                      } else 1.0f
-                    payloadScore = func match {
-                      case Query.PayloadFunc.Avg => payloadScore + factor
-                      case Query.PayloadFunc.Min =>
-                        if (seen == 0) factor else math.min(payloadScore, factor)
-                      case Query.PayloadFunc.Max =>
-                        if (seen == 0) factor else math.max(payloadScore, factor)
-                    }
-                    seen += 1
-                  }
-                }
-                if (freq > 0.0f) {
-                  val docScore = func match {
-                    case Query.PayloadFunc.Avg =>
-                      if (seen > 0) payloadScore / seen else 1.0f
-                    case _ => if (seen > 0) payloadScore else 1.0f
-                  }
-                  pending = (doc, Bm25.score(wv, freq, ch, nb) * docScore)
-                }
+                val docScore = payloadDocScore(func, matches.flatMap { m =>
+                  freq += 1.0f / (m.end - m.start + 1) // in match order
+                  m.payloads.iterator.map(p => (p, 0, p.length))
+                })
+                if (freq > 0.0f) pending = (doc, Bm25.score(wv, freq, ch, nb) * docScore)
               }
             }
             if (pending == null) done = true

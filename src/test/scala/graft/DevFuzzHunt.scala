@@ -9,7 +9,8 @@ import scala.util.Random
 
 /** One-off wide fuzz hunt (dev main, not part of the suite): fresh seeds,
   * larger corpus, deeper nesting, varied k — engine vs brute-force oracle and
-  * WAND (plain / seeded / MaxScore-forced) vs exhaustive, all bit-identical.
+  * WAND (plain / MaxScore-forced with its dictionary seed) vs exhaustive,
+  * all bit-identical.
   */
 object DevFuzzHunt {
   def main(args: Array[String]): Unit = {
@@ -22,8 +23,7 @@ object DevFuzzHunt {
     val exhaustive = new Searcher(spark, dir)
     val oracle = new BruteForce(turns)
     val wand = new WandSearcher(spark, dir)
-    val wandForced = new WandSearcher(spark, dir,
-      seedMinBlocksOpt = Some(0L), maxScoreMinBlocksOpt = Some(0L))
+    val wandForced = new WandSearcher(spark, dir, maxScoreMinBlocksOpt = Some(0L))
 
     val rnd = new Random(if (args.nonEmpty) args(0).toLong else 20260819023L)
     val vocab = Vector("time", "person", "year", "way", "day", "spark", "index",

@@ -70,6 +70,11 @@ class RandomQuerySpec extends AnyFunSuite {
   test("80 random flat boolean shapes: block-max pruned == exhaustive bit-identically") {
     val dir = Files.createTempDirectory("graft_rand_wand").toString
     IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 150), dir)
+    val turns = Transcripts.local(150).sortBy(t => (t.conv_id, t.turn_idx))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t.text) }
+    // WAND and exhaustive share one combine kernel, so the exhaustive result
+    // is also checked against the independent brute-force oracle
+    val oracle = new BruteForce(turns)
     val exhaustive = new Searcher(spark, dir)
     val wand = new graft.query.WandSearcher(spark, dir)
 
@@ -92,6 +97,8 @@ class RandomQuerySpec extends AnyFunSuite {
         val b = wand.search(q, 10).collect()
           .map(r => (r.getLong(0), r.getFloat(1))).toSeq
         assert(a == b, s"query $i: WAND diverged on $q\n exhaustive: $a\n wand: $b")
+        val want = oracle.search(q, 10)
+        assert(a == want, s"query $i: exhaustive diverged from the oracle on $q\n got: $a\nwant: $want")
         if (a.nonEmpty) nonEmpty += 1
       }
     }
@@ -99,16 +106,16 @@ class RandomQuerySpec extends AnyFunSuite {
   }
 
   test("40 random shapes with the dictionary theta seed forced on: still bit-identical") {
-    // the seed path is default-off (see WandSearcher scaladoc); force it so
-    // random shapes fuzz the seeded pruning against the exhaustive oracle.
-    // Per-instance opt-in — no global sys-prop mutation (parallel suites
-    // must never see each other's seeding).
+    // the dictionary seed arms only past maxScoreMinBlocks (see
+    // WandSearcher scaladoc); force it so random shapes fuzz the seeded
+    // pruning against the exhaustive oracle. Per-instance opt-in — no global
+    // sys-prop mutation (parallel suites must never see each other's
+    // seeding).
     locally {
       val dir = Files.createTempDirectory("graft_rand_seed").toString
       IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 150), dir)
       val exhaustive = new Searcher(spark, dir)
-      val wand = new graft.query.WandSearcher(spark, dir,
-        seedMinBlocksOpt = Some(0L), maxScoreMinBlocksOpt = Some(0L))
+      val wand = new graft.query.WandSearcher(spark, dir, maxScoreMinBlocksOpt = Some(0L))
       val rnd = new Random(20260819L)
       val vocab = Vector("time", "person", "year", "way", "day", "spark", "index",
         "search", "query", "merge", "table", "fast", "slow", "w000123", "zzznope")

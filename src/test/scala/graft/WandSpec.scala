@@ -148,14 +148,15 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("dictionary-seeded theta: identity preserved with seeding forced on") {
-    // The seed job normally arms only on scans past seedMinBlocks; force it
-    // on for EVERY shape so the seeded threshold is exercised against the
-    // exhaustive oracle on this corpus (including the all-ties corpus where
-    // theta_0 equals every block's score and the strict skip must keep them).
-    // Per-instance opt-in (constructor param) — no global sys-prop mutation,
-    // so concurrently-running suites are never armed by this test.
+    // The dictionary seed normally arms only on disjunction scans past
+    // maxScoreMinBlocks; force it on for EVERY shape so the seeded threshold
+    // is exercised against the exhaustive oracle on this corpus (including
+    // the all-ties corpus where theta_0 equals every block's score and the
+    // strict skip must keep them). Per-instance opt-in (constructor param) —
+    // no global sys-prop mutation, so concurrently-running suites are never
+    // armed by this test.
     locally {
-      val wd = new WandSearcher(spark, indexDir, seedMinBlocksOpt = Some(0L))
+      val wd = new WandSearcher(spark, indexDir, maxScoreMinBlocksOpt = Some(0L))
       def seededBoth(q: Query, k: Int = 10): Unit = {
         val a = exhaustive.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
         val b = wd.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -175,7 +176,7 @@ class WandSpec extends AnyFunSuite {
       val docs = (0L until 600L).map(i => (i, "alpha beta gamma delta")).toDF("doc_id", "text")
       IndexBuilder.build(docs, dir)
       val ex2 = new Searcher(spark, dir)
-      val wd2 = new WandSearcher(spark, dir, seedMinBlocksOpt = Some(0L),
+      val wd2 = new WandSearcher(spark, dir,
         maxScoreMinBlocksOpt = Some(0L)) // all-ties + forced MaxScore split
       val q = Query.Bool(must = Seq("alpha"), should = Seq("beta"))
       val a = ex2.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -190,7 +191,7 @@ class WandSpec extends AnyFunSuite {
     // exceeds the dense term's entire gmax, so the dense term is
     // NON-ESSENTIAL from block one — it stops establishing candidates, and
     // every dense block whose 128-doc range holds no rare candidate skips
-    // its decode (BlockCombine.combineShouldPruned). This is exactly the
+    // its decode (BlockCombine's MaxScore establishment). This is exactly the
     // cross-term block population the round-4 theta-seed experiment proved
     // unskippable by block BOUNDS alone.
     import spark.implicits._
@@ -235,12 +236,38 @@ class WandSpec extends AnyFunSuite {
     forcedBoth(Query.Bool(must = Seq("w001234"), should = Seq("time")))
   }
 
+  test("zero-score ties: a block whose bound equals theta is never skipped") {
+    // With boost 0 every posting scores exactly 0, so every block bound
+    // (0 + rest 0) * slack EQUALS theta once k docs are seen — the one case
+    // where slack cannot separate them. The strict skip must scan every
+    // block, scan-side and in the combine. Short docs sit at the high ids,
+    // so impact order streams them first: a non-strict skip would drop the
+    // low-id docs that win the doc_id tie-break.
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_zero").toString
+    val docs = (0L until 2000L).map { i =>
+      (i, if (i < 1000) "alpha beta filler filler filler filler" else "alpha beta")
+    }.toDF("doc_id", "text")
+    IndexBuilder.build(docs, dir)
+    val ex = new Searcher(spark, dir)
+    val wd = new WandSearcher(spark, dir)
+    Seq(Query.Term("alpha", 0.0f),
+      Query.BoolQ(Seq((Query.Should, Query.Term("alpha", 0.0f)),
+        (Query.Should, Query.Term("beta", 0.0f))))).foreach { q =>
+      val a = ex.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      val b = wd.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(a.map(_._1) == (0L until 10L) && a == b, s"zero-score ties diverged on $q: $b")
+      assert(wd.lastSkipped.get.value == 0L, s"skipped a block whose bound equals theta on $q")
+    }
+  }
+
   test("tight score ties: every block bound equals theta, nothing lost") {
     // Adversarial corpus for the skip condition: every doc is identical
     // (tf=1, same length), so every posting scores exactly the same and every
-    // block's upper bound EQUALS the threshold. A non-strict skip
-    // (bound <= theta) would prune all blocks and return 0 rows; the strict
-    // rule must keep them and match the exhaustive tie-break (doc_id asc).
+    // block's upper bound equals the threshold up to slack, which keeps the
+    // bound just above it (exact equality is the zero-score test above). The
+    // skip must keep every block and match the exhaustive tie-break
+    // (doc_id asc).
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_wand_ties").toString
     val docs = (0L until 600L).map(i => (i, "alpha beta gamma delta")).toDF("doc_id", "text")
