@@ -74,9 +74,19 @@ object IndexBuilder {
     */
   val RunMaxPositions = 1 * RunMaxPostings
 
+  /** Split size for re-reading the `runs` table in S2-S4. Runs rows are
+    * blob-dense, so the 128 MB default yields a handful of fat splits and
+    * every single-pass downstream stage (norms/termdict/docmap decode, the
+    * S4 map side) quantizes to a fraction of the worker slots. 32 MB keeps
+    * those stages wave-balanced at ANY worker count — split sizing is
+    * data-driven, identical at every parallelism level, and still yields
+    * multi-second tasks (a 100 TB run table => ~3M splits across a
+    * 1000-executor cluster, comfortably amortized).
+    */
+  val RunSplitBytes: Long = 32L << 20
+
   final case class Options(
       numPartitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-      overwrite: Boolean = false,
       // Segment granularity for the id-assign + tokenize pass (S0/S1). At
       // cluster scale this must be DATA-size-driven (a fixed ~docs-per-segment
       // target), not parallelism-driven: each extra segment re-emits a run row
@@ -111,26 +121,17 @@ object IndexBuilder {
       // no re-analysis. Requires positions = true and an analyzer that
       // tracks spans (TextAnalyzer.tokenSpans). Own pruned Parquet column;
       // off by default — the branch never executes on the ingest hot path.
-      offsets: Boolean = false,
-      // Split size for re-reading the `runs` table in S2-S4. Runs rows are
-      // blob-dense, so the 128 MB default yields a handful of fat splits and
-      // every single-pass downstream stage (norms/termdict/docmap decode, the
-      // S4 map side) quantizes to a fraction of the worker slots. 32 MB keeps
-      // those stages wave-balanced at ANY worker count — split sizing is
-      // data-driven, identical at every parallelism level, and still yields
-      // multi-second tasks (a 100 TB run table => ~3M splits across a
-      // 1000-executor cluster, comfortably amortized).
-      runSplitBytes: Long = 32L << 20)
+      offsets: Boolean = false)
 
   /** Run `body` with build-scoped SQL confs (split size + range-exchange
     * sample size), restoring the caller's values after. Nested scopes restore
     * pairwise, so the concurrent docmap future and buildFromRuns compose.
     */
-  private def withBuildConfs[A](spark: SparkSession, opts: Options)(body: => A): A = {
+  private def withBuildConfs[A](spark: SparkSession)(body: => A): A = {
     val conf = spark.conf
     val keys = Seq(
-      // See Options.runSplitBytes.
-      "spark.sql.files.maxPartitionBytes" -> opts.runSplitBytes.toString,
+      // See RunSplitBytes.
+      "spark.sql.files.maxPartitionBytes" -> RunSplitBytes.toString,
       // S4's range boundaries must cut the run table into EQUAL posting-mass
       // partitions (rows are posting-count-uniform by RunMaxPostings
       // chunking, so row balance == byte balance). The 100-row/partition
@@ -165,13 +166,16 @@ object IndexBuilder {
     * `docmap` is decoded from [[DocmapKey]] pseudo-runs emitted in the same
     * pass, so the docmap/doc-id correspondence never depends on re-running
     * (and re-sampling) the range shuffle.
+    *
+    * Doc ids start at `firstDoc`: a streaming segment continues its store's
+    * id space from the snapshot's high-water mark. Returns the next free doc
+    * id (`firstDoc` + the number of turns).
     */
   def buildFromTurns(turns: Dataset[Turn], outDir: String,
-                     opts: Options = Options()): Unit = {
+                     opts: Options = Options(), firstDoc: Long = 0L): Long = {
     val spark = turns.sparkSession
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
-    if (opts.overwrite) manifest.reset()
     val segP = if (opts.segmentPartitions > 0) opts.segmentPartitions
                else partitions(spark, opts)
     val keys = Seq(col("conv_id"), col("turn_idx"))
@@ -194,12 +198,12 @@ object IndexBuilder {
         .write.mode("overwrite").parquet(s"$outDir/runs")
       manifest.commit("runs", -1L, ms(t0), Some(s"$outDir/runs"))
     }
-    val offsets = runOffsets(spark, outDir)
+    val (offsets, end) = runOffsets(spark, outDir, firstDoc)
     // docmap decode is independent of S2-S5: run it concurrently (Spark
     // timeshares the task slots across jobs, shrinking the serial tail).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    withBuildConfs(spark, opts) {
+    withBuildConfs(spark) {
     val docmapF = Future {
       if (!manifest.isDone("docmap")) {
         val t0 = System.nanoTime()
@@ -219,9 +223,10 @@ object IndexBuilder {
         manifest.commit("docmap", -1L, ms(t0), Some(s"$outDir/docmap"))
       }
     }
-    buildFromRuns(outDir, opts.copy(overwrite = false))
+    buildFromRuns(outDir, opts, offsets)
     Await.result(docmapF, scala.concurrent.duration.Duration.Inf)
     } // withBuildConfs
+    end
   }
 
   /** Tokenize one sorted partition, emitting posting runs AND the docmap
@@ -262,22 +267,24 @@ object IndexBuilder {
     }
   }
 
-  /** Per-pid doc-id offsets = prefix sums of per-partition doc counts, from
-    * the norms pseudo-runs (one metadata-sized aggregation). Runs written
-    * with global ids carry pid = -1 and get offset 0.
+  /** Per-pid doc-id offsets = `firstDoc` + prefix sums of per-partition doc
+    * counts, from the norms pseudo-runs (one metadata-sized aggregation),
+    * and the next free doc id after the last partition.
     */
-  private def runOffsets(spark: SparkSession, outDir: String): Map[Int, Long] = {
+  private def runOffsets(spark: SparkSession, outDir: String,
+                         firstDoc: Long): (Map[Int, Long], Long) = {
     import spark.implicits._
     val counts = spark.read.parquet(s"$outDir/runs")
       .filter(col("term") === NormsKey)
       .groupBy("pid").agg(sum("cnt").as("n"))
       .as[(Int, Long)].collect().sortBy(_._1)
-    var acc = 0L
-    counts.map { case (pid, n) =>
+    var acc = firstDoc
+    val offsets = counts.map { case (pid, n) =>
       val off = acc
-      if (pid >= 0) acc += n
-      pid -> (if (pid >= 0) off else 0L)
+      acc += n
+      pid -> off
     }.toMap
+    (offsets, acc)
   }
 
   /** Build over any (doc_id: Long, text: String) DataFrame. */
@@ -285,7 +292,6 @@ object IndexBuilder {
     val spark = docsIn.sparkSession
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
-    if (opts.overwrite) manifest.reset()
     val p = partitions(spark, opts)
     require(!opts.offsets || opts.positions,
       "offsets require positions (the reference's IndexOptions ladder)")
@@ -306,20 +312,22 @@ object IndexBuilder {
       runs.write.mode("overwrite").parquet(s"$outDir/runs")
       manifest.commit("runs", -1L, ms(t0), Some(s"$outDir/runs"))
     }
-    buildFromRuns(outDir, opts.copy(overwrite = false))
+    buildFromRuns(outDir, opts)
   }
 
   /** S2-S5 over an existing `runs` table (shared by both build entries and
-    * the streaming compactor).
+    * the streaming compactor). `offsets` maps a run's pid to the doc-id
+    * offset of its partition-local ids; runs written with global ids carry
+    * pid = -1 and get offset 0.
     */
-  private[graft] def buildFromRuns(outDir: String, opts: Options): Unit = {
+  private[graft] def buildFromRuns(outDir: String, opts: Options,
+                                   offsets: Map[Int, Long] = Map.empty): Unit = {
     val spark = SparkSession.active
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
-    withBuildConfs(spark, opts) {
+    withBuildConfs(spark) {
     val p = partitions(spark, opts)
     val runs = ensurePay(spark.read.parquet(s"$outDir/runs")).as[Run]
-    val offsets = runOffsets(spark, outDir)
     val bOff = spark.sparkContext.broadcast(offsets)
 
     // ---- S2: norms sidecar (concurrent with S3 — independent inputs) -----
@@ -359,6 +367,10 @@ object IndexBuilder {
     val termdict = spark.read.parquet(s"$outDir/termdict")
     // S4 needs the norms stats (impact avgdl); S5 needs the norms table.
     Await.result(normsF, scala.concurrent.duration.Duration.Inf)
+    // (doc count, sum of lengths): one aggregate shared by S4 and S5, run
+    // only when one of them is still pending
+    lazy val (maxDoc, sumTtf) = spark.read.parquet(s"$outDir/norms")
+      .agg(count(lit(1)), coalesce(sum("len"), lit(0L))).as[(Long, Long)].head()
 
     // ---- S4: global sort-merge into impact-ordered 128-doc blocks ---------
     // (SegmentMerger analog; block membership is by DESCENDING build-time
@@ -371,10 +383,8 @@ object IndexBuilder {
     // the scale path for the BMW kernel.)
     if (!manifest.isDone("postings")) {
       val t0 = System.nanoTime()
-      val (maxDoc0, sumTtf0) = spark.read.parquet(s"$outDir/norms")
-        .agg(count(lit(1)), coalesce(sum("len"), lit(0L))).as[(Long, Long)].head()
       val impactCache = graft.score.Bm25.buildCache(
-        graft.score.Bm25.avgFieldLength(sumTtf0, math.max(maxDoc0, 1L)))
+        graft.score.Bm25.avgFieldLength(sumTtf, math.max(maxDoc, 1L)))
       val offDf = offsets.toSeq.toDF("pid", "off")
       val keyed = runs.toDF()
         .filter(col("term") >= PseudoMax)
@@ -410,10 +420,6 @@ object IndexBuilder {
     // ---- S5: collection statistics ----------------------------------------
     if (!manifest.isDone("stats")) {
       val t0 = System.nanoTime()
-      val normsDf = spark.read.parquet(s"$outDir/norms")
-      val (maxDoc, sumTtf) = normsDf
-        .agg(count("*"), coalesce(sum("len"), lit(0L)))
-        .as[(Long, Long)].head()
       val sumDf = termdict.agg(coalesce(sum("df"), lit(0L))).as[Long].head()
       Seq(CollectionStats(maxDoc, maxDoc, sumTtf, sumDf)).toDS()
         .write.mode("overwrite").parquet(s"$outDir/stats")
@@ -429,11 +435,11 @@ object IndexBuilder {
       pay_bytes: Array[Byte] = Array.emptyByteArray,
       off_bytes: Array[Byte] = Array.emptyByteArray)
 
-  /** Back-compat shim: runs tables written before the payloads/offsets
-    * columns existed read as payload-/offset-less (encoders need every
-    * field present).
+  /** Back-compat shim: runs and postings tables written before the
+    * payloads/offsets columns existed read as payload-/offset-less (encoders
+    * need every field present).
     */
-  private def ensurePay(df: DataFrame): DataFrame = {
+  private[graft] def ensurePay(df: DataFrame): DataFrame = {
     val withPay =
       if (df.columns.contains("pay_bytes")) df
       else df.withColumn("pay_bytes", lit(Array.emptyByteArray))

@@ -52,7 +52,4 @@ final class ManifestStore(indexDir: String, spark: SparkSession) {
     if (!fs.exists(manifestDir)) Nil
     else fs.listStatus(manifestDir).toSeq
       .map(_.getPath.getName).filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
-
-  /** Drop all stage records (forces a full rebuild). */
-  def reset(): Unit = if (fs.exists(manifestDir)) fs.delete(manifestDir, true)
 }

@@ -14,10 +14,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * dataset MUST be persisted between the two jobs: separate actions re-plan
   * and re-sample the range partitioner, and above a shuffle (e.g. a groupBy)
   * AQE can re-shape the child so the resampled boundaries differ between
-  * passes — observed as duplicate ids. (The big-data path — buildFromTurns —
-  * avoids this operator entirely via partition-local ids + offset fixup;
-  * the remaining users here are metadata-sized tables like the term
-  * dictionary, where the persist is cheap at any scale.)
+  * passes — observed as duplicate ids. (Doc ids never come from here:
+  * buildFromTurns assigns them, for batch builds and streaming segments
+  * alike, via partition-local ids + offset fixup. The one user is the term
+  * dictionary, which is metadata-sized, so the persist is cheap at any
+  * scale.)
   */
 object StableIds {
 

@@ -613,7 +613,7 @@ object Gate {
     "ft_q_paging" -> ((s, d) => pagingQuery(s, d, Query.Term("vector"), 10)),
     "ft_delete" -> ((s, d) =>
       // liveDocs-style delete application (BufferedUpdates/LiveDocsFormat,
-      // engine path: graft.build.Tombstones + Searcher anti-join; tested
+      // engine path: StreamingIndexer.deleteDocs + Searcher anti-join; tested
       // bit-exactly in DeleteSpec): every doc_id divisible by 7 is buried,
       // then a term query must not surface any of them.
       rankQ(searcher(s, d).scoredDocs(Query.Term("table"))

@@ -17,9 +17,10 @@ import scala.reflect.runtime.universe.TypeTag
   * globally unique across segments, so one (score desc, doc_id asc) order
   * subsumes the cross-leaf tie-break.
   *
-  * A batch directory is a one-segment view (plus its `tombstones` table); a
-  * streaming store (a directory with `_snapshots/`) is its latest snapshot's
-  * base + segments + tombstones.
+  * A batch directory is a one-segment view; a store (a directory with
+  * `_snapshots/`, which every delete, append, update or compaction gives a
+  * batch directory too) is its latest snapshot's base + segments +
+  * tombstones. Snapshots are the one source of tombstones.
   *
   * Term ids are segment-local, so [[lookup]] hands out scan KEYS and
   * [[blocks]] rewrites every segment's term ids to them: the scoring
@@ -143,9 +144,11 @@ final class IndexView private (spark: SparkSession, val segments: Seq[String],
   def docIds: DataFrame =
     segments.map(d => spark.read.parquet(s"$d/norms").select("doc_id")).reduce(_ union _)
 
-  /** Dead docs, applied liveDocs-style as a pre-top-k anti-join; stats stay
-    * unpurged until compaction (reference behavior, see
-    * [[graft.build.Tombstones]]).
+  /** Dead docs (the snapshot's tombstone tables, the liveDocs-bitset analog,
+    * Lucene.Net/Codecs/LiveDocsFormat.cs), applied liveDocs-style as a
+    * pre-top-k anti-join. Like the reference, collection and term statistics
+    * keep counting buried docs until compaction purges them
+    * ([[graft.streaming.StreamingIndexer.compact]]).
     */
   private lazy val dead: Option[DataFrame] =
     if (tombDirs.isEmpty) None
@@ -174,7 +177,7 @@ object IndexView {
   def open(spark: SparkSession, dir: String): IndexView =
     new graft.streaming.SnapshotLog(dir, spark).latest() match {
       case Some(snap) => of(spark, snap)
-      case None => new IndexView(spark, Seq(dir), graft.build.Tombstones.dir(spark, dir).toSeq)
+      case None => new IndexView(spark, Seq(dir), Nil)
     }
 
   def of(spark: SparkSession, snap: graft.streaming.SnapshotLog#Snapshot): IndexView =

@@ -1,22 +1,31 @@
 package graft.streaming
 
-import graft.build.{IndexBuilder, StableIds}
+import graft.build.{IndexBuilder, ManifestStore}
 import graft.codec.{PostingCodec, ScoreBlock}
 import graft.query.IndexView
-import graft.model.Turn
+import graft.model.{Run, Turn}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import scala.reflect.ClassTag
 
-/** Streaming ingest (axis B): every micro-batch becomes an immutable index
-  * segment, published atomically through the [[SnapshotLog]] — the Structured
-  * Streaming realization of Lucene's NRT flow (DocumentsWriter flush ->
-  * searchable-after-refresh segment; SURVEY.md §2.11). Doc ids are assigned
-  * per batch in arrival order from the snapshot's high-water mark (the
+/** Streaming ingest (axis B) and the write path of every index directory:
+  * every micro-batch becomes an immutable index segment, built by the batch
+  * builder's single pass ([[IndexBuilder.buildFromTurns]]) and published
+  * atomically through the [[SnapshotLog]] — the Structured Streaming
+  * realization of Lucene's NRT flow (DocumentsWriter flush ->
+  * searchable-after-refresh segment; SURVEY.md §2.11). Doc ids continue
+  * from the snapshot's high-water mark batch by batch in arrival order (the
   * reference's behavior: docIDs are arrival-ordered,
-  * /root/reference/src/Lucene.Net/Index/DocumentsWriterPerThread.cs); a batch
-  * rebuild restores canonical (conv_id, turn_idx) order — documented mode
-  * difference.
+  * Lucene.Net/Index/DocumentsWriterPerThread.cs) and follow (conv_id,
+  * turn_idx) within a batch; a batch rebuild restores canonical order across
+  * batches too — documented mode difference.
+  *
+  * A batch-built directory is the base of its store: the first append,
+  * delete, update or compaction on it commits snapshot 0 with the directory
+  * as base, so its deletes are snapshot tombstones like any other and
+  * compaction purges them.
   */
 object StreamingIndexer {
 
@@ -26,6 +35,23 @@ object StreamingIndexer {
     */
   final val CompactAt = 10
 
+  /** The store's latest snapshot. A completed batch build with no snapshot
+    * yet becomes the base of snapshot 0, whose maxDoc is its max doc_id + 1
+    * (from its norms), so appended segments never reuse an id. None for a
+    * directory that holds no index yet.
+    */
+  private def latest(spark: SparkSession, log: SnapshotLog,
+                     indexDir: String): Option[SnapshotLog#Snapshot] =
+    log.latest().orElse {
+      if (!new ManifestStore(indexDir, spark).isDone("stats")) None
+      else {
+        import spark.implicits._
+        val maxDoc = spark.read.parquet(s"$indexDir/norms")
+          .agg(coalesce(max("doc_id") + 1, lit(0L))).as[Long].head()
+        Some(log.commit(maxDoc, Some(indexDir), Nil))
+      }
+    }
+
   /** Build a new segment's tables (no snapshot commit). Returns
     * (segDir, new high-water maxDoc).
     */
@@ -33,21 +59,11 @@ object StreamingIndexer {
                            snap: Option[SnapshotLog#Snapshot],
                            positions: Boolean = true): (String, Long) = {
     val spark = batch.sparkSession
-    val base = snap.map(_.maxDoc).getOrElse(0L)
-    val segId = snap.map(_.id + 1).getOrElse(0L)
-    val segDir = s"$indexDir/seg-$segId"
+    val segDir = s"$indexDir/seg-${snap.map(_.id + 1).getOrElse(0L)}"
     val p = math.max(spark.sessionState.conf.numShufflePartitions / 4, 4)
-    // within-batch stable order, offset by the global high-water mark
-    val withIds = StableIds.attach(
-      batch.toDF().select(col("conv_id"), col("turn_idx"), col("text")),
-      Seq(col("conv_id"), col("turn_idx")), "seg_doc", p)
-      .withColumn("doc_id", col("seg_doc") + lit(base))
-    withIds.select("doc_id", "conv_id", "turn_idx")
-      .write.mode("overwrite").parquet(s"$segDir/docmap")
-    val maxDoc = base + withIds.count()
-    IndexBuilder.build(withIds.select("doc_id", "text"), segDir,
-      IndexBuilder.Options(numPartitions = p, positions = positions))
-    withIds.unpersist(blocking = false)
+    val maxDoc = IndexBuilder.buildFromTurns(batch, segDir,
+      IndexBuilder.Options(numPartitions = p, positions = positions),
+      firstDoc = snap.map(_.maxDoc).getOrElse(0L))
     (segDir, maxDoc)
   }
 
@@ -62,7 +78,7 @@ object StreamingIndexer {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val log = new SnapshotLog(indexDir, spark)
-    val snap = log.latest()
+    val snap = latest(spark, log, indexDir)
     val (segDir, maxDoc) = buildSegment(batch, indexDir, snap, positions)
     val newSegs = snap.map(_.segments).getOrElse(Nil) :+ segDir
     log.commit(maxDoc, snap.flatMap(_.base), newSegs, snap.map(_.tombs).getOrElse(Nil))
@@ -78,7 +94,7 @@ object StreamingIndexer {
     val spark = batch.sparkSession
     if (batch.isEmpty) { deleteByTerm(spark, indexDir, term); return }
     val log = new SnapshotLog(indexDir, spark)
-    val snap = log.latest().getOrElse {
+    val snap = latest(spark, log, indexDir).getOrElse {
       appendSegment(batch, indexDir); return
     }
     val tombs = snap.tombs ++ tombstoneTerm(spark, indexDir, snap, term)
@@ -116,7 +132,7 @@ object StreamingIndexer {
     import spark.implicits._
     if (docIds.isEmpty) return
     val log = new SnapshotLog(indexDir, spark)
-    val snap = log.latest().getOrElse(
+    val snap = latest(spark, log, indexDir).getOrElse(
       throw new IllegalStateException("deleteDocs on an empty index"))
     val tombDir = s"$indexDir/tomb-${snap.id + 1}"
     docIds.toDF("doc_id").write.mode("overwrite").parquet(tombDir)
@@ -129,7 +145,7 @@ object StreamingIndexer {
     */
   def deleteByTerm(spark: SparkSession, indexDir: String, term: String): Unit = {
     val log = new SnapshotLog(indexDir, spark)
-    val snap = log.latest().getOrElse(return)
+    val snap = latest(spark, log, indexDir).getOrElse(return)
     tombstoneTerm(spark, indexDir, snap, term).foreach { tombDir =>
       log.commit(snap.maxDoc, snap.base, snap.segments, snap.tombs :+ tombDir)
     }
@@ -145,6 +161,29 @@ object StreamingIndexer {
                                          pos: Array[Int], pay: Array[Byte],
                                          off: Array[Byte])
 
+  /** A run's postings, decoded. `pos`, `pay` and `off` are null when the
+    * run's IndexOptions level omits them (DOCS_AND_FREQS runs carry no
+    * positions payload, mirroring the mergeRuns hasPos handling).
+    */
+  private final case class Postings(docs: Array[Long], tfs: Array[Int], norms: Array[Byte],
+                                    pos: Array[Array[Int]], pay: Array[Array[Byte]],
+                                    off: Array[Array[Byte]]) {
+    /** The postings at `keep` (ascending indices) re-encoded as one run row. */
+    def encode(pid: Int, term: String, keep: Array[Int]): Run = {
+      def pick[A: ClassTag](a: Array[A]): Array[A] = if (a == null) null else keep.map(a(_))
+      IndexBuilder.encodeRunRow(pid, term, pick(docs), pick(tfs), pick(norms),
+        pick(pos), pick(pay), pick(off))
+    }
+  }
+
+  private def postingsOf(r: Run): Postings = {
+    val (docs, tfs, norms) = IndexBuilder.decodeRun(r)
+    Postings(docs, tfs, norms,
+      if (r.pos_bytes.nonEmpty) PostingCodec.unpackPositions(r.pos_bytes, tfs) else null,
+      if (r.pay_bytes.nonEmpty) PostingCodec.splitPaySegments(r.pay_bytes, tfs) else null,
+      if (r.off_bytes.nonEmpty) PostingCodec.splitOffSegments(r.off_bytes, tfs) else null)
+  }
+
   /** Bulk tombstone purge: runs -> per-posting rows -> anti-join the
     * (data-sized) tombstone table on doc_id -> regroup per original run and
     * re-encode. Every step is a keyed shuffle; the delete set never reaches
@@ -153,27 +192,14 @@ object StreamingIndexer {
     * uniquely because segment doc spaces are disjoint.
     */
   private def purgeBulk(spark: SparkSession, runs: DataFrame,
-                        tombs: DataFrame): Dataset[graft.model.Run] = {
+                        tombs: DataFrame): Dataset[Run] = {
     import spark.implicits._
-    val exploded = runs.as[graft.model.Run].flatMap { r =>
-      val (docs, tfs, norms) = IndexBuilder.decodeRun(r)
-      val hasPos = r.pos_bytes.nonEmpty
-      val poss =
-        if (hasPos) graft.codec.PostingCodec.unpackPositions(r.pos_bytes, tfs)
-        else null
-      val hasPay = r.pay_bytes.nonEmpty
-      val pays =
-        if (hasPay) graft.codec.PostingCodec.splitPaySegments(r.pay_bytes, tfs)
-        else null
-      val hasOff = r.off_bytes.nonEmpty
-      val offs =
-        if (hasOff) graft.codec.PostingCodec.splitOffSegments(r.off_bytes, tfs)
-        else null
-      docs.indices.iterator.map { i =>
-        PurgedPosting(r.term, r.first_doc, docs(i), tfs(i), norms(i),
-          if (hasPos) poss(i) else null,
-          if (hasPay) pays(i) else null,
-          if (hasOff) offs(i) else null)
+    def at[A >: Null](a: Array[A], i: Int): A = if (a == null) null else a(i)
+    val exploded = runs.as[Run].flatMap { r =>
+      val p = postingsOf(r)
+      p.docs.indices.iterator.map { i =>
+        PurgedPosting(r.term, r.first_doc, p.docs(i), p.tfs(i), p.norms(i),
+          at(p.pos, i), at(p.pay, i), at(p.off, i))
       }
     }
     exploded
@@ -181,16 +207,11 @@ object StreamingIndexer {
       .as[PurgedPosting]
       .groupByKey(p => (p.term, p.run_key))
       .mapGroups { (key: (String, Long), it: Iterator[PurgedPosting]) =>
-        val term = key._1
         val rows = it.toArray.sortBy(_.doc_id)
-        val hasPos = rows.head.pos != null
-        val hasPay = rows.head.pay != null
-        val hasOff = rows.head.off != null
-        IndexBuilder.encodeRunRow(-1, term,
-          rows.map(_.doc_id), rows.map(_.tf), rows.map(_.nb),
-          if (hasPos) rows.map(_.pos) else null,
-          if (hasPay) rows.map(_.pay) else null,
-          if (hasOff) rows.map(_.off) else null)
+        def opt[A >: Null: ClassTag](f: PurgedPosting => A): Array[A] =
+          if (f(rows.head) == null) null else rows.map(f)
+        Postings(rows.map(_.doc_id), rows.map(_.tf), rows.map(_.nb),
+          opt(_.pos), opt(_.pay), opt(_.off)).encode(-1, key._1, rows.indices.toArray)
       }
   }
 
@@ -204,7 +225,7 @@ object StreamingIndexer {
               broadcastTombMax: Long = 500000L): Unit = {
     import spark.implicits._
     val log = new SnapshotLog(indexDir, spark)
-    val snap = log.latest().getOrElse(return)
+    val snap = latest(spark, log, indexDir).getOrElse(return)
     // nothing to fold in and nothing to purge -> no-op (a bare base is
     // already compact, and an empty snapshot must not reach the reduce below)
     if (snap.segments.isEmpty && snap.tombs.isEmpty) return
@@ -235,14 +256,7 @@ object StreamingIndexer {
     // postings (term_id) -> Run rows (term): reverse the per-segment dict
     val runs: DataFrame = parts.map { dir =>
       val dict = spark.read.parquet(s"$dir/termdict").select("term", "term_id")
-      val postings0 = spark.read.parquet(s"$dir/postings")
-      val postings1 = // segments written before the payloads column read payload-less
-        if (postings0.columns.contains("pay_bytes")) postings0
-        else postings0.withColumn("pay_bytes", lit(Array.emptyByteArray))
-      val postings = // ... and before the offsets column, offset-less
-        if (postings1.columns.contains("off_bytes")) postings1
-        else postings1.withColumn("off_bytes", lit(Array.emptyByteArray))
-      postings
+      IndexBuilder.ensurePay(spark.read.parquet(s"$dir/postings"))
         .join(dict, "term_id")
         .select(lit(-1).as("pid"), col("term"), col("first_doc"), col("last_doc"), col("cnt"),
           // sum_tf per run only feeds the termdict agg; recompute from blocks
@@ -252,37 +266,18 @@ object StreamingIndexer {
     }.reduce(_ unionByName _)
     // recompute per-run sum_tf (needed for ttf) by decoding tf cells; when
     // tombstones exist, drop dead postings and re-encode (the purge)
-    val fixed: Dataset[graft.model.Run] =
+    val fixed: Dataset[Run] =
       if (tombDf.isDefined && tombSet.isEmpty) purgeBulk(spark, runs, tombDf.get)
-      else runs.as[graft.model.Run].flatMap { r =>
+      else runs.as[Run].flatMap { r =>
         tombSet match {
           case None =>
             val tfs = graft.codec.ForCodec.unpack(r.tf_bytes)
             Iterator.single(r.copy(sum_tf = tfs.sum))
           case Some(dead) =>
-            val (docs, tfs, norms) = IndexBuilder.decodeRun(r)
-            // DOCS_AND_FREQS runs carry no positions payload (mirror the
-            // mergeRuns hasPos handling): decode/re-encode positions only
-            // when present, else pass null through.
-            val hasPos = r.pos_bytes.nonEmpty
-            val poss =
-              if (hasPos) graft.codec.PostingCodec.unpackPositions(r.pos_bytes, tfs)
-              else null
-            val hasPay = r.pay_bytes.nonEmpty
-            val pays =
-              if (hasPay) graft.codec.PostingCodec.splitPaySegments(r.pay_bytes, tfs)
-              else null
-            val hasOff = r.off_bytes.nonEmpty
-            val offs =
-              if (hasOff) graft.codec.PostingCodec.splitOffSegments(r.off_bytes, tfs)
-              else null
-            val keep = docs.indices.filter(i => !dead.value.contains(docs(i)))
+            val p = postingsOf(r)
+            val keep = p.docs.indices.filter(i => !dead.value.contains(p.docs(i))).toArray
             if (keep.isEmpty) Iterator.empty
-            else Iterator.single(IndexBuilder.encodeRunRow(r.pid, r.term,
-              keep.map(docs).toArray, keep.map(tfs).toArray,
-              keep.map(norms).toArray, if (hasPos) keep.map(poss).toArray else null,
-              if (hasPay) keep.map(pays).toArray else null,
-              if (hasOff) keep.map(offs).toArray else null))
+            else Iterator.single(p.encode(r.pid, r.term, keep))
         }
       }
     fixed.write.mode("overwrite").parquet(s"$newBase/runs")
@@ -291,10 +286,15 @@ object StreamingIndexer {
     // norms: concatenate (doc spaces are disjoint), minus buried docs
     purged(parts.map(d => spark.read.parquet(s"$d/norms")).reduce(_ unionByName _))
       .write.mode("overwrite").parquet(s"$newBase/norms")
-    purged(parts.map(d => spark.read.parquet(s"$d/docmap")).reduce(_ unionByName _))
-      .write.mode("overwrite").parquet(s"$newBase/docmap")
-    val manifest = new graft.build.ManifestStore(newBase, spark)
-    manifest.commit("docmap", -1L, 0L, Some(s"$newBase/docmap"))
+    val manifest = new ManifestStore(newBase, spark)
+    // a build(DataFrame) base has no docmap: the new base keeps one only
+    // when every part has one, so it always covers the norms' doc space
+    val docmaps = parts.map(d => new Path(s"$d/docmap"))
+    if (docmaps.forall(p => p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))) {
+      purged(docmaps.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _))
+        .write.mode("overwrite").parquet(s"$newBase/docmap")
+      manifest.commit("docmap", -1L, 0L, Some(s"$newBase/docmap"))
+    }
     manifest.commit("runs", -1L, 0L, Some(s"$newBase/runs"))
     manifest.commit("norms", -1L, 0L, Some(s"$newBase/norms"))
     tombDf.foreach(_.unpersist(blocking = false))

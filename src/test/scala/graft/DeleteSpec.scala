@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.{IndexBuilder, Tombstones}
+import graft.build.IndexBuilder
 import graft.fixtures.Transcripts
 import graft.query.{Query, Searcher, WandSearcher}
 import graft.streaming.{SegmentedSearcher, SnapshotLog, StreamingIndexer}
@@ -25,7 +25,7 @@ class DeleteSpec extends AnyFunSuite {
     val top = pre.search(Query.Term("time"), 10).collect().map(_.getLong(0)).toSeq
     assert(top.nonEmpty)
     // bury the current top-2 docs
-    Tombstones.append(spark, dir, top.take(2))
+    StreamingIndexer.deleteDocs(spark, dir, top.take(2))
     val post = new Searcher(spark, dir)
     val afterEx = post.search(Query.Term("time"), 10).collect().map(_.getLong(0)).toSeq
     assert(afterEx.intersect(top.take(2)).isEmpty)
@@ -68,7 +68,7 @@ class DeleteSpec extends AnyFunSuite {
     // stays off while tombstones exist)
     val batchDir = Files.createTempDirectory("graft_del_stream_batch").toString
     IndexBuilder.buildFromTurns(spark.createDataset(all), batchDir)
-    Tombstones.append(spark, batchDir, dead.toSeq)
+    StreamingIndexer.deleteDocs(spark, batchDir, dead.toSeq)
     val batch = new Searcher(spark, batchDir)
     val wand = new WandSearcher(spark, dir)
     def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
@@ -96,6 +96,81 @@ class DeleteSpec extends AnyFunSuite {
     assert(docmapIds.intersect(dead).isEmpty)
     // maxDoc high-water mark is preserved so future appends never reuse ids
     assert(snap2.maxDoc == all.size)
+  }
+
+  test("a batch-built directory is the base of its store: append, deletes, update, compact") {
+    val dir = Files.createTempDirectory("graft_del_base").toString
+    val all = Transcripts.local(90)
+    val cut = all.count(_.conv_id < f"c${60}%08d")
+    IndexBuilder.buildFromTurns(spark.createDataset(all.take(cut)), dir)
+    StreamingIndexer.appendSegment(spark.createDataset(all.drop(cut)), dir, autoCompact = false)
+    // the store keeps the batch docs: snapshot 0 made the directory its base
+    val snap0 = new SnapshotLog(dir, spark).latest().get
+    assert(snap0.base.contains(dir) && snap0.segments.size == 1 && snap0.maxDoc == all.size)
+    assert(new Searcher(spark, dir).search(Query.MatchAll(), 1000).count() == all.size)
+
+    StreamingIndexer.deleteByTerm(spark, dir, "person")
+    val live1 = new Searcher(spark, dir).search(Query.Term("time"), 3)
+      .collect().map(_.getLong(0)).toSeq
+    StreamingIndexer.deleteDocs(spark, dir, live1)
+    val repl = all.take(2).zipWithIndex.map { case (t, i) =>
+      t.copy(conv_id = "zzreplacement", turn_idx = i, text = "replacement doc about time and year")
+    }
+    StreamingIndexer.updateDocuments(spark.createDataset(repl), dir, "world")
+    val snap = new SnapshotLog(dir, spark).latest().get
+    assert(snap.base.contains(dir) && snap.segments.size == 2 && snap.tombs.size == 3)
+    val dead = snap.tombs.map(t => spark.read.parquet(t)).reduce(_ unionByName _)
+      .select("doc_id").as[Long].collect().toSet
+    assert(live1.toSet.subsetOf(dead) && dead.size > live1.size)
+
+    // same results, down to doc ids and float bits, as a batch build of the
+    // same docs carrying the same deletes
+    val batchDir = Files.createTempDirectory("graft_del_base_batch").toString
+    IndexBuilder.buildFromTurns(spark.createDataset(all ++ repl), batchDir)
+    StreamingIndexer.deleteDocs(spark, batchDir, dead.toSeq)
+    val batch = new Searcher(spark, batchDir)
+    val store = new Searcher(spark, dir)
+    val wand = new WandSearcher(spark, dir)
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+      df.collect().map(r => (r.getLong(0), java.lang.Float.floatToRawIntBits(r.getFloat(1)))).toSeq
+    for (q <- Seq(Query.Term("time"), Query.Bool(should = Seq("time", "year")),
+      Query.Phrase(Seq("time", "year"), slop = 2), Query.parse("(time OR year) AND way"),
+      Query.parse("+ti* year"), Query.ConstantScore(Query.Term("year"), 2.0f),
+      Query.DisMax(Seq(Query.Term("time"), Query.Term("year")), 0.5f), Query.MatchAll())) {
+      val want = bits(batch.search(q, 20))
+      assert(want.nonEmpty, s"no hits for $q")
+      assert(bits(store.search(q, 20)) == want, s"store diverged on $q")
+      assert(bits(wand.search(q, 20)) == want, s"store WAND diverged on $q")
+    }
+
+    // compaction purges the batch base's deletes too: the new base holds
+    // exactly the live docs
+    StreamingIndexer.compact(spark, dir)
+    val snap2 = new SnapshotLog(dir, spark).latest().get
+    assert(snap2.tombs.isEmpty && snap2.segments.isEmpty && !snap2.base.contains(dir))
+    assert(snap2.maxDoc == all.size + repl.size)
+    val base = snap2.base.get
+    assert(IndexVerifier.verify(spark, base).isEmpty)
+    val live = (0L until all.size + repl.size).toSet -- dead
+    assert(spark.read.parquet(s"$base/norms").select("doc_id").as[Long].collect().toSet == live)
+    assert(spark.read.parquet(s"$base/docmap").select("doc_id").as[Long].collect().toSet == live)
+    assert(new Searcher(spark, base).stats.max_doc == live.size)
+  }
+
+  test("a build(DataFrame) directory deletes and compacts without a docmap") {
+    val dir = Files.createTempDirectory("graft_del_df").toString
+    val docs = (1 to 40).map(i => (i * 10L, if (i % 2 == 0) s"time person n$i" else s"time year n$i"))
+    IndexBuilder.build(docs.toDF("doc_id", "text"), dir)
+    StreamingIndexer.deleteByTerm(spark, dir, "person")
+    // the high-water mark continues past the largest (sparse) doc id
+    assert(new SnapshotLog(dir, spark).latest().get.maxDoc == 401L)
+    StreamingIndexer.compact(spark, dir)
+    val base = new SnapshotLog(dir, spark).latest().get.base.get
+    assert(IndexVerifier.verify(spark, base).isEmpty)
+    assert(!new java.io.File(s"$base/docmap").exists())
+    val hits = new Searcher(spark, base).search(Query.Term("time"), 100)
+      .collect().map(_.getLong(0)).toSet
+    assert(hits == docs.collect { case (d, t) if !t.contains("person") => d }.toSet)
   }
 
   test("DOCS_AND_FREQS segments: delete-by-term + compaction (no positions payload)") {

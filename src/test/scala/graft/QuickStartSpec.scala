@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.{IndexBuilder, Tombstones}
+import graft.build.IndexBuilder
 import graft.fixtures.Transcripts
 import graft.query.{MemoryIndex, Query, Searcher, Spans, WandSearcher}
 import graft.streaming.{SegmentedSearcher, StreamingIndexer}
@@ -58,7 +58,7 @@ class QuickStartSpec extends AnyFunSuite {
     IndexBuilder.buildFromTurns(spark.createDataset(Transcripts.local(120)), dir)
     val s0 = new Searcher(spark, dir)
     val top = s0.search(Query.Term("time"), 5).collect().map(_.getLong(0)).toSeq
-    Tombstones.append(spark, dir, Seq(top.head))
+    StreamingIndexer.deleteDocs(spark, dir, Seq(top.head))
     val after = new Searcher(spark, dir)
       .search(Query.Term("time"), 5).collect().map(_.getLong(0)).toSeq
     assert(!after.contains(top.head))

@@ -89,24 +89,25 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `body` runs, counted by a listener on a private job group. */
+  /** Spark jobs `body` runs, counted by a listener: every job that starts
+    * before a marker job. Jobs are not told apart by job group, because the
+    * builder runs some stages in futures whose pool threads need not carry
+    * the caller's group; the suite runs nothing else meanwhile.
+    */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-end"
+    val marker = s"counted-${java.util.UUID.randomUUID()}-end"
     val started = new AtomicInteger()
     val markerSeen = new CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => started.incrementAndGet()
           case `marker` => markerSeen.countDown()
-          case _ =>
+          case _ => started.incrementAndGet()
         }
     }
     sc.addSparkListener(l)
     try {
-      sc.setJobGroup(group, "counted")
       body
       // a listener sees events in posting order: once the marker job shows,
       // every job of `body` has been counted
@@ -136,6 +137,14 @@ class StreamingSpec extends AnyFunSuite {
     val cached = spark.sparkContext.getPersistentRDDs.size
     (1 to 3).foreach(_ => new Searcher(spark, dirs._1).lookup(terms))
     assert(spark.sparkContext.getPersistentRDDs.size == cached)
+  }
+
+  test("one small append runs 32 Spark jobs: a single build pass") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_append_jobs").toString
+    val batch = spark.createDataset(Transcripts.local(10))
+    assert(jobsOf(StreamingIndexer.appendSegment(batch, dir, autoCompact = false)) == 32)
+    assert(new SnapshotLog(dir, spark).latest().get.maxDoc == Transcripts.local(10).size)
   }
 
   test("compaction produces a valid base index with identical results") {
