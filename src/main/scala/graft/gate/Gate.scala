@@ -272,10 +272,8 @@ object Gate {
   def posHits(spark: SparkSession, sfDir: String, terms: Seq[String]): DataFrame = {
     import spark.implicits._
     val idx = indexDir(spark, sfDir)
-    val dict = termdict(spark, idx)
-      .filter(col("term").isin(terms.distinct: _*))
-      .as[TermDictRow].collect()
-    val names: Map[Long, String] = dict.map(d => d.term_id -> d.term).toMap
+    val names: Map[Long, String] =
+      searcher(spark, sfDir).lookup(terms).map { case (t, d) => d.term_id -> t }
     if (names.isEmpty)
       return spark.emptyDataset[(Long, String, Int, Array[Int])]
         .toDF("doc_id", "term", "nb", "pos")
@@ -452,8 +450,7 @@ object Gate {
     "ft_postings_term" -> ((s, d) => {
       import s.implicits._
       val idx = indexDir(s, d)
-      val tid = termdict(s, idx).filter(col("term") === "query")
-        .select("term_id").as[Long].head()
+      val tid = searcher(s, d).lookup(Seq("query"))("query").term_id
       s.read.parquet(s"$idx/postings")
         .filter(col("term_id") === tid)
         .select(ScoreBlock.cols.map(col): _*)
@@ -603,7 +600,7 @@ object Gate {
     "ft_q_range" -> ((s, d) => {
       // per doc, how many range-expanded terms it holds
       val srch = searcher(s, d)
-      srch.expand(col("term").between("batch", "data"))
+      srch.expand(Query.TermRange("batch", "data"))
         .map(t => srch.scoredDocs(Query.Term(t)).select("doc_id"))
         .reduce(_ union _)
         .groupBy("doc_id").agg(count(lit(1)).cast("long").as("nterms"))
@@ -909,8 +906,7 @@ object Gate {
       // off_bytes column is read only here — scoring scans prune it.
       import s.implicits._
       val idx = indexDirOffsets(s, d)
-      val tid = termdict(s, idx).filter(col("term") === lit("vector"))
-        .select("term_id").as[Long].head()
+      val tid = new Searcher(s, idx).lookup(Seq("vector"))("vector").term_id
       s.read.parquet(s"$idx/postings")
         .filter(col("term_id") === lit(tid))
         .select("first_doc", "cnt", "doc_bytes", "tf_bytes", "off_bytes")

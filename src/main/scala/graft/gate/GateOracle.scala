@@ -248,7 +248,7 @@ object GateOracle {
 
   /** FuzzyQuery 'soft' within `edits`: the top 50 terms by similarity
     * 1 - d/min(|t|, |q|), then term, each boosted by that similarity in
-    * float32 ([[graft.query.Rewrite.fuzzyExpansion]]).
+    * float32 ([[graft.query.Rewrite.expansion]]).
     */
   private def fuzzy(edits: Int): String = ranked(flat("true", from = "bsc"), ctes = boosted(
     s"""SELECT term, CAST(1.0e0 AS REAL) - CAST(d AS REAL) / CAST(least(length(term), 4) AS REAL)

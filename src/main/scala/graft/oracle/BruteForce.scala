@@ -2,7 +2,7 @@ package graft.oracle
 
 import graft.analysis.Analyzer
 import graft.codec.SmallFloat
-import graft.query.Query
+import graft.query.{Query, Rewrite}
 import graft.score.Bm25
 import scala.collection.mutable
 
@@ -71,7 +71,7 @@ final class BruteForce(docs: Seq[(Long, String)],
         val sc = mx + (sum - mx) * dm.tieBreaker
         (id, if (dm.boost == 1.0f) sc else dm.boost * sc)
       }
-    case Query.ConstantScore(mt, boost) if isMultiTermQ(mt) =>
+    case Query.ConstantScore(mt, boost) if Rewrite.isMultiTerm(mt) =>
       // constant-score filter: docs containing ANY matching term, score = boost
       val ts = expandMulti(mt).toSet
       analyzed.collect {
@@ -94,12 +94,6 @@ final class BruteForce(docs: Seq[(Long, String)],
     case leaf => scoreAll(Query.BoolQ(Seq((Query.Should, leaf))))
   }
 
-  private def isMultiTermQ(q: Query): Boolean = q match {
-    case _: Query.Prefix | _: Query.Wildcard | _: Query.Regexp |
-         _: Query.TermRange => true
-    case _ => false
-  }
-
   /** Vocabulary expansion of a multi-term leaf (term list only). */
   private def expandMulti(q: Query): Seq[String] = {
     val vocab = df.keys.toSeq.sorted
@@ -117,29 +111,21 @@ final class BruteForce(docs: Seq[(Long, String)],
     }
   }
 
-  private def leafBoost(q: Query): Float = q match {
-    case Query.Prefix(_, b) => b
-    case Query.Wildcard(_, b) => b
-    case Query.Regexp(_, b) => b
-    case Query.TermRange(_, _, _, _, b) => b
-    case _ => 1.0f
-  }
-
   /** Mirror of [[graft.query.Rewrite.harden]] over the oracle's vocabulary:
     * over-cap expansions become constant-score filters, in-cap expansions
     * under MUST nest as SHOULD groups, fuzzy under MUST nests its top-N.
     */
   private def harden(cs: Seq[(Query.Occur, Query)]): Option[Seq[(Query.Occur, Query)]] = {
-    val cap = graft.query.Rewrite.maxExpansions
+    val cap = Rewrite.maxExpansions
     val out = cs.map {
-      case (occ, mt) if isMultiTermQ(mt) =>
+      case (occ, mt) if Rewrite.isMultiTerm(mt) =>
         val ts = expandMulti(mt)
-        if (ts.size > cap) (occ, Query.ConstantScore(mt, leafBoost(mt)))
+        if (ts.size > cap) (occ, Query.ConstantScore(mt, Rewrite.boost(mt)))
         else if (occ == Query.Must) {
           if (ts.isEmpty) return None
           (Query.Must: Query.Occur,
             Query.BoolQ(ts.map(t =>
-              (Query.Should: Query.Occur, Query.Term(t, leafBoost(mt)): Query))): Query)
+              (Query.Should: Query.Occur, Query.Term(t, Rewrite.boost(mt)): Query))): Query)
         } else (occ, mt)
       case (Query.Must, f: Query.Fuzzy) =>
         val exp = fuzzyTop(f)
@@ -192,13 +178,13 @@ final class BruteForce(docs: Seq[(Long, String)],
   }
 
   /** In-memory MultiTermQuery rewrite over the oracle's own vocabulary —
-    * the same expansion/ranking contract as Searcher.rewriteClauses
+    * the same expansion/ranking contract as [[graft.query.Rewrite.clauses]]
     * (callers run [[harden]] first, so no MUST-side or over-cap leaves
     * remain here).
     */
   private def rewrite(clauses: Seq[(Query.Occur, Query)]): Seq[(String, Query.Occur, Float)] = {
     def expansion(q: Query): Seq[(String, Float)] = q match {
-      case mt if isMultiTermQ(mt) => expandMulti(mt).map((_, leafBoost(mt)))
+      case mt if Rewrite.isMultiTerm(mt) => expandMulti(mt).map((_, Rewrite.boost(mt)))
       case f: Query.Fuzzy => fuzzyTop(f)
       case other =>
         throw new IllegalStateException(

@@ -169,8 +169,8 @@ object Query {
     */
   final case class Wildcard(pattern: String, boost: Float = 1.0f) extends Query
 
-  /** RegexpQuery over the term dictionary
-    * (/root/reference/src/Lucene.Net/Search/RegexpQuery.cs).
+  /** RegexpQuery over the term dictionary; the pattern matches the WHOLE
+    * term (/root/reference/src/Lucene.Net/Search/RegexpQuery.cs).
     */
   final case class Regexp(pattern: String, boost: Float = 1.0f) extends Query
 

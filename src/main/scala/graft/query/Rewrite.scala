@@ -1,8 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, levenshtein, lit}
-
 /** MultiTermQuery rewrite: lower multi-term leaves against a term dictionary,
   * with the reference's rewrite-method selection
   * (/root/reference/src/Lucene.Net/Search/MultiTermQuery.cs:65-121):
@@ -13,18 +10,17 @@ import org.apache.spark.sql.functions.{col, levenshtein, lit}
   *  - expansions PAST the cap switch to the constant-score filter rewrite
   *    (ConstantScoreAutoRewrite.cs:263): the leaf stays unexpanded, wrapped
   *    as [[Query.ConstantScore]] and executed as a term_id docset filter —
-  *    no driver-side term list at all;
+  *    no term list reaches the plan;
   *  - an in-cap expansion under MUST nests as a SHOULD group inside the
   *    boolean (BooleanQuery.cs rewrite of a MultiTermQuery clause), executed
   *    by the nested-group engine path; under MUST_NOT the flat union stays
   *    sound (excluding the union).
   *
-  * Shared by the batch [[Searcher]], the segmented snapshot reader and the
-  * BruteForce oracle — `expand(pred, maxTerms)` resolves a `term`-column
-  * predicate against the caller's dictionary (one parquet table, or the
-  * union across segments), returning UP TO maxTerms+1 rows (the +1 signals
-  * an overflow to [[harden]]), so expansions are identical wherever the
-  * terms live.
+  * Every leaf resolves against the view's driver-side dictionaries
+  * ([[IndexView.expand]], [[IndexView.fuzzyTop]]) — one segment or the
+  * merged union across segments, so expansions are identical wherever the
+  * terms live. An expansion asks for UP TO cap+1 terms; the +1 signals an
+  * overflow to [[harden]].
   */
 private[graft] object Rewrite {
 
@@ -45,94 +41,48 @@ private[graft] object Rewrite {
     case _ => false
   }
 
-  /** Prefix/range expansions are CONTIGUOUS in sorted term order, hence in
-    * dense term_id space — the docset filter can push an id interval to the
-    * scan instead of a semi-join.
-    */
-  def isContiguous(q: Query): Boolean = q match {
-    case _: Query.Prefix | _: Query.TermRange => true
-    case _ => false
-  }
-
-  /** Term-dictionary predicate + boost of a multi-term leaf. */
-  def pred(q: Query): (Column, Float) = q match {
-    case Query.Prefix(p, b) => (col("term").startsWith(p), b)
-    case Query.Wildcard(pat, b) =>
-      val sql = pat.replace("%", "\\%").replace("_", "\\_")
-        .replace('*', '%').replace('?', '_')
-      (col("term").like(sql), b)
-    case Query.Regexp(re, b) => (col("term").rlike(re), b)
-    case Query.TermRange(lo, hi, il, ih, b) =>
-      val lower = if (il) col("term") >= lo else col("term") > lo
-      val upper = if (ih) col("term") <= hi else col("term") < hi
-      (lower && upper, b)
+  /** The boost of a multi-term leaf. */
+  def boost(q: Query): Float = q match {
+    case Query.Prefix(_, b) => b
+    case Query.Wildcard(_, b) => b
+    case Query.Regexp(_, b) => b
+    case Query.TermRange(_, _, _, _, b) => b
     case other => throw new IllegalArgumentException(s"not a multi-term query: $other")
   }
 
-  /** Fuzzy top-N expansion: candidates at distance <= maxEdits ranked by
-    * similarity = 1 - d/min(|candidate|,|query|) (the reference's accept
-    * path, FuzzyTermsEnum.cs:419), ties by term, top maxExpansions kept
-    * (TopTermsRewrite boost heap); expanded boost = clause boost * sim.
-    *
-    * `fuzzyTop` ranks DISTRIBUTED (dictionary-side orderBy/limit — a
-    * TakeOrdered, never a full-dictionary collect) and returns the capped
-    * (term, distance) list; ranking by the double similarity is identical
-    * to the float32 boost ordering because the rationals 1 - d/m (d <= 2,
-    * m <= 255) are spaced >= 1/65025, far wider than either rounding.
+  /** The weighted terms of a multi-term or fuzzy leaf; None past the cap.
+    * Fuzzy keeps its top-N ([[IndexView.fuzzyTop]]) with boost = clause
+    * boost * (1 - d/min(|candidate|,|query|)). Ranking by the double
+    * similarity is identical to the float32 boost ordering because the
+    * rationals 1 - d/m (d <= 2, m <= 255) are spaced >= 1/65025, far wider
+    * than either rounding.
     */
-  def fuzzyExpansion(fuzzyTop: Query.Fuzzy => Seq[(String, Int)],
-                     f: Query.Fuzzy): Seq[(String, Float)] =
-    fuzzyTop(f).map { case (t, d) =>
-      (t, f.boost * (1.0f - d.toFloat / math.min(t.length, f.term.length)))
-    }
-
-  /** The shared distributed fuzzy ranking over a term-dictionary DataFrame:
-    * a length window (|len - |q|| <= maxEdits bounds levenshtein from below)
-    * prunes before the distance filter, then top-N by (similarity desc,
-    * term asc) with orderBy/limit.
-    */
-  def fuzzyTopIn(termdict: org.apache.spark.sql.DataFrame,
-                 f: Query.Fuzzy): Seq[(String, Int)] = {
-    import org.apache.spark.sql.functions.{abs, asc, desc, least, length}
-    val spark = termdict.sparkSession
-    import spark.implicits._
-    termdict
-      .filter(abs(length(col("term")) - lit(f.term.length)) <= f.maxEdits)
-      .withColumn("d", levenshtein(col("term"), lit(f.term)))
-      .filter(col("d") <= f.maxEdits)
-      .withColumn("sim",
-        lit(1.0) - col("d") / least(length(col("term")), lit(f.term.length)).cast("double"))
-      .orderBy(desc("sim"), asc("term"))
-      .limit(f.maxExpansions)
-      .select(col("term"), col("d").cast("int"))
-      .as[(String, Int)].collect().toSeq
+  def expansion(view: IndexView, q: Query): Option[Seq[(String, Float)]] = q match {
+    case f: Query.Fuzzy =>
+      Some(view.fuzzyTop(f).map { case (t, d) =>
+        (t, f.boost * (1.0f - d.toFloat / math.min(t.length, f.term.length)))
+      })
+    case mt =>
+      val ts = view.expand(mt, maxExpansions + 1)
+      if (ts.size > maxExpansions) None else Some(ts.map((_, boost(mt))))
   }
 
   /** Rewrite-method pre-pass over a boolean's clauses (see object doc).
     * Returns None when a MUST clause provably matches nothing (empty
     * expansion) — conjunction semantics empty the whole query.
     */
-  def harden(expand: (Column, Int) => Seq[String],
-             fuzzyTop: Query.Fuzzy => Seq[(String, Int)],
+  def harden(view: IndexView,
              cs: Seq[(Query.Occur, Query)]): Option[Seq[(Query.Occur, Query)]] = {
     val out = cs.map {
-      case (occ, mt) if isMultiTerm(mt) =>
-        val (p, b) = pred(mt)
-        val cap = maxExpansions
-        val ts = expand(p, cap)
-        if (ts.size > cap) (occ, Query.ConstantScore(mt, b))
-        else if (occ == Query.Must) {
-          if (ts.isEmpty) return None
-          (Query.Must: Query.Occur,
-            Query.BoolQ(ts.map(t =>
-              (Query.Should: Query.Occur, Query.Term(t, b): Query))): Query)
-        } else (occ, mt)
-      case (Query.Must, f: Query.Fuzzy) =>
-        val exp = fuzzyExpansion(fuzzyTop, f)
-        if (exp.isEmpty) return None
-        (Query.Must: Query.Occur,
-          Query.BoolQ(exp.map { case (t, b) =>
-            (Query.Should: Query.Occur, Query.Term(t, b): Query) }): Query)
+      case (occ, q) if isMultiTerm(q) || occ == Query.Must && q.isInstanceOf[Query.Fuzzy] =>
+        expansion(view, q) match {
+          case None => (occ, Query.ConstantScore(q, boost(q)))
+          case Some(exp) if occ == Query.Must =>
+            if (exp.isEmpty) return None
+            (occ, Query.BoolQ(exp.map { case (t, b) =>
+              (Query.Should: Query.Occur, Query.Term(t, b): Query) }))
+          case _ => (occ, q)
+        }
       case c => c
     }
     Some(out)
@@ -142,26 +92,16 @@ private[graft] object Rewrite {
     * semantics). Callers run [[harden]] first — by then every remaining
     * multi-term leaf is within the cap and none sits under MUST.
     */
-  def clauses(expand: (Column, Int) => Seq[String],
-              fuzzyTop: Query.Fuzzy => Seq[(String, Int)],
-              clauses: Seq[(Query.Occur, Query)]): Seq[(String, Query.Occur, Float)] = {
-    def expansion(q: Query): Seq[(String, Float)] = q match {
-      case mt if isMultiTerm(mt) =>
-        val (p, b) = pred(mt)
-        val cap = maxExpansions
-        val ts = expand(p, cap)
-        if (ts.size > cap)
-          throw new IllegalStateException(
-            s"flat lowering of an over-cap expansion — caller must harden() first: $q")
-        ts.map(t => (t, b))
-      case f: Query.Fuzzy => fuzzyExpansion(fuzzyTop, f)
-      case other =>
+  def clauses(view: IndexView,
+              cs: Seq[(Query.Occur, Query)]): Seq[(String, Query.Occur, Float)] =
+    cs.flatMap {
+      case (occ, Query.Term(t, b)) => Seq((t, occ, b))
+      case (occ, q) if isMultiTerm(q) || q.isInstanceOf[Query.Fuzzy] =>
+        expansion(view, q).getOrElse(throw new IllegalStateException(
+          s"flat lowering of an over-cap expansion — caller must harden() first: $q"))
+          .map { case (t, b) => (t, occ, b) }
+      case (_, other) =>
         throw new IllegalStateException(
           s"clause not executable in a flat boolean — caller must harden() first: $other")
     }
-    clauses.flatMap {
-      case (occ, Query.Term(t, b)) => Seq((t, occ, b))
-      case (occ, q) => expansion(q).map { case (t, b) => (t, occ, b) }
-    }
-  }
 }

@@ -69,27 +69,24 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   val stats: CollectionStats = view.stats
 
   /** Driver-side term lookup — the TermContext resolution analog
-    * (/root/reference/src/Lucene.Net/Search/TermQuery.cs:101-123): one tiny
-    * pushdown-pruned job for just the query's terms. On a streaming store
-    * `term_id` is the view's scan key, see [[IndexView.lookup]].
+    * (/root/reference/src/Lucene.Net/Search/TermQuery.cs:101-123): a binary
+    * search in each segment's in-memory dictionary, no Spark job once the
+    * view's dictionaries are loaded. On a streaming store `term_id` is the
+    * view's scan key, see [[IndexView.lookup]].
     */
   def lookup(terms: Seq[String]): Map[String, TermDictRow] = view.lookup(terms).rows
 
-  /** Expand a term-dictionary predicate to concrete terms (MultiTermQuery
-    * rewrite). `pred` is a Column over the `term` column. Returns up to
-    * maxTerms + 1 rows — the +1 row signals an over-cap expansion to
-    * [[Rewrite.harden]], which switches that leaf to the constant-score
-    * filter rewrite instead of expanding it.
+  /** Expand a multi-term leaf (prefix, wildcard, regexp, term range or
+    * fuzzy) to concrete terms against the in-memory dictionaries, no Spark
+    * job (MultiTermQuery rewrite). Fuzzy gives its ranked top-N; the others
+    * give up to maxTerms + 1 terms, ascending — the +1 term signals an
+    * over-cap expansion, which [[Rewrite.harden]] switches to the
+    * constant-score filter rewrite instead of expanding it.
     */
-  def expand(pred: org.apache.spark.sql.Column, maxTerms: Int = Query.MaxClauseCount): Seq[String] =
-    view.terms.filter(pred).select("term").as[String]
-      .orderBy("term").limit(maxTerms + 1).collect().toSeq
-
-  /** Distributed fuzzy top-N over the cached dictionaries (length-window
-    * pre-filter, TakeOrdered by similarity — the collect is bounded by
-    * maxExpansions, never by the candidate count).
-    */
-  def fuzzyTop(f: Query.Fuzzy): Seq[(String, Int)] = Rewrite.fuzzyTopIn(view.terms, f)
+  def expand(q: Query, maxTerms: Int = Query.MaxClauseCount): Seq[String] = q match {
+    case f: Query.Fuzzy => view.fuzzyTop(f).map(_._1)
+    case mt => view.expand(mt, maxTerms + 1)
+  }
 
   def search(q: Query, k: Int): DataFrame =
     view.live(scoreAll(q)).orderBy(desc("score"), asc("doc_id")).limit(k)
@@ -139,13 +136,13 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     case Query.ConstantScore(sub, boost) =>
       scoreAll(sub).select(col("doc_id"), lit(boost).cast("float").as("score"))
     case bq0: Query.BoolQ =>
-      Rewrite.harden(expand, fuzzyTop, bq0.clauses) match {
+      Rewrite.harden(view, bq0.clauses) match {
         case None => emptyResult // a MUST clause provably matches nothing
         case Some(cs) =>
           val bq = Query.BoolQ(cs, bq0.minShouldMatch, bq0.boost)
           if (bq.clauses.exists(c => isNested(c._2))) nestedScoreAll(bq)
           else {
-            val flat = clausesScoreAll(rewriteClauses(bq.clauses), bq.minShouldMatch)
+            val flat = clausesScoreAll(Rewrite.clauses(view, bq.clauses), bq.minShouldMatch)
             if (bq.boost == 1.0f) flat
             else flat.select(col("doc_id"), (col("score") * lit(bq.boost)).cast("float").as("score"))
           }
@@ -158,7 +155,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     * the same docset as a bitset).
     */
   private def multiTermDocs(mt: Query): DataFrame =
-    view.blocksWhere(Rewrite.pred(mt)._1, Rewrite.isContiguous(mt), ScoreBlock.cols) match {
+    view.blocksWhere(mt, ScoreBlock.cols) match {
       case None => emptyResult.select("doc_id")
       case Some(blocks) =>
         blocks.as[ScoreBlock]
@@ -257,9 +254,6 @@ final class Searcher(val spark: SparkSession, indexDir: String,
       }
       .toDF("doc_id", "score")
   }
-
-  private[graft] def rewriteClauses(clauses: Seq[(Query.Occur, Query)]): Seq[(String, Query.Occur, Float)] =
-    Rewrite.clauses(expand, fuzzyTop, clauses)
 
   /** Per-doc scored hits for the positive clauses + the boolean combine
     * over the shared clause plan ([[BlockCombine.Clauses]]).

@@ -300,7 +300,7 @@ object StreamingIndexer {
     tombDf.foreach(_.unpersist(blocking = false))
     IndexBuilder.buildFromRuns(newBase, IndexBuilder.Options())
     log.commit(snap.maxDoc, Some(newBase), Nil)
-    IndexView.release(spark, parts)
+    IndexView.release(parts)
   }
 
   /** Wire a streaming Dataset[Turn] into segment appends. Watermark bounds

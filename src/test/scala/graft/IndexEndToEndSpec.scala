@@ -133,6 +133,9 @@ class IndexEndToEndSpec extends AnyFunSuite {
     check(Query.parse("time^0.5 AND NOT person"))
     check(Query.parse("w00123*"))               // prefix expansion
     check(Query.parse("w0012?4"))               // wildcard expansion
+    check(Query.Regexp("0012"))                 // a regexp matches the whole term: none here
+    check(Query.Regexp("w0012[3-5]4"))          // whole-term regexp expansion
+    check(Query.Regexp("^w0012.4$"))            // explicit anchors change nothing
     check(Query.parse("time~1"))                // fuzzy distance 1
     check(Query.parse("index~"))                // fuzzy default distance 2, top-50 by sim
     check(Query.parse("[w001230 TO w001240]"))  // term range expansion

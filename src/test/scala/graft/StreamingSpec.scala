@@ -2,7 +2,7 @@ package graft
 
 import graft.build.IndexBuilder
 import graft.fixtures.Transcripts
-import graft.query.{Query, Searcher, WandSearcher}
+import graft.query.{IndexView, Query, Searcher, WandSearcher}
 import graft.streaming.{SegmentedSearcher, SnapshotLog, StreamingIndexer}
 import graft.verify.IndexVerifier
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -59,7 +59,14 @@ class StreamingSpec extends AnyFunSuite {
     Query.MultiPhrase(Seq(Seq("time", "year"), Seq("person"))),
     // many common terms per doc: float bits depend on the clause-sum order
     Query.Bool(should = Seq("way", "time", "year", "person", "day", "life", "world"))) ++
-    storeOnlyBefore
+    expansions ++ storeOnlyBefore
+
+  // multi-term leaves: each segment's dictionary matches, the union merges
+  private def expansions = Seq(
+    Query.Prefix("w00123"), Query.Wildcard("w0012?4"), Query.Regexp("w0012[3-5][0-9]"),
+    Query.TermRange("w001230", "w001240", includeLo = false), Query.Fuzzy("person", 1),
+    // thousands of w* terms, past the 1024 cap: the constant-score filter
+    Query.Prefix("w", 2.0f))
 
   // nested, MUST-side multi-term and filter-style shapes: a segmented store
   // could not run them before it shared the batch reader
@@ -121,22 +128,47 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("a term lookup on the 3-segment store runs one job, as on the batch index") {
+  test("a warm term lookup on the 3-segment store runs no job, as on the batch index") {
     val terms = Seq("time", "person", "w001234", "zzznope")
     val seg = new Searcher(spark, dirs._1)
     val batch = new Searcher(spark, dirs._2)
+    // the first use of a view loads its missing dictionaries; later ones are warm
+    Seq(seg, batch).foreach(_.lookup(Seq("time")))
     var a, b = Map.empty[String, graft.model.TermDictRow]
-    assert(jobsOf { a = seg.lookup(terms) } == 1)
-    assert(jobsOf { b = batch.lookup(terms) } == 1)
+    assert(jobsOf { a = seg.lookup(terms) } == 0)
+    assert(jobsOf { b = batch.lookup(terms) } == 0)
     // global statistics: summed df/ttf, max of the block-max metadata
     assert(a.keySet == Set("time", "person", "w001234"))
     assert(a.map { case (t, d) => t -> (d.df, d.ttf, d.max_tf, d.max_nb) } ==
       b.map { case (t, d) => t -> (d.df, d.ttf, d.max_tf, d.max_nb) })
-    // reopening reuses each segment's cached dictionary: nothing new stays
-    // cached per open
-    val cached = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach(_ => new Searcher(spark, dirs._1).lookup(terms))
-    assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    // every expansion and the over-cap filter's id resolution run no job,
+    // and the store's merged expansion equals the batch dictionary's
+    assert(batch.expand(Query.Prefix("w")).size > Query.MaxClauseCount)
+    expansions.foreach { q =>
+      var e, f = Seq.empty[String]
+      assert(jobsOf { e = seg.expand(q) } == 0, s"store expand $q")
+      assert(jobsOf { f = batch.expand(q) } == 0, s"batch expand $q")
+      assert(e.nonEmpty && e == f, s"$q\n store: $e\n batch: $f")
+    }
+    assert(jobsOf(seg.search(Query.ConstantScore(Query.Prefix("w"), 1.0f), 10)) == 0)
+    // reopening reuses each segment's dictionary
+    val reopened = new Searcher(spark, dirs._1)
+    assert(jobsOf(reopened.lookup(terms)) == 0)
+    // the dictionaries stay on the driver: a serialized searcher (what a
+    // task closure capturing it would ship, less the session) is smaller
+    // than 8 bytes a term
+    val nTerms = spark.read.parquet(s"${dirs._2}/termdict").count()
+    for (s <- Seq(seg, batch)) {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes) {
+        enableReplaceObject(true)
+        override def replaceObject(o: AnyRef): AnyRef =
+          if (o.isInstanceOf[org.apache.spark.sql.SparkSession]) null else o
+      }
+      out.writeObject(s)
+      out.close()
+      assert(bytes.size < 8 * nTerms, s"serialized searcher: ${bytes.size} bytes, $nTerms terms")
+    }
   }
 
   test("one small append runs 32 Spark jobs: a single build pass") {
@@ -151,10 +183,15 @@ class StreamingSpec extends AnyFunSuite {
     val before = new SegmentedSearcher(spark, dirs._1)
       .search(Query.Bool(should = Seq("time", "person")), 10)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val retired = new SnapshotLog(dirs._1, spark).latest().get
+    val terms = Seq("time", "person")
+    IndexView.of(spark, retired).lookup(terms)
     StreamingIndexer.compact(spark, dirs._1)
-    // the three retired segments' cached dictionaries are released
-    assert(spark.sparkContext.getPersistentRDDs.size == cached - 3)
+    // the three retired segments' dictionaries are released: reading them
+    // again loads all three in one job, and then none
+    val reread = IndexView.of(spark, retired)
+    assert(jobsOf(reread.lookup(terms)) == 1)
+    assert(jobsOf(reread.lookup(terms)) == 0)
     val snap = new SnapshotLog(dirs._1, spark).latest().get
     assert(snap.segments.isEmpty && snap.base.isDefined)
     assert(IndexVerifier.verify(spark, snap.base.get).isEmpty)
