@@ -4,20 +4,23 @@ import graft.codec.{PostingCodec, ScoreSpanBlock}
 import graft.model.TermDictRow
 import graft.score.Similarity
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
 
-/** Doc-range co-partitioned boolean combine — the multi-term scoring shuffle
+/** Doc-range co-partitioned boolean combine — the multi-term scoring pass
   * behind the exhaustive and block-max term searchers, as ONE kernel.
   *
   * The sorted-row fold this replaces shuffled one decoded row per posting
-  * (doc_id, term_id, score). Here each packed scoring block ships whole,
+  * (doc_id, term_id, score). Here each packed scoring block travels whole,
   * keyed by the doc-range bucket(s) it overlaps (the [[PositionalScan]]
-  * layout applied to the scoring projection: ~128x fewer shuffle rows,
-  * FOR-packed bytes on the wire), and is decoded + scored reduce-side,
-  * doc-at-a-time per bucket, streaming: shuffle-read, decode and accumulate
-  * overlap block-at-a-time (a buffered-bucket variant measured ~30% slower
-  * by serializing read and decode).
+  * layout applied to the scoring projection: ~128x fewer rows, FOR-packed
+  * bytes), and is decoded + scored doc-at-a-time per bucket, streaming:
+  * read, decode and accumulate overlap block-at-a-time (a buffered-bucket
+  * variant measured ~30% slower by serializing read and decode). Where the
+  * buckets meet is [[PositionalScan.byBucket]]'s one rule: a small query's
+  * scan ([[IndexView.oneTask]]) runs the combine in its own task, with no
+  * exchange, so one partition sees every block of the query (the tightest
+  * [[KthBest]] floor); a larger one shuffles blocks by bucket and combines
+  * reduce-side.
   *
   * Float32 canonical order is preserved structurally: each doc accumulates
   * its clause scores in a per-doc slot array indexed by the compact term
@@ -74,18 +77,17 @@ import org.apache.spark.util.LongAccumulator
   *
   * Memory: a bucket spans maxDoc/shuffle-partitions doc ids, so per-task
   * state is bounded by bucket width (and by the lead df under a MUST);
-  * state is released at every bucket boundary. Sizing
-  * spark.sql.shuffle.partitions to the corpus (as on any shuffle) bounds it
-  * at cluster scale.
+  * state is released at every bucket boundary, also when one task runs
+  * every bucket of a small query. Sizing spark.sql.shuffle.partitions to
+  * the corpus (as on any shuffle) bounds it at cluster scale.
   */
 object BlockCombine {
 
-  /** A packed scoring block tagged with shuffle bucket, establishment rank
+  /** A packed scoring block tagged with its bucket, establishment rank
     * and the query-local compact term index (ascending ti == the canonical
-    * clause order; resolved before the shuffle union, so segment-local
-    * term_ids are fine), plus its doc-range end and block-max metadata
-    * (max_tf, max_nb) so the reduce side can bound and leapfrog it without
-    * decoding.
+    * clause order; resolved at the scan, so segment-local term_ids are
+    * fine), plus its doc-range end and block-max metadata (max_tf, max_nb)
+    * so the combine can bound and leapfrog it without decoding.
     */
   final case class Block(bucket: Long, rank: Int, ti: Int, first_doc: Long,
                          last_doc: Long, cnt: Int, doc_bytes: Array[Byte],
@@ -147,14 +149,19 @@ object BlockCombine {
     val ranks: Array[Int] = tids.indices.map(ti =>
       if (isNot(ti)) 1 else lead.fold(0)(l => if (tids(ti) == l.term_id) 0 else 1)).toArray
 
-    /** The clause blocks tagged for [[combine]]. When the lead is selective
-      * (df <= [[Searcher.phraseLeadMaxDf]]), its block ranges prune every
-      * other term's blocks before the shuffle.
+    /** Whether the clause blocks scan in one task ([[IndexView.oneTask]]). */
+    def oneTask(view: IndexView): Boolean = view.oneTask(ts, tids.toSeq)
+
+    /** The clause blocks tagged for [[combine]]. When the scan takes more
+      * than one task and the lead is selective (df <=
+      * [[Searcher.phraseLeadMaxDf]]), its block ranges prune every other
+      * term's blocks before the shuffle; in one task the combine's leapfrog
+      * does that work with no collect.
       */
-    def blocks(spark: SparkSession, view: IndexView, width: Long): Dataset[Block] = {
+    def blocks(spark: SparkSession, view: IndexView, width: Long, oneTask: Boolean): Dataset[Block] = {
       import spark.implicits._
       var scan = view.blocks(ts, tids.toSeq, ScoreSpanBlock.cols).as[ScoreSpanBlock]
-      lead.filter(l => l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
+      lead.filter(l => !oneTask && l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
         val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(l.term_id)))
         scan = scan.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
       }
@@ -212,20 +219,19 @@ object BlockCombine {
   /** Combine tagged blocks into per-doc boolean-filtered scores.
     * `scorers(ti)` scores that clause's postings (null => MUST_NOT:
     * presence-only); `isMust(ti)`/`isNot(ti)` classify; `nMust` counts
-    * distinct MUST clauses; `mm` is minimum-should-match. With `prune`, the
-    * bound skips and the MaxScore establishment rule of the object doc
-    * apply, and every bucket copy counts as skipped or scanned.
+    * distinct MUST clauses; `mm` is minimum-should-match; `oneTask` is the
+    * scan's [[IndexView.oneTask]]. With `prune`, the bound skips and the
+    * MaxScore establishment rule of the object doc apply, and every bucket
+    * copy counts as skipped or scanned.
     */
   def combine(spark: SparkSession, blocks: Dataset[Block],
               scorers: Array[Similarity.TermScorer], isMust: Array[Boolean],
-              isNot: Array[Boolean], nMust: Int, mm: Int, width: Long,
+              isNot: Array[Boolean], nMust: Int, mm: Int, width: Long, oneTask: Boolean,
               prune: Option[Prune] = None): Dataset[(Long, Float)] = {
     import spark.implicits._
     val nTis = scorers.length
     val pr = prune.orNull
-    blocks
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "rank", "ti")
+    PositionalScan.byBucket(blocks, oneTask, "bucket", "rank", "ti")
       .mapPartitions { it =>
         val best = if (pr == null) null else new KthBest(pr.k, pr.theta0)
         val suffix = if (pr == null) null else pr.suffix.orNull

@@ -24,7 +24,17 @@ import scala.reflect.runtime.universe.TypeTag
   * Every segment's term dictionary is held on the driver, sorted by term_id
   * (one load job per new segment set, shared by every view of the
   * directory): [[lookup]], [[expand]], [[fuzzyTop]] and [[blocksWhere]]
-  * resolve terms with binary searches and scans over it, never a job.
+  * resolve terms with binary searches and scans over it, never a job. Next
+  * to it sits the segment's postings file list with each file's term_id
+  * range (the postings table is range-partitioned by term_id at build time,
+  * S4), so a scan opens only the files that can hold its terms — the
+  * in-memory terms index resolving a term to its file block
+  * (BlockTreeTermsReader).
+  *
+  * A scan whose pruned files fit one file split
+  * (`spark.sql.files.maxPartitionBytes`) is [[oneTask]]: it reads in one
+  * partition, and the combine kernels run in that same task with no
+  * exchange — a small query is one Spark job with one task.
   *
   * Term ids are segment-local, so [[lookup]] hands out scan KEYS and
   * [[blocks]] rewrites every segment's term ids to them: the scoring
@@ -33,29 +43,32 @@ import scala.reflect.runtime.universe.TypeTag
   * segment. A one-segment view keys by the segment's own term ids and scans
   * its postings unchanged, so the batch plan gains no job and no operator.
   */
-final class IndexView private (spark: SparkSession, val segments: Seq[String],
+final class IndexView private (@transient spark: SparkSession, val segments: Seq[String],
                                tombDirs: Seq[String]) extends Serializable {
   import spark.implicits._
-  import IndexView.{Terms, cut, matching, utf8}
+  import IndexView.{PostingsFile, Terms, cut, matching, named, utf8}
 
   private val single = segments.size == 1
 
   /** Element-wise sums of the per-segment stats tables (one job). */
   lazy val stats: CollectionStats = {
-    val per = segments.map(IndexView.table[CollectionStats](spark, _, "stats").as[CollectionStats])
-      .reduce(_ union _).collect()
+    val per = named(spark, "graft: collection stats") {
+      segments.map(IndexView.table[CollectionStats](spark, _, "stats").as[CollectionStats])
+        .reduce(_ union _).collect()
+    }
     CollectionStats(per.map(_.max_doc).sum, per.map(_.doc_count).sum,
       per.map(_.sum_ttf).sum, per.map(_.sum_df).sum)
   }
 
   // One relation (and one file listing) per segment reused across queries:
   // at cluster scale, listing the postings table again per query is a
-  // hotspot.
-  private lazy val postings: IndexedSeq[DataFrame] =
+  // hotspot. The relations, dictionaries and file ranges are driver-only: a
+  // task closure that captures the view never ships them.
+  @transient private lazy val postings: IndexedSeq[DataFrame] =
     segments.map(IndexView.table[PostingBlock](spark, _, "postings")).toIndexedSeq
-  // driver-only: a task closure that captures the view never ships it
-  @transient private lazy val dicts: IndexedSeq[Array[TermDictRow]] =
-    IndexView.dictionaries(spark, segments)
+  @transient private lazy val loaded: IndexedSeq[IndexView.Segment] =
+    IndexView.load(spark, segments)
+  @transient private lazy val dicts: IndexedSeq[Array[TermDictRow]] = loaded.map(_.dict)
 
   /** TermContext resolution: a binary search in every segment's dictionary,
     * no job. Each found term gets its global df/ttf (summed), max_tf/max_nb
@@ -118,46 +131,85 @@ final class IndexView private (spark: SparkSession, val segments: Seq[String],
     * term list (the CONSTANT_SCORE filter rewrite,
     * Lucene.Net/Search/ConstantScoreAutoRewrite.cs:263). Term ids ascend
     * with the term, so each segment's scan prunes by its matched id
-    * interval, and only a gapped match (wildcard/regexp) also filters by
-    * the matched ids. None when no term matches.
+    * interval (files and row groups), and only a gapped match
+    * (wildcard/regexp) also filters by the matched ids. None when no term
+    * matches.
     */
-  def blocksWhere(q: Query, cols: Seq[String]): Option[DataFrame] =
-    postings.indices.flatMap { s =>
+  def blocksWhere(q: Query, cols: Seq[String]): Option[DataFrame] = {
+    val scans = postings.indices.flatMap { s =>
       val ids = matching(q, dicts(s)).map(_.term_id).toArray
       if (ids.isEmpty) None
       else {
-        val b = postings(s).filter(col("term_id").between(ids.head, ids.last))
-        Some((if (ids.last - ids.head + 1 == ids.length) b else b.filter(col("term_id").isin(ids: _*)))
-          .select(cols.map(col): _*))
-      }
-    }.reduceOption(_ union _)
-
-  /** The posting blocks of the given keys (from `ts`), projected to `cols`,
-    * as one relation: each segment's scan is pruned by its own term ids
-    * (Parquet row-group min/max act as the term index) and its `term_id`
-    * column rewritten to the key.
-    */
-  def blocks(ts: Terms, keys: Seq[Long], cols: Seq[String]): DataFrame = {
-    val scans = postings.indices.flatMap { s =>
-      val idToKey = keys.flatMap(k => ts.segIds.get(k).map(_(s) -> k)).filter(_._1 >= 0)
-      if (idToKey.isEmpty) None
-      else {
-        val key = if (single) col("term_id")
-          else element_at(typedLit(idToKey.toMap), col("term_id"))
-        Some(postings(s).filter(col("term_id").isin(idToKey.map(_._1): _*))
-          .select(cols.map(c => if (c == "term_id") key.as(c) else col(c)): _*))
+        val files = loaded(s).files.toSeq.filter(f => f.lo <= ids.last && ids.head <= f.hi)
+        val b = scan(s, files).filter(col("term_id").between(ids.head, ids.last))
+        Some((files, (if (ids.last - ids.head + 1 == ids.length) b else b.filter(col("term_id").isin(ids: _*)))
+          .select(cols.map(col): _*)))
       }
     }
-    scans.reduceOption(_ union _)
+    scans.map(_._2).reduceOption(_ union _).map(inOneTask(scans.flatMap(_._1), _))
+  }
+
+  /** The posting blocks of the given keys (from `ts`), projected to `cols`,
+    * as one relation: each segment's scan reads only the files whose term
+    * range holds one of its term ids, is pruned by those ids (Parquet
+    * row-group min/max act as the block index) and has its `term_id` column
+    * rewritten to the key. A [[oneTask]] scan comes in one partition.
+    */
+  def blocks(ts: Terms, keys: Seq[Long], cols: Seq[String]): DataFrame = {
+    val parts = pruned(ts, keys)
+    val scans = parts.map { case (s, idToKey, files) =>
+      val key = if (single) col("term_id")
+        else element_at(typedLit(idToKey.toMap), col("term_id"))
+      scan(s, files).filter(col("term_id").isin(idToKey.map(_._1): _*))
+        .select(cols.map(c => if (c == "term_id") key.as(c) else col(c)): _*)
+    }
+    scans.reduceOption(_ union _).map(inOneTask(parts.flatMap(_._3), _))
       .getOrElse(postings.head.select(cols.map(col): _*).limit(0))
   }
 
+  /** The small-query rule, shared by every kernel: the postings files that
+    * can hold the keys fit one file split (`spark.sql.files.maxPartitionBytes`,
+    * the budget Spark itself packs small files into a split by). Such a scan
+    * reads in ONE task, and [[BlockCombine.combine]] and
+    * [[PositionalScan.score]] run in that task with no exchange; the
+    * driver-side lead-range and theta-seed jobs are skipped, since the task
+    * sees every block of the query anyway. Larger scans keep the bucket
+    * exchange and its prefilters.
+    */
+  def oneTask(ts: Terms, keys: Seq[Long]): Boolean = fits(pruned(ts, keys).flatMap(_._3))
+
+  private def fits(files: Seq[PostingsFile]): Boolean =
+    files.iterator.map(_.bytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes
+
+  private def inOneTask(files: Seq[PostingsFile], df: DataFrame): DataFrame =
+    if (fits(files)) df.coalesce(1) else df
+
+  /** Per segment holding one of the keys: (segment, its (id, key) pairs, the
+    * postings files whose term range holds one of those ids).
+    */
+  private def pruned(ts: Terms, keys: Seq[Long]): Seq[(Int, Seq[(Long, Long)], Seq[PostingsFile])] =
+    postings.indices.flatMap { s =>
+      val idToKey = keys.flatMap(k => ts.segIds.get(k).map(_(s) -> k)).filter(_._1 >= 0)
+      if (idToKey.isEmpty) None
+      else Some((s, idToKey, loaded(s).files.toSeq.filter(f =>
+        idToKey.exists { case (id, _) => f.lo <= id && id <= f.hi })))
+    }
+
+  /** Segment `s`'s postings restricted to `files`: a filter on the file
+    * name, which Spark applies when it lists the (cached) file index, so the
+    * other files are never opened.
+    */
+  private def scan(s: Int, files: Seq[PostingsFile]): DataFrame =
+    postings(s).filter(col("_metadata.file_name").isin(files.map(_.name): _*))
+
   /** Merged doc ranges of the keys' blocks — skip metadata only, df/128
-    * rows per term — for the lead-term block filter.
+    * rows per term — for the lead-term block filter of a query too large
+    * for [[oneTask]].
     */
   def docRanges(ts: Terms, keys: Seq[Long]): PositionalScan.Intervals =
-    PositionalScan.Intervals.merge(
-      blocks(ts, keys, Seq("first_doc", "last_doc")).as[(Long, Long)].collect())
+    PositionalScan.Intervals.merge(named(spark, "graft: lead block ranges") {
+      blocks(ts, keys, Seq("first_doc", "last_doc")).as[(Long, Long)].collect()
+    })
 
   /** One row per doc (the norms sidecar), for MatchAllDocsQuery. */
   def docIds: DataFrame =
@@ -165,16 +217,23 @@ final class IndexView private (spark: SparkSession, val segments: Seq[String],
 
   /** Dead docs (the snapshot's tombstone tables, the liveDocs-bitset analog,
     * Lucene.Net/Codecs/LiveDocsFormat.cs), applied liveDocs-style as a
-    * pre-top-k anti-join. Like the reference, collection and term statistics
-    * keep counting buried docs until compaction purges them
+    * pre-top-k filter. A snapshot never changes, so its dead ids load once
+    * per view (one job, on first use) into a sorted array shipped to tasks
+    * as one broadcast: a query then runs no job and no exchange for them.
+    * Like the reference, collection and term statistics keep counting
+    * buried docs until compaction purges them
     * ([[graft.streaming.StreamingIndexer.compact]]).
     */
-  private lazy val dead: Option[DataFrame] =
-    if (tombDirs.isEmpty) None
-    else Some(tombDirs.map(spark.read.parquet(_).select("doc_id")).reduce(_ union _).distinct())
+  @transient private lazy val isLive = {
+    val dead = named(spark, "graft: load tombstones") {
+      tombDirs.map(spark.read.parquet(_).select("doc_id")).reduce(_ union _).as[Long].collect()
+    }.distinct.sorted
+    val b = spark.sparkContext.broadcast(dead)
+    udf((d: Long) => java.util.Arrays.binarySearch(b.value, d) < 0)
+  }
   def hasTombstones: Boolean = tombDirs.nonEmpty
   def live(df: DataFrame): DataFrame =
-    dead.map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
+    if (tombDirs.isEmpty) df else df.filter(isLive(col("doc_id")))
 }
 
 object IndexView {
@@ -196,34 +255,84 @@ object IndexView {
   def of(spark: SparkSession, snap: graft.streaming.SnapshotLog#Snapshot): IndexView =
     new IndexView(spark, snap.base.toSeq ++ snap.segments, snap.tombs)
 
-  /** Segment dictionaries by directory, each sorted by term_id — which is
-    * ascending term in Spark's binary UTF-8 order. The dictionary is
-    * metadata-sized (the reference holds its terms index in RAM,
-    * BlockTreeTermsWriter.cs:57) and segment directories are write-once, so
-    * every view of a directory shares one entry until compaction
-    * [[release]]s the segments it retires.
+  /** One postings file of a segment: its name, its bytes and the term_id
+    * range its blocks hold.
     */
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, Array[TermDictRow]]()
+  private[query] final case class PostingsFile(name: String, bytes: Long, lo: Long, hi: Long)
 
-  /** The dictionaries of `dirs`, loading every missing one in one job. */
-  private def dictionaries(spark: SparkSession, dirs: Seq[String]): IndexedSeq[Array[TermDictRow]] = {
+  /** A segment's terms index: its dictionary sorted by term_id — which is
+    * ascending term in Spark's binary UTF-8 order — and its postings files.
+    */
+  private[query] final case class Segment(dict: Array[TermDictRow], files: Array[PostingsFile])
+
+  /** Terms indexes by directory. The dictionary is metadata-sized (the
+    * reference holds its terms index in RAM, BlockTreeTermsWriter.cs:57)
+    * and segment directories are write-once, so every view of a directory
+    * shares one entry until compaction [[release]]s the segments it
+    * retires.
+    */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Segment]()
+
+  // one row of the load job: a dictionary row or a partial file range
+  private[query] final case class Loaded(seg: Int, row: TermDictRow, file: PostingsFile)
+
+  /** The terms indexes of `dirs`, loading every missing one in one job: the
+    * dictionaries, and each postings file's term range as per-partition
+    * partial min/max of its `term_id` column (no exchange; the driver merges
+    * the partials). Reading Parquet footers on the driver instead costs a
+    * file open per postings file on every segment an append adds.
+    */
+  private def load(spark: SparkSession, dirs: Seq[String]): IndexedSeq[Segment] = {
     import spark.implicits._
-    val have = dirs.distinct.map(d => d -> loaded.get(d)).toMap
+    val have = dirs.distinct.map(d => d -> cache.get(d)).toMap
     val missing = have.collect { case (d, null) => d }.toIndexedSeq
-    val fresh = if (missing.isEmpty) Map.empty[String, Array[TermDictRow]] else {
-      val bySeg = missing.indices.map { i =>
+    val fresh = if (missing.isEmpty) Map.empty[String, Segment] else {
+      val noFile = lit(null).cast(Encoders.product[PostingsFile].schema)
+      val rows = missing.indices.map { i =>
         table[TermDictRow](spark, missing(i), "termdict")
-          .select(lit(i).as("_1"), struct(col("*")).as("_2"))
-      }.reduce(_ union _).as[(Int, TermDictRow)].collect().groupMap(_._1)(_._2)
-      missing.indices.map(i =>
-        missing(i) -> bySeg.getOrElse(i, Array.empty[TermDictRow]).sortBy(_.term_id)).toMap
+          .select(lit(i).as("seg"), struct(col("*")).as("row"), noFile.as("file"))
+      }.reduce(_ union _).as[Loaded]
+      val ranges = missing.indices.map { i =>
+        table[PostingBlock](spark, missing(i), "postings")
+          .select(lit(i), col("_metadata.file_name"), col("_metadata.file_size"), col("term_id"))
+      }.reduce(_ union _).as[(Int, String, Long, Long)].mapPartitions { it =>
+        val m = scala.collection.mutable.LinkedHashMap[(Int, String), PostingsFile]()
+        it.foreach { case (s, name, bytes, id) =>
+          val f = m.getOrElseUpdate((s, name), PostingsFile(name, bytes, id, id))
+          if (id < f.lo || id > f.hi)
+            m((s, name)) = f.copy(lo = math.min(f.lo, id), hi = math.max(f.hi, id))
+        }
+        m.iterator.map { case ((s, _), f) => Loaded(s, null, f) }
+      }
+      val all = named(spark, "graft: load term dictionaries and postings file ranges") {
+        rows.union(ranges).collect()
+      }
+      val bySeg = all.groupBy(_.seg)
+      missing.indices.map { i =>
+        val got = bySeg.getOrElse(i, Array.empty[Loaded])
+        val files = got.flatMap(l => Option(l.file)).groupBy(_.name).values.map(fs =>
+          PostingsFile(fs.head.name, fs.head.bytes, fs.map(_.lo).min, fs.map(_.hi).max))
+        missing(i) -> Segment(got.flatMap(l => Option(l.row)).sortBy(_.term_id),
+          files.toArray.sortBy(_.lo))
+      }.toMap
     }
-    fresh.foreach { case (d, rows) => loaded.put(d, rows) }
+    fresh.foreach { case (d, seg) => cache.put(d, seg) }
     dirs.map(d => fresh.getOrElse(d, have(d))).toIndexedSeq
   }
 
-  /** Drop the dictionaries of segments no snapshot references any more. */
-  def release(dirs: Seq[String]): Unit = dirs.foreach(loaded.remove)
+  /** Drop the terms indexes of segments no snapshot references any more. */
+  def release(dirs: Seq[String]): Unit = dirs.foreach(cache.remove)
+
+  /** Run `body` with `what` as the description of the Spark jobs it starts,
+    * so listeners and event logs name the library's own jobs; the caller's
+    * description is restored afterwards.
+    */
+  private[query] def named[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty("spark.job.description", saved) // null unsets
+  }
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 

@@ -11,18 +11,21 @@ import org.apache.spark.sql.functions.col
   * one relation of blocks whose doc ids are unique across segments).
   *
   * The postings table is term-partitioned, so aligning positions across the
-  * phrase's terms needs a shuffle keyed by doc. Shuffling DECODED rows (one
-  * per posting, carrying an Array[Int] of positions) is ~128x more rows and
-  * ~4-8x more bytes than the source blocks; instead each packed block ships
-  * whole, keyed by the doc-range bucket(s) [first_doc/R, last_doc/R] it
-  * overlaps (R sized so ~one bucket per shuffle partition), and is decoded
-  * doc-at-a-time on the reduce side — the distributed analog of
-  * ExactPhraseScorer's per-doc cursor alignment
+  * phrase's terms needs the blocks of one doc range together. Shuffling
+  * DECODED rows (one per posting, carrying an Array[Int] of positions) is
+  * ~128x more rows and ~4-8x more bytes than the source blocks; instead each
+  * packed block travels whole, keyed by the doc-range bucket(s)
+  * [first_doc/R, last_doc/R] it overlaps (R sized so ~one bucket per shuffle
+  * partition), and is decoded doc-at-a-time per bucket — the distributed
+  * analog of ExactPhraseScorer's per-doc cursor alignment
   * (/root/reference/src/Lucene.Net/Search/ExactPhraseScorer.cs:237-349),
   * with the flat skip-list metadata (first_doc/last_doc) doing double duty
   * as the partitioner key. A dense block overlaps 1-2 buckets; a sparse
   * (rare-term) block may replicate to several, but rare terms have few
   * blocks, so replication is bounded by min(df/128, nBuckets) small rows.
+  * [[byBucket]] is the one place that groups blocks by bucket: a
+  * [[IndexView.oneTask]] scan sorts them in its own task with no exchange;
+  * a larger one goes through the bucket exchange.
   *
   * Scoring matches the decoded-row fold it replaces bit-for-bit: one norm
   * byte per doc (norms are per-doc, identical across a doc's term rows),
@@ -33,10 +36,11 @@ import org.apache.spark.sql.functions.col
   */
 object PositionalScan {
 
-  /** A packed positions block tagged with its shuffle bucket and the
-    * query-local compact term index `ti` (term_ids are index-local, so the
-    * tag is resolved BEFORE the shuffle). `rank` is 0 for the rarest slot's terms and 1
-    * otherwise: partitions sort on (bucket, rank), so the reduce-side pass
+  /** A packed positions block tagged with its bucket and the
+    * query-local compact term index `ti` (term_ids are segment-local, so the
+    * tag is resolved BEFORE blocks of several segments meet). `rank` is 0 for
+    * the rarest slot's terms and 1
+    * otherwise: partitions sort on (bucket, rank), so the per-bucket pass
     * streams the lead slot FIRST and every other term attaches only to docs
     * the lead slot established — the per-doc state is sized by the rarest
     * df, not the union, and non-candidate postings skip position decoding
@@ -52,26 +56,34 @@ object PositionalScan {
     math.max(1L, (maxDoc + n) / n)
   }
 
+  /** Tagged blocks grouped by bucket and sorted by `order` within each
+    * partition, for a doc-at-a-time pass per bucket: a one-task scan
+    * ([[IndexView.oneTask]]) sorts in its own task, with no exchange and no
+    * adaptive re-plan, so every bucket flushes through one partition's
+    * state; otherwise blocks repartition by bucket.
+    */
+  def byBucket[T](blocks: Dataset[T], oneTask: Boolean, order: String*): Dataset[T] =
+    (if (oneTask) blocks.coalesce(1) else blocks.repartition(col("bucket")))
+      .sortWithinPartitions(order.map(col): _*)
+
   /** Buckets a block overlaps (inclusive range of bucket ids). */
   def buckets(firstDoc: Long, lastDoc: Long, width: Long): Iterator[Long] =
     Iterator.range(firstDoc / width, lastDoc / width + 1)
 
   private final class DocState(val nb: Byte, val pos: Array[Array[Int]])
 
-  /** Score tagged blocks: one shuffle of packed blocks, one reduce-side
-    * doc-at-a-time pass. `slotIdx(s)` lists the compact term indices whose
-    * position lists union into phrase slot s; `nTis` is the compact index
-    * count; `width` must match the bucketing used to tag.
+  /** Score tagged blocks: packed blocks grouped by bucket ([[byBucket]]),
+    * one doc-at-a-time pass. `slotIdx(s)` lists the compact term indices
+    * whose position lists union into phrase slot s; `nTis` is the compact
+    * index count; `width` must match the bucketing used to tag.
     */
   def score(spark: SparkSession, blocks: Dataset[Tagged], nTis: Int,
             slotIdx: Array[Array[Int]], width: Long, slop: Int,
-            weightValue: Float, cache: Array[Float]): Dataset[(Long, Float)] = {
+            weightValue: Float, cache: Array[Float], oneTask: Boolean): Dataset[(Long, Float)] = {
     import spark.implicits._
     val nSlots = slotIdx.length
     val bSlots = spark.sparkContext.broadcast(slotIdx)
-    blocks
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "rank")
+    byBucket(blocks, oneTask, "bucket", "rank")
       .mapPartitions { it =>
         val slots = bSlots.value
         val perDoc = new scala.collection.mutable.LongMap[DocState]()
@@ -173,7 +185,8 @@ object PositionalScan {
       c.toFloat
     } else SloppyPhrase.freq(cp, slop, slotTerms)
 
-  /** Merged sorted intervals for the lead-with-rarest-term block filter:
+  /** Merged sorted intervals for the lead-with-rarest-term block filter of a
+    * query too large for one task:
     * collect the rarest slot's (first_doc, last_doc) block ranges (bounded:
     * df/128 rows, only taken when df is small), merge, and prune every other
     * term's blocks to those overlapping — the conjunction lead-term order of

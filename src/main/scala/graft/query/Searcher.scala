@@ -11,10 +11,11 @@ import Searcher.payloadDocScore
   * (read through an [[IndexView]]) — the read path (IndexSearcher.Search
   * semantics, SURVEY.md §3.1) as one declarative DataFrame plan per query:
   *
-  *   postings pruned by term_id (Parquet row-group min/max act as the term
-  *   index) -> decode + score (shared float32 Bm25 kernel) -> boolean combine
-  *   in a typed group (clause scores summed in ascending term_id order,
-  *   the documented canonical order) -> orderBy(score desc, doc_id asc)
+  *   postings pruned by term_id (files by their term range, then Parquet
+  *   row-group min/max) -> decode + score (shared float32 Bm25 kernel) ->
+  *   boolean combine ([[BlockCombine]]: clause scores summed in ascending
+  *   term_id order, the documented canonical order; in the scan's own task
+  *   for a small query) -> orderBy(score desc, doc_id asc)
   *   limit k, which Catalyst plans as TakeOrderedAndProject — structurally
   *   the reference's per-leaf heaps + TopDocs.Merge with the HitQueue
   *   tie-break (score desc, then smaller docID;
@@ -59,7 +60,7 @@ object Searcher {
   }
 }
 
-final class Searcher(val spark: SparkSession, indexDir: String,
+final class Searcher(@transient val spark: SparkSession, indexDir: String,
                      similarity: graft.score.Similarity = graft.score.Bm25Similarity)
     extends Serializable {
   import spark.implicits._
@@ -287,8 +288,9 @@ final class Searcher(val spark: SparkSession, indexDir: String,
           scoredHits(p.ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
         } else {
           val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-          BlockCombine.combine(spark, p.blocks(spark, view, width),
-            p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width)
+          val one = p.oneTask(view)
+          BlockCombine.combine(spark, p.blocks(spark, view, width, one),
+            p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width, one)
         }
       combined.toDF("doc_id", "score")
     }
@@ -318,14 +320,15 @@ final class Searcher(val spark: SparkSession, indexDir: String,
   /** Native positional search from the positions index (ExactPhraseScorer /
     * SloppyPhraseScorer / MultiPhraseQuery semantics, see [[Query.Phrase]] /
     * [[Query.MultiPhrase]]): one positions-column scan pruned to the
-    * phrase's terms, blocks shipped PACKED through a doc-range-bucketed
-    * shuffle, decoded doc-at-a-time reduce-side (the [[PositionalScan]]
-    * kernel), then BM25 with freq = phrase frequency and weight = summed
-    * idf in canonical order
+    * phrase's terms, blocks kept PACKED and grouped by doc-range bucket
+    * (in the scan's task for a small query, else through a shuffle),
+    * decoded doc-at-a-time (the [[PositionalScan]] kernel), then BM25 with
+    * freq = phrase frequency and weight = summed idf in canonical order
     * (/root/reference/src/Lucene.Net/Search/PhraseQuery.cs,
-    * MultiPhraseQuery.cs weight construction). When the rarest slot is
-    * selective its block ranges prune the other terms' blocks up front
-    * (lead-term conjunction order, ExactPhraseScorer.cs:118).
+    * MultiPhraseQuery.cs weight construction). When the scan takes more
+    * than one task and the rarest slot is selective, its block ranges prune
+    * the other terms' blocks up front (lead-term conjunction order,
+    * ExactPhraseScorer.cs:118).
     */
   private def positionalScoreAll(slots: Seq[Seq[String]], slop: Int,
                                  boost: Float): DataFrame = {
@@ -350,16 +353,18 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     val tiOf: Map[Long, Int] = ids.sorted.zipWithIndex.toMap
     val slotIdx: Array[Array[Int]] = slotTids.map(_.map(tiOf))
     val width = PositionalScan.bucketWidth(spark, stats.max_doc)
+    val one = view.oneTask(ts, ids)
 
     var blocks = view.blocks(ts, ids, PosSpanBlock.cols).as[PosSpanBlock]
 
-    // lead slot = rarest (fewest total postings); its terms stream first on
-    // the reduce side (rank 0), and when it is selective enough its block
-    // ranges also prune the other terms' blocks up front
+    // lead slot = rarest (fewest total postings); its terms stream first in
+    // each bucket (rank 0), and when the scan takes several tasks and the
+    // lead is selective enough its block ranges also prune the other
+    // terms' blocks up front
     val slotDf: Array[Long] = slotTids.map(_.map(tid => idByTerm(tid).df).sum)
     val minDf = slotDf.min
     val leadTis: Set[Int] = slotIdx(slotDf.indexOf(minDf)).toSet
-    if (minDf <= Searcher.phraseLeadMaxDf && slotDf.exists(_ > minDf)) {
+    if (!one && minDf <= Searcher.phraseLeadMaxDf && slotDf.exists(_ > minDf)) {
       val leadTids = slotTids(slotDf.indexOf(minDf)).toSeq
       val bIv = spark.sparkContext.broadcast(view.docRanges(ts, leadTids))
       blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
@@ -376,7 +381,7 @@ final class Searcher(val spark: SparkSession, indexDir: String,
     }
 
     PositionalScan.score(spark, tagged, ids.size, slotIdx, width,
-      slop, weightValue, cache).toDF("doc_id", "score")
+      slop, weightValue, cache, one).toDF("doc_id", "score")
   }
 
   /** PayloadTermQuery execution (see [[Query.PayloadTerm]]): one pruned scan

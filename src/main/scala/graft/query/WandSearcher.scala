@@ -52,7 +52,7 @@ import WandSearcher.{offerScores, scorer, ubD, ubFn}
   * doc) gives the smallest cache value (block-max metadata laid down at build
   * time, graft.codec.PostingBlock).
   */
-final class WandSearcher(spark: SparkSession, indexDir: String,
+final class WandSearcher(@transient spark: SparkSession, indexDir: String,
                          maxScoreMinBlocksOpt: Option[Long] = None) extends Serializable {
   import spark.implicits._
 
@@ -131,10 +131,12 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
       (col("max_tf").cast("double") +
         element_at(typedLit(w.cache.toSeq), col("max_nb") + 1).cast("double"))
     val nBlocks = math.max(1, (k + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize + 1)
-    val rows = view.blocks(ts, Seq(seedTid), ScoreBlock.cols)
-      .orderBy(ubCol.desc, col("first_doc").asc)
-      .limit(nBlocks)
-      .as[ScoreBlock].collect()
+    val rows = IndexView.named(spark, "graft: WAND theta seed") {
+      view.blocks(ts, Seq(seedTid), ScoreBlock.cols)
+        .orderBy(ubCol.desc, col("first_doc").asc)
+        .limit(nBlocks)
+        .as[ScoreBlock].collect()
+    }
     val scores = rows.iterator.flatMap { b =>
       val (_, tfs, nbs) = PostingCodec.decode(b)
       tfs.indices.iterator.map(i =>
@@ -200,8 +202,9 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
       // block-granular leapfrog that does the real conjunction pruning is
       // width-independent)
       val width = PositionalScan.bucketWidth(spark, st.max_doc)
+      val one = p.oneTask(view)
       val tagged =
-        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) p.blocks(spark, view, width)
+        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) p.blocks(spark, view, width, one)
         else {
           val mId = tids(p.isMust.indexOf(true))
           val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
@@ -230,7 +233,7 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
       val prune = BlockCombine.Prune(tids.map(t => weights.get(t).map(ubFn).orNull),
         rests, slack, k, skipped, scanned)
       topK(BlockCombine.combine(spark, tagged, tids.map(t => weights.get(t).map(scorer).orNull),
-        p.isMust, p.isNot, p.nMust, p.mm, width, Some(prune)), k)
+        p.isMust, p.isNot, p.nMust, p.mm, width, one, Some(prune)), k)
     }
 
   private def searchShould(terms: Seq[(String, Float)], k: Int): DataFrame = {
@@ -295,11 +298,15 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
     // already below it (real df skew), the seeded split cannot fire and the
     // job is pure overhead (measured: the 24-query bench set has
     // equal-frequency pairs, identical skip counts, ~30-140ms wasted per
-    // armed query).
+    // armed query). A one-task scan ([[IndexView.oneTask]]) never seeds:
+    // its single partition sees every block, so the combine's own k-th best
+    // floor rises bucket by bucket, and a seed job would cost more than the
+    // whole query.
+    val one = view.oneTask(ts, ids)
     val gmaxSortedDesc = ids.map(gmaxD).sorted(Ordering[Double].reverse)
     val freezePossible = gmaxSortedDesc.drop(1).sum * slack < gmaxSortedDesc.head
     val theta0: Double =
-      if (freezePossible && estBlocks(dict.values) >= maxScoreMinBlocks) {
+      if (!one && freezePossible && estBlocks(dict.values) >= maxScoreMinBlocks) {
         val tid = ids.maxBy(gmaxD)
         seedTheta(ts, tid, weights(tid), k)
       } else Double.NegativeInfinity
@@ -377,7 +384,7 @@ final class WandSearcher(spark: SparkSession, indexDir: String,
       ids.map(restD).toArray, slack, k, skipped, scanned, theta0, Some(suffix))
     val none = Array.fill(ids.size)(false)
     topK(BlockCombine.combine(spark, tagged, ids.map(tid => scorer(weights(tid))).toArray,
-      none, none, nMust = 0, mm = 0, width, Some(prune)), k)
+      none, none, nMust = 0, mm = 0, width, one, Some(prune)), k)
   }
 
   private def topK(hits: Dataset[(Long, Float)], k: Int): DataFrame =

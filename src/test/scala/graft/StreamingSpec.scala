@@ -154,17 +154,15 @@ class StreamingSpec extends AnyFunSuite {
     // reopening reuses each segment's dictionary
     val reopened = new Searcher(spark, dirs._1)
     assert(jobsOf(reopened.lookup(terms)) == 0)
-    // the dictionaries stay on the driver: a serialized searcher (what a
-    // task closure capturing it would ship, less the session) is smaller
-    // than 8 bytes a term
+    // the dictionaries, file ranges and session stay on the driver: a
+    // serialized searcher (what a task closure capturing it would ship) is
+    // smaller than 8 bytes a term, also once the session has used an
+    // Observation (whose manager does not serialize)
+    graft.query.Collectors.searchWithTotals(seg, Query.Term("time"), 5)
     val nTerms = spark.read.parquet(s"${dirs._2}/termdict").count()
-    for (s <- Seq(seg, batch)) {
+    for (s <- Seq[AnyRef](seg, batch, new WandSearcher(spark, dirs._1))) {
       val bytes = new java.io.ByteArrayOutputStream()
-      val out = new java.io.ObjectOutputStream(bytes) {
-        enableReplaceObject(true)
-        override def replaceObject(o: AnyRef): AnyRef =
-          if (o.isInstanceOf[org.apache.spark.sql.SparkSession]) null else o
-      }
+      val out = new java.io.ObjectOutputStream(bytes)
       out.writeObject(s)
       out.close()
       assert(bytes.size < 8 * nTerms, s"serialized searcher: ${bytes.size} bytes, $nTerms terms")

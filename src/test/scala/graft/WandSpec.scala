@@ -21,6 +21,22 @@ class WandSpec extends AnyFunSuite {
   private lazy val exhaustive = new Searcher(spark, indexDir)
   private lazy val wand = new WandSearcher(spark, indexDir)
 
+  /** Runs `body` on the default plan — a small query scans, combines and
+    * ranks in one task, with no theta seed and no range collect — and again
+    * past the file split budget, where the bucket exchange, the seed and
+    * the lead/essential range collects run.
+    */
+  private def bothPlans(body: => Unit): Unit = {
+    body
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    try body finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   private def both(q: Query, k: Int = 10): Unit = {
     val a = exhaustive.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val b = wand.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -68,7 +84,7 @@ class WandSpec extends AnyFunSuite {
     val key = "graft.phrase.leadMaxDf"
     val old = sys.props.get(key)
     sys.props(key) = "0"
-    try {
+    try bothPlans {
       val q = Query.Bool(must = Seq("time", "w001234"))
       both(q)
       wand.search(q, 5).collect()
@@ -154,8 +170,9 @@ class WandSpec extends AnyFunSuite {
     // the all-ties corpus where theta_0 equals every block's score and the
     // strict skip must keep them). Per-instance opt-in (constructor param) —
     // no global sys-prop mutation, so concurrently-running suites are never
-    // armed by this test.
-    locally {
+    // armed by this test. A one-task scan never seeds, so the seed runs on
+    // the second, past-the-split-budget plan.
+    bothPlans {
       val wd = new WandSearcher(spark, indexDir, maxScoreMinBlocksOpt = Some(0L))
       def seededBoth(q: Query, k: Int = 10): Unit = {
         val a = exhaustive.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -204,36 +221,42 @@ class WandSpec extends AnyFunSuite {
     val ex = new Searcher(spark, dir)
     val wd = new WandSearcher(spark, dir) // default-on split (158 blocks > 64)
     val q = Query.Bool(should = Seq("needle", "hay"))
-    val a = ex.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val b = wd.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    assert(a.nonEmpty && a == b, s"MaxScore diverged\n exhaustive: $a\n wand: $b")
-    val skipped = wd.lastSkipped.get.value
-    val scanned = wd.lastScanned.get.value
-    assert(skipped > scanned,
-      s"dense blocks should mostly skip: skipped=$skipped scanned=$scanned")
-    // the skip is the term-level split, not the bound test: the dense term's
-    // blocks all carry the rare term's gmax as rest, so bounds alone keep them
-    assert(skipped.toDouble / (skipped + scanned) > 0.7,
-      s"expected >70% skip on the skewed mix: skipped=$skipped scanned=$scanned")
+    // one task: the combine's own k-th best floor freezes the dense term
+    // after the first bucket; past the split budget: the theta seed does
+    bothPlans {
+      val a = ex.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      val b = wd.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(a.nonEmpty && a == b, s"MaxScore diverged\n exhaustive: $a\n wand: $b")
+      val skipped = wd.lastSkipped.get.value
+      val scanned = wd.lastScanned.get.value
+      assert(skipped > scanned,
+        s"dense blocks should mostly skip: skipped=$skipped scanned=$scanned")
+      // the skip is the term-level split, not the bound test: the dense term's
+      // blocks all carry the rare term's gmax as rest, so bounds alone keep them
+      assert(skipped.toDouble / (skipped + scanned) > 0.7,
+        s"expected >70% skip on the skewed mix: skipped=$skipped scanned=$scanned")
+    }
   }
 
   test("term-level MaxScore identity fuzz: split forced on at every scan size") {
     // force the split (and its theta seed) on for small corpora so the
     // freeze/candidate machinery is exercised against the exhaustive oracle
-    // across mixed-df disjunctions
+    // across mixed-df disjunctions, on both plans
     val wd = new WandSearcher(spark, indexDir, maxScoreMinBlocksOpt = Some(0L))
     def forcedBoth(q: Query, k: Int = 10): Unit = {
       val a = exhaustive.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       val b = wd.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(a == b, s"forced MaxScore diverged on $q\n exhaustive: $a\n wand: $b")
     }
-    forcedBoth(Query.Bool(should = Seq("time", "person")))
-    forcedBoth(Query.Bool(should = Seq("spark", "index", "search")))
-    forcedBoth(Query.Bool(should = Seq("year", "way", "day", "thing", "man")))
-    forcedBoth(Query.Bool(should = Seq("time", "w001234")))
-    forcedBoth(Query.Bool(should = Seq("time", "w001234")), k = 10000)
-    forcedBoth(Query.Bool(must = Seq("time"), should = Seq("person", "year")))
-    forcedBoth(Query.Bool(must = Seq("w001234"), should = Seq("time")))
+    bothPlans {
+      forcedBoth(Query.Bool(should = Seq("time", "person")))
+      forcedBoth(Query.Bool(should = Seq("spark", "index", "search")))
+      forcedBoth(Query.Bool(should = Seq("year", "way", "day", "thing", "man")))
+      forcedBoth(Query.Bool(should = Seq("time", "w001234")))
+      forcedBoth(Query.Bool(should = Seq("time", "w001234")), k = 10000)
+      forcedBoth(Query.Bool(must = Seq("time"), should = Seq("person", "year")))
+      forcedBoth(Query.Bool(must = Seq("w001234"), should = Seq("time")))
+    }
   }
 
   test("zero-score ties: a block whose bound equals theta is never skipped") {
