@@ -101,20 +101,22 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** Postings files, over every segment of `dir`'s latest snapshot, whose
-    * term_id range holds one of `terms`.
+  /** Postings files, over every segment of `dir`'s latest snapshot: those
+    * whose term_id range holds one of `terms`, and all of them.
     */
-  private def filesHolding(dir: String, terms: Seq[String]): Long = {
+  private def filesHolding(dir: String, terms: Seq[String]): (Long, Long) = {
     import spark.implicits._
     val segs = new SnapshotLog(dir, spark).latest()
       .map(s => s.base.toSeq ++ s.segments).getOrElse(Seq(dir))
-    segs.map { seg =>
+    val counts = segs.map { seg =>
       val ids = spark.read.parquet(s"$seg/termdict").filter($"term".isin(terms: _*))
         .select("term_id").as[Long].collect()
-      spark.read.parquet(s"$seg/postings").groupBy($"_metadata.file_name")
+      val ranges = spark.read.parquet(s"$seg/postings").groupBy($"_metadata.file_name")
         .agg(min("term_id"), max("term_id")).as[(String, Long, Long)].collect()
-        .count { case (_, lo, hi) => ids.exists(i => lo <= i && i <= hi) }.toLong
-    }.sum
+      (ranges.count { case (_, lo, hi) => ids.exists(i => lo <= i && i <= hi) }.toLong,
+        ranges.length.toLong)
+    }
+    (counts.map(_._1).sum, counts.map(_._2).sum)
   }
 
   private def exchanges(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case e: Exchange => e }
@@ -149,13 +151,12 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(jobs.size == 1, s"$at ran ${jobs.size} jobs: $jobs")
       val plan = df.queryExecution.executedPlan
       assert(exchanges(plan).isEmpty, s"$at planned an exchange:\n$plan")
-      assert(filesRead(plan) == filesHolding(dir, termsOf(q)), s"$at read unpruned files")
+      val (holding, all) = filesHolding(dir, termsOf(q))
+      assert(filesRead(plan) == holding && holding < all,
+        s"$at read ${filesRead(plan)} postings files; $holding of $all hold its terms")
       assert(got == want(q), s"$at\n got:  $got\n want: ${want(q)}")
     }
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "1024")
-    try {
+    SparkTestSession.pastSplitBudget {
       for ((name, search) <- searchers; q <- queries) {
         val at = s"$label past the split budget, $name: $q"
         val df = search(q)
@@ -164,9 +165,6 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           s"$at took no exchange")
         assert(got == want(q), s"$at\n got:  $got\n want: ${want(q)}")
       }
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -16,4 +16,18 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with a file split budget below any test index's postings
+    * bytes, restoring the setting after: queries that would scan in one task
+    * take the bucket exchange and its prefilters instead.
+    */
+  def pastSplitBudget[T](body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    try body finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

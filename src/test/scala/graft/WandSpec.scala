@@ -28,13 +28,7 @@ class WandSpec extends AnyFunSuite {
     */
   private def bothPlans(body: => Unit): Unit = {
     body
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "1024")
-    try body finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    SparkTestSession.pastSplitBudget(body)
   }
 
   private def both(q: Query, k: Int = 10): Unit = {
