@@ -17,7 +17,7 @@ import org.apache.spark.util.LongAccumulator
   * read, decode and accumulate overlap block-at-a-time (a buffered-bucket
   * variant measured ~30% slower by serializing read and decode). Where the
   * buckets meet is [[PositionalScan.byBucket]]'s one rule: a small query's
-  * scan ([[IndexView.oneTask]]) runs the combine in its own task, with no
+  * scan ([[IndexView.Scan.oneTask]]) runs the combine in its own task, with no
   * exchange, so one partition sees every block of the query (the tightest
   * [[KthBest]] floor); a larger one shuffles blocks by bucket and combines
   * reduce-side.
@@ -149,28 +149,27 @@ object BlockCombine {
     val ranks: Array[Int] = tids.indices.map(ti =>
       if (isNot(ti)) 1 else lead.fold(0)(l => if (tids(ti) == l.term_id) 0 else 1)).toArray
 
-    /** Whether the clause blocks scan in one task ([[IndexView.oneTask]]). */
-    def oneTask(view: IndexView): Boolean = view.oneTask(ts, tids.toSeq)
-
-    /** The clause blocks tagged for [[combine]]. When the scan takes more
-      * than one task and the lead is selective (df <=
+    /** The clause blocks tagged for [[combine]], and whether they come in
+      * one task ([[IndexView.Scan.oneTask]]). When the scan takes more than
+      * one task and the lead is selective (df <=
       * [[Searcher.phraseLeadMaxDf]]), its block ranges prune every other
       * term's blocks before the shuffle; in one task the combine's leapfrog
       * does that work with no collect.
       */
-    def blocks(spark: SparkSession, view: IndexView, width: Long, oneTask: Boolean): Dataset[Block] = {
+    def blocks(spark: SparkSession, view: IndexView, width: Long): (Dataset[Block], Boolean) = {
       import spark.implicits._
-      var scan = view.blocks(ts, tids.toSeq, ScoreSpanBlock.cols).as[ScoreSpanBlock]
-      lead.filter(l => !oneTask && l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
+      val s = view.scan(ts, tids.toSeq, ScoreSpanBlock.cols)
+      var scan = s.rows.as[ScoreSpanBlock]
+      lead.filter(l => !s.oneTask && l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
         val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(l.term_id)))
         scan = scan.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
       }
       val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
       val rk = ranks
-      scan.flatMap { b =>
+      (scan.flatMap { b =>
         val ti = tiOf(b.term_id)
         tag(b, rk(ti), ti, width)
-      }
+      }, s.oneTask)
     }
   }
 
@@ -220,7 +219,7 @@ object BlockCombine {
     * `scorers(ti)` scores that clause's postings (null => MUST_NOT:
     * presence-only); `isMust(ti)`/`isNot(ti)` classify; `nMust` counts
     * distinct MUST clauses; `mm` is minimum-should-match; `oneTask` is the
-    * scan's [[IndexView.oneTask]]. With `prune`, the bound skips and the
+    * scan's [[IndexView.Scan.oneTask]]. With `prune`, the bound skips and the
     * MaxScore establishment rule of the object doc apply, and every bucket
     * copy counts as skipped or scanned.
     */

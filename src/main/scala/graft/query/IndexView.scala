@@ -3,6 +3,7 @@ package graft.query
 import graft.codec.PostingBlock
 import graft.model.{CollectionStats, TermDictRow}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.reflect.runtime.universe.TypeTag
@@ -31,10 +32,10 @@ import scala.reflect.runtime.universe.TypeTag
   * in-memory terms index resolving a term to its file block
   * (BlockTreeTermsReader).
   *
-  * A scan whose pruned files fit one file split
-  * (`spark.sql.files.maxPartitionBytes`) is [[oneTask]]: it reads in one
-  * partition, and the combine kernels run in that same task with no
-  * exchange — a small query is one Spark job with one task.
+  * A [[scan]] whose pruned files fit the split Spark's file scan sizes for
+  * them is one task: it reads in one partition, and the combine kernels run
+  * in that same task with no exchange — a small query is one Spark job with
+  * one task.
   *
   * Term ids are segment-local, so [[lookup]] hands out scan KEYS and
   * [[blocks]] rewrites every segment's term ids to them: the scoring
@@ -46,7 +47,7 @@ import scala.reflect.runtime.universe.TypeTag
 final class IndexView private (@transient spark: SparkSession, val segments: Seq[String],
                                tombDirs: Seq[String]) extends Serializable {
   import spark.implicits._
-  import IndexView.{PostingsFile, Terms, cut, matching, named, utf8}
+  import IndexView.{PostingsFile, Scan, Terms, cut, matching, named, utf8}
 
   private val single = segments.size == 1
 
@@ -141,48 +142,52 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
       if (ids.isEmpty) None
       else {
         val files = loaded(s).files.toSeq.filter(f => f.lo <= ids.last && ids.head <= f.hi)
-        val b = scan(s, files).filter(col("term_id").between(ids.head, ids.last))
+        val b = read(s, files).filter(col("term_id").between(ids.head, ids.last))
         Some((files, (if (ids.last - ids.head + 1 == ids.length) b else b.filter(col("term_id").isin(ids: _*)))
           .select(cols.map(col): _*)))
       }
     }
-    scans.map(_._2).reduceOption(_ union _).map(inOneTask(scans.flatMap(_._1), _))
+    scans.map(_._2).reduceOption(_ union _).map(inOneTask(scans.flatMap(_._1), _).rows)
   }
 
   /** The posting blocks of the given keys (from `ts`), projected to `cols`,
     * as one relation: each segment's scan reads only the files whose term
     * range holds one of its term ids, is pruned by those ids (Parquet
     * row-group min/max act as the block index) and has its `term_id` column
-    * rewritten to the key. A [[oneTask]] scan comes in one partition.
+    * rewritten to the key.
+    *
+    * This is the small-query rule, decided here once for every kernel: when
+    * the pruned files' bytes fit the split Spark's own file scan would size
+    * for them ([[FilePartition.maxSplitBytes]]: `maxPartitionBytes`, capped
+    * at the bytes per core but never below `openCostInBytes`), the scan is
+    * [[Scan.oneTask]] and comes in ONE partition. [[BlockCombine.combine]]
+    * and [[PositionalScan.score]] then run in that task with no exchange,
+    * and the driver-side lead-range and theta-seed jobs are skipped, since
+    * the task sees every block of the query anyway. A scan that would spread
+    * over several cores keeps the bucket exchange and its prefilters.
     */
-  def blocks(ts: Terms, keys: Seq[Long], cols: Seq[String]): DataFrame = {
+  def scan(ts: Terms, keys: Seq[Long], cols: Seq[String]): Scan = {
     val parts = pruned(ts, keys)
     val scans = parts.map { case (s, idToKey, files) =>
       val key = if (single) col("term_id")
         else element_at(typedLit(idToKey.toMap), col("term_id"))
-      scan(s, files).filter(col("term_id").isin(idToKey.map(_._1): _*))
+      read(s, files).filter(col("term_id").isin(idToKey.map(_._1): _*))
         .select(cols.map(c => if (c == "term_id") key.as(c) else col(c)): _*)
     }
     scans.reduceOption(_ union _).map(inOneTask(parts.flatMap(_._3), _))
-      .getOrElse(postings.head.select(cols.map(col): _*).limit(0))
+      .getOrElse(Scan(postings.head.select(cols.map(col): _*).limit(0), oneTask = true))
   }
 
-  /** The small-query rule, shared by every kernel: the postings files that
-    * can hold the keys fit one file split (`spark.sql.files.maxPartitionBytes`,
-    * the budget Spark itself packs small files into a split by). Such a scan
-    * reads in ONE task, and [[BlockCombine.combine]] and
-    * [[PositionalScan.score]] run in that task with no exchange; the
-    * driver-side lead-range and theta-seed jobs are skipped, since the task
-    * sees every block of the query anyway. Larger scans keep the bucket
-    * exchange and its prefilters.
+  /** The rows of [[scan]], for callers that need not know how they are
+    * partitioned.
     */
-  def oneTask(ts: Terms, keys: Seq[Long]): Boolean = fits(pruned(ts, keys).flatMap(_._3))
+  def blocks(ts: Terms, keys: Seq[Long], cols: Seq[String]): DataFrame = scan(ts, keys, cols).rows
 
-  private def fits(files: Seq[PostingsFile]): Boolean =
-    files.iterator.map(_.bytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes
-
-  private def inOneTask(files: Seq[PostingsFile], df: DataFrame): DataFrame =
-    if (fits(files)) df.coalesce(1) else df
+  private def inOneTask(files: Seq[PostingsFile], df: DataFrame): Scan = {
+    val bytes = files.iterator.map(_.bytes).sum
+    if (bytes <= FilePartition.maxSplitBytes(spark, bytes)) Scan(df.coalesce(1), oneTask = true)
+    else Scan(df, oneTask = false)
+  }
 
   /** Per segment holding one of the keys: (segment, its (id, key) pairs, the
     * postings files whose term range holds one of those ids).
@@ -199,12 +204,12 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
     * name, which Spark applies when it lists the (cached) file index, so the
     * other files are never opened.
     */
-  private def scan(s: Int, files: Seq[PostingsFile]): DataFrame =
+  private def read(s: Int, files: Seq[PostingsFile]): DataFrame =
     postings(s).filter(col("_metadata.file_name").isin(files.map(_.name): _*))
 
   /** Merged doc ranges of the keys' blocks — skip metadata only, df/128
-    * rows per term — for the lead-term block filter of a query too large
-    * for [[oneTask]].
+    * rows per term — for the lead-term block filter of a query whose
+    * [[scan]] is not one task.
     */
   def docRanges(ts: Terms, keys: Seq[Long]): PositionalScan.Intervals =
     PositionalScan.Intervals.merge(named(spark, "graft: lead block ranges") {
@@ -220,9 +225,13 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
     * pre-top-k filter. A snapshot never changes, so its dead ids load once
     * per view (one job, on first use) into a sorted array shipped to tasks
     * as one broadcast: a query then runs no job and no exchange for them.
-    * Like the reference, collection and term statistics keep counting
-    * buried docs until compaction purges them
-    * ([[graft.streaming.StreamingIndexer.compact]]).
+    * That costs about 12 driver bytes per tombstone (BASELINE.md) for as
+    * long as the view lives — about 6 MB per open view at 500,000
+    * uncompacted tombstones, the size past which
+    * [[graft.streaming.StreamingIndexer.compact]] itself stops broadcasting
+    * them — and the broadcast is freed once the view is garbage-collected
+    * (Spark's ContextCleaner). Like the reference, collection and term
+    * statistics keep counting buried docs until compaction purges them.
     */
   @transient private lazy val isLive = {
     val dead = named(spark, "graft: load tombstones") {
@@ -244,6 +253,11 @@ object IndexView {
     * lookup that produced them.
     */
   final case class Terms(rows: Map[String, TermDictRow], segIds: Map[Long, Array[Long]])
+
+  /** A postings scan ([[IndexView.scan]]): its rows, and whether they come
+    * in one partition, so the kernels combine them in that task.
+    */
+  final case class Scan(rows: DataFrame, oneTask: Boolean)
 
   /** Open `dir`: a streaming store's latest snapshot, else a batch index. */
   def open(spark: SparkSession, dir: String): IndexView =

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions.col
   * as the partitioner key. A dense block overlaps 1-2 buckets; a sparse
   * (rare-term) block may replicate to several, but rare terms have few
   * blocks, so replication is bounded by min(df/128, nBuckets) small rows.
-  * [[byBucket]] is the one place that groups blocks by bucket: a
-  * [[IndexView.oneTask]] scan sorts them in its own task with no exchange;
-  * a larger one goes through the bucket exchange.
+  * [[byBucket]] is the one place that groups blocks by bucket: a one-task
+  * scan ([[IndexView.Scan.oneTask]]) sorts them in its own task with no
+  * exchange; a larger one goes through the bucket exchange.
   *
   * Scoring matches the decoded-row fold it replaces bit-for-bit: one norm
   * byte per doc (norms are per-doc, identical across a doc's term rows),
@@ -57,13 +57,14 @@ object PositionalScan {
   }
 
   /** Tagged blocks grouped by bucket and sorted by `order` within each
-    * partition, for a doc-at-a-time pass per bucket: a one-task scan
-    * ([[IndexView.oneTask]]) sorts in its own task, with no exchange and no
-    * adaptive re-plan, so every bucket flushes through one partition's
-    * state; otherwise blocks repartition by bucket.
+    * partition, for a doc-at-a-time pass per bucket: the blocks of a
+    * one-task scan ([[IndexView.Scan.oneTask]]), already in one partition,
+    * sort in that task, with no exchange and no adaptive re-plan, so every
+    * bucket flushes through one partition's state; otherwise blocks
+    * repartition by bucket.
     */
   def byBucket[T](blocks: Dataset[T], oneTask: Boolean, order: String*): Dataset[T] =
-    (if (oneTask) blocks.coalesce(1) else blocks.repartition(col("bucket")))
+    (if (oneTask) blocks else blocks.repartition(col("bucket")))
       .sortWithinPartitions(order.map(col): _*)
 
   /** Buckets a block overlaps (inclusive range of bucket ids). */

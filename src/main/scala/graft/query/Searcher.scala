@@ -288,8 +288,8 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
           scoredHits(p.ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
         } else {
           val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-          val one = p.oneTask(view)
-          BlockCombine.combine(spark, p.blocks(spark, view, width, one),
+          val (tagged, one) = p.blocks(spark, view, width)
+          BlockCombine.combine(spark, tagged,
             p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width, one)
         }
       combined.toDF("doc_id", "score")
@@ -353,9 +353,9 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     val tiOf: Map[Long, Int] = ids.sorted.zipWithIndex.toMap
     val slotIdx: Array[Array[Int]] = slotTids.map(_.map(tiOf))
     val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-    val one = view.oneTask(ts, ids)
-
-    var blocks = view.blocks(ts, ids, PosSpanBlock.cols).as[PosSpanBlock]
+    val scan = view.scan(ts, ids, PosSpanBlock.cols)
+    val one = scan.oneTask
+    var blocks = scan.rows.as[PosSpanBlock]
 
     // lead slot = rarest (fewest total postings); its terms stream first in
     // each bucket (rank 0), and when the scan takes several tasks and the

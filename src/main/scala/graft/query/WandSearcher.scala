@@ -202,14 +202,14 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
       // block-granular leapfrog that does the real conjunction pruning is
       // width-independent)
       val width = PositionalScan.bucketWidth(spark, st.max_doc)
-      val one = p.oneTask(view)
-      val tagged =
-        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) p.blocks(spark, view, width, one)
+      val (tagged, one) =
+        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) p.blocks(spark, view, width)
         else {
           val mId = tids(p.isMust.indexOf(true))
           val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
           val ranks = p.ranks
-          view.blocks(p.ts, tids.toSeq, ScoreSpanBlock.cols).as[ScoreSpanBlock]
+          val scan = view.scan(p.ts, tids.toSeq, ScoreSpanBlock.cols)
+          (scan.rows.as[ScoreSpanBlock]
             .mapPartitions { blocks =>
               val best = new BlockCombine.KthBest(k)
               blocks.flatMap { b =>
@@ -228,7 +228,7 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
                   BlockCombine.tag(b, ranks(ti), ti, width)
                 }
               }
-            }
+            }, scan.oneTask)
         }
       val prune = BlockCombine.Prune(tids.map(t => weights.get(t).map(ubFn).orNull),
         rests, slack, k, skipped, scanned)
@@ -298,11 +298,12 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
     // already below it (real df skew), the seeded split cannot fire and the
     // job is pure overhead (measured: the 24-query bench set has
     // equal-frequency pairs, identical skip counts, ~30-140ms wasted per
-    // armed query). A one-task scan ([[IndexView.oneTask]]) never seeds:
-    // its single partition sees every block, so the combine's own k-th best
-    // floor rises bucket by bucket, and a seed job would cost more than the
-    // whole query.
-    val one = view.oneTask(ts, ids)
+    // armed query). A one-task scan ([[IndexView.Scan.oneTask]]) never
+    // seeds: its single partition sees every block, so the combine's own
+    // k-th best floor rises bucket by bucket, and a seed job would cost more
+    // than the whole query.
+    val scan = view.scan(ts, ids, ScoreSpanBlock.cols)
+    val one = scan.oneTask
     val gmaxSortedDesc = ids.map(gmaxD).sorted(Ordering[Double].reverse)
     val freezePossible = gmaxSortedDesc.drop(1).sum * slack < gmaxSortedDesc.head
     val theta0: Double =
@@ -349,7 +350,7 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
         else Some(spark.sparkContext.broadcast(view.docRanges(ts, essTids)))
       }
     val splitRankEff = if (essIv.isDefined) splitRank else Int.MaxValue
-    val tagged = view.blocks(ts, ids, ScoreSpanBlock.cols)
+    val tagged = scan.rows
       .as[ScoreSpanBlock]
       .mapPartitions { blocks =>
         val heaps = new scala.collection.mutable.HashMap[Long, BlockCombine.KthBest]()

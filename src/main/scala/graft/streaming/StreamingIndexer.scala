@@ -237,10 +237,9 @@ object StreamingIndexer {
     // interval) broadcast a set and each run re-encodes locally; BULK
     // deletes (delete-by-hot-term, GDPR-style source purges — data-sized,
     // nothing the driver may hold) take a fully shuffled path: explode runs
-    // to postings, anti-join the tombstone table on doc_id (the same join
-    // the query-time liveDocs path uses), regroup per original run. The
-    // shuffle is one pass over the index — the floor for any purge that
-    // rewrites a data-sized fraction of it.
+    // to postings, anti-join the tombstone table on doc_id, regroup per
+    // original run. The shuffle is one pass over the index — the floor for
+    // any purge that rewrites a data-sized fraction of it.
     val tombDf: Option[DataFrame] =
       if (snap.tombs.isEmpty) None
       else Some(snap.tombs.map(t => spark.read.parquet(t)).reduce(_ unionByName _)

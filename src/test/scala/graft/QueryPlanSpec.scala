@@ -5,7 +5,6 @@ import graft.fixtures.Transcripts
 import graft.oracle.BruteForce
 import graft.query.{Query, Searcher, WandSearcher}
 import graft.streaming.{SnapshotLog, StreamingIndexer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -13,8 +12,6 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.{max, min}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
 
 /** The plan a small query takes: on a warm view, a two-term OR, a single
   * MUST with a SHOULD, a NOT and an exact phrase each run ONE Spark job with
@@ -27,6 +24,7 @@ import scala.jdk.CollectionConverters._
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
+  import SparkTestSession.jobsOf
   private val Convs = 150L
 
   private val queries: Seq[Query] = Seq(
@@ -69,36 +67,6 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       StreamingIndexer.appendSegment(spark.createDataset(b), dir, autoCompact = false)
     }
     dir
-  }
-
-  /** The descriptions of the Spark jobs `body` starts (see StreamingSpec's
-    * job counter: a marker job closes the window).
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val marker = s"counted-${java.util.UUID.randomUUID()}-end"
-    val started = new ConcurrentLinkedQueue[String]()
-    val markerSeen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        p.map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `marker` => markerSeen.countDown()
-          case _ => started.add(p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse(""))
-        }
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobGroup(marker, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, TimeUnit.SECONDS))
-      started.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
   }
 
   /** Postings files, over every segment of `dir`'s latest snapshot: those

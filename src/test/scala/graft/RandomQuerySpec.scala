@@ -83,15 +83,18 @@ class RandomQuerySpec extends AnyFunSuite {
       "search", "query", "merge", "table", "fast", "slow", "w000123", "zzznope")
     def pick(n: Int): Seq[String] = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).distinct
 
-    var nonEmpty = 0
-    (1 to 80).foreach { i =>
+    val shapes = (1 to 80).flatMap { i =>
       val must = pick(rnd.nextInt(3))
       val should = pick(rnd.nextInt(4))
       val not = if (rnd.nextInt(3) == 0) pick(1) else Nil
       val mm = if (should.nonEmpty && rnd.nextInt(3) == 0)
         1 + rnd.nextInt(should.size) else 0
-      if (must.nonEmpty || should.nonEmpty) {
-        val q = Query.Bool(must, should, not, mm)
+      if (must.nonEmpty || should.nonEmpty) Some(i -> Query.Bool(must, should, not, mm)) else None
+    }
+    // the same shapes on the one-task plan and through the bucket exchange
+    SparkTestSession.bothPlans {
+      var nonEmpty = 0
+      shapes.foreach { case (i, q) =>
         val a = exhaustive.search(q, 10).collect()
           .map(r => (r.getLong(0), r.getFloat(1))).toSeq
         val b = wand.search(q, 10).collect()
@@ -101,8 +104,8 @@ class RandomQuerySpec extends AnyFunSuite {
         assert(a == want, s"query $i: exhaustive diverged from the oracle on $q\n got: $a\nwant: $want")
         if (a.nonEmpty) nonEmpty += 1
       }
+      assert(nonEmpty > 25, s"only $nonEmpty random boolean shapes matched docs")
     }
-    assert(nonEmpty > 25, s"only $nonEmpty random boolean shapes matched docs")
   }
 
   test("40 random shapes with the dictionary theta seed forced on: still bit-identical") {
@@ -110,8 +113,10 @@ class RandomQuerySpec extends AnyFunSuite {
     // WandSearcher scaladoc); force it so random shapes fuzz the seeded
     // pruning against the exhaustive oracle. Per-instance opt-in — no global
     // sys-prop mutation (parallel suites must never see each other's
-    // seeding).
-    locally {
+    // seeding). A one-task scan never seeds, so the whole test runs past the
+    // file split budget, where the seed, the essential-range drop and the
+    // bucket exchange run.
+    SparkTestSession.pastSplitBudget {
       val dir = Files.createTempDirectory("graft_rand_seed").toString
       IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 150), dir)
       val exhaustive = new Searcher(spark, dir)
@@ -121,7 +126,7 @@ class RandomQuerySpec extends AnyFunSuite {
         "search", "query", "merge", "table", "fast", "slow", "w000123", "zzznope")
       def pick(n: Int): Seq[String] = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).distinct
       var nonEmpty = 0
-      (1 to 40).foreach { i =>
+      val jobs = SparkTestSession.jobsOf((1 to 40).foreach { i =>
         val must = pick(rnd.nextInt(3))
         val should = pick(rnd.nextInt(4))
         val not = if (rnd.nextInt(3) == 0) pick(1) else Nil
@@ -136,8 +141,11 @@ class RandomQuerySpec extends AnyFunSuite {
           assert(a == b, s"query $i: seeded WAND diverged on $q\n exhaustive: $a\n wand: $b")
           if (a.nonEmpty) nonEmpty += 1
         }
-      }
+      })
       assert(nonEmpty > 12, s"only $nonEmpty random seeded shapes matched docs")
+      // the seeded path really ran (it arms on skewed pure disjunctions only)
+      val seeds = jobs.count(_ == "graft: WAND theta seed")
+      assert(seeds > 0, "no random shape ran the theta seed")
     }
   }
 }

@@ -13,7 +13,8 @@ import scala.util.Random
   * DOCS_AND_FREQS verbosity) must search bit-identically to the one-segment
   * batch build — (doc id, float32 score bits) equality on random boolean,
   * nested, phrase, rewrite and filter-style shapes, through both the
-  * exhaustive and the pruned searcher. Seeded, so a failure reproduces.
+  * exhaustive and the pruned searcher, on the one-task plan and past the
+  * file split budget. Seeded, so a failure reproduces.
   */
 class SegmentHuntSpec extends AnyFunSuite {
 
@@ -73,10 +74,13 @@ class SegmentHuntSpec extends AnyFunSuite {
         // runs restrict to non-positional shapes
         if (!(q.isInstanceOf[Query.Phrase] && s % 2 == 1)) {
           val want = hits(batch.search(q, 10))
-          val got = hits(seg.search(q, 10))
-          assert(got == want, s"split $s/q$i (${cuts.size} segs): $q\n seg:   $got\n batch: $want")
-          val pruned = hits(wand.search(q, 10))
-          assert(pruned == want, s"split $s/q$i (${cuts.size} segs) WAND: $q\n wand:  $pruned\n batch: $want")
+          // the store on the one-task plan and through the bucket exchange
+          SparkTestSession.bothPlans {
+            val got = hits(seg.search(q, 10))
+            assert(got == want, s"split $s/q$i (${cuts.size} segs): $q\n seg:   $got\n batch: $want")
+            val pruned = hits(wand.search(q, 10))
+            assert(pruned == want, s"split $s/q$i (${cuts.size} segs) WAND: $q\n wand:  $pruned\n batch: $want")
+          }
         }
       }
     }

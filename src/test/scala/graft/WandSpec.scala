@@ -21,15 +21,7 @@ class WandSpec extends AnyFunSuite {
   private lazy val exhaustive = new Searcher(spark, indexDir)
   private lazy val wand = new WandSearcher(spark, indexDir)
 
-  /** Runs `body` on the default plan — a small query scans, combines and
-    * ranks in one task, with no theta seed and no range collect — and again
-    * past the file split budget, where the bucket exchange, the seed and
-    * the lead/essential range collects run.
-    */
-  private def bothPlans(body: => Unit): Unit = {
-    body
-    SparkTestSession.pastSplitBudget(body)
-  }
+  import SparkTestSession.bothPlans
 
   private def both(q: Query, k: Int = 10): Unit = {
     val a = exhaustive.search(q, k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
