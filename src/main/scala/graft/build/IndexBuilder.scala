@@ -1,9 +1,10 @@
 package graft.build
 
 import graft.analysis.{Analyzer, TextAnalyzer}
+import graft.JobNames.named
 import graft.codec.{ForCodec, PostingCodec, PostingBlock, SmallFloat}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -85,14 +86,54 @@ object IndexBuilder {
     */
   val RunSplitBytes: Long = 32L << 20
 
+  /** Input bytes per task of the stages sized by their data: S1 of a stream
+    * segment (Spark's size estimate of the batch), S3's dictionary ids and
+    * S4's range cuts (the bytes of the committed `runs` files). Each stage
+    * keeps its core-count partition count as a cap, so a large build is
+    * unchanged and a small append runs one task per stage. The estimate of
+    * an in-memory batch is about 100 bytes a turn whatever its text length
+    * (a row count: 2 MB is about 20,000 turns), and of a file source its
+    * on-disk bytes. The measurements behind each value are in BASELINE.md,
+    * "small appends, this host".
+    */
+  val SegmentBytesPerTask: Long = 2L << 20
+  val DictBytesPerTask: Long = 4L << 20
+  val MergeBytesPerCut: Long = 48L << 10
+
+  /** Tasks for a stage that reads `bytes`: one per `perTask` bytes, at least
+    * one and at most `today`, the stage's core-count rule.
+    */
+  def sizedTasks(bytes: Long, perTask: Long, today: Int): Int =
+    math.max(1L, math.min(today.toLong,
+      bytes / perTask + (if (bytes % perTask > 0) 1 else 0))).toInt
+
+  /** S1 tokenize tasks of a stream segment whose batch Spark estimates at
+    * `batchBytes`; today's count is the segment build's `p`.
+    */
+  def segmentTasks(batchBytes: Long, p: Int): Int =
+    sizedTasks(batchBytes, SegmentBytesPerTask, p)
+
+  /** S3 dictionary-id partitions over `runsBytes` of runs; today's count is
+    * max(p / 4, 8).
+    */
+  def dictPartitions(runsBytes: Long, p: Int): Int =
+    sizedTasks(runsBytes, DictBytesPerTask, math.max(p / 4, 8))
+
+  /** S4 range cuts (postings files) over `runsBytes` of runs; today's count
+    * is 8p for a positional build and 4p otherwise (see S4).
+    */
+  def mergeCuts(runsBytes: Long, p: Int, positions: Boolean): Int =
+    sizedTasks(runsBytes, MergeBytesPerCut, (if (positions) 8 else 4) * p)
+
   final case class Options(
       numPartitions: Int = 0, // 0 = spark.sql.shuffle.partitions
       // Segment granularity for the id-assign + tokenize pass (S0/S1). At
       // cluster scale this must be DATA-size-driven (a fixed ~docs-per-segment
       // target), not parallelism-driven: each extra segment re-emits a run row
       // for every distinct term it contains, so tying segment count to cores
-      // multiplies the run table superlinearly with cluster size. 0 = fall
-      // back to numPartitions.
+      // multiplies the run table superlinearly with cluster size. A stream
+      // segment sets it from its batch's size estimate (`segmentTasks`), so a
+      // small append tokenizes in one task. 0 = fall back to numPartitions.
       segmentPartitions: Int = 0,
       // Analysis chain for tokenization (StandardAnalyzer-equivalent by
       // default; e.g. graft.analysis.EnglishAnalyzer for stemmed indexes).
@@ -176,6 +217,12 @@ object IndexBuilder {
     val spark = turns.sparkSession
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
+    // a finished directory has dropped its runs; its doc count is in stats
+    if (("docmap" +: RunsReaders).forall(manifest.isDone))
+      return firstDoc + named(spark, "graft: build doc count") {
+        spark.read.schema(Encoders.product[CollectionStats].schema)
+          .parquet(s"$outDir/stats").as[CollectionStats].head().max_doc
+      }
     val segP = if (opts.segmentPartitions > 0) opts.segmentPartitions
                else partitions(spark, opts)
     val keys = Seq(col("conv_id"), col("turn_idx"))
@@ -184,11 +231,9 @@ object IndexBuilder {
     val bAn = spark.sparkContext.broadcast(opts.analyzer)
     val bPos = spark.sparkContext.broadcast(opts.positions)
     val bOffs = spark.sparkContext.broadcast(opts.offsets)
-    if (!manifest.isDone("runs")) {
+    if (!manifest.isDone("runs") || !manifest.hasOutput("runs")) named(spark, "graft: build runs") {
       val t0 = System.nanoTime()
-      turns.toDF()
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .repartitionByRange(segP, keys: _*)
+      rangeCut(turns.toDF().select(col("conv_id"), col("turn_idx"), col("text")), segP, keys)
         .sortWithinPartitions(keys: _*)
         .as[(String, Int, String)]
         .mapPartitions { it =>
@@ -198,22 +243,22 @@ object IndexBuilder {
         .write.mode("overwrite").parquet(s"$outDir/runs")
       manifest.commit("runs", -1L, ms(t0), Some(s"$outDir/runs"))
     }
-    val (offsets, end) = runOffsets(spark, outDir, firstDoc)
     // docmap decode is independent of S2-S5: run it concurrently (Spark
     // timeshares the task slots across jobs, shrinking the serial tail).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    withBuildConfs(spark) {
+    val next = withBuildConfs(spark) {
+    val counts = runCounts(spark, outDir)
+    val (offsets, end) = counts.offsets(firstDoc)
     val docmapF = Future {
-      if (!manifest.isDone("docmap")) {
+      if (!manifest.isDone("docmap")) named(spark, "graft: build docmap") {
         val t0 = System.nanoTime()
         val bOff = spark.sparkContext.broadcast(offsets)
         // Column-form predicate: pushes the term filter into the parquet
         // scan (row-group pruning + no Run deserialization of the blob
         // columns for the 99.99% of rows that are real postings — a typed
         // lambda filter here decoded EVERY run row first).
-        ensurePay(spark.read.parquet(s"$outDir/runs")
-            .where(col("term") === DocmapKey)).as[Run]
+        runsTable(spark, outDir).where(col("term") === DocmapKey)
           .flatMap { r =>
             val off = bOff.value.getOrElse(r.pid, 0L)
             decodeDocmapPayload(r).map { case (local, c, t) => (off + local, c, t) }
@@ -223,10 +268,12 @@ object IndexBuilder {
         manifest.commit("docmap", -1L, ms(t0), Some(s"$outDir/docmap"))
       }
     }
-    buildFromRuns(outDir, opts, offsets)
+    buildFromRuns(outDir, opts, counts, offsets)
     Await.result(docmapF, scala.concurrent.duration.Duration.Inf)
-    } // withBuildConfs
     end
+    } // withBuildConfs
+    manifest.dropOutput("runs")
+    next
   }
 
   /** Tokenize one sorted partition, emitting posting runs AND the docmap
@@ -267,74 +314,146 @@ object IndexBuilder {
     }
   }
 
-  /** Per-pid doc-id offsets = `firstDoc` + prefix sums of per-partition doc
-    * counts, from the norms pseudo-runs (one metadata-sized aggregation),
-    * and the next free doc id after the last partition.
+  /** What one pass over a runs table counts: per pid, the docs of its S1
+    * partition and their summed lengths (the norms pseudo-runs), and the
+    * postings of every real term (the collection's sumDf).
     */
-  private def runOffsets(spark: SparkSession, outDir: String,
-                         firstDoc: Long): (Map[Int, Long], Long) = {
-    import spark.implicits._
-    val counts = spark.read.parquet(s"$outDir/runs")
-      .filter(col("term") === NormsKey)
-      .groupBy("pid").agg(sum("cnt").as("n"))
-      .as[(Int, Long)].collect().sortBy(_._1)
-    var acc = firstDoc
-    val offsets = counts.map { case (pid, n) =>
-      val off = acc
-      acc += n
-      pid -> off
-    }.toMap
-    (offsets, acc)
+  private[graft] final case class RunCounts(docs: Map[Int, (Long, Long)], postings: Long) {
+
+    /** Per-pid doc-id offsets = `firstDoc` + prefix sums of the per-partition
+      * doc counts in pid order, and the next free doc id after the last
+      * partition.
+      */
+    def offsets(firstDoc: Long): (Map[Int, Long], Long) = {
+      var acc = firstDoc
+      val offs = docs.toSeq.sortBy(_._1).map { case (pid, (n, _)) =>
+        val off = acc
+        acc += n
+        pid -> off
+      }.toMap
+      (offs, acc)
+    }
   }
+
+  /** [[RunCounts]] of `outDir`'s runs: one job with no exchange, each task
+    * folding its split to a few rows.
+    */
+  private[graft] def runCounts(spark: SparkSession, outDir: String): RunCounts = {
+    import spark.implicits._
+    val rows = named(spark, "graft: build doc counts") {
+      runsTable(spark, outDir)
+        .select(col("pid"), col("term") === NormsKey, col("term") >= PseudoMax,
+          col("cnt"), col("sum_tf"))
+        .as[(Int, Boolean, Boolean, Int, Long)]
+        .mapPartitions { it =>
+          val docs = mutable.HashMap[Int, (Long, Long)]()
+          var postings = 0L
+          it.foreach { case (pid, norms, real, cnt, lens) =>
+            if (norms) {
+              val (n, l) = docs.getOrElse(pid, (0L, 0L))
+              docs(pid) = (n + cnt, l + lens)
+            } else if (real) postings += cnt
+          }
+          // (pid, docs, lengths) per partition, and (None, postings, 0)
+          docs.iterator.map { case (pid, (n, l)) => (Option(pid), n, l) } ++
+            Iterator.single((Option.empty[Int], postings, 0L))
+        }
+        .collect()
+    }
+    val docs = rows.collect { case (Some(pid), n, l) => (pid, (n, l)) }
+      .groupMapReduce(_._1)(_._2) { case ((n1, l1), (n2, l2)) => (n1 + n2, l1 + l2) }
+    RunCounts(docs, rows.collect { case (None, n, _) => n }.sum)
+  }
+
+  /** The stages that read `runs`. Once they and the docmap (when the entry
+    * writes one) have committed, no reader needs the table — queries read
+    * postings and compaction rebuilds its runs from them — so it is deleted
+    * and its manifest record kept: a re-run never redoes S1.
+    */
+  private val RunsReaders = Seq("norms", "termdict", "postings", "stats")
+
+  /** `df` range-partitioned into `n` partitions by `keys`. One partition
+    * needs no range exchange (no sample job, no shuffle): its one task sorts
+    * everything.
+    */
+  private def rangeCut(df: DataFrame, n: Int, keys: Seq[Column]): DataFrame =
+    if (n == 1) df.coalesce(1) else df.repartitionByRange(n, keys: _*)
+
+  private def runsTable(spark: SparkSession, dir: String): Dataset[Run] =
+    spark.read.schema(Encoders.product[Run].schema).parquet(s"$dir/runs").as(Encoders.product[Run])
 
   /** Build over any (doc_id: Long, text: String) DataFrame. */
   def build(docsIn: DataFrame, outDir: String, opts: Options = Options()): Unit = {
     val spark = docsIn.sparkSession
+    val manifest = new ManifestStore(outDir, spark)
+    if (RunsReaders.forall(manifest.isDone)) return
+    writeRuns(docsIn, outDir, opts)
+    withBuildConfs(spark)(buildFromRuns(outDir, opts, runCounts(spark, outDir)))
+    manifest.dropOutput("runs")
+  }
+
+  /** S1 of [[build]]: per-partition posting runs (DWPT analog), ids already
+    * global. Skipped when `runs` is committed and still on disk, so a build
+    * killed after S1 resumes from its runs.
+    */
+  private[graft] def writeRuns(docsIn: DataFrame, outDir: String, opts: Options): Unit = {
+    val spark = docsIn.sparkSession
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
-    val p = partitions(spark, opts)
     require(!opts.offsets || opts.positions,
       "offsets require positions (the reference's IndexOptions ladder)")
-    val bAn2 = spark.sparkContext.broadcast(opts.analyzer)
-    val bPos2 = spark.sparkContext.broadcast(opts.positions)
-    val bPay2 = spark.sparkContext.broadcast(opts.payloads)
-    val bOff2 = spark.sparkContext.broadcast(opts.offsets)
-
-    // ---- S1: per-partition posting runs (DWPT analog); ids already global
-    if (!manifest.isDone("runs")) {
+    if (!manifest.isDone("runs") || !manifest.hasOutput("runs")) named(spark, "graft: build runs") {
       val t0 = System.nanoTime()
-      val runs = docsIn
-        .select(col("doc_id").cast("long"), col("text"))
-        .repartitionByRange(p, col("doc_id"))
+      val bAn = spark.sparkContext.broadcast(opts.analyzer)
+      val bPos = spark.sparkContext.broadcast(opts.positions)
+      val bPay = spark.sparkContext.broadcast(opts.payloads)
+      val bOff = spark.sparkContext.broadcast(opts.offsets)
+      val runs = rangeCut(docsIn.select(col("doc_id").cast("long"), col("text")),
+          partitions(spark, opts), Seq(col("doc_id")))
         .sortWithinPartitions("doc_id")
         .as[(Long, String)]
-        .mapPartitions(buildRuns(-1, _, bAn2.value, bPos2.value, bPay2.value, bOff2.value))
+        .mapPartitions(buildRuns(-1, _, bAn.value, bPos.value, bPay.value, bOff.value))
       runs.write.mode("overwrite").parquet(s"$outDir/runs")
       manifest.commit("runs", -1L, ms(t0), Some(s"$outDir/runs"))
     }
-    buildFromRuns(outDir, opts)
+  }
+
+  /** S3's term dictionary over a runs table: every real term's df, ttf,
+    * max_tf and max_nb, with a dense `term_id` in ascending term order, on
+    * `dictP` partitions ([[dictPartitions]]). On one partition the aggregate
+    * and the ids need no exchange; on more the result is persisted (see
+    * [[StableIds.attach]]), so unpersist it after use.
+    */
+  private[graft] def termDictionary(runs: DataFrame, dictP: Int): DataFrame = {
+    val termAgg = (if (dictP == 1) runs.coalesce(1) else runs)
+      .filter(col("term") >= PseudoMax)
+      .groupBy("term")
+      .agg(sum("cnt").as("df"), sum("sum_tf").as("ttf"),
+        max("max_tf").as("max_tf"), max("max_nb").as("max_nb"))
+    StableIds.attach(termAgg, Seq(col("term")), "term_id", dictP)
   }
 
   /** S2-S5 over an existing `runs` table (shared by both build entries and
-    * the streaming compactor). `offsets` maps a run's pid to the doc-id
-    * offset of its partition-local ids; runs written with global ids carry
-    * pid = -1 and get offset 0.
+    * the streaming compactor), whose `counts` the caller took. `offsets` maps
+    * a run's pid to the doc-id offset of its partition-local ids; runs
+    * written with global ids carry pid = -1 and get offset 0.
     */
-  private[graft] def buildFromRuns(outDir: String, opts: Options,
+  private[graft] def buildFromRuns(outDir: String, opts: Options, counts: RunCounts,
                                    offsets: Map[Int, Long] = Map.empty): Unit = {
     val spark = SparkSession.active
     import spark.implicits._
     val manifest = new ManifestStore(outDir, spark)
     withBuildConfs(spark) {
     val p = partitions(spark, opts)
-    val runs = ensurePay(spark.read.parquet(s"$outDir/runs")).as[Run]
+    val runs = runsTable(spark, outDir)
+    val runsBytes = manifest.outputBytes("runs")
     val bOff = spark.sparkContext.broadcast(offsets)
 
     // ---- S2: norms sidecar (concurrent with S3 — independent inputs) -----
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val normsF = Future {
-      if (!manifest.isDone("norms")) {
+      if (!manifest.isDone("norms")) named(spark, "graft: build norms") {
         val t0 = System.nanoTime()
         // Column-form predicate — same pushdown rationale as the docmap scan
         val norms = runs.filter(col("term") === NormsKey).flatMap { r =>
@@ -350,27 +469,27 @@ object IndexBuilder {
     }
 
     // ---- S3: term dictionary with dense term_ids by term order -----------
-    if (!manifest.isDone("termdict")) {
+    if (!manifest.isDone("termdict")) named(spark, "graft: build term dictionary") {
       val t0 = System.nanoTime()
-      val termAgg = runs.toDF()
-        .filter(col("term") >= PseudoMax)
-        .groupBy("term")
-        .agg(sum("cnt").as("df"), sum("sum_tf").as("ttf"),
-          max("max_tf").as("max_tf"), max("max_nb").as("max_nb"))
-      val dict = StableIds.attach(termAgg, Seq(col("term")), "term_id",
-        math.max(p / 4, 8))
+      val dict = termDictionary(runs.toDF(), dictPartitions(runsBytes, p))
       dict.select("term", "term_id", "df", "ttf", "max_tf", "max_nb")
         .write.mode("overwrite").parquet(s"$outDir/termdict")
       dict.unpersist(blocking = false)
       manifest.commit("termdict", -1L, ms(t0), Some(s"$outDir/termdict"))
     }
-    val termdict = spark.read.parquet(s"$outDir/termdict")
+    val termdict = spark.read.schema(Encoders.product[TermDictRow].schema)
+      .parquet(s"$outDir/termdict")
     // S4 needs the norms stats (impact avgdl); S5 needs the norms table.
     Await.result(normsF, scala.concurrent.duration.Duration.Inf)
-    // (doc count, sum of lengths): one aggregate shared by S4 and S5, run
-    // only when one of them is still pending
-    lazy val (maxDoc, sumTtf) = spark.read.parquet(s"$outDir/norms")
-      .agg(count(lit(1)), coalesce(sum("len"), lit(0L))).as[(Long, Long)].head()
+    // (doc count, sum of lengths), for S4 and S5: from the norms pseudo-runs
+    // every S1 writes; a compacted base's runs carry none (compaction writes
+    // its norms table directly), so its come from the norms table
+    lazy val (maxDoc, sumTtf) =
+      if (counts.docs.nonEmpty) (counts.docs.values.map(_._1).sum, counts.docs.values.map(_._2).sum)
+      else named(spark, "graft: build doc stats") {
+        spark.read.schema(Encoders.product[NormRow].schema).parquet(s"$outDir/norms")
+          .agg(count(lit(1)), coalesce(sum("len"), lit(0L))).as[(Long, Long)].head()
+      }
 
     // ---- S4: global sort-merge into impact-ordered 128-doc blocks ---------
     // (SegmentMerger analog; block membership is by DESCENDING build-time
@@ -381,35 +500,36 @@ object IndexBuilder {
     // impact-clustered blocks make max_tf/max_nb sharply discriminative, the
     // trade being slightly larger doc gaps. Lucene 4.8 has neither; this is
     // the scale path for the BMW kernel.)
-    if (!manifest.isDone("postings")) {
+    if (!manifest.isDone("postings")) named(spark, "graft: build postings") {
       val t0 = System.nanoTime()
       val impactCache = graft.score.Bm25.buildCache(
         graft.score.Bm25.avgFieldLength(sumTtf, math.max(maxDoc, 1L)))
-      val offDf = offsets.toSeq.toDF("pid", "off")
-      val keyed = runs.toDF()
+      // the pid -> offset map rides in the plan as a literal (null for pid -1)
+      val off = coalesce(element_at(typedLit(offsets), col("pid")), lit(0L))
+      val joined = runs.toDF()
         .filter(col("term") >= PseudoMax)
-        .join(broadcast(offDf), Seq("pid"), "left")
-        .withColumn("first_doc", col("first_doc") + coalesce(col("off"), lit(0L)))
-        .withColumn("last_doc", col("last_doc") + coalesce(col("off"), lit(0L)))
-        .drop("off", "pid")
+        .withColumn("first_doc", col("first_doc") + off)
+        .withColumn("last_doc", col("last_doc") + off)
+        .drop("pid")
         .join(termdict.select("term", "term_id"), "term")
         .drop("term")
-        // 4x task-to-slot over-partitioning: merge cost per reducer is NOT
-        // row-uniform (a hot term pays an n-log-n impact sort over all its
-        // postings), so at exactly-one-task-per-slot the heaviest range is a
-        // straggler that idles the other slots for its whole tail (measured
-        // ~3 s of a 14 s stage at 4 slots). Finer ranges split hot terms
-        // across more cuts (correct: blocks are per-(term, range) and the
-        // searcher unions them) and let the scheduler pack the waves; the
-        // extra partial blocks per cut are noise. Same fan-out rule a real
-        // cluster uses (reducers = small multiple of total cores). Positional
-        // builds double the fan-out: per-row merge cost there has higher
-        // variance (position decode + re-encode is byte-bound), so finer
-        // ranges halve the heaviest range's tail — measured at 40M turns,
-        // worst-stage max task 155.6 s -> 55.3 s with the RunMaxPositions cap
-        // alone, and the docs+freqs scaling-criterion path stays at 4x.
-        .repartitionByRange((if (opts.positions) 8 else 4) * p,
-          col("term_id"), col("first_doc"))
+      // 4x task-to-slot over-partitioning: merge cost per reducer is NOT
+      // row-uniform (a hot term pays an n-log-n impact sort over all its
+      // postings), so at exactly-one-task-per-slot the heaviest range is a
+      // straggler that idles the other slots for its whole tail (measured
+      // ~3 s of a 14 s stage at 4 slots). Finer ranges split hot terms
+      // across more cuts (correct: blocks are per-(term, range) and the
+      // searcher unions them) and let the scheduler pack the waves; the
+      // extra partial blocks per cut are noise. Same fan-out rule a real
+      // cluster uses (reducers = small multiple of total cores). Positional
+      // builds double the fan-out: per-row merge cost there has higher
+      // variance (position decode + re-encode is byte-bound), so finer
+      // ranges halve the heaviest range's tail — measured at 40M turns,
+      // worst-stage max task 155.6 s -> 55.3 s with the RunMaxPositions cap
+      // alone, and the docs+freqs scaling-criterion path stays at 4x.
+      // (Capped by the runs bytes: `mergeCuts`.)
+      val keyed = rangeCut(joined, mergeCuts(runsBytes, p, opts.positions),
+          Seq(col("term_id"), col("first_doc")))
         .sortWithinPartitions("term_id", "first_doc")
         .as[KeyedRun]
       val blocks = keyed.mapPartitions(mergeRuns(impactCache))
@@ -418,10 +538,10 @@ object IndexBuilder {
     }
 
     // ---- S5: collection statistics ----------------------------------------
-    if (!manifest.isDone("stats")) {
+    if (!manifest.isDone("stats")) named(spark, "graft: build stats") {
       val t0 = System.nanoTime()
-      val sumDf = termdict.agg(coalesce(sum("df"), lit(0L))).as[Long].head()
-      Seq(CollectionStats(maxDoc, maxDoc, sumTtf, sumDf)).toDS()
+      // sumDf = the sum of every term's df = the postings of the real runs
+      Seq(CollectionStats(maxDoc, maxDoc, sumTtf, counts.postings)).toDS()
         .write.mode("overwrite").parquet(s"$outDir/stats")
       manifest.commit("stats", 1L, ms(t0), Some(s"$outDir/stats"))
     }

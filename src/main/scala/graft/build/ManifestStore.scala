@@ -48,6 +48,19 @@ final class ManifestStore(indexDir: String, spark: SparkSession) {
     fs.rename(tmp, stagePath(stage))
   }
 
+  /** The bytes of every output file a committed stage recorded. */
+  def outputBytes(stage: String): Long = {
+    val in = fs.open(stagePath(stage))
+    val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    "\"bytes\":(\\d+)".r.findAllMatchIn(json).map(_.group(1).toLong).sum
+  }
+
+  /** Whether `stage`'s output table is still on disk. */
+  def hasOutput(stage: String): Boolean = fs.exists(new Path(indexDir, stage))
+
+  /** Delete `stage`'s output table, keeping its commit record. */
+  def dropOutput(stage: String): Unit = fs.delete(new Path(indexDir, stage), true)
+
   def committedStages(): Seq[String] =
     if (!fs.exists(manifestDir)) Nil
     else fs.listStatus(manifestDir).toSeq

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.JobNames.named
 import graft.codec.PostingBlock
 import graft.model.{CollectionStats, TermDictRow}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -47,7 +48,7 @@ import scala.reflect.runtime.universe.TypeTag
 final class IndexView private (@transient spark: SparkSession, val segments: Seq[String],
                                tombDirs: Seq[String]) extends Serializable {
   import spark.implicits._
-  import IndexView.{PostingsFile, Scan, Terms, cut, matching, named, utf8}
+  import IndexView.{PostingsFile, Scan, Terms, cut, matching, utf8}
 
   private val single = segments.size == 1
 
@@ -336,17 +337,6 @@ object IndexView {
 
   /** Drop the terms indexes of segments no snapshot references any more. */
   def release(dirs: Seq[String]): Unit = dirs.foreach(cache.remove)
-
-  /** Run `body` with `what` as the description of the Spark jobs it starts,
-    * so listeners and event logs name the library's own jobs; the caller's
-    * description is restored afterwards.
-    */
-  private[query] def named[T](spark: SparkSession, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val saved = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setLocalProperty("spark.job.description", saved) // null unsets
-  }
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 

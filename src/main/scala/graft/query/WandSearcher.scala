@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.JobNames.named
 import graft.codec.{PostingCodec, ScoreBlock, ScoreSpanBlock}
 import graft.model.TermDictRow
 import graft.score.Bm25
@@ -131,7 +132,7 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
       (col("max_tf").cast("double") +
         element_at(typedLit(w.cache.toSeq), col("max_nb") + 1).cast("double"))
     val nBlocks = math.max(1, (k + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize + 1)
-    val rows = IndexView.named(spark, "graft: WAND theta seed") {
+    val rows = named(spark, "graft: WAND theta seed") {
       view.blocks(ts, Seq(seedTid), ScoreBlock.cols)
         .orderBy(ubCol.desc, col("first_doc").asc)
         .limit(nBlocks)

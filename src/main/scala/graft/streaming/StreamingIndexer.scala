@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.JobNames.named
 import graft.build.{IndexBuilder, ManifestStore}
 import graft.codec.{PostingCodec, ScoreBlock}
 import graft.query.IndexView
@@ -42,32 +43,56 @@ object StreamingIndexer {
     */
   private def latest(spark: SparkSession, log: SnapshotLog,
                      indexDir: String): Option[SnapshotLog#Snapshot] =
-    log.latest().orElse {
-      if (!new ManifestStore(indexDir, spark).isDone("stats")) None
-      else {
-        import spark.implicits._
-        val maxDoc = spark.read.parquet(s"$indexDir/norms")
+    log.latest().orElse(batchBase(spark, log, indexDir).map(commitBase(log, _)))
+
+  /** Snapshot 0 of a completed batch build with no snapshot yet, not
+    * committed; None otherwise.
+    */
+  private def batchBase(spark: SparkSession, log: SnapshotLog,
+                        indexDir: String): Option[SnapshotLog#Snapshot] =
+    if (!new ManifestStore(indexDir, spark).isDone("stats")) None
+    else {
+      import spark.implicits._
+      val maxDoc = named(spark, "graft: base doc-id high-water mark") {
+        spark.read.parquet(s"$indexDir/norms")
           .agg(coalesce(max("doc_id") + 1, lit(0L))).as[Long].head()
-        Some(log.commit(maxDoc, Some(indexDir), Nil))
       }
+      Some(log.Snapshot(0L, maxDoc, Some(indexDir), Nil))
     }
 
+  private def commitBase(log: SnapshotLog, s: SnapshotLog#Snapshot): SnapshotLog#Snapshot =
+    log.commit(s.maxDoc, s.base, s.segments)
+
   /** Build a new segment's tables (no snapshot commit). Returns
-    * (segDir, new high-water maxDoc).
+    * (segDir, new high-water maxDoc); None for a batch without turns, whose
+    * empty segment is deleted — the build itself tells, with no job of its
+    * own.
     */
   private def buildSegment(batch: Dataset[Turn], indexDir: String,
                            snap: Option[SnapshotLog#Snapshot],
-                           positions: Boolean = true): (String, Long) = {
+                           positions: Boolean = true): Option[(String, Long)] = {
     val spark = batch.sparkSession
     val segDir = s"$indexDir/seg-${snap.map(_.id + 1).getOrElse(0L)}"
     val p = math.max(spark.sessionState.conf.numShufflePartitions / 4, 4)
+    // S1 tasks from Spark's size estimate of the batch (an unknown size
+    // estimates huge and keeps p); S3 and S4 size themselves from the runs
+    val estimate = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
+    val first = snap.map(_.maxDoc).getOrElse(0L)
     val maxDoc = IndexBuilder.buildFromTurns(batch, segDir,
-      IndexBuilder.Options(numPartitions = p, positions = positions),
-      firstDoc = snap.map(_.maxDoc).getOrElse(0L))
-    (segDir, maxDoc)
+      IndexBuilder.Options(numPartitions = p,
+        segmentPartitions = IndexBuilder.segmentTasks(estimate, p), positions = positions),
+      firstDoc = first)
+    if (maxDoc > first) Some((segDir, maxDoc))
+    else {
+      val path = new Path(segDir)
+      path.getFileSystem(spark.sessionState.newHadoopConf()).delete(path, true)
+      None
+    }
   }
 
-  /** Append one batch of turns as a new segment and commit a snapshot.
+  /** Append one batch of turns as a new segment and commit a snapshot; a
+    * batch without turns commits nothing and leaves no segment directory.
     * `positions` selects the segment's IndexOptions verbosity
     * (DOCS_AND_FREQS when false — BM25-only streaming indexes skip the
     * positions payload; deletes/compaction handle both).
@@ -75,14 +100,18 @@ object StreamingIndexer {
   def appendSegment(batch: Dataset[Turn], indexDir: String,
                     autoCompact: Boolean = true,
                     positions: Boolean = true): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     val log = new SnapshotLog(indexDir, spark)
-    val snap = latest(spark, log, indexDir)
-    val (segDir, maxDoc) = buildSegment(batch, indexDir, snap, positions)
-    val newSegs = snap.map(_.segments).getOrElse(Nil) :+ segDir
-    log.commit(maxDoc, snap.flatMap(_.base), newSegs, snap.map(_.tombs).getOrElse(Nil))
-    if (autoCompact && newSegs.size >= CompactAt) compact(spark, indexDir)
+    // a batch-built base's snapshot 0 commits only with a segment, so an
+    // empty batch commits nothing
+    val committed = log.latest()
+    val snap = committed.orElse(batchBase(spark, log, indexDir))
+    buildSegment(batch, indexDir, snap, positions).foreach { case (segDir, maxDoc) =>
+      if (committed.isEmpty) snap.foreach(commitBase(log, _))
+      val newSegs = snap.map(_.segments).getOrElse(Nil) :+ segDir
+      log.commit(maxDoc, snap.flatMap(_.base), newSegs, snap.map(_.tombs).getOrElse(Nil))
+      if (autoCompact && newSegs.size >= CompactAt) compact(spark, indexDir)
+    }
   }
 
   /** Atomic update: delete every doc matching `term`, add the replacement
@@ -92,14 +121,17 @@ object StreamingIndexer {
     */
   def updateDocuments(batch: Dataset[Turn], indexDir: String, term: String): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) { deleteByTerm(spark, indexDir, term); return }
     val log = new SnapshotLog(indexDir, spark)
     val snap = latest(spark, log, indexDir).getOrElse {
       appendSegment(batch, indexDir); return
     }
-    val tombs = snap.tombs ++ tombstoneTerm(spark, indexDir, snap, term)
-    val (segDir, maxDoc) = buildSegment(batch, indexDir, Some(snap))
-    log.commit(maxDoc, snap.base, snap.segments :+ segDir, tombs)
+    val tomb = tombstoneTerm(spark, indexDir, snap, term)
+    val tombs = snap.tombs ++ tomb
+    buildSegment(batch, indexDir, Some(snap)) match {
+      case Some((segDir, maxDoc)) => log.commit(maxDoc, snap.base, snap.segments :+ segDir, tombs)
+      // an empty batch: the update is a delete
+      case None => if (tomb.isDefined) log.commit(snap.maxDoc, snap.base, snap.segments, tombs)
+    }
   }
 
   /** Write the docs of `snap` holding `term` — resolved across base +
@@ -114,10 +146,12 @@ object StreamingIndexer {
     val ts = view.lookup(Seq(term))
     ts.rows.get(term).map { d =>
       val tombDir = s"$indexDir/tomb-${snap.id + 1}"
-      view.blocks(ts, Seq(d.term_id), ScoreBlock.cols).as[ScoreBlock]
-        .flatMap(b => PostingCodec.decode(b)._1.iterator)
-        .toDF("doc_id")
-        .write.mode("overwrite").parquet(tombDir)
+      named(spark, "graft: write tombstones") {
+        view.blocks(ts, Seq(d.term_id), ScoreBlock.cols).as[ScoreBlock]
+          .flatMap(b => PostingCodec.decode(b)._1.iterator)
+          .toDF("doc_id")
+          .write.mode("overwrite").parquet(tombDir)
+      }
       tombDir
     }
   }
@@ -135,7 +169,9 @@ object StreamingIndexer {
     val snap = latest(spark, log, indexDir).getOrElse(
       throw new IllegalStateException("deleteDocs on an empty index"))
     val tombDir = s"$indexDir/tomb-${snap.id + 1}"
-    docIds.toDF("doc_id").write.mode("overwrite").parquet(tombDir)
+    named(spark, "graft: write tombstones") {
+      docIds.toDF("doc_id").write.mode("overwrite").parquet(tombDir)
+    }
     log.commit(snap.maxDoc, snap.base, snap.segments, snap.tombs :+ tombDir)
   }
 
@@ -229,6 +265,8 @@ object StreamingIndexer {
     // nothing to fold in and nothing to purge -> no-op (a bare base is
     // already compact, and an empty snapshot must not reach the reduce below)
     if (snap.segments.isEmpty && snap.tombs.isEmpty) return
+    // the build stages of the new base carry their own `graft: build` names
+    named(spark, "graft: compact") {
     val parts = snap.base.toSeq ++ snap.segments
     val newBase = s"$indexDir/base-${snap.id + 1}"
     // Tombstone purge (LiveDocsFormat -> SegmentMerger drop-deleted
@@ -297,9 +335,12 @@ object StreamingIndexer {
     manifest.commit("runs", -1L, 0L, Some(s"$newBase/runs"))
     manifest.commit("norms", -1L, 0L, Some(s"$newBase/norms"))
     tombDf.foreach(_.unpersist(blocking = false))
-    IndexBuilder.buildFromRuns(newBase, IndexBuilder.Options())
+    IndexBuilder.buildFromRuns(newBase, IndexBuilder.Options(),
+      IndexBuilder.runCounts(spark, newBase))
+    manifest.dropOutput("runs")
     log.commit(snap.maxDoc, Some(newBase), Nil)
     IndexView.release(parts)
+    } // named
   }
 
   /** Wire a streaming Dataset[Turn] into segment appends. Watermark bounds

@@ -5,7 +5,6 @@ import graft.model.Turn
 import graft.oracle.BruteForce
 import graft.query.{Query, Searcher}
 import graft.verify.IndexVerifier
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -48,8 +47,13 @@ class ChunkingSpec extends AnyFunSuite {
   }
 
   test("the positional cap actually binds: hot-term runs split beyond one row per partition") {
-    val pepperRuns = spark.read.parquet(s"$indexDir/runs")
-      .filter(col("term") === "pepper").count()
+    // the runs S1 emits for the index above, tokenized as its 4 doc-range
+    // partitions (the build deletes its runs table once it has committed)
+    val sorted = turns.sortBy(t => (t.conv_id, t.turn_idx))
+    val pepperRuns = sorted.grouped(nDocs / 4).zipWithIndex.map { case (part, pid) =>
+      IndexBuilder.buildRuns(pid, part.iterator.zipWithIndex.map { case (t, i) => (i.toLong, t.text) })
+        .count(_.term == "pepper")
+    }.sum
     // 800 docs x 200 positions = 160k positions over 4 partitions = ~40k per
     // partition > RunMaxPositions (8192) -> >= 2 rows per partition; the
     // postings cap (8192 docs) alone would have produced exactly 4.

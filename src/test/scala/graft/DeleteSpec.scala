@@ -252,4 +252,43 @@ class DeleteSpec extends AnyFunSuite {
     // only the replacement docs (ids at the old high-water mark) match now
     assert(personDocs.nonEmpty && personDocs.forall(_ >= snapBefore.maxDoc))
   }
+
+  test("an empty batch: append commits nothing, update is a delete-by-term") {
+    val empty = spark.createDataset(Seq.empty[graft.model.Turn])
+    def segDirs(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("seg-")).sorted.toSeq
+    def latest(dir: String) = new SnapshotLog(dir, spark).latest()
+    // a directory with no index, a stream store and a batch-built directory
+    val none = Files.createTempDirectory("graft_empty_none").toString
+    StreamingIndexer.appendSegment(empty, none)
+    assert(latest(none).isEmpty && segDirs(none).isEmpty)
+    def store(): String = {
+      val dir = Files.createTempDirectory("graft_empty_store").toString
+      StreamingIndexer.appendSegment(spark.createDataset(Transcripts.local(40)), dir, autoCompact = false)
+      dir
+    }
+    val (upd, del) = (store(), store())
+    val before = latest(upd).get
+    StreamingIndexer.appendSegment(empty, upd, autoCompact = false)
+    assert(latest(upd).get == before && segDirs(upd) == Seq("seg-0"))
+    val batch = Files.createTempDirectory("graft_empty_batch").toString
+    IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 40), batch)
+    StreamingIndexer.appendSegment(empty, batch, autoCompact = false)
+    assert(latest(batch).isEmpty && segDirs(batch).isEmpty, "an empty append committed a snapshot")
+    // updateDocuments with no turns: the same snapshot and live docs as
+    // deleteByTerm, for a term no doc holds and for one some docs hold
+    for (term <- Seq("zzabsent", "person")) {
+      StreamingIndexer.updateDocuments(empty, upd, term)
+      StreamingIndexer.deleteByTerm(spark, del, term)
+      val (u, d) = (latest(upd).get, latest(del).get)
+      def name(p: String) = new java.io.File(p).getName
+      assert(u.id == d.id && u.maxDoc == d.maxDoc && u.base == d.base)
+      assert(u.segments.map(name) == d.segments.map(name) && u.tombs.map(name) == d.tombs.map(name))
+      assert(segDirs(upd) == segDirs(del))
+      def live(dir: String) = new SegmentedSearcher(spark, dir).search(Query.Term("time"), 1000)
+        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(live(upd) == live(del), s"update and delete diverged on $term")
+    }
+    assert(latest(upd).get.tombs.size == 1)
+  }
 }

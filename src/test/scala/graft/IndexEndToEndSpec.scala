@@ -290,9 +290,9 @@ class IndexEndToEndSpec extends AnyFunSuite {
 
   test("resume: killed-after-runs rebuild skips completed stages, identical index") {
     val dir = Files.createTempDirectory("graft_resume").toString
-    // simulate a crash mid-build: build fully, then knock out the merge stage
-    IndexBuilder.build(
-      StableMini.docs(spark, 50L), dir)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    def runsRecord = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/_manifest/runs.json")),
+      java.nio.charset.StandardCharsets.UTF_8)
     // Semantic identity: the decoded (term_id, doc, tf, norm) postings must be
     // identical; block layout may differ with range-sampler state, exactly as
     // the reference's merge order may differ without changing the index.
@@ -304,12 +304,24 @@ class IndexEndToEndSpec extends AnyFunSuite {
           d.indices.map(i => (b.term_id, d(i), t(i), n(i)))
         }.collect().sortBy(x => (x._1, x._2)).toSeq
     }
+    // a build killed right after S1 committed: only `runs` is on disk
+    IndexBuilder.writeRuns(StableMini.docs(spark, 50L), dir, IndexBuilder.Options())
+    val s1 = runsRecord
+    val resumed = SparkTestSession.jobsOf(IndexBuilder.build(StableMini.docs(spark, 50L), dir))
+    assert(!resumed.contains("graft: build runs"), s"the resumed build re-ran S1: $resumed")
+    assert(runsRecord == s1)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/runs")), "a finished build keeps its runs")
     val postingsBefore = canon(s"$dir/postings")
-    // delete the postings output + its manifest record -> resume must redo S4 only
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val fresh = Files.createTempDirectory("graft_resume_fresh").toString
+    IndexBuilder.build(StableMini.docs(spark, 50L), fresh)
+    assert(canon(s"$fresh/postings") == postingsBefore)
+    // delete the postings output + its manifest record -> resume redoes S4,
+    // and S1 too: a finished build deleted its runs
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_manifest/postings.json"), false)
-    IndexBuilder.build(StableMini.docs(spark, 50L), dir)
+    val redone = SparkTestSession.jobsOf(IndexBuilder.build(StableMini.docs(spark, 50L), dir))
+    assert(redone.contains("graft: build runs") && redone.contains("graft: build postings"), redone)
+    assert(!redone.contains("graft: build term dictionary"), s"a committed stage re-ran: $redone")
     val postingsAfter = canon(s"$dir/postings")
     assert(postingsBefore == postingsAfter)
     val m = new graft.build.ManifestStore(dir, spark)

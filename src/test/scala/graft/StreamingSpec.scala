@@ -169,12 +169,22 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("one small append runs 32 Spark jobs: a single build pass") {
+  test("one small append runs 8 named Spark jobs and writes one file per table") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_append_jobs").toString
     val batch = spark.createDataset(Transcripts.local(10))
-    assert(jobsOf(StreamingIndexer.appendSegment(batch, dir, autoCompact = false)) == 32)
-    assert(new SnapshotLog(dir, spark).latest().get.maxDoc == Transcripts.local(10).size)
+    // one task per build stage: runs, doc counts, docmap, norms, term
+    // dictionary, the postings' dictionary broadcast and write, stats
+    val jobs = SparkTestSession.jobsOf(StreamingIndexer.appendSegment(batch, dir, autoCompact = false))
+    assert(jobs.size == 8, s"the append ran ${jobs.size} jobs: $jobs")
+    assert(jobs.forall(_.startsWith("graft: build ")), s"unnamed append jobs: $jobs")
+    val snap = new SnapshotLog(dir, spark).latest().get
+    assert(snap.maxDoc == Transcripts.local(10).size)
+    for (table <- Seq("postings", "termdict", "norms", "docmap")) {
+      val files = new java.io.File(snap.segments.head, table).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"$table holds $files Parquet files")
+    }
   }
 
   test("compaction produces a valid base index with identical results") {
