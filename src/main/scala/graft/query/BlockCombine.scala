@@ -3,7 +3,7 @@ package graft.query
 import graft.codec.{PostingCodec, ScoreSpanBlock}
 import graft.model.TermDictRow
 import graft.score.Similarity
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.util.LongAccumulator
 
 /** Doc-range co-partitioned boolean combine — the multi-term scoring pass
@@ -16,11 +16,13 @@ import org.apache.spark.util.LongAccumulator
   * bytes), and is decoded + scored doc-at-a-time per bucket, streaming:
   * read, decode and accumulate overlap block-at-a-time (a buffered-bucket
   * variant measured ~30% slower by serializing read and decode). Where the
-  * buckets meet is [[PositionalScan.byBucket]]'s one rule: a small query's
-  * scan ([[IndexView.Scan.oneTask]]) runs the combine in its own task, with no
-  * exchange, so one partition sees every block of the query (the tightest
-  * [[KthBest]] floor); a larger one shuffles blocks by bucket and combines
-  * reduce-side.
+  * buckets meet is [[PositionalScan.byBucket]]'s one rule: the combine is a
+  * partition function ([[combine]]), and a small query's scan
+  * ([[IndexView.Scan.oneTask]]) runs it in its own task after an in-memory
+  * sort, in the same typed operator that tags the blocks and ranks the top
+  * k, with no exchange, so one partition sees every block of the query (the
+  * tightest [[KthBest]] floor); a larger one shuffles blocks by bucket and
+  * combines reduce-side.
   *
   * Float32 canonical order is preserved structurally: each doc accumulates
   * its clause scores in a per-doc slot array indexed by the compact term
@@ -78,8 +80,12 @@ import org.apache.spark.util.LongAccumulator
   * Memory: a bucket spans maxDoc/shuffle-partitions doc ids, so per-task
   * state is bounded by bucket width (and by the lead df under a MUST);
   * state is released at every bucket boundary, also when one task runs
-  * every bucket of a small query. Sizing spark.sql.shuffle.partitions to
-  * the corpus (as on any shuffle) bounds it at cluster scale.
+  * every bucket of a small query. That task also buffers its tagged blocks
+  * for the in-memory sort: at most the pruned postings bytes the one-task
+  * rule admits (Spark's file split, 4 MB on more than one core), as bucket
+  * copies share their block's byte arrays. Sizing
+  * spark.sql.shuffle.partitions to the corpus (as on any shuffle) bounds
+  * the per-doc state at cluster scale.
   */
 object BlockCombine {
 
@@ -92,7 +98,10 @@ object BlockCombine {
   final case class Block(bucket: Long, rank: Int, ti: Int, first_doc: Long,
                          last_doc: Long, cnt: Int, doc_bytes: Array[Byte],
                          tf_bytes: Array[Byte], norm_bytes: Array[Byte],
-                         max_tf: Int, max_nb: Int)
+                         max_tf: Int, max_nb: Int) extends PositionalScan.Bucketed
+
+  // derived once: a product encoder reflects over its case class
+  private val BlockEncoder: Encoder[Block] = Encoders.product[Block]
 
   /** One copy of a scanned block per bucket it overlaps. */
   def tag(b: ScoreSpanBlock, rank: Int, ti: Int, width: Long): Iterator[Block] =
@@ -149,27 +158,30 @@ object BlockCombine {
     val ranks: Array[Int] = tids.indices.map(ti =>
       if (isNot(ti)) 1 else lead.fold(0)(l => if (tids(ti) == l.term_id) 0 else 1)).toArray
 
-    /** The clause blocks tagged for [[combine]], and whether they come in
-      * one task ([[IndexView.Scan.oneTask]]). When the scan takes more than
-      * one task and the lead is selective (df <=
-      * [[Searcher.phraseLeadMaxDf]]), its block ranges prune every other
-      * term's blocks before the shuffle; in one task the combine's leapfrog
-      * does that work with no collect.
+    /** The clause scan: its blocks and whether they come in one task
+      * ([[IndexView.Scan.oneTask]]). When the scan takes more than one task
+      * and the lead is selective (df <= [[Searcher.phraseLeadMaxDf]]), its
+      * block ranges prune every other term's blocks before the shuffle; in
+      * one task the combine's leapfrog does that work with no collect.
       */
-    def blocks(spark: SparkSession, view: IndexView, width: Long): (Dataset[Block], Boolean) = {
-      import spark.implicits._
+    def scan(spark: SparkSession, view: IndexView): (Dataset[ScoreSpanBlock], Boolean) = {
       val s = view.scan(ts, tids.toSeq, ScoreSpanBlock.cols)
-      var scan = s.rows.as[ScoreSpanBlock]
+      var blocks = s.rows.as(PositionalScan.Rows.scoreSpanBlock)
       lead.filter(l => !s.oneTask && l.df <= Searcher.phraseLeadMaxDf && tids.length > 1).foreach { l =>
         val bIv = spark.sparkContext.broadcast(view.docRanges(ts, Seq(l.term_id)))
-        scan = scan.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
+        blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
       }
+      (blocks, s.oneTask)
+    }
+
+    /** Tags each scanned clause block for [[combine]] by its ti and rank. */
+    def tagger(width: Long): Iterator[ScoreSpanBlock] => Iterator[Block] = {
       val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
       val rk = ranks
-      (scan.flatMap { b =>
+      _.flatMap { b =>
         val ti = tiOf(b.term_id)
         tag(b, rk(ti), ti, width)
-      }, s.oneTask)
+      }
     }
   }
 
@@ -215,136 +227,133 @@ object BlockCombine {
     var excluded = false
   }
 
-  /** Combine tagged blocks into per-doc boolean-filtered scores.
-    * `scorers(ti)` scores that clause's postings (null => MUST_NOT:
+  /** The combine kernel: tagged blocks of one partition, sorted by (bucket,
+    * rank, ti) ([[PositionalScan.byBucket]]), into per-doc boolean-filtered
+    * scores. `scorers(ti)` scores that clause's postings (null => MUST_NOT:
     * presence-only); `isMust(ti)`/`isNot(ti)` classify; `nMust` counts
-    * distinct MUST clauses; `mm` is minimum-should-match; `oneTask` is the
-    * scan's [[IndexView.Scan.oneTask]]. With `prune`, the bound skips and the
-    * MaxScore establishment rule of the object doc apply, and every bucket
-    * copy counts as skipped or scanned.
+    * distinct MUST clauses; `mm` is minimum-should-match. With `prune`, the
+    * bound skips and the MaxScore establishment rule of the object doc
+    * apply, and every bucket copy counts as skipped or scanned.
     */
-  def combine(spark: SparkSession, blocks: Dataset[Block],
-              scorers: Array[Similarity.TermScorer], isMust: Array[Boolean],
-              isNot: Array[Boolean], nMust: Int, mm: Int, width: Long, oneTask: Boolean,
-              prune: Option[Prune] = None): Dataset[(Long, Float)] = {
-    import spark.implicits._
+  def combine(scorers: Array[Similarity.TermScorer], isMust: Array[Boolean],
+              isNot: Array[Boolean], nMust: Int, mm: Int, width: Long,
+              prune: Option[Prune] = None): PositionalScan.Kernel[Block] = {
     val nTis = scorers.length
     val pr = prune.orNull
-    PositionalScan.byBucket(blocks, oneTask, "bucket", "rank", "ti")
-      .mapPartitions { it =>
-        val best = if (pr == null) null else new KthBest(pr.k, pr.theta0)
-        val suffix = if (pr == null) null else pr.suffix.orNull
-        val perDoc = new scala.collection.mutable.LongMap[DocAcc]()
-        var curBucket = Long.MinValue
-        var establishing = true      // flips once per bucket, never back
-        var cand: Array[Long] = null // frozen sorted candidates of the bucket
+    PositionalScan.Kernel(Seq("bucket", "rank", "ti"), { it =>
+      val best = if (pr == null) null else new KthBest(pr.k, pr.theta0)
+      val suffix = if (pr == null) null else pr.suffix.orNull
+      val perDoc = new scala.collection.mutable.LongMap[DocAcc]()
+      var curBucket = Long.MinValue
+      var establishing = true      // flips once per bucket, never back
+      var cand: Array[Long] = null // frozen sorted candidates of the bucket
 
-        def anyCandidateIn(first: Long, last: Long): Boolean = {
-          if (cand == null) {
-            cand = perDoc.keysIterator.toArray
-            java.util.Arrays.sort(cand)
-          }
-          var loI = 0
-          var hiI = cand.length
-          while (loI < hiI) {
-            val mid = (loI + hiI) >>> 1
-            if (cand(mid) < first) loI = mid + 1 else hiI = mid
-          }
-          loI < cand.length && cand(loI) <= last
+      def anyCandidateIn(first: Long, last: Long): Boolean = {
+        if (cand == null) {
+          cand = perDoc.keysIterator.toArray
+          java.util.Arrays.sort(cand)
         }
-
-        def flush(): Iterator[(Long, Float)] = {
-          cand = null
-          establishing = true
-          val out = perDoc.iterator.flatMap { case (doc, acc) =>
-            var mustSeen = 0
-            var shouldSeen = 0
-            var score = 0.0f
-            var i = 0
-            while (i < nTis) {
-              val v = acc.s(i)
-              if (!v.isNaN) {
-                if (isMust(i)) mustSeen += 1 else shouldSeen += 1
-                score += v
-              }
-              i += 1
-            }
-            if (!acc.excluded && mustSeen == nMust && shouldSeen >= mm &&
-              (mustSeen + shouldSeen) > 0) Iterator.single((doc, score))
-            else Iterator.empty
-          }.toArray
-          perDoc.clear()
-          if (best != null) out.foreach(h => best.offer(h._2))
-          out.iterator
+        var loI = 0
+        var hiI = cand.length
+        while (loI < hiI) {
+          val mid = (loI + hiI) >>> 1
+          if (cand(mid) < first) loI = mid + 1 else hiI = mid
         }
+        loI < cand.length && cand(loI) <= last
+      }
 
-        def addBlock(b: Block): Unit = {
-          val ti = b.ti
-          if (pr != null && !isNot(ti)) {
-            val ub = pr.ubFns(ti)
-            if (ub != null && (ub(b.max_tf, b.max_nb) + pr.rests(ti)) * pr.slack < best.theta) {
-              pr.skipped.add(1)
-              return
-            }
-          }
-          if (establishing &&
-            (if (suffix == null) b.rank > 0 else suffix(b.rank) * pr.slack < best.theta))
-            establishing = false
-          val lo = b.bucket * width
-          val hi = lo + width
-          if (!establishing && !anyCandidateIn(math.max(b.first_doc, lo),
-            math.min(b.last_doc, hi - 1))) {
-            if (pr != null) pr.skipped.add(1)
-            return
-          }
-          if (pr != null) pr.scanned.add(1)
-          val scorer = scorers(ti)
-          val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
-            b.doc_bytes, b.tf_bytes)
+      def flush(): Iterator[(Long, Float)] = {
+        cand = null
+        establishing = true
+        val out = perDoc.iterator.flatMap { case (doc, acc) =>
+          var mustSeen = 0
+          var shouldSeen = 0
+          var score = 0.0f
           var i = 0
-          while (i < b.cnt) {
-            val d = docs(i)
-            if (d >= lo && d < hi) {
-              var acc = perDoc.getOrNull(d)
-              if (acc == null && establishing) {
-                acc = new DocAcc(nTis)
-                perDoc.update(d, acc)
-              }
-              if (acc != null) {
-                if (isNot(ti)) acc.excluded = true
-                else acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
-              }
+          while (i < nTis) {
+            val v = acc.s(i)
+            if (!v.isNaN) {
+              if (isMust(i)) mustSeen += 1 else shouldSeen += 1
+              score += v
             }
             i += 1
           }
-        }
+          if (!acc.excluded && mustSeen == nMust && shouldSeen >= mm &&
+            (mustSeen + shouldSeen) > 0) Iterator.single((doc, score))
+          else Iterator.empty
+        }.toArray
+        perDoc.clear()
+        if (best != null) out.foreach(h => best.offer(h._2))
+        out.iterator
+      }
 
-        new scala.collection.AbstractIterator[(Long, Float)] {
-          private var pendingFlush: Iterator[(Long, Float)] = Iterator.empty
-          private var done = false
-          private def advance(): Unit = {
-            while (!pendingFlush.hasNext && !done) {
-              if (it.hasNext) {
-                val b = it.next()
-                if (b.bucket != curBucket) {
-                  pendingFlush = flush()
-                  curBucket = b.bucket
-                }
-                addBlock(b)
-              } else {
-                pendingFlush = flush()
-                done = true
-              }
+      def addBlock(b: Block): Unit = {
+        val ti = b.ti
+        if (pr != null && !isNot(ti)) {
+          val ub = pr.ubFns(ti)
+          if (ub != null && (ub(b.max_tf, b.max_nb) + pr.rests(ti)) * pr.slack < best.theta) {
+            pr.skipped.add(1)
+            return
+          }
+        }
+        if (establishing &&
+          (if (suffix == null) b.rank > 0 else suffix(b.rank) * pr.slack < best.theta))
+          establishing = false
+        val lo = b.bucket * width
+        val hi = lo + width
+        if (!establishing && !anyCandidateIn(math.max(b.first_doc, lo),
+          math.min(b.last_doc, hi - 1))) {
+          if (pr != null) pr.skipped.add(1)
+          return
+        }
+        if (pr != null) pr.scanned.add(1)
+        val scorer = scorers(ti)
+        val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
+          b.doc_bytes, b.tf_bytes)
+        var i = 0
+        while (i < b.cnt) {
+          val d = docs(i)
+          if (d >= lo && d < hi) {
+            var acc = perDoc.getOrNull(d)
+            if (acc == null && establishing) {
+              acc = new DocAcc(nTis)
+              perDoc.update(d, acc)
+            }
+            if (acc != null) {
+              if (isNot(ti)) acc.excluded = true
+              else acc.s(ti) = scorer.score(tfs(i).toFloat, b.norm_bytes(i))
             }
           }
-          advance()
-          override def hasNext: Boolean = pendingFlush.hasNext
-          override def next(): (Long, Float) = {
-            val h = pendingFlush.next()
-            advance()
-            h
-          }
+          i += 1
         }
       }
+
+      new scala.collection.AbstractIterator[(Long, Float)] {
+        private var pendingFlush: Iterator[(Long, Float)] = Iterator.empty
+        private var done = false
+        private def advance(): Unit = {
+          while (!pendingFlush.hasNext && !done) {
+            if (it.hasNext) {
+              val b = it.next()
+              if (b.bucket != curBucket) {
+                pendingFlush = flush()
+                curBucket = b.bucket
+              }
+              addBlock(b)
+            } else {
+              pendingFlush = flush()
+              done = true
+            }
+          }
+        }
+        advance()
+        override def hasNext: Boolean = pendingFlush.hasNext
+        override def next(): (Long, Float) = {
+          val h = pendingFlush.next()
+          advance()
+          h
+        }
+      }
+    }, BlockEncoder)
   }
 }

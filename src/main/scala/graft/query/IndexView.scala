@@ -2,8 +2,9 @@ package graft.query
 
 import graft.JobNames.named
 import graft.codec.PostingBlock
-import graft.model.{CollectionStats, TermDictRow}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.model.{CollectionStats, NormRow, TermDictRow}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,9 +35,9 @@ import scala.reflect.runtime.universe.TypeTag
   * (BlockTreeTermsReader).
   *
   * A [[scan]] whose pruned files fit the split Spark's file scan sizes for
-  * them is one task: it reads in one partition, and the combine kernels run
-  * in that same task with no exchange — a small query is one Spark job with
-  * one task.
+  * them is one task: it reads in one partition, and the combine kernels and
+  * the top-k selection run in that same task with no exchange — a small
+  * query is one Spark job with one task and one typed operator.
   *
   * Term ids are segment-local, so [[lookup]] hands out scan KEYS and
   * [[blocks]] rewrites every segment's term ids to them: the scoring
@@ -48,7 +49,7 @@ import scala.reflect.runtime.universe.TypeTag
 final class IndexView private (@transient spark: SparkSession, val segments: Seq[String],
                                tombDirs: Seq[String]) extends Serializable {
   import spark.implicits._
-  import IndexView.{PostingsFile, Scan, Terms, cut, matching, utf8}
+  import IndexView.{PostingsFile, Scan, Terms, Tombstone, cut, matching, utf8}
 
   private val single = segments.size == 1
 
@@ -143,9 +144,9 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
       if (ids.isEmpty) None
       else {
         val files = loaded(s).files.toSeq.filter(f => f.lo <= ids.last && ids.head <= f.hi)
-        val b = read(s, files).filter(col("term_id").between(ids.head, ids.last))
-        Some((files, (if (ids.last - ids.head + 1 == ids.length) b else b.filter(col("term_id").isin(ids: _*)))
-          .select(cols.map(col): _*)))
+        val range = col("term_id").between(ids.head, ids.last)
+        Some((files, read(s, files, if (ids.last - ids.head + 1 == ids.length) range
+          else range && col("term_id").isin(ids: _*)).select(cols.map(col): _*)))
       }
     }
     scans.map(_._2).reduceOption(_ union _).map(inOneTask(scans.flatMap(_._1), _).rows)
@@ -162,17 +163,19 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
     * for them ([[FilePartition.maxSplitBytes]]: `maxPartitionBytes`, capped
     * at the bytes per core but never below `openCostInBytes`), the scan is
     * [[Scan.oneTask]] and comes in ONE partition. [[BlockCombine.combine]]
-    * and [[PositionalScan.score]] then run in that task with no exchange,
-    * and the driver-side lead-range and theta-seed jobs are skipped, since
-    * the task sees every block of the query anyway. A scan that would spread
-    * over several cores keeps the bucket exchange and its prefilters.
+    * and [[PositionalScan.score]] then run in that task with no exchange —
+    * sort, kernel, liveDocs and the top k in one typed operator
+    * ([[PositionalScan.byBucket]]) — and the driver-side lead-range and
+    * theta-seed jobs are skipped, since the task sees every block of the
+    * query anyway. A scan that would spread over several cores keeps the
+    * bucket exchange and its prefilters.
     */
   def scan(ts: Terms, keys: Seq[Long], cols: Seq[String]): Scan = {
     val parts = pruned(ts, keys)
     val scans = parts.map { case (s, idToKey, files) =>
       val key = if (single) col("term_id")
         else element_at(typedLit(idToKey.toMap), col("term_id"))
-      read(s, files).filter(col("term_id").isin(idToKey.map(_._1): _*))
+      read(s, files, col("term_id").isin(idToKey.map(_._1): _*))
         .select(cols.map(c => if (c == "term_id") key.as(c) else col(c)): _*)
     }
     scans.reduceOption(_ union _).map(inOneTask(parts.flatMap(_._3), _))
@@ -201,12 +204,12 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
         idToKey.exists { case (id, _) => f.lo <= id && id <= f.hi })))
     }
 
-  /** Segment `s`'s postings restricted to `files`: a filter on the file
-    * name, which Spark applies when it lists the (cached) file index, so the
-    * other files are never opened.
+  /** Segment `s`'s postings restricted to `files` and filtered by `where`:
+    * the file name filter Spark applies when it lists the (cached) file
+    * index, so the other files are never opened.
     */
-  private def read(s: Int, files: Seq[PostingsFile]): DataFrame =
-    postings(s).filter(col("_metadata.file_name").isin(files.map(_.name): _*))
+  private def read(s: Int, files: Seq[PostingsFile], where: Column): DataFrame =
+    postings(s).filter(col("_metadata.file_name").isin(files.map(_.name): _*) && where)
 
   /** Merged doc ranges of the keys' blocks — skip metadata only, df/128
     * rows per term — for the lead-term block filter of a query whose
@@ -219,13 +222,14 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
 
   /** One row per doc (the norms sidecar), for MatchAllDocsQuery. */
   def docIds: DataFrame =
-    segments.map(d => spark.read.parquet(s"$d/norms").select("doc_id")).reduce(_ union _)
+    segments.map(IndexView.table[NormRow](spark, _, "norms").select("doc_id")).reduce(_ union _)
 
   /** Dead docs (the snapshot's tombstone tables, the liveDocs-bitset analog,
     * Lucene.Net/Codecs/LiveDocsFormat.cs), applied liveDocs-style as a
     * pre-top-k filter. A snapshot never changes, so its dead ids load once
-    * per view (one job, on first use) into a sorted array shipped to tasks
-    * as one broadcast: a query then runs no job and no exchange for them.
+    * per view (one job, on first use, reading each table with its known
+    * schema) into a sorted array shipped to tasks as one broadcast: a query
+    * then runs no job and no exchange for them.
     * That costs about 12 driver bytes per tombstone (BASELINE.md) for as
     * long as the view lives — about 6 MB per open view at 500,000
     * uncompacted tombstones, the size past which
@@ -234,16 +238,31 @@ final class IndexView private (@transient spark: SparkSession, val segments: Seq
     * (Spark's ContextCleaner). Like the reference, collection and term
     * statistics keep counting buried docs until compaction purges them.
     */
-  @transient private lazy val isLive = {
+  @transient private lazy val deadIds: Broadcast[Array[Long]] = {
     val dead = named(spark, "graft: load tombstones") {
-      tombDirs.map(spark.read.parquet(_).select("doc_id")).reduce(_ union _).as[Long].collect()
+      tombDirs.map(IndexView.table[Tombstone](spark, _)).reduce(_ union _).as[Long].collect()
     }.distinct.sorted
-    val b = spark.sparkContext.broadcast(dead)
+    spark.sparkContext.broadcast(dead)
+  }
+  @transient private lazy val isLive = {
+    val b = deadIds
     udf((d: Long) => java.util.Arrays.binarySearch(b.value, d) < 0)
   }
   def hasTombstones: Boolean = tombDirs.nonEmpty
   def live(df: DataFrame): DataFrame =
     if (tombDirs.isEmpty) df else df.filter(isLive(col("doc_id")))
+
+  /** A top-k search's ask of a one-task scan over this view's live docs. */
+  def rank(k: Int): PositionalScan.Rank =
+    PositionalScan.Rank(k, if (tombDirs.isEmpty) None else Some(deadIds))
+
+  /** The k best live hits, ranked: `hits` as they are when the one-task
+    * operator already ranked them, else liveDocs then `orderBy(score desc,
+    * doc_id asc).limit(k)`, which Catalyst plans as TakeOrderedAndProject.
+    */
+  def top(hits: PositionalScan.Hits, k: Int): DataFrame =
+    if (hits.ranked) hits.rows
+    else live(hits.rows).orderBy(desc("score"), asc("doc_id")).limit(k)
 }
 
 object IndexView {
@@ -262,10 +281,27 @@ object IndexView {
 
   /** Open `dir`: a streaming store's latest snapshot, else a batch index. */
   def open(spark: SparkSession, dir: String): IndexView =
-    new graft.streaming.SnapshotLog(dir, spark).latest() match {
-      case Some(snap) => of(spark, snap)
-      case None => new IndexView(spark, Seq(dir), Nil)
-    }
+    at(spark, dir, new graft.streaming.SnapshotLog(dir, spark).latest())
+
+  private def at(spark: SparkSession, dir: String,
+                 snap: Option[graft.streaming.SnapshotLog#Snapshot]): IndexView =
+    snap.fold(new IndexView(spark, Seq(dir), Nil))(of(spark, _))
+
+  // the view [[shared]] hands out per directory: its session, its snapshot
+  // id (-1: a batch index) and the view
+  private val views = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Long, IndexView)]()
+
+  /** [[open]]'s view, shared until `dir`'s latest snapshot (or the session)
+    * changes — for callers that open a view per call, such as
+    * [[Spans.spans]]: a snapshot's tombstones then load once, into one
+    * broadcast, not once per call.
+    */
+  def shared(spark: SparkSession, dir: String): IndexView = {
+    val snap = new graft.streaming.SnapshotLog(dir, spark).latest()
+    val id = snap.fold(-1L)(_.id)
+    views.compute(dir, (_, old) =>
+      if (old != null && (old._1 eq spark) && old._2 == id) old else (spark, id, at(spark, dir, snap)))._3
+  }
 
   def of(spark: SparkSession, snap: graft.streaming.SnapshotLog#Snapshot): IndexView =
     new IndexView(spark, snap.base.toSeq ++ snap.segments, snap.tombs)
@@ -388,5 +424,10 @@ object IndexView {
     */
   private def table[T <: Product: TypeTag](spark: SparkSession, dir: String,
                                            name: String): DataFrame =
-    spark.read.schema(Encoders.product[T].schema).parquet(s"$dir/$name")
+    table[T](spark, s"$dir/$name")
+  private def table[T <: Product: TypeTag](spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Encoders.product[T].schema).parquet(path)
+
+  /** A tombstone table's row: one dead doc. */
+  private final case class Tombstone(doc_id: Long)
 }

@@ -5,21 +5,28 @@ import graft.model.{CollectionStats, TermDictRow}
 import graft.score.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import PositionalScan.{Hits, Rank}
 import Searcher.payloadDocScore
 
 /** Top-k BM25 search over a built index directory or a streaming store
   * (read through an [[IndexView]]) — the read path (IndexSearcher.Search
-  * semantics, SURVEY.md §3.1) as one declarative DataFrame plan per query:
+  * semantics, SURVEY.md §3.1) as one DataFrame plan per query:
   *
   *   postings pruned by term_id (files by their term range, then Parquet
   *   row-group min/max) -> decode + score (shared float32 Bm25 kernel) ->
   *   boolean combine ([[BlockCombine]]: clause scores summed in ascending
-  *   term_id order, the documented canonical order; in the scan's own task
-  *   for a small query) -> orderBy(score desc, doc_id asc)
-  *   limit k, which Catalyst plans as TakeOrderedAndProject — structurally
-  *   the reference's per-leaf heaps + TopDocs.Merge with the HitQueue
-  *   tie-break (score desc, then smaller docID;
-  *   /root/reference/src/Lucene.Net/Search/HitQueue.cs:88-105).
+  *   term_id order, the documented canonical order) or positional scoring
+  *   ([[PositionalScan]]) -> liveDocs -> the top k by (score desc, doc_id
+  *   asc) — the reference's HitQueue tie-break (score desc, then smaller
+  *   docID; Lucene.Net/Search/HitQueue.cs:88-105).
+  *
+  * For a flat term query or a phrase whose scan is one task
+  * ([[IndexView.Scan.oneTask]]), everything after the scan runs in that
+  * task as ONE typed operator that emits the k best hits already ranked
+  * ([[PositionalScan.byBucket]]). Larger scans, and the nested, DisMax,
+  * constant-score, MatchAll and payload shapes, keep every hit and end
+  * with liveDocs and orderBy/limit, which Catalyst plans as
+  * TakeOrderedAndProject — the per-leaf heaps + TopDocs.Merge shape.
   */
 object Searcher {
   /** Lead-term threshold for the phrase block filter: when the rarest slot's
@@ -89,8 +96,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     case mt => view.expand(mt, maxTerms + 1)
   }
 
-  def search(q: Query, k: Int): DataFrame =
-    view.live(scoreAll(q)).orderBy(desc("score"), asc("doc_id")).limit(k)
+  def search(q: Query, k: Int): DataFrame = view.top(hits(q, Some(view.rank(k))), k)
 
   /** Every matching (doc_id, score) row, liveDocs applied — the scorer
     * stream collectors consume: [[Collectors.searchWithTotals]] observes it
@@ -113,43 +119,57 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     * applies both once at the top). Scoring contract per [[Query.BoolQ]]:
     * flat levels sum ascending term_id; nested levels sum in clause order.
     */
-  private def scoreAll(q: Query): DataFrame = q match {
-    case Query.Term(t, boost) => clausesScoreAll(Seq((t, Query.Should, boost)), 0)
+  private def scoreAll(q: Query): DataFrame = hits(q, None).rows
+
+  /** The hits of `q`; with a [[Rank]], a flat term query or a phrase whose
+    * scan is one task returns its k best live hits already ranked.
+    */
+  private def hits(q: Query, rank: Option[Rank]): Hits = q match {
+    case Query.Term(t, boost) => clausesScoreAll(Seq((t, Query.Should, boost)), 0, rank)
     case b: Query.Bool =>
       clausesScoreAll(
         b.must.map(t => (t, Query.Must: Query.Occur, 1.0f)) ++
           b.should.map(t => (t, Query.Should: Query.Occur, 1.0f)) ++
           b.mustNot.map(t => (t, Query.MustNot: Query.Occur, 1.0f)),
-        b.minShouldMatch)
-    case p: Query.Phrase => positionalScoreAll(p.terms.map(Seq(_)), p.slop, p.boost)
-    case mp: Query.MultiPhrase => positionalScoreAll(mp.slots, mp.slop, mp.boost)
+        b.minShouldMatch, rank)
+    case p: Query.Phrase => positionalScoreAll(p.terms.map(Seq(_)), p.slop, p.boost, rank)
+    case mp: Query.MultiPhrase => positionalScoreAll(mp.slots, mp.slop, mp.boost, rank)
+    case bq0: Query.BoolQ =>
+      Rewrite.harden(view, bq0.clauses) match {
+        case None => empty // a MUST clause provably matches nothing
+        case Some(cs) =>
+          val bq = Query.BoolQ(cs, bq0.minShouldMatch, bq0.boost)
+          if (bq.clauses.exists(c => isNested(c._2))) all(nestedScoreAll(bq))
+          else {
+            val cs = Rewrite.clauses(view, bq.clauses)
+            // a boost rescales after the combine, so only an unboosted group
+            // can rank in the scan's task
+            if (bq.boost == 1.0f) clausesScoreAll(cs, bq.minShouldMatch, rank)
+            else all(clausesScoreAll(cs, bq.minShouldMatch, None).rows
+              .select(col("doc_id"), (col("score") * lit(bq.boost)).cast("float").as("score")))
+          }
+      }
     case Query.MatchAll(boost) =>
       // MatchAllDocsQuery: every doc (the norms sidecar holds one row per
       // doc); liveDocs apply at the top like every other path
-      view.docIds.select(col("doc_id"), lit(boost).cast("float").as("score"))
-    case dm: Query.DisMax => disMaxScoreAll(dm)
-    case pt: Query.PayloadTerm => payloadScoreAll(pt)
-    case pn: Query.PayloadNear => payloadNearScoreAll(pn)
+      all(view.docIds.select(col("doc_id"), lit(boost).cast("float").as("score")))
+    case dm: Query.DisMax => all(disMaxScoreAll(dm))
+    case pt: Query.PayloadTerm => all(payloadScoreAll(pt))
+    case pn: Query.PayloadNear => all(payloadNearScoreAll(pn))
     case Query.ConstantScore(mt, boost) if Rewrite.isMultiTerm(mt) =>
       // constant-score FILTER rewrite (ConstantScoreAutoRewrite semantics):
       // the docset of every matching term, score = boost, never expanded
-      multiTermDocs(mt).select(col("doc_id"), lit(boost).cast("float").as("score"))
+      all(multiTermDocs(mt).select(col("doc_id"), lit(boost).cast("float").as("score")))
     case Query.ConstantScore(sub, boost) =>
-      scoreAll(sub).select(col("doc_id"), lit(boost).cast("float").as("score"))
-    case bq0: Query.BoolQ =>
-      Rewrite.harden(view, bq0.clauses) match {
-        case None => emptyResult // a MUST clause provably matches nothing
-        case Some(cs) =>
-          val bq = Query.BoolQ(cs, bq0.minShouldMatch, bq0.boost)
-          if (bq.clauses.exists(c => isNested(c._2))) nestedScoreAll(bq)
-          else {
-            val flat = clausesScoreAll(Rewrite.clauses(view, bq.clauses), bq.minShouldMatch)
-            if (bq.boost == 1.0f) flat
-            else flat.select(col("doc_id"), (col("score") * lit(bq.boost)).cast("float").as("score"))
-          }
-      }
-    case leaf => scoreAll(Query.BoolQ(Seq((Query.Should, leaf))))
+      all(scoreAll(sub).select(col("doc_id"), lit(boost).cast("float").as("score")))
+    case leaf => hits(Query.BoolQ(Seq((Query.Should, leaf))), rank)
   }
+
+  /** Every hit, unranked. */
+  private def all(df: DataFrame): Hits = Hits(df, ranked = false)
+
+  /** No hit: trivially ranked. */
+  private def empty: Hits = Hits(emptyResult, ranked = true)
 
   /** Docset of a multi-term leaf without expansion — the CONSTANT_SCORE
     * filter execution over [[IndexView.blocksWhere]] (the reference builds
@@ -257,15 +277,16 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
   }
 
   /** Per-doc scored hits for the positive clauses + the boolean combine
-    * over the shared clause plan ([[BlockCombine.Clauses]]).
-    * Returns ALL matching (doc_id: Long, score: Float) rows.
+    * over the shared clause plan ([[BlockCombine.Clauses]]): ALL matching
+    * (doc_id: Long, score: Float) rows, or with a [[Rank]] on a one-task
+    * scan the k best live ones, ranked.
     */
   private def clausesScoreAll(clauses: Seq[(String, Query.Occur, Float)],
-                              mm0: Int): DataFrame = {
+                              mm0: Int, rank: Option[Rank]): Hits = {
     require(clauses.size <= Query.MaxClauseCount, "too many clauses")
     def terms(o: Query.Occur): Seq[String] = clauses.collect { case (t, `o`, _) => t }
     BlockCombine.Clauses.plan(view, terms(Query.Must), terms(Query.Should),
-      terms(Query.MustNot), mm0).fold(emptyResult) { p =>
+      terms(Query.MustNot), mm0).fold(empty) { p =>
       // first-clause boost wins for a duplicated positive term
       val boosts: Map[String, Float] = clauses.filter(_._2 != Query.MustNot)
         .groupBy(_._1).map { case (t, cs) => t -> cs.head._3 }
@@ -275,46 +296,30 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
       val weights: Map[Long, graft.score.Similarity.TermScorer] = p.pos.map { d =>
         d.term_id -> similarity.termScorer(d.df, d.ttf, stats, boosts(d.term))
       }.toMap
-      val combined =
-        if (p.pos.size == 1 && !p.isNot.contains(true) &&
-          (p.mm == 0 || (p.mm == 1 && p.should.exists(p.ts.rows.contains)))) {
-          // single positive term with a trivially-satisfied minShouldMatch:
-          // no combine, no shuffle. The mm check must see DICTIONARY-PRESENT
-          // should terms: a MUST-only query with mm >= 1 — including one whose
-          // should terms are all absent from the corpus — matches NOTHING
-          // (mm counts SHOULD clauses only, BooleanWeight semantics), so it
-          // takes the combine path below, whose shouldSeen filter drops all.
-          val bw = spark.sparkContext.broadcast(weights)
-          scoredHits(p.ts, weights.keySet.toSeq, bw).map(h => (h._1, h._3))
-        } else {
-          val width = PositionalScan.bucketWidth(spark, stats.max_doc)
-          val (tagged, one) = p.blocks(spark, view, width)
-          BlockCombine.combine(spark, tagged,
-            p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width, one)
-        }
-      combined.toDF("doc_id", "score")
-    }
-  }
-
-  /** Decode + score the postings blocks of the given terms.
-    * Emits (doc_id, term_id, score); excluded (mustNot) terms score 0.
-    */
-  private def scoredHits(ts: IndexView.Terms, termIds: Seq[Long],
-                         bw: org.apache.spark.broadcast.Broadcast[Map[Long, graft.score.Similarity.TermScorer]])
-      : org.apache.spark.sql.Dataset[(Long, Long, Float)] = {
-    view.blocks(ts, termIds, ScoreBlock.cols) // the projection prunes the positions column
-      .as[ScoreBlock]
-      .flatMap { b =>
-        val (docs, tfs, norms) = PostingCodec.decode(b)
-        bw.value.get(b.term_id) match {
-          case Some(w) =>
-            docs.indices.iterator.map { i =>
-              (docs(i), b.term_id, w.score(tfs(i).toFloat, norms(i)))
-            }
-          case None => // mustNot term: presence only
-            docs.iterator.map(d => (d, b.term_id, 0.0f))
-        }
+      if (p.pos.size == 1 && !p.isNot.contains(true) &&
+        (p.mm == 0 || (p.mm == 1 && p.should.exists(p.ts.rows.contains)))) {
+        // single positive term with a trivially-satisfied minShouldMatch:
+        // scored during the scan, no combine, no shuffle. The mm check must
+        // see DICTIONARY-PRESENT should terms: a MUST-only query with mm >= 1
+        // — including one whose should terms are all absent from the corpus
+        // — matches NOTHING (mm counts SHOULD clauses only, BooleanWeight
+        // semantics), so it takes the combine path below, whose shouldSeen
+        // filter drops all.
+        val (tid, w) = weights.head
+        // the projection prunes the positions column
+        val scan = view.scan(p.ts, Seq(tid), ScoreBlock.cols)
+        PositionalScan.scored(scan.rows.as(PositionalScan.Rows.scoreBlock), scan.oneTask, rank)(
+          _.flatMap { b =>
+            val (docs, tfs, norms) = PostingCodec.decode(b)
+            docs.indices.iterator.map(i => (docs(i), w.score(tfs(i).toFloat, norms(i))))
+          })
+      } else {
+        val width = PositionalScan.bucketWidth(spark, stats.max_doc)
+        val (scan, one) = p.scan(spark, view)
+        PositionalScan.byBucket(scan, one, p.tagger(width), BlockCombine.combine(
+          p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width), rank)
       }
+    }
   }
 
   /** Native positional search from the positions index (ExactPhraseScorer /
@@ -331,7 +336,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     * ExactPhraseScorer.cs:118).
     */
   private def positionalScoreAll(slots: Seq[Seq[String]], slop: Int,
-                                 boost: Float): DataFrame = {
+                                 boost: Float, rank: Option[Rank]): Hits = {
     import graft.codec.PosSpanBlock
     require(slots.size >= 2, "phrase needs at least two positions")
     val ts = view.lookup(slots.flatten.distinct)
@@ -340,7 +345,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     // matches nothing (MultiPhraseQuery semantics)
     val slotTids: Array[Array[Long]] =
       slots.map(_.flatMap(dict.get).map(_.term_id).distinct.sorted.toArray).toArray
-    if (slotTids.exists(_.isEmpty)) return emptyResult
+    if (slotTids.exists(_.isEmpty)) return empty
     // weight = summed idf in canonical order: slot order, ascending term_id
     val idByTerm = dict.map { case (_, d) => d.term_id -> d }
     var idfSum = 0.0f
@@ -355,7 +360,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     val width = PositionalScan.bucketWidth(spark, stats.max_doc)
     val scan = view.scan(ts, ids, PosSpanBlock.cols)
     val one = scan.oneTask
-    var blocks = scan.rows.as[PosSpanBlock]
+    var blocks = scan.rows.as(PositionalScan.Rows.posSpanBlock)
 
     // lead slot = rarest (fewest total postings); its terms stream first in
     // each bucket (rank 0), and when the scan takes several tasks and the
@@ -370,18 +375,15 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
       blocks = blocks.filter(b => bIv.value.overlaps(b.first_doc, b.last_doc))
     }
 
-    val bTi = spark.sparkContext.broadcast(tiOf)
-    val bLead = spark.sparkContext.broadcast(leadTis)
-    val tagged = blocks.flatMap { b =>
-      val ti = bTi.value(b.term_id)
-      val rank = if (bLead.value(ti)) 0 else 1
+    val tag: Iterator[PosSpanBlock] => Iterator[PositionalScan.Tagged] = _.flatMap { b =>
+      val ti = tiOf(b.term_id)
+      val r = if (leadTis(ti)) 0 else 1
       PositionalScan.buckets(b.first_doc, b.last_doc, width).map(bk =>
-        PositionalScan.Tagged(bk, rank, ti, b.first_doc, b.cnt, b.doc_bytes,
+        PositionalScan.Tagged(bk, r, ti, b.first_doc, b.cnt, b.doc_bytes,
           b.tf_bytes, b.norm_bytes, b.pos_bytes))
     }
-
-    PositionalScan.score(spark, tagged, ids.size, slotIdx, width,
-      slop, weightValue, cache, one).toDF("doc_id", "score")
+    PositionalScan.byBucket(blocks, one, tag,
+      PositionalScan.score(ids.size, slotIdx, width, slop, weightValue, cache), rank)
   }
 
   /** PayloadTermQuery execution (see [[Query.PayloadTerm]]): one pruned scan
@@ -395,7 +397,6 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     if (!ts.rows.contains(pt.term)) return emptyResult
     val d = ts.rows(pt.term)
     val w = Bm25.termWeight(d.term_id, d.df, stats.max_doc, stats.sum_ttf, pt.boost)
-    val bw = spark.sparkContext.broadcast(w)
     val func = pt.func
     val includeSpan = pt.includeSpanScore
     view.blocks(ts, Seq(d.term_id), PayBlock.cols)
@@ -404,7 +405,6 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
         require(b.cnt == 0 || b.pay_bytes.nonEmpty,
           "payloads not indexed: rebuild with IndexBuilder.Options(payloads = true) " +
             "to run payload queries")
-        val tw = bw.value
         val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
           b.doc_bytes, b.tf_bytes)
         val r = new graft.codec.ForCodec.Reader(b.pay_bytes, 0)
@@ -426,7 +426,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
           })
           val out =
             if (includeSpan)
-              Bm25.score(tw.weightValue, freq, tw.cache, b.norm_bytes(i)) * docScore
+              Bm25.score(w.weightValue, freq, w.cache, b.norm_bytes(i)) * docScore
             else docScore
           (docs(i), out)
         }
@@ -451,7 +451,6 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     pn.terms.foreach(t => idfSum += Bm25.idf(dict(t).df, stats.max_doc))
     val weightValue = Bm25.weightValue(idfSum, pn.boost)
     val cache = Bm25.buildCache(Bm25.avgFieldLength(stats.sum_ttf, stats.max_doc))
-    val bw = spark.sparkContext.broadcast((weightValue, cache))
     // clause index per distinct term (a term may fill several clauses; each
     // clause gets its own cursor over the same positions)
     val clauseTids: Array[Long] = pn.terms.map(t => dict(t).term_id).toArray
@@ -479,7 +478,6 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
       .sortWithinPartitions("doc_id", "term_id")
       .as[(Long, Long, Byte, Array[Int], Array[Array[Byte]])]
       .mapPartitions { it =>
-        val (wv, ch) = bw.value
         val byTid = new scala.collection.mutable.HashMap[Long, (Array[Int], Array[Array[Byte]])]()
         val b = it.buffered
         new scala.collection.AbstractIterator[(Long, Float)] {
@@ -509,7 +507,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
                   freq += 1.0f / (m.end - m.start + 1) // in match order
                   m.payloads.iterator.map(p => (p, 0, p.length))
                 })
-                if (freq > 0.0f) pending = (doc, Bm25.score(wv, freq, ch, nb) * docScore)
+                if (freq > 0.0f) pending = (doc, Bm25.score(weightValue, freq, cache, nb) * docScore)
               }
             }
             if (pending == null) done = true

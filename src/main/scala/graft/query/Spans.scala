@@ -137,22 +137,21 @@ object Spans {
 
   /** Distributed evaluation: (doc_id, start, end) rows for every matching
     * live span — the positions read path shared with phrase queries, over a
-    * batch index or a streaming store ([[IndexView]]).
+    * batch index or a streaming store ([[IndexView]], one per snapshot
+    * across calls: [[IndexView.shared]]).
     */
   def spans(spark: SparkSession, indexDir: String, q: SpanQuery): DataFrame = {
     import spark.implicits._
-    val view = IndexView.open(spark, indexDir)
+    val view = IndexView.shared(spark, indexDir)
     val ts = view.lookup(q.terms.toSeq)
     if (ts.rows.isEmpty)
       return spark.emptyDataset[(Long, Int, Int)].toDF("doc_id", "start", "end")
     val names: Map[Long, String] = ts.rows.map { case (t, d) => d.term_id -> t }
-    val bn = spark.sparkContext.broadcast(names)
-    val bq = spark.sparkContext.broadcast(q)
     val hits = view.blocks(ts, names.keySet.toSeq, PosBlock.cols)
       .as[PosBlock]
       .flatMap { b =>
         val (docs, _, _, poss) = PostingCodec.decodePos(b)
-        val t = bn.value(b.term_id)
+        val t = names(b.term_id)
         docs.indices.iterator.map(i => (docs(i), t, poss(i)))
       }
       .toDF("doc_id", "term", "pos")
@@ -171,7 +170,7 @@ object Spans {
               val (_, t, ps) = b.next()
               tp.update(t, ps)
             }
-            eval(bq.value, tp).map { case (s, e) => (doc, s, e) }
+            eval(q, tp).map { case (s, e) => (doc, s, e) }
           }
         }.flatten
       }

@@ -4,7 +4,7 @@ import graft.JobNames.named
 import graft.codec.{PostingCodec, ScoreBlock, ScoreSpanBlock}
 import graft.model.TermDictRow
 import graft.score.Bm25
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import WandSearcher.{offerScores, scorer, ubD, ubFn}
@@ -203,38 +203,41 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
       // block-granular leapfrog that does the real conjunction pruning is
       // width-independent)
       val width = PositionalScan.bucketWidth(spark, st.max_doc)
-      val (tagged, one) =
-        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) p.blocks(spark, view, width)
-        else {
+      val (blocks, one, tag) =
+        if (mustNot.nonEmpty || p.nMust != 1 || p.mm != 0) {
+          val (blocks, one) = p.scan(spark, view)
+          (blocks, one, p.tagger(width))
+        } else {
           val mId = tids(p.isMust.indexOf(true))
           val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
           val ranks = p.ranks
           val scan = view.scan(p.ts, tids.toSeq, ScoreSpanBlock.cols)
-          (scan.rows.as[ScoreSpanBlock]
-            .mapPartitions { blocks =>
-              val best = new BlockCombine.KthBest(k)
-              blocks.flatMap { b =>
-                val ti = tiOf(b.term_id)
-                val tw = weights(b.term_id)
-                val ub = ubD(tw, b.max_tf, b.max_nb)
-                if ((ub + rests(ti)) * slack < best.theta) {
-                  skipped.add(b.last_doc / width - b.first_doc / width + 1)
-                  Iterator.empty
-                } else {
-                  // only the MUST term's clause scores may grow theta — and
-                  // only a block whose own ub can exceed the k-th best can
-                  // raise it (the scan-side decode exists solely for theta;
-                  // the reduce side re-scores every surviving block)
-                  if (b.term_id == mId && !(ub <= best.theta)) offerScores(best, tw, b)
-                  BlockCombine.tag(b, ranks(ti), ti, width)
-                }
+          val tag: Iterator[ScoreSpanBlock] => Iterator[BlockCombine.Block] = { blocks =>
+            val best = new BlockCombine.KthBest(k)
+            blocks.flatMap { b =>
+              val ti = tiOf(b.term_id)
+              val tw = weights(b.term_id)
+              val ub = ubD(tw, b.max_tf, b.max_nb)
+              if ((ub + rests(ti)) * slack < best.theta) {
+                skipped.add(b.last_doc / width - b.first_doc / width + 1)
+                Iterator.empty
+              } else {
+                // only the MUST term's clause scores may grow theta — and
+                // only a block whose own ub can exceed the k-th best can
+                // raise it (the scan-side decode exists solely for theta;
+                // the reduce side re-scores every surviving block)
+                if (b.term_id == mId && !(ub <= best.theta)) offerScores(best, tw, b)
+                BlockCombine.tag(b, ranks(ti), ti, width)
               }
-            }, scan.oneTask)
+            }
+          }
+          (scan.rows.as(PositionalScan.Rows.scoreSpanBlock), scan.oneTask, tag)
         }
       val prune = BlockCombine.Prune(tids.map(t => weights.get(t).map(ubFn).orNull),
         rests, slack, k, skipped, scanned)
-      topK(BlockCombine.combine(spark, tagged, tids.map(t => weights.get(t).map(scorer).orNull),
-        p.isMust, p.isNot, p.nMust, p.mm, width, one, Some(prune)), k)
+      view.top(PositionalScan.byBucket(blocks, one, tag,
+        BlockCombine.combine(tids.map(t => weights.get(t).map(scorer).orNull),
+          p.isMust, p.isNot, p.nMust, p.mm, width, Some(prune)), Some(view.rank(k))), k)
     }
 
   private def searchShould(terms: Seq[(String, Float)], k: Int): DataFrame = {
@@ -261,25 +264,25 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
     if (ids.size == 1) {
       // single term: score during the scan, no combine, no shuffle
       val tw = weights(ids.head)
-      return topK(view.blocks(ts, ids, ScoreBlock.cols)
-        .as[ScoreBlock]
-        .mapPartitions { blocks =>
-          val best = new BlockCombine.KthBest(k)
-          blocks.flatMap { b =>
-            if (ubD(tw, b.max_tf, b.max_nb) * slack < best.theta) {
-              skipped.add(1)
-              Iterator.empty
-            } else {
-              scanned.add(1)
-              val (docs, tfs, nbs) = PostingCodec.decode(b)
-              docs.indices.iterator.map { i =>
-                val s = Bm25.score(tw.weightValue, tfs(i).toFloat, tw.cache, nbs(i))
-                best.offer(s)
-                (docs(i), s)
-              }
+      val scan = view.scan(ts, ids, ScoreBlock.cols)
+      return view.top(PositionalScan.scored(scan.rows.as(PositionalScan.Rows.scoreBlock), scan.oneTask,
+        Some(view.rank(k))) { blocks =>
+        val best = new BlockCombine.KthBest(k)
+        blocks.flatMap { b =>
+          if (ubD(tw, b.max_tf, b.max_nb) * slack < best.theta) {
+            skipped.add(1)
+            Iterator.empty
+          } else {
+            scanned.add(1)
+            val (docs, tfs, nbs) = PostingCodec.decode(b)
+            docs.indices.iterator.map { i =>
+              val s = Bm25.score(tw.weightValue, tfs(i).toFloat, tw.cache, nbs(i))
+              best.offer(s)
+              (docs(i), s)
             }
           }
-        }, k)
+        }
+      }, k)
     }
 
     // multi-term: prune blocks during the scan (per-term k-th best exact
@@ -351,46 +354,42 @@ final class WandSearcher(@transient spark: SparkSession, indexDir: String,
         else Some(spark.sparkContext.broadcast(view.docRanges(ts, essTids)))
       }
     val splitRankEff = if (essIv.isDefined) splitRank else Int.MaxValue
-    val tagged = scan.rows
-      .as[ScoreSpanBlock]
-      .mapPartitions { blocks =>
-        val heaps = new scala.collection.mutable.HashMap[Long, BlockCombine.KthBest]()
-        var theta = theta0
-        blocks.flatMap { b =>
-          val tw = weights(b.term_id)
-          val copies = b.last_doc / width - b.first_doc / width + 1
-          val bound = (ubD(tw, b.max_tf, b.max_nb) + restD(b.term_id)) * slack
-          if (bound < theta) {
-            skipped.add(copies)
-            Iterator.empty
-          } else if (rankOfTid(b.term_id) >= splitRankEff &&
-            !essIv.get.value.overlaps(b.first_doc, b.last_doc)) {
-            // non-essential block away from every essential-term range:
-            // dropped before the shuffle (the scan-side MaxScore win)
-            skipped.add(copies)
-            Iterator.empty
-          } else {
-            // scan-side decode exists solely to grow theta: a block whose
-            // scores are all <= theta (ub <= theta) cannot produce a
-            // k-th best above it from any per-term heap — ship undecoded
-            if (!(ubD(tw, b.max_tf, b.max_nb) <= theta)) {
-              val heap = heaps.getOrElseUpdate(b.term_id, new BlockCombine.KthBest(k))
-              offerScores(heap, tw, b)
-              if (heap.theta > theta) theta = heap.theta
-            }
-            BlockCombine.tag(b, rankOfTid(b.term_id), tiOf(b.term_id), width)
+    val tag: Iterator[ScoreSpanBlock] => Iterator[BlockCombine.Block] = { blocks =>
+      val heaps = new scala.collection.mutable.HashMap[Long, BlockCombine.KthBest]()
+      var theta = theta0
+      blocks.flatMap { b =>
+        val tw = weights(b.term_id)
+        val copies = b.last_doc / width - b.first_doc / width + 1
+        val bound = (ubD(tw, b.max_tf, b.max_nb) + restD(b.term_id)) * slack
+        if (bound < theta) {
+          skipped.add(copies)
+          Iterator.empty
+        } else if (rankOfTid(b.term_id) >= splitRankEff &&
+          !essIv.get.value.overlaps(b.first_doc, b.last_doc)) {
+          // non-essential block away from every essential-term range:
+          // dropped before the shuffle (the scan-side MaxScore win)
+          skipped.add(copies)
+          Iterator.empty
+        } else {
+          // scan-side decode exists solely to grow theta: a block whose
+          // scores are all <= theta (ub <= theta) cannot produce a
+          // k-th best above it from any per-term heap — ship undecoded
+          if (!(ubD(tw, b.max_tf, b.max_nb) <= theta)) {
+            val heap = heaps.getOrElseUpdate(b.term_id, new BlockCombine.KthBest(k))
+            offerScores(heap, tw, b)
+            if (heap.theta > theta) theta = heap.theta
           }
+          BlockCombine.tag(b, rankOfTid(b.term_id), tiOf(b.term_id), width)
         }
       }
+    }
     val prune = BlockCombine.Prune(ids.map(tid => ubFn(weights(tid))).toArray,
       ids.map(restD).toArray, slack, k, skipped, scanned, theta0, Some(suffix))
     val none = Array.fill(ids.size)(false)
-    topK(BlockCombine.combine(spark, tagged, ids.map(tid => scorer(weights(tid))).toArray,
-      none, none, nMust = 0, mm = 0, width, one, Some(prune)), k)
+    view.top(PositionalScan.byBucket(scan.rows.as(PositionalScan.Rows.scoreSpanBlock), one, tag,
+      BlockCombine.combine(ids.map(tid => scorer(weights(tid))).toArray,
+        none, none, nMust = 0, mm = 0, width, Some(prune)), Some(view.rank(k))), k)
   }
-
-  private def topK(hits: Dataset[(Long, Float)], k: Int): DataFrame =
-    hits.toDF("doc_id", "score").orderBy(desc("score"), asc("doc_id")).limit(k)
 
   private def emptyResult: DataFrame =
     spark.emptyDataset[(Long, Float)].toDF("doc_id", "score")

@@ -6,7 +6,8 @@ import graft.oracle.BruteForce
 import graft.query.{Query, Searcher, WandSearcher}
 import graft.streaming.{SnapshotLog, StreamingIndexer}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, SortExec,
+  SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.{max, min}
@@ -14,12 +15,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** The plan a small query takes: on a warm view, a two-term OR, a single
-  * MUST with a SHOULD, a NOT and an exact phrase each run ONE Spark job with
-  * no exchange, and the scan opens only the postings files whose term range
-  * holds a query term — on a batch index and on a 3-segment store, with and
-  * without tombstones. Past the file split budget the same queries take
-  * the bucket exchange. Every result is checked against the brute-force
-  * oracle (doc ids and float bits).
+  * MUST with a SHOULD, a NOT, an exact phrase and a single term each run ONE
+  * Spark job with no exchange, as ONE typed operator that sorts, combines
+  * and ranks the top k in the scan's task (no sort operator, no
+  * TakeOrderedAndProject, at most two codegen stages), and the scan opens
+  * only the postings files whose term range holds a query term — on a batch
+  * index and on a 3-segment store, with and without tombstones. Past the
+  * file split budget the same queries take the bucket exchange. Every
+  * result is checked against the brute-force oracle (doc ids and float
+  * bits).
   */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -31,8 +35,10 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Query.Bool(should = Seq("time", "person")),
     Query.parse("+time person"),
     Query.parse("time -person"),
-    Query.Phrase(Seq("time", "person")))
+    Query.Phrase(Seq("time", "person")),
+    Query.Term("time"))
   private def termsOf(q: Query): Seq[String] = q match {
+    case Query.Term(t, _) => Seq(t)
     case Query.Bool(must, should, not, _) => must ++ should ++ not
     case Query.BoolQ(cs, _, _) => cs.collect { case (_, Query.Term(t, _)) => t }
     case Query.Phrase(ts, _, _) => ts
@@ -89,6 +95,23 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def exchanges(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case e: Exchange => e }
 
+  /** What a one-task plan may hold: one typed operator, no sort operator,
+    * no TakeOrderedAndProject and at most two codegen stages on a batch
+    * index — the scan's and the hits' serializer. A store's scan is a union
+    * of one scan per segment, each its own codegen stage, so it may hold
+    * one stage per segment scan plus the serializer's.
+    */
+  private def assertFused(at: String, plan: SparkPlan): Unit = {
+    val typed = collect(plan) { case m: MapPartitionsExec => m }
+    assert(typed.size == 1, s"$at planned ${typed.size} typed operators:\n$plan")
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, s"$at planned a sort:\n$plan")
+    assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty,
+      s"$at planned TakeOrderedAndProject:\n$plan")
+    val stages = collect(plan) { case w: WholeStageCodegenExec => w }
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(stages.size <= 2.max(scans.size + 1), s"$at planned ${stages.size} codegen stages:\n$plan")
+  }
+
   private def filesRead(plan: SparkPlan): Long =
     collect(plan) { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum
 
@@ -119,6 +142,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(jobs.size == 1, s"$at ran ${jobs.size} jobs: $jobs")
       val plan = df.queryExecution.executedPlan
       assert(exchanges(plan).isEmpty, s"$at planned an exchange:\n$plan")
+      assertFused(at, plan)
       val (holding, all) = filesHolding(dir, termsOf(q))
       assert(filesRead(plan) == holding && holding < all,
         s"$at read ${filesRead(plan)} postings files; $holding of $all hold its terms")
@@ -129,8 +153,12 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val at = s"$label past the split budget, $name: $q"
         val df = search(q)
         val got = bits(df)
-        assert(collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.nonEmpty,
-          s"$at took no exchange")
+        val plan = df.queryExecution.executedPlan
+        // a single term scores during the scan: no bucket exchange to take
+        assert(q.isInstanceOf[Query.Term] ||
+          collect(plan) { case e: ShuffleExchangeExec => e }.nonEmpty, s"$at took no exchange")
+        assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
+          s"$at was not ranked by TakeOrderedAndProject:\n$plan")
         assert(got == want(q), s"$at\n got:  $got\n want: ${want(q)}")
       }
     }
@@ -149,6 +177,40 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("3-segment store: a small query is one job with no exchange, reading only its files") {
     withTombstones("store", store())
+  }
+
+  test("ranking on both plans: equal scores by doc_id asc, all-0.0f scores from a boost-0 term") {
+    val dir = batchIndex()
+    val oracle = new BruteForce(docs)
+    val s = new Searcher(spark, dir)
+    val w = new WandSearcher(spark, dir)
+    val zero = Query.Term("time", 0.0f)
+    val ranked = Seq(zero, Query.Term("person"),
+      Query.BoolQ(Seq((Query.Should, zero), (Query.Should, Query.Term("person")))))
+    SparkTestSession.bothPlans {
+      for ((name, search) <- Seq[(String, (Query, Int) => DataFrame)](
+        "exhaustive" -> s.search, "WAND" -> w.search); q <- ranked; k <- Seq(10, 40)) {
+        val got = bits(search(q, k))
+        val want = oracle.search(q, k).map(h => (h._1, java.lang.Float.floatToRawIntBits(h._2)))
+        assert(got == want, s"$name top $k of $q\n got:  $got\n want: $want")
+        val scores = got.map(_._2)
+        assert(got.zip(got.drop(1)).exists { case (a, b) => a._2 == b._2 },
+          s"$name top $k of $q holds no tie: $scores")
+      }
+    }
+    val allZero = bits(s.search(zero, 40))
+    assert(allZero.forall(_._2 == 0) && allZero.map(_._1) == allZero.map(_._1).sorted)
+  }
+
+  test("a reopened store with two tombstone tables loads them in one job, inferring no schema") {
+    val dir = store()
+    StreamingIndexer.deleteDocs(spark, dir, Seq(3L, 40L))
+    StreamingIndexer.deleteDocs(spark, dir, Seq(300L))
+    new Searcher(spark, dir).search(queries.head, 10).collect()
+    val s = new Searcher(spark, dir) // reopened: its tombstones load on first use
+    val jobs = jobsOf(s.search(queries.head, 10).collect())
+    assert(jobs.count(_ == "graft: load tombstones") == 1, jobs)
+    assert(jobs.size == 2, s"expected the tombstone load and the query: $jobs")
   }
 
   test("the library names its own jobs and restores the caller's description") {

@@ -135,4 +135,25 @@ class SpansSpec extends AnyFunSuite {
       assert(got.nonEmpty)
     }
   }
+
+  test("spans reuse one view per snapshot: a second call loads no tombstones") {
+    import graft.build.IndexBuilder
+    import graft.fixtures.Transcripts
+    import graft.streaming.StreamingIndexer
+    val spark = SparkTestSession.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_spans_dead").toString
+    IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 60), dir)
+    val q = SpanNear(SpanTerm("time"), SpanTerm("person"), 2, inOrder = true)
+    def docs(): Seq[Long] = Spans.spans(spark, dir, q).collect().map(_.getLong(0)).toSeq
+    val all = docs()
+    assert(all.distinct.size >= 2)
+    StreamingIndexer.deleteDocs(spark, dir, Seq(all.head))
+    val first = SparkTestSession.jobsOf(assert(docs() == all.filterNot(_ == all.head)))
+    assert(first.count(_ == "graft: load tombstones") == 1, first)
+    val second = SparkTestSession.jobsOf(assert(docs() == all.filterNot(_ == all.head)))
+    assert(!second.contains("graft: load tombstones"), second)
+    // a new snapshot gets a new view
+    StreamingIndexer.deleteDocs(spark, dir, Seq(all.last))
+    assert(docs() == all.filterNot(Set(all.head, all.last)))
+  }
 }
