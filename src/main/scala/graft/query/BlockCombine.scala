@@ -1,9 +1,12 @@
 package graft.query
 
-import graft.codec.{PostingCodec, ScoreSpanBlock}
-import graft.model.TermDictRow
-import graft.score.Similarity
+import graft.JobNames.named
+import graft.codec.{PostingCodec, ScoreBlock, ScoreSpanBlock}
+import graft.model.{CollectionStats, TermDictRow}
+import graft.score.{Bm25, Similarity}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, typedLit}
 import org.apache.spark.util.LongAccumulator
 
 /** Doc-range co-partitioned boolean combine — the multi-term scoring pass
@@ -56,26 +59,57 @@ import org.apache.spark.util.LongAccumulator
   * holds at any lead df. Every block holding a candidate decodes, so every
   * surviving doc's score is bit-identical to a full decode.
   *
-  * PRUNING (optional, [[Prune]]). Each partition keeps the k-th best of its
-  * flushed totals ([[KthBest]]: docs that passed the MUST/mm/NOT filters —
-  * order-statistics dominance keeps theta sound even when some flushed
-  * scores are understated by prior skips), starting at `theta0` (a sound
-  * lower bound on the global k-th best total, or -inf). A non-NOT block is
-  * skipped undecoded when `(ub(block) + rest(ti)) * slack < theta` — STRICT
-  * (a block whose bound equals theta can still hold docs scoring exactly
-  * theta that the exhaustive tie-break keeps). `ub` is the clause's double
-  * upper bound from the block's (max_tf, max_nb); `rest` sums the other
-  * clauses' global maxima; `slack` inflates past float32 fold rounding (the
-  * scan-side algebra, see [[WandSearcher]]). A doc that loses a block this
-  * way has true total < theta <= the partition's k-th best verified total
-  * <= the global k-th best, so its (understated or filtered) emission cannot
-  * affect membership or tie-break of the final top k, while every true top-k
-  * doc's blocks all survive and its score stays bit-exact. A bound-skipped
-  * establishing block's docs are never established, so the frozen
-  * candidates exclude them consistently everywhere. NOT blocks are never
-  * bound-skipped (they exclude; dropping one could un-exclude an emitted
-  * doc) — only leapfrogged, which is sound because a range without
-  * candidates holds no accumulator to exclude.
+  * PRUNING (optional, [[Prune]], for a ranked search that asks for it —
+  * [[WandSearcher]]). Lucene 4.8 predates WAND (SURVEY.md §4.2), and classic
+  * block-max WAND (Ding & Suel, SIGIR 2011) aligns per-doc cursors, which a
+  * term-partitioned scan does not have; pruning here is the rank-safe
+  * block-skipping form (MaxScore-style bound splitting over block-max
+  * metadata), and the same plan without it is the exhaustive reference.
+  * The bound algebra is driver-side arithmetic over the query's own terms
+  * ([[Clauses.bounds]], no job): `ub(ti, block)` is the clause's double
+  * upper bound `weightValue * max_tf / (max_tf + cache[max_nb])` from the
+  * block's (max_tf, max_nb) (a score rises with tf and falls with the
+  * length cache, smallest at max_nb, the shortest doc), `gmax(ti)` the
+  * same bound from the dictionary's per-term maxima (over a store's
+  * segments), `rest(ti)` the other clauses' summed gmax, and `slack = 1 +
+  * (n+4)·1.2e-7` inflates the double past float32 fold rounding (each float
+  * op rounds within 2^-24 relative; an n-term fold compounds n of them), so
+  * `(ub + rest) * slack` is >= every contained doc's true float total.
+  *
+  * Each partition keeps the k-th best of its flushed totals ([[KthBest]]:
+  * docs that passed the MUST/mm/NOT filters — order-statistics dominance
+  * keeps theta sound even when some flushed scores are understated by prior
+  * skips), starting at `theta0` (a sound lower bound on the global k-th best
+  * total, or -inf). A non-NOT block is skipped undecoded when `(ub(block) +
+  * rest(ti)) * slack < theta` — STRICT (a block whose bound equals theta can
+  * still hold docs scoring exactly theta that the exhaustive tie-break
+  * keeps). A doc that loses a block this way has true total < theta <= the
+  * partition's k-th best verified total <= the global k-th best, so its
+  * (understated or filtered) emission cannot affect membership or
+  * tie-break of the final top k, while every true top-k doc's blocks all
+  * survive and its score stays bit-exact. A bound-skipped establishing
+  * block's docs are never established, so the frozen candidates exclude
+  * them consistently everywhere. NOT blocks are never bound-skipped (they
+  * exclude; dropping one could un-exclude an emitted doc) — only
+  * leapfrogged, which is sound because a range without candidates holds no
+  * accumulator to exclude.
+  *
+  * Two shapes also prune at the scan ([[Clauses.tagged]]), because there a
+  * single clause's exact scores lower-bound the final totals: a pure
+  * disjunction (per-term k-heaps, since every doc's total is >= each of its
+  * clause scores) and a single MUST with no NOT and mm met (`+m s ...`: the
+  * result set is exactly docs(m), so the MUST term's heap alone). Blocks
+  * stream impact-ordered (IndexBuilder S4), so each partition's theta rises
+  * from its best blocks. A pure disjunction also gets the term-level
+  * MaxScore `suffix`; past the file split budget, on a scan estimated at
+  * `minSeedBlocks` or more blocks with real df skew, a dictionary theta seed
+  * job ([[seedTheta]]) arms it from the first block, and when the essential
+  * terms are rare enough their block ranges drop non-essential blocks
+  * before the shuffle. Every other shape prunes in the combine only. Under
+  * tombstones nothing prunes: a dead doc's score is no lower bound on the
+  * k-th live total. A single positive term scores during the scan with the
+  * same bound skip ([[termPass]]). Skipped and scanned count bucket copies
+  * (blocks, on the single-term pass).
   *
   * Memory: a bucket spans maxDoc/shuffle-partitions doc ids, so per-task
   * state is bounded by bucket width (and by the lead df under a MUST);
@@ -109,17 +143,38 @@ object BlockCombine {
       Block(bk, rank, ti, b.first_doc, b.last_doc, b.cnt, b.doc_bytes,
         b.tf_bytes, b.norm_bytes, b.max_tf, b.max_nb))
 
-  /** Reduce-side pruning: `ubFns(ti)` maps a block's (max_tf, max_nb) to a
-    * double upper bound on that clause's float32 score (null for NOT
-    * clauses), `rests(ti)` is the other clauses' summed global maxima,
-    * `suffix(r)` (MaxScore, pure disjunctions) the summed global maxima of
-    * ranks >= r. Skipped/scanned count bucket copies.
+  /** A ranked search's ask for block-max pruning ([[WandSearcher]]): the
+    * estimated scan size, in posting blocks, from which a pure disjunction
+    * past the file split budget runs the theta seed job, and the counters
+    * of skipped and scanned bucket copies.
     */
-  final case class Prune(ubFns: Array[(Int, Int) => Double], rests: Array[Double],
-                         slack: Double, k: Int,
-                         skipped: LongAccumulator, scanned: LongAccumulator,
+  final case class Pruning(minSeedBlocks: Long, skipped: LongAccumulator, scanned: LongAccumulator)
+
+  /** The bound algebra of one clause plan (see the object doc) for the k
+    * best hits: `tws(ti)` the clause's BM25 weight (null for a MUST_NOT-only
+    * clause, which never scores), `gmax`, `rests` and `slack`; `theta0` and
+    * the MaxScore `suffix(r)` (the summed gmax of ranks >= r) for a pure
+    * disjunction. Task closures capture this, never a searcher or its
+    * session.
+    */
+  final case class Prune(tws: Array[Bm25.TermWeight], gmax: Array[Double], rests: Array[Double],
+                         slack: Double, k: Int, ask: Pruning,
                          theta0: Double = Double.NegativeInfinity,
-                         suffix: Option[Array[Double]] = None)
+                         suffix: Option[Array[Double]] = None) {
+    def ub(ti: Int, maxTf: Int, maxNb: Int): Double = ubD(tws(ti), maxTf, maxNb)
+
+    /** Every doc of a block of clause ti with upper bound `ub` totals below
+      * theta (STRICT).
+      */
+    def below(ti: Int, ub: Double, theta: Double): Boolean = (ub + rests(ti)) * slack < theta
+  }
+
+  /** Double-precision clause upper bound from (max_tf, max_nb) metadata. */
+  private def ubD(w: Bm25.TermWeight, maxTf: Int, maxNb: Int): Double = {
+    val c = w.cache(maxNb & 0xff).toDouble
+    if (c.isInfinity) 0.0
+    else w.weightValue.toDouble * maxTf / (maxTf + c)
+  }
 
   /** The k-th best float32 score offered so far, as a double threshold that
     * only grows from `theta0` — the per-partition top-k floor
@@ -175,12 +230,78 @@ object BlockCombine {
     }
 
     /** Tags each scanned clause block for [[combine]] by its ti and rank. */
-    def tagger(width: Long): Iterator[ScoreSpanBlock] => Iterator[Block] = {
+    private def tagger(width: Long): Iterator[ScoreSpanBlock] => Iterator[Block] = {
       val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
       val rk = ranks
       _.flatMap { b =>
         val ti = tiOf(b.term_id)
         tag(b, rk(ti), ti, width)
+      }
+    }
+
+    /** The bound algebra of this plan for the k best hits, from the
+      * dictionary's per-term maxima; None when a positive clause weighs
+      * below zero, since every bound assumes non-negative clause scores.
+      */
+    def bounds(stats: CollectionStats, boosts: Map[String, Float], k: Int,
+               ask: Pruning): Option[Prune] = {
+      val byId = pos.map(d => d.term_id -> d).toMap
+      val tws = tids.map(t => byId.get(t).map(d =>
+        Bm25.termWeight(t, d.df, stats.max_doc, stats.sum_ttf, boosts(d.term))).orNull)
+      if (tws.exists(w => w != null && !(w.weightValue >= 0.0f))) None
+      else {
+        // NOT clauses never score, so they add nothing to a bound or a rest
+        val gmax = tids.indices.map(ti => byId.get(tids(ti))
+          .fold(0.0)(d => ubD(tws(ti), d.max_tf, d.max_nb))).toArray
+        val rests = tids.indices.map(i => tids.indices.iterator.filter(_ != i).map(gmax).sum).toArray
+        Some(Prune(tws, gmax, rests, 1.0 + (tids.length + 4) * 1.2e-7, k, ask))
+      }
+    }
+
+    /** The multi-term scan's tagger and, with `prune`, the combine's
+      * [[Prune]] for this plan's shape (see the object doc). Unpruned or
+      * pruned in the combine only, blocks are tagged by [[tagger]]. A pure
+      * disjunction ranks terms strongest first (gmax desc) and, past the
+      * file split budget, may seed theta0 and drop non-essential blocks; a
+      * single MUST's own clause scores raise the scan's theta.
+      */
+    def tagged(spark: SparkSession, view: IndexView, prune: Option[Prune], oneTask: Boolean,
+               width: Long): (Iterator[ScoreSpanBlock] => Iterator[Block], Option[Prune]) = {
+      val pr = prune.orNull
+      val noNot = !isNot.contains(true)
+      if (pr != null && noNot && nMust == 1 && mm == 0)
+        (scanTagger(pr, tids, ranks, isMust, width, None), prune)
+      else if (pr == null || !noNot || nMust != 0 || mm > 1) (tagger(width), prune)
+      else {
+        val n = tids.length
+        val order = tids.indices.sortBy(ti => (-pr.gmax(ti), ti))
+        val rankOf = new Array[Int](n)
+        order.indices.foreach(r => rankOf(order(r)) = r)
+        val g = order.map(pr.gmax).toArray
+        val suffix = g.scanRight(0.0)(_ + _).dropRight(1)
+        // the seed cannot lift theta0 past the strongest term's gmax, so it
+        // runs only when the others' gmax sum is below it (real df skew); a
+        // one-task scan never seeds, since its one partition sees every block
+        val freezePossible = g.drop(1).sum * pr.slack < g.head
+        val blocks = pos.iterator.map(d => (d.df + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize).sum
+        val theta0 =
+          if (!oneTask && freezePossible && blocks >= pr.ask.minSeedBlocks)
+            seedTheta(spark, view, ts, tids(order.head), pr.tws(order.head), pr.k)
+          else Double.NegativeInfinity
+        // the static essential split: a doc outside every essential posting
+        // totals at most suffix(splitRank)·slack < theta0 <= the k-th best,
+        // so non-essential blocks overlapping no essential range cannot hold
+        // a candidate and drop at the scan when the essential terms are rare
+        // enough to collect their ranges
+        val splitRank =
+          if (theta0.isNegInfinity) n
+          else (1 until n).find(r => suffix(r) * pr.slack < theta0).getOrElse(n)
+        val dfOf = pos.map(d => d.term_id -> d.df).toMap
+        val essential = Option.when(splitRank < n)(order.take(splitRank).map(tids))
+          .filter(_.map(dfOf).sum <= Searcher.phraseLeadMaxDf)
+          .map(ess => (splitRank, spark.sparkContext.broadcast(view.docRanges(ts, ess))))
+        val p = pr.copy(theta0 = theta0, suffix = Some(suffix))
+        (scanTagger(p, tids, rankOf, Array.fill(n)(true), width, essential), Some(p))
       }
     }
   }
@@ -218,6 +339,108 @@ object BlockCombine {
         Some(new Clauses(ts, should, mm, pos, tids, tids.map(mustIds.contains),
           tids.map(notIds.contains), lead))
       }
+    }
+  }
+
+  /** The scan-side prune of the shapes whose single-clause scores
+    * lower-bound the final totals: a block whose bound is below the
+    * partition's theta, or a non-essential one (rank >= the split rank)
+    * overlapping no essential range, is dropped and its bucket copies
+    * counted skipped; a block of a clause that `grows` theta and whose bound
+    * can pass it offers its exact scores to that clause's k-th best. The
+    * decode exists only to raise theta: the combine re-scores every block
+    * it keeps.
+    */
+  private def scanTagger(pr: Prune, tids: Array[Long], ranks: Array[Int], grows: Array[Boolean],
+                         width: Long, essential: Option[(Int, Broadcast[PositionalScan.Intervals])])
+      : Iterator[ScoreSpanBlock] => Iterator[Block] = {
+    val tiOf: Map[Long, Int] = tids.zipWithIndex.toMap
+    val splitRank = essential.fold(Int.MaxValue)(_._1)
+    val ess = essential.map(_._2).orNull
+    blocks => {
+      val heaps = new Array[KthBest](tids.length)
+      var theta = pr.theta0
+      blocks.flatMap { b =>
+        val ti = tiOf(b.term_id)
+        val ub = pr.ub(ti, b.max_tf, b.max_nb)
+        if (pr.below(ti, ub, theta) ||
+          ranks(ti) >= splitRank && !ess.value.overlaps(b.first_doc, b.last_doc)) {
+          pr.ask.skipped.add(b.last_doc / width - b.first_doc / width + 1)
+          Iterator.empty
+        } else {
+          if (grows(ti) && !(ub <= theta)) {
+            if (heaps(ti) == null) heaps(ti) = new KthBest(pr.k)
+            offerScores(heaps(ti), pr.tws(ti), b)
+            if (heaps(ti).theta > theta) theta = heaps(ti).theta
+          }
+          tag(b, ranks(ti), ti, width)
+        }
+      }
+    }
+  }
+
+  /** Offer a block's exact float32 clause scores to a k-th best threshold. */
+  private def offerScores(best: KthBest, tw: Bm25.TermWeight, b: ScoreSpanBlock): Unit = {
+    val (_, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt, b.doc_bytes, b.tf_bytes)
+    var i = 0
+    while (i < b.cnt) {
+      best.offer(Bm25.score(tw.weightValue, tfs(i).toFloat, tw.cache, b.norm_bytes(i)))
+      i += 1
+    }
+  }
+
+  /** A single positive term's pass: every kept block's postings scored
+    * during the scan. With `pr` (null: exhaustive), a block whose bound is
+    * below the k-th best score emitted so far is skipped undecoded, and
+    * every block counts as skipped or scanned.
+    */
+  def termPass(scorer: Similarity.TermScorer, pr: Prune): Iterator[ScoreBlock] => Iterator[(Long, Float)] = {
+    blocks =>
+      val best = if (pr == null) null else new KthBest(pr.k)
+      blocks.flatMap { b =>
+        if (best != null && pr.below(0, pr.ub(0, b.max_tf, b.max_nb), best.theta)) {
+          pr.ask.skipped.add(1)
+          Iterator.empty
+        } else {
+          if (best != null) pr.ask.scanned.add(1)
+          val (docs, tfs, norms) = PostingCodec.decode(b)
+          docs.indices.iterator.map { i =>
+            val s = scorer.score(tfs(i).toFloat, norms(i))
+            if (best != null) best.offer(s)
+            (docs(i), s)
+          }
+        }
+      }
+  }
+
+  /** Dictionary-seeded theta0 for a pure disjunction: the k-th best exact
+    * float32 clause score in the seed term's few best blocks (by the same
+    * ub the skip test uses), read by one pushdown-pruned TakeOrdered job.
+    * Sound: those are >= k distinct docs of one term, and every doc's total
+    * is >= its own clause score; every partition then opens with a live
+    * threshold instead of growing one from -inf on its own. -inf when the
+    * seed blocks hold fewer than k postings.
+    */
+  private def seedTheta(spark: SparkSession, view: IndexView, ts: IndexView.Terms, tid: Long,
+                        w: Bm25.TermWeight, k: Int): Double = {
+    val ubCol = col("max_tf").cast("double") /
+      (col("max_tf").cast("double") +
+        element_at(typedLit(w.cache.toSeq), col("max_nb") + 1).cast("double"))
+    val nBlocks = math.max(1, (k + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize + 1)
+    val rows = named(spark, "graft: WAND theta seed") {
+      view.blocks(ts, Seq(tid), ScoreBlock.cols)
+        .orderBy(ubCol.desc, col("first_doc").asc)
+        .limit(nBlocks)
+        .as(PositionalScan.Rows.scoreBlock).collect()
+    }
+    val scores = rows.iterator.flatMap { b =>
+      val (_, tfs, nbs) = PostingCodec.decode(b)
+      tfs.indices.iterator.map(i => Bm25.score(w.weightValue, tfs(i).toFloat, w.cache, nbs(i)))
+    }.toArray
+    if (k <= 0 || scores.length < k) Double.NegativeInfinity
+    else {
+      java.util.Arrays.sort(scores)
+      scores(scores.length - k).toDouble
     }
   }
 
@@ -289,12 +512,10 @@ object BlockCombine {
 
       def addBlock(b: Block): Unit = {
         val ti = b.ti
-        if (pr != null && !isNot(ti)) {
-          val ub = pr.ubFns(ti)
-          if (ub != null && (ub(b.max_tf, b.max_nb) + pr.rests(ti)) * pr.slack < best.theta) {
-            pr.skipped.add(1)
-            return
-          }
+        if (pr != null && !isNot(ti) && pr.tws(ti) != null &&
+          pr.below(ti, pr.ub(ti, b.max_tf, b.max_nb), best.theta)) {
+          pr.ask.skipped.add(1)
+          return
         }
         if (establishing &&
           (if (suffix == null) b.rank > 0 else suffix(b.rank) * pr.slack < best.theta))
@@ -303,10 +524,10 @@ object BlockCombine {
         val hi = lo + width
         if (!establishing && !anyCandidateIn(math.max(b.first_doc, lo),
           math.min(b.last_doc, hi - 1))) {
-          if (pr != null) pr.skipped.add(1)
+          if (pr != null) pr.ask.skipped.add(1)
           return
         }
-        if (pr != null) pr.scanned.add(1)
+        if (pr != null) pr.ask.scanned.add(1)
         val scorer = scorers(ti)
         val (docs, tfs) = PostingCodec.decodeDocsTfs(b.first_doc, b.cnt,
           b.doc_bytes, b.tf_bytes)

@@ -27,6 +27,12 @@ import Searcher.payloadDocScore
   * constant-score, MatchAll and payload shapes, keep every hit and end
   * with liveDocs and orderBy/limit, which Catalyst plans as
   * TakeOrderedAndProject — the per-leaf heaps + TopDocs.Merge shape.
+  *
+  * This is also the one flat top-k path of [[WandSearcher]]: asked to
+  * prune, a term, a Bool and an unboosted flat BoolQ group (in-cap
+  * expansions and boosted terms included) skip the blocks whose block-max
+  * bounds cannot reach the k best ([[BlockCombine]]). `search` itself stays
+  * exhaustive, the reference the pruned search is checked against.
   */
 object Searcher {
   /** Lead-term threshold for the phrase block filter: when the rarest slot's
@@ -96,7 +102,18 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     case mt => view.expand(mt, maxTerms + 1)
   }
 
-  def search(q: Query, k: Int): DataFrame = view.top(hits(q, Some(view.rank(k))), k)
+  /** The k best hits of `q`, exhaustively: the reference the pruned search
+    * is checked against.
+    */
+  def search(q: Query, k: Int): DataFrame = search(q, k, None)
+
+  /** The k best hits of `q`; with `pruning`, the ranked flat shapes prune
+    * blocks by their block-max bounds ([[BlockCombine]], BM25 bounds: only
+    * for the default similarity) — the one flat top-k path, which
+    * [[WandSearcher]] asks to prune.
+    */
+  private[query] def search(q: Query, k: Int, pruning: Option[BlockCombine.Pruning]): DataFrame =
+    view.top(hits(q, Some(view.rank(k)), pruning), k)
 
   /** Every matching (doc_id, score) row, liveDocs applied — the scorer
     * stream collectors consume: [[Collectors.searchWithTotals]] observes it
@@ -122,16 +139,19 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
   private def scoreAll(q: Query): DataFrame = hits(q, None).rows
 
   /** The hits of `q`; with a [[Rank]], a flat term query or a phrase whose
-    * scan is one task returns its k best live hits already ranked.
+    * scan is one task returns its k best live hits already ranked, and
+    * `pruning` applies to the flat term shapes — a term, a Bool and an
+    * unboosted flat BoolQ group, in-cap expansions included.
     */
-  private def hits(q: Query, rank: Option[Rank]): Hits = q match {
-    case Query.Term(t, boost) => clausesScoreAll(Seq((t, Query.Should, boost)), 0, rank)
+  private def hits(q: Query, rank: Option[Rank],
+                   pruning: Option[BlockCombine.Pruning] = None): Hits = q match {
+    case Query.Term(t, boost) => clausesScoreAll(Seq((t, Query.Should, boost)), 0, rank, pruning)
     case b: Query.Bool =>
       clausesScoreAll(
         b.must.map(t => (t, Query.Must: Query.Occur, 1.0f)) ++
           b.should.map(t => (t, Query.Should: Query.Occur, 1.0f)) ++
           b.mustNot.map(t => (t, Query.MustNot: Query.Occur, 1.0f)),
-        b.minShouldMatch, rank)
+        b.minShouldMatch, rank, pruning)
     case p: Query.Phrase => positionalScoreAll(p.terms.map(Seq(_)), p.slop, p.boost, rank)
     case mp: Query.MultiPhrase => positionalScoreAll(mp.slots, mp.slop, mp.boost, rank)
     case bq0: Query.BoolQ =>
@@ -144,8 +164,8 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
             val cs = Rewrite.clauses(view, bq.clauses)
             // a boost rescales after the combine, so only an unboosted group
             // can rank in the scan's task
-            if (bq.boost == 1.0f) clausesScoreAll(cs, bq.minShouldMatch, rank)
-            else all(clausesScoreAll(cs, bq.minShouldMatch, None).rows
+            if (bq.boost == 1.0f) clausesScoreAll(cs, bq.minShouldMatch, rank, pruning)
+            else all(clausesScoreAll(cs, bq.minShouldMatch, None, None).rows
               .select(col("doc_id"), (col("score") * lit(bq.boost)).cast("float").as("score")))
           }
       }
@@ -162,7 +182,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
       all(multiTermDocs(mt).select(col("doc_id"), lit(boost).cast("float").as("score")))
     case Query.ConstantScore(sub, boost) =>
       all(scoreAll(sub).select(col("doc_id"), lit(boost).cast("float").as("score")))
-    case leaf => hits(Query.BoolQ(Seq((Query.Should, leaf))), rank)
+    case leaf => hits(Query.BoolQ(Seq((Query.Should, leaf))), rank, pruning)
   }
 
   /** Every hit, unranked. */
@@ -279,10 +299,11 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
   /** Per-doc scored hits for the positive clauses + the boolean combine
     * over the shared clause plan ([[BlockCombine.Clauses]]): ALL matching
     * (doc_id: Long, score: Float) rows, or with a [[Rank]] on a one-task
-    * scan the k best live ones, ranked.
+    * scan the k best live ones, ranked. With a [[Rank]] and `pruning`, the
+    * plan's block-max bounds skip blocks that cannot reach the top k.
     */
-  private def clausesScoreAll(clauses: Seq[(String, Query.Occur, Float)],
-                              mm0: Int, rank: Option[Rank]): Hits = {
+  private def clausesScoreAll(clauses: Seq[(String, Query.Occur, Float)], mm0: Int,
+                              rank: Option[Rank], pruning: Option[BlockCombine.Pruning]): Hits = {
     require(clauses.size <= Query.MaxClauseCount, "too many clauses")
     def terms(o: Query.Occur): Seq[String] = clauses.collect { case (t, `o`, _) => t }
     BlockCombine.Clauses.plan(view, terms(Query.Must), terms(Query.Should),
@@ -296,6 +317,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
       val weights: Map[Long, graft.score.Similarity.TermScorer] = p.pos.map { d =>
         d.term_id -> similarity.termScorer(d.df, d.ttf, stats, boosts(d.term))
       }.toMap
+      val prune = for (r <- rank; ask <- pruning; pr <- p.bounds(stats, boosts, r.k, ask)) yield pr
       if (p.pos.size == 1 && !p.isNot.contains(true) &&
         (p.mm == 0 || (p.mm == 1 && p.should.exists(p.ts.rows.contains)))) {
         // single positive term with a trivially-satisfied minShouldMatch:
@@ -309,15 +331,13 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
         // the projection prunes the positions column
         val scan = view.scan(p.ts, Seq(tid), ScoreBlock.cols)
         PositionalScan.scored(scan.rows.as(PositionalScan.Rows.scoreBlock), scan.oneTask, rank)(
-          _.flatMap { b =>
-            val (docs, tfs, norms) = PostingCodec.decode(b)
-            docs.indices.iterator.map(i => (docs(i), w.score(tfs(i).toFloat, norms(i))))
-          })
+          BlockCombine.termPass(w, prune.orNull))
       } else {
         val width = PositionalScan.bucketWidth(spark, stats.max_doc)
         val (scan, one) = p.scan(spark, view)
-        PositionalScan.byBucket(scan, one, p.tagger(width), BlockCombine.combine(
-          p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width), rank)
+        val (tag, pr) = p.tagged(spark, view, prune, one, width)
+        PositionalScan.byBucket(scan, one, tag, BlockCombine.combine(
+          p.tids.map(weights.getOrElse(_, null)), p.isMust, p.isNot, p.nMust, p.mm, width, pr), rank)
       }
     }
   }

@@ -140,16 +140,12 @@ object IndexVerifier {
     if (nTerms > 0 && (idStats._1 != 0L || idStats._2 != nTerms - 1 || idStats._3 != nTerms))
       errs += s"term_ids not dense: $idStats over $nTerms terms"
     // term order must follow term_id order. DISTRIBUTED check — CheckIndex's
-    // value is at production scale, so no whole-dict collect: a window lag
-    // over the termdict compares each term to its id-predecessor. The single
-    // unpartitioned window is verifier-only and still streams (sort + lag,
-    // one pass); a sharded variant would window within id-ranges and check
-    // shard boundaries separately, same invariant.
-    val ordW = org.apache.spark.sql.expressions.Window.orderBy("term_id")
-    val misordered = termdict
-      .select(col("term_id"), col("term"),
-        lag("term", 1).over(ordW).as("prev_term"))
-      .filter(col("prev_term").isNotNull && col("prev_term") >= col("term"))
+    // value is at production scale, so no whole-dict collect and no
+    // unpartitioned window: each term joins its id-predecessor (ids are
+    // dense, checked above), a shuffle join partitioned by term_id.
+    val prev = termdict.select((col("term_id") + 1).as("term_id"), col("term").as("prev_term"))
+    val misordered = termdict.select("term_id", "term").join(prev, Seq("term_id"))
+      .filter(col("prev_term") >= col("term"))
       .count()
     if (misordered > 0) errs += s"$misordered term_id pairs out of term order"
 

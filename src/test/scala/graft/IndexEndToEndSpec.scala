@@ -39,32 +39,49 @@ class IndexEndToEndSpec extends AnyFunSuite {
     assert(IndexVerifier.verify(spark, indexDir).isEmpty)
   }
 
+  /** The verifier's findings on a copy of the good index whose `table` is
+    * rewritten by `f`.
+    */
+  private def corrupted(table: String)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[String] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_checkidx_neg")
+    val src = java.nio.file.Paths.get(indexDir)
+    java.nio.file.Files.walk(src).forEach { p =>
+      val t = dir.resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    }
+    val rows = spark.read.parquet(s"$dir/$table").cache(); rows.count()
+    val out = f(rows).cache(); out.count()
+    out.write.mode("overwrite").parquet(s"$dir/$table")
+    rows.unpersist(); out.unpersist()
+    IndexVerifier.verify(spark, dir.toString)
+  }
+
   test("CheckIndex DETECTS missing and orphan postings (found by DevVerifierHunt)") {
     import org.apache.spark.sql.functions._
-    // copy the good index, then corrupt the postings table both ways
-    def corrupted(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_checkidx_neg")
-      val src = java.nio.file.Paths.get(indexDir)
-      java.nio.file.Files.walk(src).forEach { p =>
-        val t = dir.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      }
-      val rows = spark.read.parquet(s"$dir/postings").cache(); rows.count()
-      val out = f(rows).cache(); out.count()
-      out.write.mode("overwrite").parquet(s"$dir/postings")
-      rows.unpersist(); out.unpersist()
-      IndexVerifier.verify(spark, dir.toString)
-    }
     // a term whose posting blocks ALL vanish (the outer-join side of the
     // df/ttf cross-check; an inner join silently passed this)
-    val missing = corrupted(p => p.filter(col("term_id") =!= 0L))
+    val missing = corrupted("postings")(p => p.filter(col("term_id") =!= 0L))
     assert(missing.exists(_.contains("df/ttf mismatch")), s"missed dropped term: $missing")
     // posting blocks under a term_id the dict doesn't know
-    val orphan = corrupted { p =>
+    val orphan = corrupted("postings") { p =>
       p.union(p.filter(col("term_id") === 0L).withColumn("term_id", lit(987654321L)))
     }
     assert(orphan.exists(_.contains("no termdict entry")), s"missed orphan postings: $orphan")
+  }
+
+  test("CheckIndex DETECTS two terms swapped out of term order") {
+    import org.apache.spark.sql.functions._
+    // terms 0 and 1 trade places: the ids stay dense and each id's df/ttf
+    // still matches its postings, so term order is the only violation
+    val swapped = corrupted("termdict") { d =>
+      val t = d.filter(col("term_id") <= 1L).select("term_id", "term").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      d.withColumn("term", when(col("term_id") === 0L, lit(t(1L)))
+        .when(col("term_id") === 1L, lit(t(0L))).otherwise(col("term")))
+    }
+    assert(swapped == Seq("1 term_id pairs out of term order"), s"swapped terms: $swapped")
   }
 
   test("docmap matches the stable (conv_id, turn_idx) ordering") {

@@ -15,15 +15,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** The plan a small query takes: on a warm view, a two-term OR, a single
-  * MUST with a SHOULD, a NOT, an exact phrase and a single term each run ONE
-  * Spark job with no exchange, as ONE typed operator that sorts, combines
-  * and ranks the top k in the scan's task (no sort operator, no
-  * TakeOrderedAndProject, at most two codegen stages), and the scan opens
-  * only the postings files whose term range holds a query term — on a batch
-  * index and on a 3-segment store, with and without tombstones. Past the
-  * file split budget the same queries take the bucket exchange. Every
-  * result is checked against the brute-force oracle (doc ids and float
-  * bits).
+  * MUST with a SHOULD, a NOT, an exact phrase, a single term and an in-cap
+  * prefix expansion each run ONE Spark job with no exchange, as ONE typed
+  * operator that sorts, combines and ranks the top k in the scan's task
+  * (no sort operator, no TakeOrderedAndProject, at most two codegen
+  * stages), and the scan opens only the postings files whose term range
+  * holds a query term — on a batch index and on a 3-segment store, with
+  * and without tombstones. Past the file split budget the same queries
+  * take the bucket exchange. Every result is checked against the
+  * brute-force oracle (doc ids and float bits).
   */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -36,9 +36,11 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Query.parse("+time person"),
     Query.parse("time -person"),
     Query.Phrase(Seq("time", "person")),
-    Query.Term("time"))
-  private def termsOf(q: Query): Seq[String] = q match {
+    Query.Term("time"),
+    Query.Prefix("st"))
+  private def termsOf(s: Searcher, q: Query): Seq[String] = q match {
     case Query.Term(t, _) => Seq(t)
+    case p: Query.Prefix => s.expand(p)
     case Query.Bool(must, should, not, _) => must ++ should ++ not
     case Query.BoolQ(cs, _, _) => cs.collect { case (_, Query.Term(t, _)) => t }
     case Query.Phrase(ts, _, _) => ts
@@ -127,8 +129,8 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def want(q: Query): Seq[(Long, Int)] =
       oracle.search(q, 10 + dead.size).filterNot(h => dead.contains(h._1)).take(10)
         .map(h => (h._1, java.lang.Float.floatToRawIntBits(h._2)))
+    val s = new Searcher(spark, dir)
     val searchers: Seq[(String, Query => DataFrame)] = {
-      val s = new Searcher(spark, dir)
       val w = new WandSearcher(spark, dir)
       Seq("exhaustive" -> (q => s.search(q, 10)), "WAND" -> (q => w.search(q, 10)))
     }
@@ -143,7 +145,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val plan = df.queryExecution.executedPlan
       assert(exchanges(plan).isEmpty, s"$at planned an exchange:\n$plan")
       assertFused(at, plan)
-      val (holding, all) = filesHolding(dir, termsOf(q))
+      val (holding, all) = filesHolding(dir, termsOf(s, q))
       assert(filesRead(plan) == holding && holding < all,
         s"$at read ${filesRead(plan)} postings files; $holding of $all hold its terms")
       assert(got == want(q), s"$at\n got:  $got\n want: ${want(q)}")

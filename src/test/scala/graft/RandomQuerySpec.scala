@@ -91,10 +91,32 @@ class RandomQuerySpec extends AnyFunSuite {
         1 + rnd.nextInt(should.size) else 0
       if (must.nonEmpty || should.nonEmpty) Some(i -> Query.Bool(must, should, not, mm)) else None
     }
+    // flat unboosted BoolQ groups, which prune too: boosted terms and in-cap
+    // prefix, wildcard and fuzzy leaves (an expansion under MUST nests)
+    val grnd = new Random(20260820L)
+    def boost(): Float = Vector(0.5f, 1.0f, 1.0f, 2.0f)(grnd.nextInt(4))
+    def leaf(): Query = {
+      val t = vocab(grnd.nextInt(vocab.size))
+      grnd.nextInt(6) match {
+        case 0 => Query.Prefix(t.take(if (t.startsWith("w")) 6 else 2), boost())
+        case 1 => Query.Wildcard(t.updated(grnd.nextInt(t.length), '?'), boost())
+        case 2 => Query.Fuzzy(t, 1 + grnd.nextInt(2), boost())
+        case _ => Query.Term(t, boost())
+      }
+    }
+    val groups = (81 to 120).map { i =>
+      val cs = Seq.fill(1 + grnd.nextInt(4))(((grnd.nextInt(6) match {
+        case 0 => Query.Must
+        case 5 => Query.MustNot
+        case _ => Query.Should
+      }): Query.Occur, leaf()))
+      i -> Query.BoolQ(cs, minShouldMatch = if (grnd.nextInt(4) == 0) 1 else 0)
+    }
     // the same shapes on the one-task plan and through the bucket exchange
     SparkTestSession.bothPlans {
       var nonEmpty = 0
-      shapes.foreach { case (i, q) =>
+      var groupsNonEmpty = 0
+      (shapes ++ groups).foreach { case (i, q) =>
         val a = exhaustive.search(q, 10).collect()
           .map(r => (r.getLong(0), r.getFloat(1))).toSeq
         val b = wand.search(q, 10).collect()
@@ -102,9 +124,10 @@ class RandomQuerySpec extends AnyFunSuite {
         assert(a == b, s"query $i: WAND diverged on $q\n exhaustive: $a\n wand: $b")
         val want = oracle.search(q, 10)
         assert(a == want, s"query $i: exhaustive diverged from the oracle on $q\n got: $a\nwant: $want")
-        if (a.nonEmpty) nonEmpty += 1
+        if (a.nonEmpty) { if (i <= 80) nonEmpty += 1 else groupsNonEmpty += 1 }
       }
       assert(nonEmpty > 25, s"only $nonEmpty random boolean shapes matched docs")
+      assert(groupsNonEmpty > 20, s"only $groupsNonEmpty random flat groups matched docs")
     }
   }
 

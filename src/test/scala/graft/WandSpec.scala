@@ -33,6 +33,8 @@ class WandSpec extends AnyFunSuite {
     both(Query.Term("time"))
     both(Query.Term("w001234"))
     both(Query.Term("zzzznothere"))
+    // a negative boost scores below zero, where no block-max bound holds
+    both(Query.Term("time", -1.0f))
   }
 
   test("disjunctions: identical to exhaustive") {
@@ -42,6 +44,8 @@ class WandSpec extends AnyFunSuite {
     both(Query.Bool(should = Seq("time", "zzzznothere")))
     // hot + rare mix: the pruning sweet spot
     both(Query.Bool(should = Seq("time", "w001234")))
+    both(Query.BoolQ(Seq((Query.Should, Query.Term("time", -1.0f)),
+      (Query.Should, Query.Term("w001234")))))
   }
 
   test("multi-MUST / NOT / residual mm: bucket-pruned path identical to exhaustive") {
@@ -103,6 +107,8 @@ class WandSpec extends AnyFunSuite {
     both(Query.Bool(must = Seq("time"), should = Seq("time"))) // duplicated term
     both(Query.Bool(must = Seq("time"), should = Seq("time"), minShouldMatch = 1)) // mm credited by the dup
     both(Query.Bool(must = Seq("time"), should = Seq("year", "way", "day")))
+    both(Query.BoolQ(Seq((Query.Must, Query.Term("time", -1.0f)),
+      (Query.Should, Query.Term("person")))))
   }
 
   test("single-MUST pruning actually skips blocks on a hot conjunction") {
@@ -188,15 +194,10 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("term-level MaxScore: dense non-essential blocks skip away from rare candidates") {
-    // One rare strong term (50 docs, clustered at the low ids) + one dense
-    // weak term (every doc): theta_0 seeded from the rare term's top-k
-    // exceeds the dense term's entire gmax, so the dense term is
-    // NON-ESSENTIAL from block one — it stops establishing candidates, and
-    // every dense block whose 128-doc range holds no rare candidate skips
-    // its decode (BlockCombine's MaxScore establishment). This is exactly the
-    // cross-term block population the round-4 theta-seed experiment proved
-    // unskippable by block BOUNDS alone.
+  /** One rare strong term (`needle`: 50 docs, clustered at the low ids) and
+    * one dense weak term (`hay`: every doc) over 20,000 docs.
+    */
+  private lazy val needleDir: String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_wand_maxscore").toString
     val docs = (0L until 20000L).map { i =>
@@ -204,6 +205,17 @@ class WandSpec extends AnyFunSuite {
       (i, s"hay filler$rare")
     }.toDF("doc_id", "text")
     IndexBuilder.build(docs, dir)
+    dir
+  }
+
+  test("term-level MaxScore: dense non-essential blocks skip away from rare candidates") {
+    // theta_0 seeded from the rare term's top-k exceeds the dense term's
+    // entire gmax, so the dense term is NON-ESSENTIAL from block one — it
+    // stops establishing candidates, and every dense block whose 128-doc
+    // range holds no rare candidate skips its decode (BlockCombine's MaxScore
+    // establishment). This is exactly the cross-term block population the
+    // round-4 theta-seed experiment proved unskippable by block BOUNDS alone.
+    val dir = needleDir
     val ex = new Searcher(spark, dir)
     val wd = new WandSearcher(spark, dir) // default-on split (158 blocks > 64)
     val q = Query.Bool(should = Seq("needle", "hay"))
@@ -221,6 +233,32 @@ class WandSpec extends AnyFunSuite {
       // blocks all carry the rare term's gmax as rest, so bounds alone keep them
       assert(skipped.toDouble / (skipped + scanned) > 0.7,
         s"expected >70% skip on the skewed mix: skipped=$skipped scanned=$scanned")
+    }
+  }
+
+  test("single MUST past the split budget: the rare MUST's block ranges prefilter the scan") {
+    // +needle hay: every hit holds the rare MUST, so hay blocks overlapping
+    // none of its block ranges drop before the exchange. With the prefilter
+    // off (graft.phrase.leadMaxDf=0) they cross it and the combine counts
+    // each copy as skipped or scanned.
+    val q = Query.Bool(must = Seq("needle"), should = Seq("hay"))
+    val ex = new Searcher(spark, needleDir)
+    val wd = new WandSearcher(spark, needleDir)
+    def run(): (Seq[(Long, Float)], Long) = {
+      val got = wd.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      (got, wd.lastSkipped.get.value + wd.lastScanned.get.value)
+    }
+    val key = "graft.phrase.leadMaxDf"
+    val old = sys.props.get(key)
+    SparkTestSession.pastSplitBudget {
+      val want = ex.search(q, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      val (on, copiesOn) = run()
+      sys.props(key) = "0"
+      val (off, copiesOff) =
+        try run()
+        finally old match { case Some(v) => sys.props(key) = v; case None => sys.props.remove(key) }
+      assert(want.nonEmpty && on == want && off == want, s"\n want: $want\n on: $on\n off: $off")
+      assert(copiesOn < copiesOff, s"prefiltered copies $copiesOn, unfiltered $copiesOff")
     }
   }
 
