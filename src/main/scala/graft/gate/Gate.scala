@@ -1106,7 +1106,7 @@ object Gate {
     "multimodal_meta" -> ((s, d) => {
       // Multimodal-column plumbing over an opaque binary column (the text
       // bytes stand in for undecodable media; engine-side typed extraction
-      // incl. the stubbed decoder lives in graft.multimodal.Media, tested in
+      // incl. the header decoder lives in graft.multimodal.Media, tested in
       // MediaSpec): byte length, checksum, and a stride-16 byte "frame
       // sample" — all computed on the binary, never the string.
       val m = docsTable(s, d)

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * (the fmt/COMM chunk, never the sample payload). VIDEO CONTAINER decode
   * is REAL for ISO BMFF (MP4/MOV — `mvhd` duration, `tkhd` 16.16 track
   * dimensions) and RIFF AVI (`avih` main header) via a pure-JVM byte walk
-  * of the published box/chunk formats. Only frame/pixel decode and
-  * compressed-audio (mp3/ogg) remain a deterministic STUB behind the same
-  * seam ([[decodeStub]]) — those codecs are not in the JDK; a JNI/FFmpeg
-  * decoder slots into [[decode]] with the same (bytes in, typed meta out)
-  * contract.
+  * of the published box/chunk formats. Bytes no header parser reads
+  * (compressed audio such as mp3/ogg, corrupt headers, anything else)
+  * decode to `("unknown", 0, 0)` — nothing is made up for them; a
+  * JNI/FFmpeg decoder slots into [[decode]] with the same (bytes in, typed
+  * meta out) contract.
   */
 object Media {
 
@@ -29,8 +29,8 @@ object Media {
   final case class MediaMeta(
       doc_id: Long,
       byte_len: Long,
-      kind: String,   // sniffed container kind ("png","jpeg","gif","bmp",stub kinds)
-      width: Int,     // real header-decoded dimensions for images; stub otherwise
+      kind: String,   // sniffed container kind ("png","jpeg","gif","bmp",...,"empty","unknown")
+      width: Int,     // header-decoded dimensions; 0 when no header parser reads the bytes
       height: Int,
       checksum: String)
 
@@ -50,8 +50,8 @@ object Media {
   }
 
   /** Real header-only dimension decode for a sniffed image container.
-    * Returns None for non-images or corrupt headers (callers fall back to
-    * the stub) — a malformed row must never fail the batch.
+    * Returns None for non-images or corrupt headers — a malformed row must
+    * never fail the batch.
     */
   def imageDims(bytes: Array[Byte]): Option[(String, Int, Int)] =
     sniffImage(bytes).flatMap { kind =>
@@ -92,8 +92,8 @@ object Media {
                              frames: Long, durationMs: Long)
 
   /** Real header-only audio decode for a sniffed WAV/AIFF/AU container via
-    * the JDK's `AudioSystem`. None for non-audio or corrupt headers (callers
-    * fall back to the stub) — a malformed row must never fail the batch.
+    * the JDK's `AudioSystem`. None for non-audio or corrupt headers — a
+    * malformed row must never fail the batch.
     */
   def audioMeta(bytes: Array[Byte]): Option[AudioMeta] =
     sniffAudio(bytes).flatMap { kind =>
@@ -138,10 +138,9 @@ object Media {
     *    dwMicroSecPerFrame × dwTotalFrames for duration, dwWidth/dwHeight
     *    for dimensions (all little-endian).
     *
-    * None for non-video or corrupt headers (callers fall back to the stub)
-    * — a malformed row must never fail the batch. Frame DECODE (pixels)
-    * remains behind the [[decodeStub]] seam: that genuinely needs a codec
-    * library not present in the JDK.
+    * None for non-video or corrupt headers — a malformed row must never
+    * fail the batch. Frame DECODE (pixels) needs a codec library not
+    * present in the JDK.
     */
   def videoMeta(bytes: Array[Byte]): Option[VideoMeta] =
     sniffVideo(bytes).flatMap { kind =>
@@ -251,30 +250,9 @@ object Media {
     out
   }
 
-  /** Deterministic fake decode for the containers the JDK cannot parse
-    * (video/compressed-audio/unknown): sniffs a "container" from the leading byte and
-    * derives dimensions from stable byte statistics. The signature (bytes
-    * in, typed meta out, no Spark types) is the deployment contract a real
-    * codec drops into.
-    */
-  def decodeStub(bytes: Array[Byte]): (String, Int, Int) = {
-    if (bytes.isEmpty) return ("empty", 0, 0)
-    val kind = (bytes(0) & 0x03) match {
-      case 0 => "image"
-      case 1 => "audio"
-      case 2 => "video"
-      case _ => "binary"
-    }
-    var acc = 0
-    var i = 0
-    while (i < bytes.length) { acc = (acc * 31 + (bytes(i) & 0xff)) & 0x7fffffff; i += 1 }
-    val width = 16 + (acc % 240)          // 16..255
-    val height = 16 + ((acc >> 8) % 240)
-    (kind, width, height)
-  }
-
   /** Full decode seam: real image/audio/video-container header decode where
-    * a published pure-JVM parse exists, stub elsewhere. Total — never throws
+    * a published pure-JVM parse exists, `("empty", 0, 0)` for no bytes and
+    * `("unknown", 0, 0)` for bytes no parser reads. Total — never throws
     * on malformed bytes. For audio the two dimension slots carry
     * (channels, sampleRateHz) — the typed [[audioMeta]] / [[videoMeta]]
     * accessors return the full headers including duration.
@@ -284,7 +262,7 @@ object Media {
     else imageDims(bytes)
       .orElse(audioMeta(bytes).map(a => (a.kind, a.channels, a.sampleRateHz)))
       .orElse(videoMeta(bytes).map(v => (v.kind, v.width, v.height)))
-      .getOrElse(decodeStub(bytes))
+      .getOrElse(("unknown", 0, 0))
 
   /** Extract typed metadata for every row of (idCol: long, binCol: binary).
     * One decoder context per partition, streaming over the batch — the

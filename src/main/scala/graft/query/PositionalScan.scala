@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions.col
   * kernel over them: a one-task scan ([[IndexView.Scan.oneTask]]) tags,
   * sorts, scores and ranks its blocks in its own task, as one typed
   * operator with no exchange; a larger one goes through the bucket
-  * exchange.
+  * exchange. [[byDoc]] is the one per-doc fold: the nested boolean,
+  * DisMax, PayloadNear and span paths shuffle their rows by doc_id through
+  * it and fold each doc's rows together.
   *
   * Scoring matches the decoded-row fold it replaces bit-for-bit: one norm
   * byte per doc (norms are per-doc, identical across a doc's term rows),
@@ -143,6 +145,26 @@ object PositionalScan {
     }(Rows.hit)
     Hits(hits.toDF("doc_id", "score"), ranked = r != null)
   }
+
+  /** The one per-doc fold: shuffles `rows` (a `doc_id` column among others)
+    * by doc_id, sorts them by (doc_id, `order`), reads them as `T` and
+    * passes each doc's rows to `fold` together. The combining scorers
+    * (nested boolean and DisMax clauses, PayloadNear and span matches)
+    * group by doc here, as the kernels group by bucket in [[byBucket]].
+    */
+  private[query] def byDoc[T: Encoder, O: Encoder](rows: DataFrame, order: String)
+                                                 (doc: T => Long)
+                                                 (fold: (Long, Seq[T]) => IterableOnce[O]): Dataset[O] =
+    rows.repartition(col("doc_id")).sortWithinPartitions("doc_id", order).as[T]
+      .mapPartitions { it =>
+        val b = it.buffered
+        Iterator.continually(b).takeWhile(_.hasNext).flatMap { _ =>
+          val d = doc(b.head)
+          val group = Seq.newBuilder[T]
+          while (b.hasNext && doc(b.head) == d) group += b.next()
+          fold(d, group.result())
+        }
+      }
 
   /** A sort of tagged blocks by the named columns, as in a task. */
   private def inTaskOrder[T <: Bucketed](order: Seq[String]): Ordering[T] =

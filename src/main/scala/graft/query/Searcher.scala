@@ -26,7 +26,10 @@ import Searcher.payloadDocScore
   * ([[PositionalScan.byBucket]]). Larger scans, and the nested, DisMax,
   * constant-score, MatchAll and payload shapes, keep every hit and end
   * with liveDocs and orderBy/limit, which Catalyst plans as
-  * TakeOrderedAndProject — the per-leaf heaps + TopDocs.Merge shape.
+  * TakeOrderedAndProject — the per-leaf heaps + TopDocs.Merge shape. The
+  * nested boolean, DisMax and PayloadNear shapes read one doc's clause
+  * hits or matches at a time through [[PositionalScan.byDoc]], the one
+  * per-doc fold.
   *
   * This is also the one flat top-k path of [[WandSearcher]]: asked to
   * prune, a term, a Bool and an unboosted flat BoolQ group (in-cap
@@ -212,89 +215,59 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     */
   private def nestedScoreAll(bq: Query.BoolQ): DataFrame = {
     require(bq.clauses.size <= Query.MaxClauseCount, "too many clauses")
-    val nMust = bq.clauses.count(_._1 == Query.Must)
+    val occ = bq.clauses.map(_._1).toArray
+    val nMust = occ.count(_ == Query.Must)
     val mm = bq.minShouldMatch
     val gb = bq.boost
-    val tagged: Seq[DataFrame] = bq.clauses.zipWithIndex.map { case ((occ, sub), ci) =>
-      scoreAll(sub).select(col("doc_id"), lit(ci).as("ci"), col("score"),
-        lit(occ == Query.Must).as("m"), lit(occ == Query.MustNot).as("n"))
-    }
-    val folded = tagged.reduce(_ unionByName _)
-      .repartition(col("doc_id"))
-      .sortWithinPartitions("doc_id", "ci")
-      .as[(Long, Int, Float, Boolean, Boolean)]
-      .mapPartitions { it =>
-        val b = it.buffered
-        new scala.collection.AbstractIterator[(Long, Float)] {
-          private var pending: (Long, Float) = _
-          private var done = false
-          private def advance(): Unit = {
-            pending = null
-            while (pending == null && b.hasNext) {
-              val doc = b.head._1
-              var mustSeen = 0
-              var shouldSeen = 0
-              var excluded = false
-              var score = 0.0f
-              while (b.hasNext && b.head._1 == doc) {
-                val (_, _, s, isM, isN) = b.next()
-                if (isN) excluded = true
-                else {
-                  if (isM) mustSeen += 1 else shouldSeen += 1
-                  score += s
-                }
-              }
-              if (!excluded && mustSeen == nMust && shouldSeen >= mm &&
-                (mustSeen + shouldSeen) > 0)
-                pending = (doc, if (gb == 1.0f) score else gb * score)
-            }
-            if (pending == null) done = true
-          }
-          advance()
-          override def hasNext: Boolean = !done
-          override def next(): (Long, Float) = { val h = pending; advance(); h }
+    clauseFold(bq.clauses.map(_._2)) { (doc, hs) =>
+      var mustSeen = 0
+      var shouldSeen = 0
+      var excluded = false
+      var score = 0.0f
+      hs.foreach { case (_, ci, s) =>
+        occ(ci) match {
+          case Query.MustNot => excluded = true
+          case Query.Must => mustSeen += 1; score += s
+          case Query.Should => shouldSeen += 1; score += s
         }
       }
-    folded.toDF("doc_id", "score")
+      if (!excluded && mustSeen == nMust && shouldSeen >= mm && (mustSeen + shouldSeen) > 0)
+        Some((doc, if (gb == 1.0f) score else gb * score))
+      else None
+    }
   }
 
   /** DisjunctionMaxScorer fold: per doc, max over clause scores plus
     * tieBreaker times the rest, float32 in clause order (see
-    * [[Query.DisMax]]); same doc-grouped shuffle shape as the nested
-    * boolean combine.
+    * [[Query.DisMax]]).
     */
   private def disMaxScoreAll(dm: Query.DisMax): DataFrame = {
     require(dm.clauses.nonEmpty && dm.clauses.size <= Query.MaxClauseCount,
       "DisMax needs 1..MaxClauseCount clauses")
-    val tagged = dm.clauses.zipWithIndex.map { case (sub, ci) =>
-      scoreAll(sub).select(col("doc_id"), lit(ci).as("ci"), col("score"))
-    }
     val tb = dm.tieBreaker
     val gb = dm.boost
-    tagged.reduce(_ unionByName _)
-      .repartition(col("doc_id"))
-      .sortWithinPartitions("doc_id", "ci")
-      .as[(Long, Int, Float)]
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[(Long, Float)] {
-          override def hasNext: Boolean = b.hasNext
-          override def next(): (Long, Float) = {
-            val doc = b.head._1
-            var sum = 0.0f
-            var mx = Float.NegativeInfinity
-            while (b.hasNext && b.head._1 == doc) {
-              val s = b.next()._3
-              sum += s
-              if (s > mx) mx = s
-            }
-            val sc = mx + (sum - mx) * tb
-            (doc, if (gb == 1.0f) sc else gb * sc)
-          }
-        }
+    clauseFold(dm.clauses) { (doc, hs) =>
+      var sum = 0.0f
+      var mx = Float.NegativeInfinity
+      hs.foreach { case (_, _, s) =>
+        sum += s
+        if (s > mx) mx = s
       }
-      .toDF("doc_id", "score")
+      val sc = mx + (sum - mx) * tb
+      Some((doc, if (gb == 1.0f) sc else gb * sc))
+    }
   }
+
+  /** Every sub-query's hits, tagged with its clause index `ci` and folded
+    * per doc in clause order ([[PositionalScan.byDoc]]): `fold` reads one
+    * doc's (doc_id, ci, score) rows.
+    */
+  private def clauseFold(subs: Seq[Query])
+                        (fold: (Long, Seq[(Long, Int, Float)]) => Option[(Long, Float)]): DataFrame =
+    PositionalScan.byDoc[(Long, Int, Float), (Long, Float)](
+      subs.zipWithIndex.map { case (sub, ci) =>
+        scoreAll(sub).select(col("doc_id"), lit(ci).as("ci"), col("score"))
+      }.reduce(_ unionByName _), "ci")(_._1)(fold).toDF("doc_id", "score")
 
   /** Per-doc scored hits for the positive clauses + the boolean combine
     * over the shared clause plan ([[BlockCombine.Clauses]]): ALL matching
@@ -455,10 +428,11 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
   }
 
   /** PayloadNearQuery execution (see [[Query.PayloadNear]]): per clause term,
-    * one pruned scan of (positions + payloads); one doc-grouped shuffle; per
-    * doc, the reference scorer's match walk ([[PayloadSpans]]) accumulates
-    * freq and folds the matched payloads. Docs missing any clause term (or
-    * with freq 0) emit nothing — SpanScorer skips zero-freq docs.
+    * one pruned scan of (positions + payloads), grouped by doc
+    * ([[PositionalScan.byDoc]]); per doc, the reference scorer's match walk
+    * ([[PayloadSpans]]) accumulates freq and folds the matched payloads.
+    * Docs missing any clause term (or with freq 0) emit nothing —
+    * SpanScorer skips zero-freq docs.
     */
   private def payloadNearScoreAll(pn: Query.PayloadNear): DataFrame = {
     import graft.codec.PosPayBlock
@@ -478,7 +452,7 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
     val func = pn.func
     val slop = pn.slop
     val inOrder = pn.inOrder
-    view.blocks(ts, tidSet.toSeq, PosPayBlock.cols)
+    val rows = view.blocks(ts, tidSet.toSeq, PosPayBlock.cols)
       .as[PosPayBlock]
       .flatMap { b =>
         require(b.cnt == 0 || b.pay_bytes.nonEmpty,
@@ -494,50 +468,27 @@ final class Searcher(@transient val spark: SparkSession, indexDir: String,
         }
       }
       .toDF("doc_id", "term_id", "norm", "pos", "pays")
-      .repartition(col("doc_id"))
-      .sortWithinPartitions("doc_id", "term_id")
-      .as[(Long, Long, Byte, Array[Int], Array[Array[Byte]])]
-      .mapPartitions { it =>
-        val byTid = new scala.collection.mutable.HashMap[Long, (Array[Int], Array[Array[Byte]])]()
-        val b = it.buffered
-        new scala.collection.AbstractIterator[(Long, Float)] {
-          private var pending: (Long, Float) = _
-          private var done = false
-          private def advance(): Unit = {
-            pending = null
-            while (pending == null && b.hasNext) {
-              val doc = b.head._1
-              var nb: Byte = 0
-              byTid.clear()
-              while (b.hasNext && b.head._1 == doc) {
-                val (_, tid, n, ps, pl) = b.next()
-                nb = n
-                byTid.update(tid, (ps, pl))
-              }
-              if (clauseTids.forall(byTid.contains)) {
-                val cursors = clauseTids.map { tid =>
-                  val (ps, pl) = byTid(tid)
-                  new PayloadSpans.TermCursor(ps, pl)
-                }
-                val matches =
-                  if (inOrder) PayloadSpans.ordered(cursors, slop)
-                  else PayloadSpans.unordered(cursors, slop)
-                var freq = 0.0f
-                val docScore = payloadDocScore(func, matches.flatMap { m =>
-                  freq += 1.0f / (m.end - m.start + 1) // in match order
-                  m.payloads.iterator.map(p => (p, 0, p.length))
-                })
-                if (freq > 0.0f) pending = (doc, Bm25.score(weightValue, freq, cache, nb) * docScore)
-              }
-            }
-            if (pending == null) done = true
-          }
-          advance()
-          override def hasNext: Boolean = !done
-          override def next(): (Long, Float) = { val h = pending; advance(); h }
+    PositionalScan.byDoc[(Long, Long, Byte, Array[Int], Array[Array[Byte]]), (Long, Float)](
+      rows, "term_id")(_._1) { (doc, hs) =>
+      val byTid = hs.map(h => h._2 -> (h._4, h._5)).toMap
+      if (!clauseTids.forall(byTid.contains)) None
+      else {
+        val cursors = clauseTids.map { tid =>
+          val (ps, pl) = byTid(tid)
+          new PayloadSpans.TermCursor(ps, pl)
         }
+        val matches =
+          if (inOrder) PayloadSpans.ordered(cursors, slop)
+          else PayloadSpans.unordered(cursors, slop)
+        var freq = 0.0f
+        val docScore = payloadDocScore(func, matches.flatMap { m =>
+          freq += 1.0f / (m.end - m.start + 1) // in match order
+          m.payloads.iterator.map(p => (p, 0, p.length))
+        })
+        if (freq > 0.0f) Some((doc, Bm25.score(weightValue, freq, cache, hs.head._3) * docScore))
+        else None
       }
-      .toDF("doc_id", "score")
+    }.toDF("doc_id", "score")
   }
 
   private def emptyResult: DataFrame =

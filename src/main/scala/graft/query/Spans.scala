@@ -2,7 +2,6 @@ package graft.query
 
 import graft.codec.{PosBlock, PostingCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Positional span algebra over the positions index — the Spans family
   * (/root/reference/src/Lucene.Net/Search/Spans/: SpanTermQuery,
@@ -138,7 +137,8 @@ object Spans {
   /** Distributed evaluation: (doc_id, start, end) rows for every matching
     * live span — the positions read path shared with phrase queries, over a
     * batch index or a streaming store ([[IndexView]], one per snapshot
-    * across calls: [[IndexView.shared]]).
+    * across calls: [[IndexView.shared]]); [[eval]] reads each doc's term
+    * positions together ([[PositionalScan.byDoc]]).
     */
   def spans(spark: SparkSession, indexDir: String, q: SpanQuery): DataFrame = {
     import spark.implicits._
@@ -147,7 +147,7 @@ object Spans {
     if (ts.rows.isEmpty)
       return spark.emptyDataset[(Long, Int, Int)].toDF("doc_id", "start", "end")
     val names: Map[Long, String] = ts.rows.map { case (t, d) => d.term_id -> t }
-    val hits = view.blocks(ts, names.keySet.toSeq, PosBlock.cols)
+    val rows = view.blocks(ts, names.keySet.toSeq, PosBlock.cols)
       .as[PosBlock]
       .flatMap { b =>
         val (docs, _, _, poss) = PostingCodec.decodePos(b)
@@ -155,26 +155,9 @@ object Spans {
         docs.indices.iterator.map(i => (docs(i), t, poss(i)))
       }
       .toDF("doc_id", "term", "pos")
-      .repartition(col("doc_id"))
-      .sortWithinPartitions("doc_id", "term")
-      .as[(Long, String, Array[Int])]
-      .mapPartitions { it =>
-        val tp = new scala.collection.mutable.HashMap[String, Array[Int]]()
-        val b = it.buffered
-        new scala.collection.AbstractIterator[Seq[(Long, Int, Int)]] {
-          override def hasNext: Boolean = b.hasNext
-          override def next(): Seq[(Long, Int, Int)] = {
-            val doc = b.head._1
-            tp.clear()
-            while (b.hasNext && b.head._1 == doc) {
-              val (_, t, ps) = b.next()
-              tp.update(t, ps)
-            }
-            eval(q, tp).map { case (s, e) => (doc, s, e) }
-          }
-        }.flatten
-      }
-      .toDF("doc_id", "start", "end")
+    val hits = PositionalScan.byDoc[(Long, String, Array[Int]), (Long, Int, Int)](rows, "term")(_._1) {
+      (doc, tps) => eval(q, tps.map(tp => tp._2 -> tp._3).toMap).map { case (s, e) => (doc, s, e) }
+    }.toDF("doc_id", "start", "end")
     view.live(hits).orderBy("doc_id", "start", "end")
   }
 }

@@ -4,7 +4,7 @@ import graft.multimodal.Media
 import graft.query.{MemoryIndex, Query}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Multimodal binary-column plumbing (stubbed decode, real schema/batching)
+/** Multimodal binary-column plumbing (header decode, schema, batching)
   * and the single-doc MemoryIndex.
   */
 class MediaSpec extends AnyFunSuite {
@@ -24,8 +24,10 @@ class MediaSpec extends AnyFunSuite {
     assert(meta(0).byte_len == 11L)
     assert(meta(1).kind == "empty" && meta(2).kind == "empty")
     assert(meta(3).byte_len == 300L)
-    assert(meta(3).width >= 16 && meta(3).width < 256)
-    // deterministic: same input -> same fake decode
+    // bytes no header parser reads: no dimensions are made up
+    assert(meta(0).kind == "unknown" && meta(0).width == 0 && meta(0).height == 0)
+    assert(meta(3).kind == "unknown" && meta(3).width == 0 && meta(3).height == 0)
+    // deterministic: same input -> same decode
     val again = Media.extractMeta(df, "doc_id", "media").collect().sortBy(_.doc_id)
     assert(meta.toSeq == again.toSeq)
     // checksum is the bytes' md5
@@ -49,17 +51,16 @@ class MediaSpec extends AnyFunSuite {
     assert(Media.sniffImage(jpg).contains("jpeg"))
     assert(Media.decode(png) == ("png", 37, 21))
     assert(Media.decode(jpg) == ("jpeg", 64, 48))
-    // corrupt header: sniffs as png but the reader fails -> stub, no throw
+    // corrupt header: sniffs as png but the reader fails -> unknown, no throw
     val corrupt = png.take(12) ++ Array.fill[Byte](4)(0x7f)
-    val (k, cw, ch) = Media.decode(corrupt)
-    assert(cw >= 0 && ch >= 0 && k.nonEmpty)
+    assert(Media.decode(corrupt) == ("unknown", 0, 0))
     // end-to-end through the Spark batch path
     val df = Seq((1L, png), (2L, jpg), (3L, "not an image".getBytes("UTF-8")))
       .toDF("doc_id", "media")
     val meta = Media.extractMeta(df, "doc_id", "media").collect().sortBy(_.doc_id)
     assert(meta(0).kind == "png" && meta(0).width == 37 && meta(0).height == 21)
     assert(meta(1).kind == "jpeg" && meta(1).width == 64 && meta(1).height == 48)
-    assert(meta(2).width >= 16) // stub fallback for non-image bytes
+    assert(meta(2).kind == "unknown" && meta(2).width == 0 && meta(2).height == 0)
   }
 
   test("real audio header decode: WAV, AIFF, AU via javax.sound.sampled") {
@@ -90,9 +91,8 @@ class MediaSpec extends AnyFunSuite {
     assert(Media.audioMeta(au).get == Media.AudioMeta("au", 1, 8000, 800L, 100L))
     // decode seam carries (channels, sampleRateHz) in the dimension slots
     assert(Media.decode(wav) == ("wav", 1, 16000))
-    // truncated header: sniffs as wav but the parser fails -> stub, no throw
-    val (k, _, _) = Media.decode(wav.take(16))
-    assert(k.nonEmpty)
+    // truncated header: sniffs as wav but the parser fails -> unknown, no throw
+    assert(Media.decode(wav.take(16)) == ("unknown", 0, 0))
     // end-to-end through the Spark batch path next to an image
     val df = Seq((1L, wav), (2L, aiff)).toDF("doc_id", "media")
     val meta = Media.extractMeta(df, "doc_id", "media").collect().sortBy(_.doc_id)
@@ -136,11 +136,10 @@ class MediaSpec extends AnyFunSuite {
     // 33333 us/frame x 300 frames = 9999.9 ms, rounded
     assert(Media.videoMeta(avi).get == Media.VideoMeta("avi", 320, 240, 10000L))
 
-    // corrupt: sniffs as mp4 but box sizes are garbage -> stub, no throw
+    // corrupt: sniffs as mp4 but box sizes are garbage -> unknown, no throw
     val corrupt = mp4.take(8) ++ Array.fill[Byte](8)(0x7f)
     assert(Media.videoMeta(corrupt).isEmpty)
-    val (k, _, _) = Media.decode(corrupt)
-    assert(k.nonEmpty)
+    assert(Media.decode(corrupt) == ("unknown", 0, 0))
     // end-to-end through the Spark batch path
     val df = Seq((1L, mp4), (2L, avi)).toDF("doc_id", "media")
     val meta = Media.extractMeta(df, "doc_id", "media").collect().sortBy(_.doc_id)

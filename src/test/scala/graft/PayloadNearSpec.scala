@@ -89,14 +89,18 @@ class PayloadNearSpec extends AnyFunSuite {
     4L -> (Seq(2), Seq(2.0f, 1.0f)))
 
   test("ordered walk: shrink-to-shortest matches, slop filter, stale-payload quirk") {
-    for (f <- Seq(PayloadFunc.Avg, PayloadFunc.Min, PayloadFunc.Max))
-      assert(engine(0, inOrder = true, f) == expected(orderedSlop0, f), s"func=$f")
+    SparkTestSession.bothPlans {
+      for (f <- Seq(PayloadFunc.Avg, PayloadFunc.Min, PayloadFunc.Max))
+        assert(engine(0, inOrder = true, f) == expected(orderedSlop0, f), s"func=$f")
+    }
   }
 
   test("ordered slop 1 admits the gapped doc") {
     // doc6: (0,3) with one-position gap, matchLength 3 -> freq 1/4
     val t = orderedSlop0 + (6L -> (Seq(3), Seq(2.0f, 1.0f)))
-    assert(engine(1, inOrder = true, PayloadFunc.Avg) == expected(t, PayloadFunc.Avg))
+    SparkTestSession.bothPlans {
+      assert(engine(1, inOrder = true, PayloadFunc.Avg) == expected(t, PayloadFunc.Avg))
+    }
   }
 
   // UNORDERED slop 5 CellQueue walk:
@@ -118,14 +122,18 @@ class PayloadNearSpec extends AnyFunSuite {
     6L -> (Seq(3), Seq(1.0f, 2.0f)))
 
   test("unordered walk: frontier matches incl. overlap and repeat payload collection") {
-    for (f <- Seq(PayloadFunc.Avg, PayloadFunc.Min, PayloadFunc.Max))
-      assert(engine(5, inOrder = false, f) == expected(unorderedSlop5, f), s"func=$f")
+    SparkTestSession.bothPlans {
+      for (f <- Seq(PayloadFunc.Avg, PayloadFunc.Min, PayloadFunc.Max))
+        assert(engine(5, inOrder = false, f) == expected(unorderedSlop5, f), s"func=$f")
+    }
   }
 
   test("clause term absent from the corpus matches nothing") {
-    assert(engine(0, inOrder = true, PayloadFunc.Avg).nonEmpty)
-    val r = new Searcher(spark, dir)
-      .search(PayloadNear(Seq("a", "nope"), 0, inOrder = true), 10).collect()
-    assert(r.isEmpty)
+    SparkTestSession.bothPlans {
+      assert(engine(0, inOrder = true, PayloadFunc.Avg).nonEmpty)
+      val r = new Searcher(spark, dir)
+        .search(PayloadNear(Seq("a", "nope"), 0, inOrder = true), 10).collect()
+      assert(r.isEmpty)
+    }
   }
 }

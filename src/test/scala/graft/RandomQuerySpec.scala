@@ -36,14 +36,22 @@ class RandomQuerySpec extends AnyFunSuite {
       case 5     => Query.MustNot
       case _     => Query.Should
     }
-    def leaf(): Query = rnd.nextInt(5) match {
-      case 0 =>
-        val n = 2 + rnd.nextInt(2)
-        val slop = rnd.nextInt(3)
-        Query.Phrase(Seq.fill(n)(term()).distinct match {
-          case ts if ts.size >= 2 => ts
-          case ts                 => ts :+ "person"
-        }, slop, boost())
+    def phrase(): Query = {
+      val n = 2 + rnd.nextInt(2)
+      val slop = rnd.nextInt(3)
+      Query.Phrase(Seq.fill(n)(term()).distinct match {
+        case ts if ts.size >= 2 => ts
+        case ts                 => ts :+ "person"
+      }, slop, boost())
+    }
+    def scored(): Query = if (rnd.nextInt(3) == 0) phrase() else Query.Term(term(), boost())
+    // DisMax and ConstantScore over a sub-query fold per doc like the nested
+    // groups around them
+    def leaf(): Query = rnd.nextInt(7) match {
+      case 0 => phrase()
+      case 1 => Query.DisMax(Seq.fill(2 + rnd.nextInt(2))(scored()),
+        tieBreaker = Vector(0.0f, 0.1f, 0.5f)(rnd.nextInt(3)), boost = boost())
+      case 2 => Query.ConstantScore(scored(), boost())
       case _ => Query.Term(term(), boost())
     }
     def group(depth: Int): Query = {
@@ -55,16 +63,24 @@ class RandomQuerySpec extends AnyFunSuite {
     }
 
     var nonEmpty = 0
+    var folded = 0
     (1 to 100).foreach { i =>
       val q = group(2)
-      val got = searcher.search(q, 10).collect()
-        .map(r => (r.getLong(0), r.getFloat(1))).toSeq
       val want = oracle.search(q, 10)
-      assert(got == want, s"query $i diverged: $q\n got: $got\nwant: $want")
-      if (got.nonEmpty) nonEmpty += 1
+      // the per-doc folds run reduce-side on both plans; their clause scans
+      // take one task or the bucket exchange
+      SparkTestSession.bothPlans {
+        val got = searcher.search(q, 10).collect()
+          .map(r => (r.getLong(0), r.getFloat(1))).toSeq
+        assert(got == want, s"query $i diverged: $q\n got: $got\nwant: $want")
+      }
+      if (want.nonEmpty) nonEmpty += 1
+      if (want.nonEmpty && q.toString.matches(".*(DisMax|ConstantScore).*")) folded += 1
     }
-    // the generator must actually exercise matching queries
+    // the generator must actually exercise matching queries, the DisMax and
+    // ConstantScore leaves among them
     assert(nonEmpty > 30, s"only $nonEmpty of 100 random queries matched docs")
+    assert(folded > 20, s"only $folded matching queries hold a DisMax or ConstantScore leaf")
   }
 
   test("80 random flat boolean shapes: block-max pruned == exhaustive bit-identically") {

@@ -119,21 +119,49 @@ class SpansSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_spans").toString
     IndexBuilder.buildFromTurns(Transcripts.dataset(spark, 60), dir)
     val turns = Transcripts.local(60).sortBy(t => (t.conv_id, t.turn_idx))
+    // local oracle input: each analyzed doc's term -> sorted positions
+    val analyzed = turns.zipWithIndex.map { case (t, i) =>
+      (i.toLong, graft.analysis.Analyzer.termPositions(t.text)._1
+        .map { case (k, v) => k -> v.toArray })
+    }
+    def check(q: SpanQuery): Seq[(Long, Int, Int)] = {
+      val want = analyzed.flatMap { case (id, tp) =>
+        eval(q, tp).map { case (s, e) => (id, s, e) }
+      }.sorted
+      SparkTestSession.bothPlans {
+        val got = Spans.spans(spark, dir, q).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+        assert(got == want, s"diverged on $q")
+      }
+      want
+    }
     for (q <- Seq[SpanQuery](
       SpanNear(SpanTerm("time"), SpanTerm("person"), 2, inOrder = true),
       SpanNearUnorderedK(Seq(SpanTerm("time"), SpanTerm("person"),
-        SpanTerm("year")), 5))) {
-      val got = Spans.spans(spark, dir, q).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
-      // local oracle over the same analyzed docs
-      val want = turns.zipWithIndex.flatMap { case (t, i) =>
-        val tp = graft.analysis.Analyzer.termPositions(t.text)._1
-          .map { case (k, v) => k -> v.toArray }
-        eval(q, tp).map { case (s, e) => (i.toLong, s, e) }
-      }.sortBy(identity)
-      assert(got == want, s"diverged on $q")
-      assert(got.nonEmpty)
-    }
+        SpanTerm("year")), 5)))
+      assert(check(q).nonEmpty, s"no span of $q")
+
+    // seeded random span trees: near ordered/unordered (binary and k-ary),
+    // or, not, first and position range, nested two or three deep
+    val rnd = new scala.util.Random(20260819L)
+    val vocab = Vector("time", "person", "year", "way", "day", "world", "life",
+      "hand", "part", "people", "thing", "w000123", "zzznope")
+    def term(): SpanQuery = SpanTerm(vocab(rnd.nextInt(vocab.size)))
+    def tree(depth: Int): SpanQuery =
+      if (depth == 0) term()
+      else rnd.nextInt(8) match {
+        case 0 => term()
+        case 1 => SpanNear(tree(depth - 1), tree(depth - 1), rnd.nextInt(6), inOrder = true)
+        case 2 => SpanNearK(Seq.fill(2 + rnd.nextInt(2))(tree(depth - 1)), rnd.nextInt(8))
+        case 3 => SpanNearUnorderedK(Seq.fill(2 + rnd.nextInt(2))(tree(depth - 1)),
+          rnd.nextInt(8))
+        case 4 => SpanOr(Seq.fill(2 + rnd.nextInt(2))(tree(depth - 1)))
+        case 5 => SpanNot(tree(depth - 1), tree(depth - 1))
+        case 6 => SpanFirst(tree(depth - 1), 1 + rnd.nextInt(30))
+        case _ => SpanPositionRange(tree(depth - 1), rnd.nextInt(10), 5 + rnd.nextInt(40))
+      }
+    val matched = (1 to 30).count(_ => check(tree(2 + rnd.nextInt(2))).nonEmpty)
+    assert(matched >= 10, s"only $matched of 30 random span trees matched")
   }
 
   test("spans reuse one view per snapshot: a second call loads no tombstones") {
