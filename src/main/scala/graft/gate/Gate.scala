@@ -4,9 +4,10 @@ import graft.analysis.Analyzer
 import graft.build.{IndexBuilder, TermVectors}
 import graft.codec.{PosBlock, PostingCodec, ScoreBlock}
 import graft.model.TermDictRow
-import graft.query.{Query, Searcher, WandSearcher}
+import graft.operators.ProductQuantizer
+import graft.query.{Query, Searcher, Spans, WandSearcher}
 import graft.score.Bm25
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,30 +86,30 @@ object Gate {
   def annPqTable(spark: SparkSession, sfDir: String): DataFrame =
     cachedRelation(spark, s"$sfDir#annpq", annPqDir(spark, sfDir))
 
+  /** A write-once store `<Version>-<tag>-<sf>` in the gate-index directory
+    * (no tag for the standard index): `write` runs once per JVM per (sfDir,
+    * tag), and not at all when a finished `_SUCCESS` marker is on disk. The
+    * index builds write no root marker; they resume from their manifests.
+    */
+  private def store(sfDir: String, tag: String)(write: String => Unit): String =
+    built.getOrElseUpdate(s"$sfDir#$tag", {
+      val name = new java.io.File(sfDir).getName
+      val dir = s"target/gate-index/$Version-${if (tag.isEmpty) "" else s"$tag-"}$name"
+      if (!new java.io.File(s"$dir/_SUCCESS").exists()) write(dir)
+      dir
+    })
+
   /** Build (once per JVM per sfDir; resumable across JVMs via the manifest)
     * the index over documents.parquet.
     */
   def indexDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(sfDir, {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-$name"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      IndexBuilder.build(docs, dir)
-      dir
-    })
+    store(sfDir, "")(IndexBuilder.build(docsTable(spark, sfDir).select("doc_id", "text"), _))
 
   /** English-analyzed (Porter-stemmed) index variant over the same corpus. */
   def indexDirEnglish(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#en", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-en-$name"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      IndexBuilder.build(docs, dir,
-        IndexBuilder.Options(analyzer = graft.analysis.EnglishAnalyzer))
-      dir
-    })
+    store(sfDir, "en")(IndexBuilder.build(
+      docsTable(spark, sfDir).select("doc_id", "text"), _,
+      IndexBuilder.Options(analyzer = graft.analysis.EnglishAnalyzer)))
 
   /** Payload-carrying index variant: every token gets a deterministic
     * `|<w>` float suffix with w = ((doc_id + position) % 8 + 1) / 2 (position
@@ -120,47 +121,32 @@ object Gate {
     * them is exact).
     */
   def indexDirPayload(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#pay", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-pay-$name"
+    store(sfDir, "pay") { dir =>
       val w = (x: Column, i: Column) =>
         concat(x, lit("|"),
           (((col("doc_id") + i + 1) % 8 + 1).cast("double") / 2.0).cast("string"))
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = docsTable(spark, sfDir)
         .select(col("doc_id"),
           concat_ws(" ", transform(split(col("text"), " "), w)).as("text"))
       IndexBuilder.build(docs, dir,
         IndexBuilder.Options(analyzer = graft.analysis.WhitespaceAnalyzer,
           payloads = true))
-      dir
-    })
+    }
 
   /** Offsets-carrying index variant (DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS,
     * the IndexOptions ladder's 4th rung): per-occurrence character spans in
     * the postings themselves.
     */
   def indexDirOffsets(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#off", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-off-$name"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      IndexBuilder.build(docs, dir, IndexBuilder.Options(offsets = true))
-      dir
-    })
+    store(sfDir, "off")(IndexBuilder.build(
+      docsTable(spark, sfDir).select("doc_id", "text"), _, IndexBuilder.Options(offsets = true)))
 
-  /** Term-vectors sidecar over the corpus (standard chain; built once per
-    * JVM per sfDir — the build is one analysis pass + one range exchange).
+  /** Term-vectors sidecar over the corpus (standard chain; the build is one
+    * analysis pass + one range exchange).
     */
   def termVectorsDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#tv", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-tv-$name"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      TermVectors.build(spark, docs, dir)
-      dir
-    })
+    store(sfDir, "tv")(
+      TermVectors.build(spark, docsTable(spark, sfDir).select("doc_id", "text"), _))
 
   /** Sharded two-level prefix-sum bin assignment for sequence packing:
     * input (doc_id, source, tok) -> + (bin). Level 1 computes each
@@ -202,25 +188,20 @@ object Gate {
     * pruning). Built once per sf, cached like the index.
     */
   def suggestFreeDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#freesugg", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-freesugg-$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        import spark.implicits._
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("text")).as[String]
-          .flatMap { text =>
-            val toks = text.split(" ", -1)
-            (0 until toks.length - 1).iterator.map(i => (toks(i), toks(i + 1)))
-          }
-          .toDF("w1", "w2")
-          .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
-          .repartitionByRange(col("w1"))
-          .sortWithinPartitions("w1", "w2")
-          .write.mode("overwrite").parquet(dir)
-      }
-      dir
-    })
+    store(sfDir, "freesugg") { dir =>
+      import spark.implicits._
+      docsTable(spark, sfDir)
+        .select(col("text")).as[String]
+        .flatMap { text =>
+          val toks = text.split(" ", -1)
+          (0 until toks.length - 1).iterator.map(i => (toks(i), toks(i + 1)))
+        }
+        .toDF("w1", "w2")
+        .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
+        .repartitionByRange(col("w1"))
+        .sortWithinPartitions("w1", "w2")
+        .write.mode("overwrite").parquet(dir)
+    }
 
   // ---------- the engine under the gates ----------------------------------
 
@@ -308,21 +289,16 @@ object Gate {
     * prunes to the leading partitions instead of scanning the table.
     */
   def sortedStoreDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#sorted", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-sorted-$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val docs = docsTable(spark, sfDir).select(col("doc_id"), col("n_chars"))
-        val r = docs.agg(min("n_chars"), max("n_chars")).head()
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val span = math.max(1L, hi - lo + 1)
-        docs.withColumn("bucket",
-            least(lit(SortStoreBuckets - 1),
-              (lit(hi) - col("n_chars")) * SortStoreBuckets / span).cast("int"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      }
-      dir
-    })
+    store(sfDir, "sorted") { dir =>
+      val docs = docsTable(spark, sfDir).select(col("doc_id"), col("n_chars"))
+      val r = docs.agg(min("n_chars"), max("n_chars")).head()
+      val (lo, hi) = (r.getLong(0), r.getLong(1))
+      val span = math.max(1L, hi - lo + 1)
+      docs.withColumn("bucket",
+          least(lit(SortStoreBuckets - 1),
+            (lit(hi) - col("n_chars")) * SortStoreBuckets / span).cast("int"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    }
 
   /** EarlyTerminatingSortingCollector analog
     * (/root/reference/src/Lucene.Net.Misc/Index/Sorter/EarlyTerminatingSortingCollector.cs:59):
@@ -551,7 +527,6 @@ object Gate {
       spanUnorderedQuery(s, d, Seq("vector", "merge", "scan"), 6)),
     "ft_span_first" -> ((s, d) => {
       // SpanFirstQuery: term occurrences within the first 5 positions
-      import graft.query.Spans
       Spans.spans(s, indexDir(s, d), Spans.SpanFirst(Spans.SpanTerm("vector"), 5))
         .select(col("doc_id"), (col("start") + 1).cast("long").as("p"))
         .orderBy("doc_id", "p")
@@ -559,7 +534,6 @@ object Gate {
     "ft_span_or_near" -> ((s, d) => {
       // SpanNear(SpanOr(fast, slow), table, slop=1, ordered): composed span
       // algebra evaluated from the positions index
-      import graft.query.Spans
       Spans.spans(s, indexDir(s, d),
           Spans.SpanNear(Spans.SpanOr(Seq(Spans.SpanTerm("fast"), Spans.SpanTerm("slow"))),
             Spans.SpanTerm("table"), slop = 1, inOrder = true))
@@ -1164,35 +1138,17 @@ object Gate {
       .filter(col("doc_id") =!= seedDoc), k)
   }
 
-  /** Two-term positions join from the index — (doc_id, nb, pos1, pos2). */
-  private def posPairs(spark: SparkSession, sfDir: String, t1: String, t2: String) = {
-    import spark.implicits._
-    val ph = posHits(spark, sfDir, Seq(t1, t2))
-    val a = ph.filter(col("term") === t1).select(col("doc_id"), col("nb"), col("pos").as("pos1"))
-    val b = ph.filter(col("term") === t2).select(col("doc_id"), col("pos").as("pos2"))
-    a.join(b, "doc_id").as[(Long, Int, Seq[Int], Seq[Int])]
-  }
-
-  /** Ordered SpanNearQuery analog from the positions index: matches = ordered
-    * (p1, p2) pairs with 1 <= p2 - p1 <= window (span algebra over the
-    * positions table; /root/reference/src/Lucene.Net/Search/Spans/NearSpansOrdered.cs
-    * semantics collapsed to a pair count).
+  /** Ordered SpanNearQuery over the positions index: per doc, the count of
+    * ordered (p1, p2) pairs with 1 <= p2 - p1 <= window — the spans
+    * (p1, p2 + 1) of [[Spans.spans]] at slop window - 1 (Lucene.Net
+    * NearSpansOrdered semantics collapsed to a pair count).
     */
   def spanNearQuery(spark: SparkSession, sfDir: String, t1: String, t2: String,
-                    window: Int): DataFrame = {
-    import spark.implicits._
-    posPairs(spark, sfDir, t1, t2)
-      .map { case (docId, _, pos1, pos2) =>
-        var m = 0L
-        pos1.foreach { p1 =>
-          pos2.foreach { p2 => if (p2 - p1 >= 1 && p2 - p1 <= window) m += 1 }
-        }
-        (docId, m)
-      }
-      .filter(_._2 > 0)
-      .toDF("doc_id", "matches")
+                    window: Int): DataFrame =
+    Spans.spans(spark, indexDir(spark, sfDir),
+        Spans.SpanNear(Spans.SpanTerm(t1), Spans.SpanTerm(t2), window - 1, inOrder = true))
+      .groupBy("doc_id").agg(count(lit(1)).as("matches"))
       .orderBy("doc_id")
-  }
 
   /** Unordered k-ary SpanNear from the positions index (NearSpansUnordered
     * CellQueue walk, [[graft.query.Spans.SpanNearUnorderedK]]), gated on the
@@ -1203,7 +1159,6 @@ object Gate {
     */
   def spanUnorderedQuery(spark: SparkSession, sfDir: String, terms: Seq[String],
                          slop: Int): DataFrame = {
-    import graft.query.Spans
     val idx = indexDir(spark, sfDir)
     val spans = Spans.spans(spark, idx,
       Spans.SpanNearUnorderedK(terms.map(Spans.SpanTerm), slop))
@@ -1300,15 +1255,7 @@ object Gate {
     * the identical candidates.
     */
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val sh = docsTable(spark, sfDir).select("doc_id", "text")
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val raw = text.split(" ", -1)
-        (0 until math.max(0, raw.length - 2)).iterator
-          .map(i => (id, raw(i) + " " + raw(i + 1) + " " + raw(i + 2)))
-      }
-      .toDF("doc_id", "s").distinct()
+    val sh = shingles(spark, sfDir)
     val ks = explode(sequence(lit(0), lit(7))).as("k")
     val mh = sh.select(col("doc_id"), col("s"), ks)
       .select(col("doc_id"), col("k"),
@@ -1444,9 +1391,9 @@ object Gate {
     java.lang.Long.parseLong(hex.substring(off, off + 8), 16)
   }
 
-  /** The 16 deterministic md5-derived sign hyperplanes shared by the ANN-LSH
-    * write and probe paths: h(p)[j] = (first byte of md5(p|j)) - 127.5 —
-    * identical arithmetic in the oracle SQL.
+  /** The deterministic md5-derived sign hyperplanes shared by the ANN-LSH
+    * write and probe paths and the embedding dedup: h(p)[j] = (first byte of
+    * md5(p|j)) - 127.5 — identical arithmetic in the oracle SQL.
     */
   private def lshPlanes(numPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes) { p =>
@@ -1457,6 +1404,7 @@ object Gate {
       }
     }
 
+  /** The sign bits of `e` against each plane (bit p set when dot >= 0). */
   private def lshBucket(e: Array[Float], planes: Array[Array[Double]]): Int = {
     var bits = 0
     var p = 0
@@ -1470,6 +1418,50 @@ object Gate {
     bits
   }
 
+  /** The embeddings table as typed (vec_id, embedding) rows. Filter it with
+    * `Column` predicates on `vec_id`, which Parquet pushes into the scan.
+    * The relation is resolved once per session, so the Parquet schema
+    * inference job runs once, not once per read.
+    */
+  private def embeddings(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Float])] = {
+    import spark.implicits._
+    cachedRelation(spark, s"$sfDir#emb", s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+  }
+
+  /** The query vector of every vector gate: vec_id 0, a pushed-down point
+    * lookup.
+    */
+  private def queryVector(spark: SparkSession, sfDir: String): Array[Float] =
+    embeddings(spark, sfDir).filter(col("vec_id") === 0L).head()._2
+
+  /** Cosine in double: dot product and both squared norms in one
+    * ascending-index fold (the order the oracle's list_sum folds in).
+    */
+  private def cosine(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var j = 0
+    while (j < a.length) {
+      val x = a(j).toDouble
+      val y = b(j).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      j += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** The top `k` of `rows` by quantized cosine to `query`. */
+  private def cosineTopk(spark: SparkSession, query: Array[Float],
+                         rows: Dataset[(Long, Array[Float])], k: Int): DataFrame = {
+    import spark.implicits._
+    val bq = spark.sparkContext.broadcast(query)
+    rows.map { case (id, e) => (id, cosine(e, bq.value)) }
+      .toDF("vec_id", "cos")
+      .select(col("vec_id"), q(col("cos")).as("cos_q"))
+      .orderBy(desc("cos_q"), asc("vec_id"))
+      .limit(k)
+  }
+
   val AnnLshPlanes = 16
 
   /** WRITE-TIME bucket assignment: the embeddings table re-materialized with
@@ -1478,22 +1470,15 @@ object Gate {
     * cached like the index).
     */
   def annLshDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#annlsh", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-ann-lsh-$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        import spark.implicits._
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])]
-        val dim = emb.head()._2.length
-        val bp = spark.sparkContext.broadcast(lshPlanes(AnnLshPlanes, dim))
-        emb.map { case (id, e) => (id, e, lshBucket(e, bp.value)) }
-          .toDF("vec_id", "embedding", "bucket")
-          .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      }
-      dir
-    })
+    store(sfDir, "ann-lsh") { dir =>
+      import spark.implicits._
+      val bp = spark.sparkContext.broadcast(
+        lshPlanes(AnnLshPlanes, queryVector(spark, sfDir).length))
+      embeddings(spark, sfDir)
+        .map { case (id, e) => (id, e, lshBucket(e, bp.value)) }
+        .toDF("vec_id", "embedding", "bucket")
+        .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    }
 
   /** LSH-bucketed approximate nearest neighbours: 16 deterministic
     * md5-derived random hyperplanes -> 65536 sign buckets written as a
@@ -1505,35 +1490,15 @@ object Gate {
     */
   def annLsh(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val bucketed = annLshTable(spark, sfDir)
-    // query vector: a point lookup on the base table (pushed-down vec_id=0)
-    val qv: Array[Float] = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].filter(_._1 == 0L).head()._2
+    val qv = queryVector(spark, sfDir)
     val qb = lshBucket(qv, lshPlanes(AnnLshPlanes, qv.length))
     // multi-probe set: the query bucket plus all 1-, 2- and 3-bit flips
     val probes: Seq[Int] =
       (0 until (1 << AnnLshPlanes)).filter(b => Integer.bitCount(b ^ qb) <= 3)
-    val bq = spark.sparkContext.broadcast(qv.map(_.toDouble))
-    val nq = math.sqrt(bq.value.map(x => x * x).sum)
-    bucketed
+    cosineTopk(spark, qv, annLshTable(spark, sfDir)
       .filter(col("bucket").isin(probes: _*) && col("vec_id") =!= 0L)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, e) =>
-        var dot = 0.0; var ne = 0.0; var j = 0
-        while (j < e.length) {
-          val x = e(j).toDouble
-          dot += x * bq.value(j)
-          ne += x * x
-          j += 1
-        }
-        (id, dot / (math.sqrt(ne) * nq))
-      }
-      .toDF("vec_id", "cos")
-      .select(col("vec_id"), q(col("cos")).as("cos_q"))
-      .orderBy(desc("cos_q"), asc("vec_id"))
-      .limit(k)
+      .as[(Long, Array[Float])], k)
   }
 
   /** IVF list count: ~sqrt(N) (the standard rule — per-list population and
@@ -1542,51 +1507,26 @@ object Gate {
     */
   def ivfNlist(n: Long): Int = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  /** L2^2 to a centroid, ascending-index sum (matches the SQL list_sum). */
-  private def ivfD2(e: Array[Float], c: Array[Double]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < e.length) {
-      val x = e(i).toDouble - c(i)
-      acc += x * x
-      i += 1
-    }
-    acc
-  }
-
   /** Deterministic coarse-quantizer centroids: the vectors of ids 1..nlist
     * (the "trained on a sample" stand-in; a production build k-means-trains
-    * them, the plumbing is identical). Cached per (session, sf) — the
-    * centroid table is the quantizer MODEL, loaded once at serving start,
-    * not re-collected per query. Unlike [[relations]] (whose DataFrame
-    * values pin their session, forcing explicit eviction), these values are
-    * plain arrays with no back-reference, so weak keying genuinely reclaims
-    * entries after a session is collected.
+    * them, the plumbing is identical). A function of the write-once sfDir,
+    * so cached per sfDir like [[built]] — the quantizer MODEL, loaded once,
+    * not re-collected per query.
     */
-  private val centroids =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Double])]]]()
-
-  private def centroidCache(spark: SparkSession): scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Double])]] =
-    centroids.synchronized {
-      var m = centroids.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Double])]]()
-        centroids.put(spark, m)
-      }
-      m
-    }
+  private val ivfModels =
+    scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Double])]]()
 
   private def ivfCentroids(spark: SparkSession, sfDir: String): Array[(Long, Array[Double])] =
-    centroidCache(spark).getOrElseUpdate(sfDir, {
-      import spark.implicits._
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-      val nlist = ivfNlist(emb.count())
-      emb.filter(r => r._1 >= 1 && r._1 <= nlist)
+    ivfModels.getOrElseUpdate(sfDir, {
+      val emb = embeddings(spark, sfDir)
+      emb.filter(col("vec_id").between(1, ivfNlist(emb.count())))
         .collect().sortBy(_._1)
         .map { case (id, e) => (id, e.map(_.toDouble)) }
     })
+
+  /** The id of the L2-nearest centroid (ties -> the lowest id). */
+  private def ivfList(e: Array[Float], cents: Array[(Long, Array[Double])]): Long =
+    cents.map { case (cid, cv) => (ProductQuantizer.l2(e, 0, cv), cid) }.min._2
 
   /** WRITE-TIME IVF assignment: the embeddings table re-materialized with
     * each vector's L2-nearest list id as a PARTITION column (nlist ~ sqrt(N)
@@ -1594,24 +1534,14 @@ object Gate {
     * by partition pruning (built once per sf, cached like the index).
     */
   def annIvfDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#annivf", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-ann-ivf-$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        import spark.implicits._
-        val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])]
-          .map { case (id, e) =>
-            val list = bc.value.map { case (cid, cv) => (ivfD2(e, cv), cid) }.min._2
-            (id, e, list)
-          }
-          .toDF("vec_id", "embedding", "list")
-          .write.mode("overwrite").partitionBy("list").parquet(dir)
-      }
-      dir
-    })
+    store(sfDir, "ann-ivf") { dir =>
+      import spark.implicits._
+      val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
+      embeddings(spark, sfDir)
+        .map { case (id, e) => (id, e, ivfList(e, bc.value)) }
+        .toDF("vec_id", "embedding", "list")
+        .write.mode("overwrite").partitionBy("list").parquet(dir)
+    }
 
   /** IVF approximate nearest neighbours over the list-partitioned table
     * ([[annIvfDir]]): the query probes its nprobe nearest lists — an IN-set
@@ -1621,39 +1551,14 @@ object Gate {
   def annIvf(spark: SparkSession, sfDir: String, k: Int,
              nprobe: Int = 3): DataFrame = {
     import spark.implicits._
-    val listed = annIvfTable(spark, sfDir)
-    val centroids = ivfCentroids(spark, sfDir)
-    val qv: Array[Double] = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].filter(_._1 == 0L).head()._2.map(_.toDouble)
-    val probes: Seq[Long] = centroids
-      .map { case (cid, cv) =>
-        var acc = 0.0
-        var i = 0
-        while (i < qv.length) { val x = qv(i) - cv(i); acc += x * x; i += 1 }
-        (acc, cid)
-      }
+    val qv = queryVector(spark, sfDir)
+    val probes: Seq[Long] = ivfCentroids(spark, sfDir)
+      .map { case (cid, cv) => (ProductQuantizer.l2(qv, 0, cv), cid) }
       .sorted.take(nprobe).map(_._2).toSeq
-    val bq = spark.sparkContext.broadcast(qv)
-    val nq = math.sqrt(qv.map(x => x * x).sum)
-    listed
+    cosineTopk(spark, qv, annIvfTable(spark, sfDir)
       .filter(col("list").isin(probes: _*) && col("vec_id") =!= 0L)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, e) =>
-        var dot = 0.0; var ne = 0.0; var j = 0
-        while (j < e.length) {
-          val x = e(j).toDouble
-          dot += x * bq.value(j)
-          ne += x * x
-          j += 1
-        }
-        (id, dot / (math.sqrt(ne) * nq))
-      }
-      .toDF("vec_id", "cos")
-      .select(col("vec_id"), q(col("cos")).as("cos_q"))
-      .orderBy(desc("cos_q"), asc("vec_id"))
-      .limit(k)
+      .as[(Long, Array[Float])], k)
   }
 
   /** Per-doc quality metrics: emitted tokens, distinct terms, raw tokens and
@@ -1780,30 +1685,11 @@ object Gate {
     */
   def dedupEmbedding(spark: SparkSession, sfDir: String, tau: Double): DataFrame = {
     import spark.implicits._
-    val NumPlanes = 32
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val dim = emb.head()._2.length
-    val planes: Array[Array[Double]] = Array.tabulate(NumPlanes) { p =>
-      Array.tabulate(dim) { j =>
-        Integer.parseInt(
-          org.apache.commons.codec.digest.DigestUtils.md5Hex(s"$p|$j").substring(0, 2),
-          16) - 127.5
-      }
-    }
-    val bp = spark.sparkContext.broadcast(planes)
+    val emb = embeddings(spark, sfDir)
+    val bp = spark.sparkContext.broadcast(lshPlanes(32, queryVector(spark, sfDir).length))
     val bands = emb.flatMap { case (id, e) =>
-      var bits = 0L
-      var p = 0
-      while (p < NumPlanes) {
-        var dot = 0.0
-        var j = 0
-        while (j < e.length) { dot += e(j).toDouble * bp.value(p)(j); j += 1 }
-        if (dot >= 0) bits |= (1L << p)
-        p += 1
-      }
-      (0 until 4).iterator.map(b => (b, (bits >> (8 * b)) & 0xFFL, id))
+      val bits = lshBucket(e, bp.value)
+      (0 until 4).iterator.map(b => (b, ((bits >> (8 * b)) & 0xFF).toLong, id))
     }.toDF("band", "bits", "vec_id")
     val cands = bands.as("a")
       .join(bands.as("b"),
@@ -1817,19 +1703,7 @@ object Gate {
       .join(ev.select(col("vec_id").as("d2"), col("e").as("e2")), "d2")
       .select(col("d1"), col("d2"), col("e1"), col("e2"))
       .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (d1, d2, e1, e2) =>
-        var dot = 0.0
-        var n1 = 0.0
-        var n2 = 0.0
-        var j = 0
-        while (j < e1.length) {
-          val x = e1(j).toDouble
-          val y = e2(j).toDouble
-          dot += x * y; n1 += x * x; n2 += y * y
-          j += 1
-        }
-        (d1, d2, dot / (math.sqrt(n1) * math.sqrt(n2)))
-      }
+      .map { case (d1, d2, e1, e2) => (d1, d2, cosine(e1, e2)) }
       .toDF("d1", "d2", "cos")
       .filter(col("cos") >= tau)
       .select(col("d1"), col("d2"), q(col("cos")).as("cos_q"))
@@ -1839,33 +1713,8 @@ object Gate {
   /** Brute-force cosine top-k over the embeddings table vs. the vec_id=0
     * vector (ANN baseline; dot/norms in double with sequential fold).
     */
-  def simTopk(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    import spark.implicits._
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val qv: Array[Double] = emb.filter(_._1 == 0L).head()._2.map(_.toDouble)
-    val bq = spark.sparkContext.broadcast(qv)
-    val nq = {
-      var acc = 0.0; var i = 0
-      while (i < qv.length) { acc += qv(i) * qv(i); i += 1 }
-      math.sqrt(acc)
-    }
-    emb.map { case (id, e) =>
-      val v = bq.value
-      var dot = 0.0; var ne = 0.0; var i = 0
-      while (i < e.length) {
-        val x = e(i).toDouble
-        dot += x * v(i)
-        ne += x * x
-        i += 1
-      }
-      (id, dot / (math.sqrt(ne) * nq))
-    }.toDF("vec_id", "cos")
-      .select(col("vec_id"), q(col("cos")).as("cos_q"))
-      .orderBy(desc("cos_q"), asc("vec_id"))
-      .limit(k)
-  }
+  def simTopk(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    cosineTopk(spark, queryVector(spark, sfDir), embeddings(spark, sfDir), k)
 
   /** Int8 SCALAR QUANTIZATION of the embedding store + integer-dot top-k:
     * per-vector symmetric codes q_i = floor(x_i * 127 / max|x| + 0.5) — 4x
@@ -1894,10 +1743,7 @@ object Gate {
         out
       }
     }
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val qq: Array[Long] = quant(emb.filter(_._1 == 0L).head()._2)
+    val qq: Array[Long] = quant(queryVector(spark, sfDir))
     // all-zero query carries no direction: fail fast on the driver instead
     // of broadcasting a null and NPE-ing inside executor flatMaps
     require(qq != null, "int8TopK: query vector (vec_id 0) is all-zero")
@@ -1907,7 +1753,7 @@ object Gate {
       while (i < qq.length) { acc += qq(i).toDouble * qq(i); i += 1 }
       math.sqrt(acc)
     }
-    emb.flatMap { case (id, e) =>
+    embeddings(spark, sfDir).flatMap { case (id, e) =>
       val qe = quant(e)
       if (qe == null) None
       else {
@@ -1927,17 +1773,19 @@ object Gate {
   }
 
   /** Product-quantization ANN (Jegou, Douze, Schmid, "Product Quantization
-    * for Nearest Neighbor Search", IEEE TPAMI 2011): vectors split into
-    * m=8 subspaces of 8 dims, each encoded as its nearest sub-codebook
-    * centroid id (ks=16 -> 4 bits/subspace: 32 bits/vector vs 256 bytes,
-    * 64x). Queries score by Asymmetric Distance Computation: ONE m x ks
-    * table of exact query-to-centroid sub-distances, approx distance = sum
-    * of m table lookups. Per-subspace distances are quantized to integers
-    * BEFORE the final sum so the total is addition-order-free (exact parity
-    * with the SQL oracle regardless of fold order). Codebooks are
-    * DETERMINISTIC — the subvectors of vec ids 1..ks, the ann_ivf centroid
-    * convention — so the oracle mirrors encode+ADC bit-for-bit; production
-    * swaps k-means codebooks behind the same encode/score shape.
+    * for Nearest Neighbor Search", IEEE TPAMI 2011) on the library's
+    * [[ProductQuantizer]]: vectors split into m=8 subspaces of 8 dims, each
+    * encoded as its nearest sub-codebook centroid id (ks=16 -> 4
+    * bits/subspace: 32 bits/vector vs 256 bytes, 64x). Queries score by
+    * Asymmetric Distance Computation: ONE m x ks table of exact
+    * query-to-centroid sub-distances, approx distance = sum of m table
+    * lookups. Per-subspace distances are quantized to integers BEFORE the
+    * final sum so the total is addition-order-free (exact parity with the
+    * SQL oracle regardless of fold order). Codebooks are DETERMINISTIC — the
+    * subvectors of vec ids 1..ks, the ann_ivf centroid convention — so the
+    * oracle mirrors encode+ADC bit-for-bit; production swaps k-means
+    * codebooks ([[ProductQuantizer.train]]) behind the same encode/score
+    * shape.
     *
     * 100 TB: codes are 4 bytes/vector, the codebook is broadcast-sized,
     * encode is one pass over the store, ADC scans only codes (a 64x
@@ -1947,37 +1795,27 @@ object Gate {
   final val PqM = 8
   final val PqKs = 16
 
-  private def pqD2(a: Array[Double], boff: Int, b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < b.length) { val t = a(boff + i) - b(i); acc += t * t; i += 1 }
-    acc
-  }
-
-  /** Deterministic PQ sub-codebooks + the query vector: centroids(j)(c) =
-    * subvector j of vec id c+1 (the "trained on a sample" stand-in shared
-    * with ann_ivf's centroid convention), query = vec id 0. One pushed-down
-    * 17-row point lookup.
+  /** Deterministic PQ sub-codebooks: centroids(j)(c) = subvector j of vec id
+    * c+1 (the "trained on a sample" stand-in shared with ann_ivf's centroid
+    * convention), and the query vector (vec id 0): one pushed-down 17-row
+    * lookup.
     */
   private def pqCodebook(spark: SparkSession, sfDir: String)
-      : (Array[Array[Array[Double]]], Array[Double], Int) = {
-    import spark.implicits._
-    val small = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .filter(_._1 <= PqKs.toLong).collect().sortBy(_._1)
+      : (ProductQuantizer.Codebook, Array[Float]) = {
+    val small = embeddings(spark, sfDir)
+      .filter(col("vec_id").between(0, PqKs)).collect()
     val dim = small.head._2.length
     val sub = dim / PqM
     // the DuckDB oracle hardcodes 8-dim list_slice windows; a corpus dim
     // change must fail FAST here, not surface as a silent hash mismatch
     require(sub == 8, s"ann_pq oracle assumes 8-dim subspaces, got dim=$dim m=$PqM sub=$sub")
-    val query: Array[Double] = small.find(_._1 == 0L).get._2.map(_.toDouble)
     val cents: Array[Array[Array[Double]]] = Array.tabulate(PqM) { j =>
       Array.tabulate(PqKs) { c =>
         small.find(_._1 == (c + 1).toLong).get._2
           .slice(j * sub, (j + 1) * sub).map(_.toDouble)
       }
     }
-    (cents, query, sub)
+    (ProductQuantizer.Codebook(PqM, PqKs, sub, cents), small.find(_._1 == 0L).get._2)
   }
 
   /** WRITE-TIME PQ encoding: the materialized codes table — (vec_id,
@@ -1988,60 +1826,31 @@ object Gate {
     * per sf, cached like the index.
     */
   def annPqDir(spark: SparkSession, sfDir: String): String =
-    built.getOrElseUpdate(s"$sfDir#annpq", {
-      val name = new java.io.File(sfDir).getName
-      val dir = s"target/gate-index/$Version-ann-pq-$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        import spark.implicits._
-        val (cents, _, sub) = pqCodebook(spark, sfDir)
-        val bc = spark.sparkContext.broadcast(cents)
-        val bl = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])]
-          .map { case (id, e) =>
-            val cs = bc.value
-            val ev = new Array[Double](e.length)
-            var i = 0
-            while (i < e.length) { ev(i) = e(i).toDouble; i += 1 }
-            val codes = new Array[Int](PqM)
-            var j = 0
-            while (j < PqM) {
-              var best = 0; var bestD = Double.MaxValue
-              var c = 0
-              while (c < PqKs) {
-                val d = pqD2(ev, j * sub, cs(j)(c))
-                if (d < bestD) { bestD = d; best = c } // ties keep the lowest c
-                c += 1
-              }
-              codes(j) = best
-              j += 1
-            }
-            val list = bl.value.map { case (cid, cv) => (ivfD2(e, cv), cid) }.min._2
-            (id, codes, list)
-          }
-          .toDF("vec_id", "codes", "list")
-          .write.mode("overwrite").partitionBy("list").parquet(dir)
-      }
-      dir
-    })
+    store(sfDir, "ann-pq") { dir =>
+      import spark.implicits._
+      val bc = spark.sparkContext.broadcast(pqCodebook(spark, sfDir)._1)
+      val bl = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
+      embeddings(spark, sfDir)
+        .map { case (id, e) =>
+          (id, ProductQuantizer.encode(e, bc.value), ivfList(e, bl.value))
+        }
+        .toDF("vec_id", "codes", "list")
+        .write.mode("overwrite").partitionBy("list").parquet(dir)
+    }
 
   def annPq(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val (cents, query, sub) = pqCodebook(spark, sfDir)
     // ADC table, integer-quantized per entry (order-free final sums)
-    val dq: Array[Array[Long]] = Array.tabulate(PqM) { j =>
-      Array.tabulate(PqKs) { c =>
-        math.floor(pqD2(query, j * sub, cents(j)(c)) * 1000.0 + 0.5).toLong
-      }
-    }
+    val (cb, query) = pqCodebook(spark, sfDir)
+    val dq: Array[Array[Long]] =
+      ProductQuantizer.adcTable(query, cb).map(_.map(d => math.floor(d * 1000.0 + 0.5).toLong))
     val bt = spark.sparkContext.broadcast(dq)
     // The ADC pass scans ONLY the materialized codes table ([[annPqDir]],
     // 4 B/vector): per row it is m integer table lookups — no float math,
     // no raw embeddings anywhere in the executed plan. (Exhaustive over all
     // lists here to mirror the oracle exactly; a recall-oriented serving
     // path pushes an IN-set on the `list` partition column first, ann_ivf's
-    // probe shape, and exact-reranks a shortlist — operators.ProductQuantizer.)
+    // probe shape, and exact-reranks a shortlist — ProductQuantizer.search.)
     annPqTable(spark, sfDir)
       .select(col("vec_id"), col("codes"))
       .as[(Long, Array[Int])]

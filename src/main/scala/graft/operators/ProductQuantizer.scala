@@ -16,15 +16,16 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * map over the store (writes the 4-byte code column next to the vector or
   * replaces it); search scans ONLY the code column (64x less IO), takes a
   * `shortlist` by ADC, and exact-reranks just those rows — compose with IVF
-  * partition pruning (Gate.annPq's ann_ivf sibling) for sublinear candidate
-  * sets. Distance-concentrated (near-uniform random) data defeats any
+  * partition pruning for sublinear candidate sets (the ann_pq gate,
+  * gate.Gate.annPqDir/annPq, encodes its IVF-partitioned codes table with
+  * [[encode]] and scores with [[adcTable]]). Distance-concentrated (near-uniform random) data defeats any
   * compressed index — recall claims belong on clusterable data, see
   * ProductQuantizerSpec.
   *
   * Determinism: init centroids are the subvectors of the `ks` smallest ids;
   * Lloyd means reduce in Spark partition order, so trained centroids are
   * deterministic up to float reduction order (exact-parity consumers — the
-  * DuckDB gate — use iters=0).
+  * ann_pq gate against its DuckDB oracle — keep the iters=0 init).
   */
 object ProductQuantizer {
 
@@ -32,9 +33,13 @@ object ProductQuantizer {
   final case class Codebook(m: Int, ks: Int, sub: Int,
                             cents: Array[Array[Array[Double]]])
 
-  private def l2(a: Array[Double], off: Int, b: Array[Double]): Double = {
+  /** Squared L2 from `a`'s `b.length` values at `off` to `b`, one
+    * ascending-index fold; each float is widened in the fold, so no double
+    * copy of `a` is made.
+    */
+  private[graft] def l2(a: Array[Float], off: Int, b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
-    while (i < b.length) { val t = a(off + i) - b(i); acc += t * t; i += 1 }
+    while (i < b.length) { val t = a(off + i).toDouble - b(i); acc += t * t; i += 1 }
     acc
   }
 
@@ -46,27 +51,23 @@ object ProductQuantizer {
   }
 
   /** Nearest-centroid code per subspace (ties -> lowest id). */
-  def encode(v: Array[Float], cb: Codebook): Array[Int] = {
-    val ev = toD(v)
+  def encode(v: Array[Float], cb: Codebook): Array[Int] =
     Array.tabulate(cb.m) { j =>
       var best = 0; var bestD = Double.MaxValue
       var c = 0
       while (c < cb.ks) {
-        val d = l2(ev, j * cb.sub, cb.cents(j)(c))
+        val d = l2(v, j * cb.sub, cb.cents(j)(c))
         if (d < bestD) { bestD = d; best = c }
         c += 1
       }
       best
     }
-  }
 
   /** ADC table: t(j)(c) = exact squared L2 from the query's subvector j to
     * centroid (j, c).
     */
-  def adcTable(query: Array[Float], cb: Codebook): Array[Array[Double]] = {
-    val q = toD(query)
-    Array.tabulate(cb.m)(j => Array.tabulate(cb.ks)(c => l2(q, j * cb.sub, cb.cents(j)(c))))
-  }
+  def adcTable(query: Array[Float], cb: Codebook): Array[Array[Double]] =
+    Array.tabulate(cb.m)(j => Array.tabulate(cb.ks)(c => l2(query, j * cb.sub, cb.cents(j)(c))))
 
   /** Train per-subspace codebooks with `iters` Lloyd rounds (iters=0 keeps
     * the deterministic init: subvectors of the `ks` smallest ids). Each
@@ -121,7 +122,7 @@ object ProductQuantizer {
     * (m*ceil(log2 ks)/8 bytes once written, 4 B/vector at m=8 ks=16 vs
     * 256 B of floats). Built ONCE per store (persist it next to the
     * vectors; compose with an IVF `list` partition column for sublinear
-    * probes — see gate.Gate.annPqDir).
+    * probes, as gate.Gate.annPqDir does with [[encode]]).
     */
   def encodeStore(spark: SparkSession, vectors: Dataset[(Long, Array[Float])],
                   cb: Codebook): Dataset[(Long, Array[Int])] = {
@@ -155,7 +156,7 @@ object ProductQuantizer {
       .select("vec_id").as[Long].collect().toSet
     val bq = spark.sparkContext.broadcast(toD(query))
     vectors.filter(r => short.contains(r._1))
-      .map { case (id, v) => (id, l2(toD(v), 0, bq.value)) }
+      .map { case (id, v) => (id, l2(v, 0, bq.value)) }
       .collect().sortBy { case (id, d) => (d, id) }.take(k)
   }
 }

@@ -5,8 +5,9 @@ import scala.sys.process._
 
 /** The gate sweep as a test: every SparkEntry gate at sf0.001 is dumped
   * through [[Verify.dump]] and checked by the DuckDB oracle compare
-  * (`scripts/compare_oracle.py`), and no gate may plan a CartesianProduct
-  * or BroadcastNestedLoopJoin.
+  * (`scripts/compare_oracle.py`), no gate may plan a CartesianProduct
+  * or BroadcastNestedLoopJoin, and the ANN probes must prune their stores
+  * by partition.
   */
 class GateSpec extends AnyFunSuite {
 
@@ -32,5 +33,13 @@ class GateSpec extends AnyFunSuite {
         p.contains("BroadcastNestedLoopJoin") => name
     }
     assert(flagged.isEmpty, s"flagged: ${flagged.mkString(", ")}")
+  }
+
+  test("ann_lsh and ann_ivf probe only their bucket and list partitions") {
+    val filters = "PartitionFilters: \\[([^\\]]*)".r
+    Seq("ann_lsh" -> "bucket#", "ann_ivf" -> "list#").foreach { case (name, part) =>
+      val pf = filters.findAllMatchIn(plans(name)).map(_.group(1)).toSeq
+      assert(pf.exists(_.contains(part)), s"$name scans with PartitionFilters ${pf.mkString("; ")}")
+    }
   }
 }
